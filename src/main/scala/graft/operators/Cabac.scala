@@ -694,16 +694,6 @@ object Cabac {
     PcmFrame(w, 16, y.map(_.toByte), cb.map(_.toByte), cr.map(_.toByte))
   }
 
-  /** Decode a muxed CABAC I_16x16 stream lazily — the CABAC arm of
-    * the container-to-pixels hop. */
-  def decodeI16x16Frames(data: Array[Byte]): Iterator[PcmFrame] = {
-    val sps = Mp4.spsInfo(data)
-    val pps = Mp4.ppsInfo(data)
-    require(pps.entropy_coding_mode,
-      "not a CABAC stream — decode with Codecs.Mp4.decodeIntraFrames")
-    Mp4.nalPayloadIterator(data).map(parseI16x16Slice(_, sps, pps))
-  }
-
   /** A minimal CABAC PPS (the CAVLC one with
     * entropy_coding_mode_flag = 1 and deblocking control present). */
   def buildPps(): Array[Byte] = {

@@ -1327,13 +1327,12 @@ object Codecs {
       * slice_qp_delta, per-MB mb_type, pcm alignment, raw samples)
       * carrying the picture losslessly. This is the PIXEL half of
       * the H.264 seam that is expressible with zero native deps: a
-      * spec-conforming decoder (and our [[parseIdrPcmSlice]]) must
-      * reproduce the planes byte-exactly. Transform-coded
-      * macroblocks (CAVLC residuals, intra prediction) remain the
-      * documented JavaCV seam. Emulation prevention applies to the
-      * whole RBSP — PCM bytes can and do mimic start codes, which
-      * the round-trip spec exercises. Dimensions must be whole
-      * macroblocks (the I_PCM fixture never needs cropping). */
+      * spec-conforming decoder (and our [[parseIntraSlice]], mb_type
+      * 25) must reproduce the planes byte-exactly. Emulation
+      * prevention applies to the whole RBSP — PCM bytes can and do
+      * mimic start codes, which the round-trip spec exercises.
+      * Dimensions must be whole macroblocks (the I_PCM fixture never
+      * needs cropping). */
     def buildIdrPcmSlice(f: PcmFrame, frameNum: Int, frameNumBits: Int,
         idrPicId: Int = 0, deblockIdc: Int = 1): Array[Byte] = {
       require(f.width % 16 == 0 && f.height % 16 == 0,
@@ -1383,81 +1382,9 @@ object Codecs {
       (0x65.toByte +: rbspEscape(w.bytes)).toArray // nal_ref_idc 3, type 5
     }
 
-    /** Decode an IDR I_PCM slice NAL back to its picture — the
-      * inverse of [[buildIdrPcmSlice]], driven by the stream's SPS
-      * (macroblock grid + frame_num width). Fails loudly on any
-      * non-I_PCM macroblock: transform-coded pictures are the
-      * documented seam, never silently garbled. */
-    def parseIdrPcmSlice(nal: Array[Byte], sps: SpsInfo,
-        pps: PpsInfo = defaultPps): PcmFrame = {
-      require(nal.nonEmpty && (nal(0) & 0x1f) == 5,
-        "not an IDR slice NAL (nal_unit_type != 5)")
-      require(sps.crop_left == 0 && sps.crop_right == 0 &&
-        sps.crop_top == 0 && sps.crop_bottom == 0,
-        "I_PCM fixtures are uncropped whole-macroblock pictures")
-      val r = new BitReader(rbspUnescape(nal.drop(1)))
-      require(r.ue() == 0L, "first_mb_in_slice != 0")
-      val st = r.ue()
-      require(st == 7L || st == 2L, s"not an I slice (slice_type $st)")
-      require(r.ue() == 0L, "pic_parameter_set_id != 0")
-      r.u(sps.log2_max_frame_num) // frame_num
-      r.ue()                      // idr_pic_id
-      r.u(1); r.u(1)              // dec_ref_pic_marking (IDR)
-      r.se()                      // slice_qp_delta
-      // all macroblocks below are I_PCM (QPY 0 for §8.7), so even
-      // with the filter ON every edge sees qPav = 0 → α = β = 0 →
-      // provable no-op; any idc parses, nothing to apply
-      readDeblockHeader(r, pps)
-      val (wpx, hpx) = (sps.mb_width * 16, sps.mb_height * 16)
-      val y = new Array[Byte](wpx * hpx)
-      val cb = new Array[Byte](wpx * hpx / 4)
-      val cr = new Array[Byte](wpx * hpx / 4)
-      var mb = 0
-      while (mb < sps.mb_width * sps.mb_height) {
-        val mx = (mb % sps.mb_width) * 16
-        val my = (mb / sps.mb_width) * 16
-        val t = r.ue()
-        require(t == 25L,
-          s"macroblock $mb is not I_PCM (mb_type $t) — transform decode " +
-            "is the documented seam")
-        r.alignZero()
-        var i = 0
-        while (i < 256) {
-          y((my + i / 16) * wpx + mx + i % 16) = r.u(8).toByte; i += 1
-        }
-        i = 0
-        while (i < 64) {
-          cb((my / 2 + i / 8) * (wpx / 2) + mx / 2 + i % 8) = r.u(8).toByte
-          i += 1
-        }
-        i = 0
-        while (i < 64) {
-          cr((my / 2 + i / 8) * (wpx / 2) + mx / 2 + i % 8) = r.u(8).toByte
-          i += 1
-        }
-        mb += 1
-      }
-      PcmFrame(wpx, hpx, y, cb, cr)
-    }
-
-    /** Decode a muxed I_PCM stream LAZILY: container walk → avcC SPS
-      * → each mdat NAL parsed as an IDR I_PCM slice on demand →
-      * pictures in decode order, ONE IN FLIGHT AT A TIME (the
-      * iterator rides [[nalPayloadIterator]]'s incremental stsc/
-      * stco/stsz walk — the m32 seek plan's random-access map — so a
-      * long video never materializes all its decoded frames at
-      * once, exactly why the reference streams frame-by-frame). The
-      * `decodebin`-shaped hop for the uncompressed-H.264 subset:
-      * MP4 bytes in, planar pixels out, pure JVM. */
-    def decodeIPcmFrames(data: Array[Byte]): Iterator[PcmFrame] = {
-      val sps = spsInfo(data)
-      val pps = ppsInfo(data)
-      nalPayloadIterator(data).map(parseIdrPcmSlice(_, sps, pps))
-    }
-
-    /** Walk a muxed file to its avcC and parse the FIRST stored SPS —
-      * the container-to-bitstream hop m29 gates. */
-    def spsInfo(data: Array[Byte]): SpsInfo = {
+    /** Walk a muxed file moov → trak → mdia → minf → stbl → stsd →
+      * avc1 to its avcC decoder-configuration box. */
+    private def avcC(data: Array[Byte]): Box = {
       val top = boxes(data, 0, data.length)
       val moovB = child(top, "moov")
       val trak = child(boxes(data, moovB.off, moovB.len), "trak")
@@ -1467,11 +1394,17 @@ object Codecs {
       val stsd = child(boxes(data, stbl.off, stbl.len), "stsd")
       val avc1 = child(boxes(data, stsd.off + 8, stsd.len - 8), "avc1")
       val avcC = child(boxes(data, avc1.off + 78, avc1.len - 78), "avcC")
-      val nSps = data(avcC.off + 5) & 0x1f
-      require(nSps >= 1, "avcC carries no SPS")
-      val len = be16(data, avcC.off + 6)
+      require((data(avcC.off + 5) & 0x1f) >= 1, "avcC carries no SPS")
+      avcC
+    }
+
+    /** Parse the FIRST SPS stored in a muxed file's avcC — the
+      * container-to-bitstream hop m29 gates. */
+    def spsInfo(data: Array[Byte]): SpsInfo = {
+      val cfg = avcC(data)
+      val len = be16(data, cfg.off + 6)
       parseSps(java.util.Arrays.copyOfRange(
-        data, avcC.off + 8, avcC.off + 8 + len))
+        data, cfg.off + 8, cfg.off + 8 + len))
     }
 
     /** Picture-parameter-set fields the decoder dispatches on
@@ -1540,21 +1473,12 @@ object Codecs {
       PpsInfo(entropy, deblock, qp, cqpOff)
     }
 
-    /** Walk a muxed file to its avcC and parse the FIRST stored PPS
-      * — the other half of the container-to-bitstream hop. */
+    /** Parse the FIRST PPS stored in a muxed file's avcC — the other
+      * half of the container-to-bitstream hop. */
     def ppsInfo(data: Array[Byte]): PpsInfo = {
-      val top = boxes(data, 0, data.length)
-      val moovB = child(top, "moov")
-      val trak = child(boxes(data, moovB.off, moovB.len), "trak")
-      val mdia = child(boxes(data, trak.off, trak.len), "mdia")
-      val minf = child(boxes(data, mdia.off, mdia.len), "minf")
-      val stbl = child(boxes(data, minf.off, minf.len), "stbl")
-      val stsd = child(boxes(data, stbl.off, stbl.len), "stsd")
-      val avc1 = child(boxes(data, stsd.off + 8, stsd.len - 8), "avc1")
-      val avcC = child(boxes(data, avc1.off + 78, avc1.len - 78), "avcC")
-      val nSps = data(avcC.off + 5) & 0x1f
-      require(nSps >= 1, "avcC carries no SPS")
-      var off = avcC.off + 6
+      val cfg = avcC(data)
+      val nSps = data(cfg.off + 5) & 0x1f
+      var off = cfg.off + 6
       var i = 0
       while (i < nSps) { off += 2 + be16(data, off); i += 1 }
       val nPps = data(off) & 0xff
@@ -1563,133 +1487,11 @@ object Codecs {
       parsePps(java.util.Arrays.copyOfRange(data, off + 3, off + 3 + len))
     }
 
-    // ---- H.264 CAVLC + I_16x16 DC-only intra (the m34 rung) ------
-    //
-    // The first TRANSFORM-CODED rung of the pixel seam (reference
-    // anchor: run.sh:53 decodebin on real MP4s): macroblocks of type
-    // I_16x16 with DC intra prediction and coded_block_pattern 0/0
-    // (mb_type 3), whose only residual is the Intra16x16DCLevel
-    // block — 16 DC coefficients, CAVLC-coded (ITU-T H.264 §9.2) and
-    // reconstructed through the inverse 4×4 Hadamard (§8.5.10) and
-    // the lone-DC core transform (§8.5.12). Because every AC block
-    // is absent (cbp_luma = 0), the neighbour TotalCoeff feeding
-    // coeff_token context selection (§9.2.1) is 0 everywhere, so the
-    // whole class parses in the 0 ≤ nC < 2 context. The DC-only
-    // ENVELOPE ships the coeff_token/total_zeros entries for
-    // TotalCoeff ≤ 1 and refuses anything else loudly — the GENERAL
-    // tables live in [[Cavlc]] below (the m35+ rungs); this envelope
-    // is kept verbatim as the m34 contract.
+    // ---- I_16x16 luma DC path (§8.5.10), shared with Cabac -------
 
     /** 4×4 zigzag scan (§8.5.6): scan index → raster index. */
     private[operators] val zigzag4x4: Array[Int] =
       Array(0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
-
-    /** coeff_token for the 0 ≤ nC < 2 context (Table 9-5), the
-      * DC-only envelope rows: (TrailingOnes, TotalCoeff) →
-      * (code, bits). */
-    private val coeffTokenNc0: Map[(Int, Int), (Int, Int)] = Map(
-      (0, 0) -> (1, 1),   // "1"
-      (1, 1) -> (1, 2),   // "01"
-      (0, 1) -> (5, 6))   // "000101"
-
-    /** total_zeros for TotalCoeff = 1, maxNumCoeff 16 (Table 9-7):
-      * value 0..15 → (code, bits). */
-    private val totalZeros1: Array[(Int, Int)] = Array(
-      (1, 1), (3, 3), (2, 3), (3, 4), (2, 4), (3, 5), (2, 5), (3, 6),
-      (2, 6), (3, 7), (2, 7), (3, 8), (2, 8), (3, 9), (2, 9), (1, 9))
-
-    /** Write one Intra16x16DCLevel residual (§7.3.5.3.2, nC = 0
-      * context) for a DC block with at most ONE nonzero coefficient.
-      * `dc` is the 4×4 DC coefficient block in raster order. */
-    private def writeDcResidualNc0(w: BitWriter, dc: Array[Int]): Unit = {
-      require(dc.length == 16, "DC block is 4x4")
-      val nz = (0 until 16).filter(i => dc(zigzag4x4(i)) != 0)
-      require(nz.size <= 1,
-        s"DC-only envelope codes at most one coefficient, got ${nz.size}")
-      if (nz.isEmpty) {
-        val (c, b) = coeffTokenNc0((0, 0)); w.u(c.toLong, b); return
-      }
-      val z = nz.head // scan index of the lone coefficient
-      val l = dc(zigzag4x4(z))
-      if (l == 1 || l == -1) {
-        // a trailing ±1 IS a TrailingOne by definition (§7.4.5.3.2)
-        val (c, b) = coeffTokenNc0((1, 1)); w.u(c.toLong, b)
-        w.u(if (l < 0) 1L else 0L, 1) // trailing_ones_sign_flag
-      } else {
-        val (c, b) = coeffTokenNc0((0, 1)); w.u(c.toLong, b)
-        // §9.2.2 with suffixLength = 0; the decoder adds 2 to the
-        // first levelCode when TrailingOnes < 3
-        val levelCode = (if (l > 0) 2 * l - 2 else -2 * l - 1) - 2
-        require(levelCode >= 0 && levelCode <= 13,
-          s"level $l outside the envelope's prefix-only range (|l| <= 7)")
-        w.u(0L, levelCode); w.u(1L, 1) // level_prefix
-      }
-      // total_zeros: zeros preceding the lone coefficient in scan
-      // order = its scan index; run_before loops TotalCoeff-1 times
-      // → absent
-      val (tc, tb) = totalZeros1(z)
-      w.u(tc.toLong, tb)
-    }
-
-    /** Incremental prefix-free match against `table`; loud failure
-      * past `maxBits` — the envelope refusal. */
-    private def readVlc(r: BitReader, table: Map[(Int, Int), Int],
-        maxBits: Int, what: String): Int = {
-      var code = 0
-      var bits = 0
-      while (bits < maxBits) {
-        code = (code << 1) | r.u(1).toInt
-        bits += 1
-        table.get((code, bits)) match {
-          case Some(v) => return v
-          case None =>
-        }
-      }
-      throw new IllegalArgumentException(
-        s"$what codeword outside the DC-only CAVLC envelope — decode " +
-          "multi-coefficient streams with parseI16x16Slice/" +
-          "parseIntraSlice (the general Cavlc tables)")
-    }
-
-    /** Parse one Intra16x16DCLevel CAVLC block in the nC = 0 context
-      * (§9.2): general level-decoding machinery (level_prefix,
-      * suffix-size escalation rules, the +2 first-level rule), with
-      * coeff_token populated for the envelope. Returns the 4×4 DC
-      * block in raster order. */
-    private def readDcResidualNc0(r: BitReader): Array[Int] = {
-      val token = readVlc(r,
-        coeffTokenNc0.map { case (k, v) => v -> (k._1 * 100 + k._2) },
-        16, "coeff_token")
-      val t1s = token / 100
-      val total = token % 100
-      val out = new Array[Int](16)
-      if (total == 0) return out
-      val level =
-        if (t1s == 1) { if (r.u(1) == 1L) -1 else 1 }
-        else {
-          var prefix = 0
-          while (r.u(1) == 0L) {
-            prefix += 1; require(prefix <= 32, "level_prefix overrun")
-          }
-          val suffixLength = 0
-          val suffixSize =
-            if (prefix == 14 && suffixLength == 0) 4
-            else if (prefix >= 15) prefix - 3
-            else suffixLength
-          var levelCode = (math.min(15, prefix) << suffixLength) +
-            (if (suffixSize > 0) r.u(suffixSize).toInt else 0)
-          if (prefix >= 15 && suffixLength == 0) levelCode += 15
-          if (prefix >= 16) levelCode += (1 << (prefix - 3)) - 4096
-          levelCode += 2 // first level, TrailingOnes < 3 (§9.2.2)
-          if (levelCode % 2 == 0) (levelCode + 2) >> 1
-          else -((levelCode + 1) >> 1)
-        }
-      val tz = readVlc(r,
-        totalZeros1.zipWithIndex.map { case (cb, v) => cb -> v }.toMap,
-        16, "total_zeros")
-      out(zigzag4x4(tz)) = level
-      out
-    }
 
     /** Inverse 4×4 Hadamard for the Intra16x16 luma DC block
       * (§8.5.10): f = H·c·H with H rows (1,1,1,1), (1,1,-1,-1),
@@ -1717,162 +1519,10 @@ object Codecs {
       else (f * v + (1 << (1 - per))) >> (2 - per)
     }
 
-    /** Build an IDR slice whose macroblocks are all I_16x16 / DC
-      * pred / cbp 0-0 (mb_type 3): the simplest transform-coded
-      * class. `dcPerMb`: one 4×4 DC coefficient block (raster order,
-      * ≤ 1 nonzero) per macroblock in raster MB order. QPy stays at
-      * 26 (pic_init_qp_minus26 = 0 convention, zero deltas). */
-    def buildI16x16DcSlice(dcPerMb: Seq[Array[Int]], mbW: Int, mbH: Int,
-        frameNum: Int, frameNumBits: Int, idrPicId: Int = 0,
-        deblockIdc: Int = 1): Array[Byte] = {
-      require(dcPerMb.size == mbW * mbH, "one DC block per macroblock")
-      val w = new BitWriter
-      w.ue(0L)                  // first_mb_in_slice
-      w.ue(7L)                  // slice_type: I (all slices in pic)
-      w.ue(0L)                  // pic_parameter_set_id
-      w.u(frameNum.toLong, frameNumBits)
-      w.ue(idrPicId.toLong)     // idr_pic_id
-      w.u(0L, 1); w.u(0L, 1)    // dec_ref_pic_marking (IDR)
-      w.se(0L)                  // slice_qp_delta
-      writeDeblockHeader(w, deblockIdc)
-      dcPerMb.foreach { dc =>
-        w.ue(3L)                // mb_type: I_16x16, DC pred, cbp 0/0
-        w.ue(0L)                // intra_chroma_pred_mode: DC
-        w.se(0L)                // mb_qp_delta
-        writeDcResidualNc0(w, dc)
-      }
-      w.trailingBits()
-      (0x65.toByte +: rbspEscape(w.bytes)).toArray // nal_ref_idc 3, type 5
-    }
-
-    /** Decode an IDR I_16x16 DC-only slice to pixels: CAVLC residual
-      * parse, inverse Hadamard, §8.5.10 DC dequant, lone-DC core
-      * transform ((dc+32)>>6 uniform over the 4×4, §8.5.12),
-      * Intra_16x16_DC luma prediction from RECONSTRUCTED neighbour
-      * edges (so macroblocks decode in raster order, like any real
-      * intra decoder), and chroma DC prediction with zero residual.
-      * Any other macroblock type fails loudly. */
-    def parseI16x16DcSlice(nal: Array[Byte], sps: SpsInfo,
-        pps: PpsInfo = defaultPps): PcmFrame = {
-      require(nal.nonEmpty && (nal(0) & 0x1f) == 5,
-        "not an IDR slice NAL (nal_unit_type != 5)")
-      require(sps.crop_left == 0 && sps.crop_right == 0 &&
-        sps.crop_top == 0 && sps.crop_bottom == 0,
-        "DC-only fixtures are uncropped whole-macroblock pictures")
-      val r = new BitReader(rbspUnescape(nal.drop(1)))
-      require(r.ue() == 0L, "first_mb_in_slice != 0")
-      val st = r.ue()
-      require(st == 7L || st == 2L, s"not an I slice (slice_type $st)")
-      require(r.ue() == 0L, "pic_parameter_set_id != 0")
-      r.u(sps.log2_max_frame_num) // frame_num
-      r.ue()                      // idr_pic_id
-      r.u(1); r.u(1)              // dec_ref_pic_marking (IDR)
-      val qpSlice = 26 + r.se().toInt // pic_init_qp_minus26 = 0
-      require(readDeblockHeader(r, pps)._1 == 1,
-        "this stream requires the §8.7 in-loop filter — decode it " +
-          "with parseIntraSlice (the m39 rung); the DC-only parser " +
-          "keeps the filter-off m34 contract")
-      val (wpx, hpx) = (sps.mb_width * 16, sps.mb_height * 16)
-      val cw = wpx / 2
-      val y = new Array[Int](wpx * hpx)
-      val cbP = new Array[Int](cw * (hpx / 2))
-      val crP = new Array[Int](cw * (hpx / 2))
-      def clip(v: Int): Int = math.max(0, math.min(255, v))
-      var mb = 0
-      while (mb < sps.mb_width * sps.mb_height) {
-        val mx = (mb % sps.mb_width) * 16
-        val my = (mb / sps.mb_width) * 16
-        val t = r.ue()
-        require(t == 3L,
-          s"macroblock $mb is not I_16x16/DC-pred/cbp0 (mb_type $t) — " +
-            "decode general intra streams with parseIntraSlice")
-        require(r.ue() == 0L, "intra_chroma_pred_mode != DC")
-        val mbQp = qpSlice + r.se().toInt
-        val dcCoeff = readDcResidualNc0(r)
-        val dc = invHadamard4x4(dcCoeff).map(dequantDc(_, mbQp))
-        // Intra_16x16_DC luma prediction (§8.3.3.4)
-        val topAvail = my > 0
-        val leftAvail = mx > 0
-        val sumTop =
-          if (topAvail) (0 until 16).map(i => y((my - 1) * wpx + mx + i)).sum
-          else 0
-        val sumLeft =
-          if (leftAvail) (0 until 16).map(i => y((my + i) * wpx + mx - 1)).sum
-          else 0
-        val pred =
-          if (topAvail && leftAvail) (sumTop + sumLeft + 16) >> 5
-          else if (topAvail) (sumTop + 8) >> 4
-          else if (leftAvail) (sumLeft + 8) >> 4
-          else 128
-        var b = 0
-        while (b < 16) {
-          val v = clip(pred + ((dc(b) + 32) >> 6)) // lone-DC 4x4 core
-          val bx = mx + (b % 4) * 4
-          val by = my + (b / 4) * 4
-          var i = 0
-          while (i < 16) {
-            y((by + i / 4) * wpx + bx + i % 4) = v
-            i += 1
-          }
-          b += 1
-        }
-        // chroma DC prediction, zero residual (§8.3.4.1): each 4×4
-        // of the 8×8 predicts from 4-sample strips of the
-        // NEIGHBOURING macroblocks' reconstructed edges — the top
-        // edge above the 8×8 (available iff a macroblock sits
-        // above) and the left edge beside it; the off-diagonal
-        // blocks prefer the strip aligned with their own offset and
-        // fall back to the other side
-        def chromaFill(p: Array[Int]): Unit = {
-          val cx = mx / 2
-          val cy = my / 2
-          def sTop(off: Int) =
-            (0 until 4).map(i => p((cy - 1) * cw + cx + off + i)).sum
-          def sLeft(off: Int) =
-            (0 until 4).map(i => p((cy + off + i) * cw + cx - 1)).sum
-          for (byi <- 0 to 1; bxi <- 0 to 1) {
-            val v =
-              if (bxi == 1 && byi == 0)
-                if (topAvail) (sTop(4) + 2) >> 2
-                else if (leftAvail) (sLeft(0) + 2) >> 2
-                else 128
-              else if (bxi == 0 && byi == 1)
-                if (leftAvail) (sLeft(4) + 2) >> 2
-                else if (topAvail) (sTop(0) + 2) >> 2
-                else 128
-              else { // (0,0) and (4,4): combine both when available
-                val o = bxi * 4 // == byi * 4 on the diagonal
-                if (topAvail && leftAvail) (sTop(o) + sLeft(o) + 4) >> 3
-                else if (topAvail) (sTop(o) + 2) >> 2
-                else if (leftAvail) (sLeft(o) + 2) >> 2
-                else 128
-              }
-            val ox = cx + bxi * 4
-            val oy = cy + byi * 4
-            for (yy <- 0 until 4; xx <- 0 until 4)
-              p((oy + yy) * cw + ox + xx) = clip(v)
-          }
-        }
-        chromaFill(cbP)
-        chromaFill(crP)
-        mb += 1
-      }
-      PcmFrame(wpx, hpx, y.map(_.toByte), cbP.map(_.toByte),
-        crP.map(_.toByte))
-    }
-
-    /** Decode a muxed I_16x16 DC-only stream lazily — the transform-
-      * coded sibling of [[decodeIPcmFrames]], one picture in flight. */
-    def decodeI16x16DcFrames(data: Array[Byte]): Iterator[PcmFrame] = {
-      val sps = spsInfo(data)
-      val pps = ppsInfo(data)
-      nalPayloadIterator(data).map(parseI16x16DcSlice(_, sps, pps))
-    }
-
     // ---- m35: general CAVLC + complete I_16x16 (DC + AC) ---------
     //
-    // The next rung past m34's DC-only envelope (reference anchor:
-    // run.sh:53 decodebin): the FULL §9.2 residual grammar — every
+    // The CAVLC entropy layer (reference anchor: run.sh:53
+    // decodebin): the FULL §9.2 residual grammar — every
     // coeff_token nC context of Table 9-5, trailing-ones signs,
     // level_prefix/suffix with the §9.2.2 suffix-length escalation,
     // total_zeros (Tables 9-7/9-8), run_before (Table 9-10) — plus
@@ -1880,9 +1530,7 @@ object Codecs {
     // through the Hadamard/§8.5.10 path as before, 15-coefficient
     // Intra16x16ACLevel blocks per 4×4 in luma4x4BlkIdx (Z) order,
     // §8.5.12.1 dequant (flat scaling lists) and the §8.5.12.2
-    // integer inverse core transform. Chroma residuals stay out of
-    // the envelope (mb_types with CodedBlockPatternChroma != 0 and
-    // I_4x4/I_NxN refuse loudly — the documented next rungs).
+    // integer inverse core transform.
     //
     // Table provenance: transcribed from ITU-T H.264 Table 9-5 with
     // machine-checked structural invariants run at class init
@@ -2737,30 +2385,20 @@ object Codecs {
       buildMixedIntraSlice(mbs.map { case (dc, ac) => I16Mb(dc, ac) },
         mbW, mbH, frameNum, frameNumBits, idrPicId, deblockIdc)
 
-    /** Decode an IDR I_16x16 slice with FULL residuals back to
-      * pixels — the I16-only view of [[parseIntraSlice]] (I_4x4
-      * macroblocks refuse; use parseIntraSlice for mixed
-      * streams). mb_type 3 streams decode bit-identically to
-      * [[parseI16x16DcSlice]]. */
-    def parseI16x16Slice(nal: Array[Byte], sps: SpsInfo,
-        pps: PpsInfo = defaultPps): PcmFrame =
-      parseIntraSlice(nal, sps, allowI4x4 = false, pps = pps)
-
-    /** Decode an IDR INTRA slice back to pixels — the general rung:
-      * mb_type 0 (I_4x4, prediction modes vertical/horizontal/DC,
-      * full 16-coefficient LumaLevel4x4 residuals), 3 and 15
-      * (I_16x16 DC-pred, Hadamard + §8.5.10 DC path + §8.5.12 AC),
-      * with CAVLC nC and the §8.3.1.1 mode predictor carried across
-      * macroblocks on per-4×4 grids and every prediction reading
-      * RECONSTRUCTED neighbour edges in Z order (so intra chains
-      * propagate within and across macroblocks like any real intra
-      * decoder). Chroma is DC prediction with zero residual.
-      * Anything outside the envelope — diagonal 4×4 modes, partial
-      * or chroma coded_block_pattern, I_PCM inside a mixed slice,
-      * other I_16x16 variants — refuses loudly as the documented
-      * next rung. */
+    /** Decode a CAVLC IDR INTRA slice back to pixels — the one intra
+      * parser behind [[Inter.decodeGopFrames]]: every I-slice
+      * mb_type — 0 (I_4x4, all nine §8.3.1 modes, full
+      * LumaLevel4x4 residuals), 1..24 (I_16x16, all four §8.3.3
+      * modes, Hadamard + §8.5.10 DC path + §8.5.12 AC, chroma cbp)
+      * and 25 (I_PCM) — with CAVLC nC and the §8.3.1.1 mode
+      * predictor carried across macroblocks on per-4×4 grids, every
+      * prediction reading RECONSTRUCTED neighbour edges in Z order,
+      * chroma DC prediction plus coded residuals, and the §8.7
+      * in-loop filter when the slice header enables it. Partial
+      * luma coded_block_pattern rows outside the carried Table 9-4
+      * set and non-DC chroma prediction refuse loudly. */
     def parseIntraSlice(nal: Array[Byte], sps: SpsInfo,
-        allowI4x4: Boolean = true, pps: PpsInfo = defaultPps): PcmFrame = {
+        pps: PpsInfo = defaultPps): PcmFrame = {
       require(nal.nonEmpty && (nal(0) & 0x1f) == 5,
         "not an IDR slice NAL (nal_unit_type != 5)")
       require(sps.crop_left == 0 && sps.crop_right == 0 &&
@@ -2821,13 +2459,9 @@ object Codecs {
         // I_16x16 (Table 7-11): mb_type 1..24 = 1 + predMode +
         // 4·CodedBlockPatternChroma + 12·[luma cbp 15]
         val isI16 = t >= 1L && t <= 24L
-        require(isI16 || ((t == 0L || t == 25L) && allowI4x4),
-          if (t == 0L || t == 25L)
-            s"macroblock $mb (mb_type $t) is outside this parser's " +
-              "I_16x16-only envelope (decode with parseIntraSlice)"
-          else
-            s"macroblock $mb outside the intra envelope (mb_type $t)" +
-              " — not an I-slice macroblock type")
+        require(isI16 || t == 0L || t == 25L,
+          s"macroblock $mb outside the intra envelope (mb_type $t)" +
+            " — not an I-slice macroblock type")
         val topAvail = my > 0
         val leftAvail = mx > 0
         // chroma residual data + the MB's qp, filled by the branch
@@ -3123,24 +2757,6 @@ object Codecs {
           pps.chroma_qp_index_offset, offA, offB)
       PcmFrame(wpx, hpx, y.map(_.toByte), cbP.map(_.toByte),
         crP.map(_.toByte))
-    }
-
-    /** Decode a muxed full-residual I_16x16 stream lazily — one
-      * picture in flight, like [[decodeI16x16DcFrames]]. */
-    def decodeI16x16Frames(data: Array[Byte]): Iterator[PcmFrame] = {
-      val sps = spsInfo(data)
-      nalPayloadIterator(data).map(parseI16x16Slice(_, sps))
-    }
-
-    /** Decode a muxed MIXED intra stream (I_4x4 + I_16x16
-      * macroblocks) lazily — one picture in flight. */
-    def decodeIntraFrames(data: Array[Byte]): Iterator[PcmFrame] = {
-      val sps = spsInfo(data)
-      val pps = ppsInfo(data)
-      if (pps.entropy_coding_mode) // the m40 CABAC arm
-        nalPayloadIterator(data).map(Cabac.parseI16x16Slice(_, sps, pps))
-      else
-        nalPayloadIterator(data).map(parseIntraSlice(_, sps, pps = pps))
     }
 
     // ---- fixture writer ------------------------------------------

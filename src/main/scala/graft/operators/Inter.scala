@@ -378,11 +378,12 @@ object Inter {
     PcmFrame(w, h, y.map(_.toByte), cb.map(_.toByte), cr.map(_.toByte))
   }
 
-  /** Decode a muxed GOP lazily: IDR intra frames through the
-    * round-13/14 intra machinery, P frames motion-compensated
-    * against the PREVIOUS decoded picture (the one-reference sliding
-    * window max_num_ref_frames = 1 implies). Output in decode
-    * order. */
+  /** Decode a muxed GOP lazily — the engine's one MP4 → pixels
+    * entry point: IDR intra frames through `Mp4.parseIntraSlice`
+    * (CAVLC) or `Cabac.parseI16x16Slice` (CABAC) per the stream's
+    * PPS, P frames motion-compensated against the PREVIOUS decoded
+    * picture (the one-reference sliding window max_num_ref_frames
+    * = 1 implies). Output in decode order, one picture in flight. */
   def decodeGopFrames(data: Array[Byte]): Iterator[PcmFrame] = {
     val sps = Mp4.spsInfo(data)
     val pps = Mp4.ppsInfo(data)
@@ -391,7 +392,7 @@ object Inter {
       val out = (nal(0) & 0x1f) match {
         case 5 =>
           if (pps.entropy_coding_mode) Cabac.parseI16x16Slice(nal, sps, pps)
-          else Mp4.parseIntraSlice(nal, sps, pps = pps)
+          else Mp4.parseIntraSlice(nal, sps, pps)
         case 1 =>
           require(!pps.entropy_coding_mode,
             "CABAC P slices are the documented next rung")

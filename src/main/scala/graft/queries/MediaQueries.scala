@@ -1897,23 +1897,24 @@ object MediaQueries {
     * (uncompressed H.264 — spec-correct slice header with
     * dec_ref_pic_marking and qp_delta, per-MB mb_type 25, pcm
     * alignment, emulation-prevention escaping), muxes them into a
-    * real MP4, and then runs the full decodebin-shaped hop: container
+    * real MP4, and then runs the full decodebin-shaped hop through
+    * the engine's one decoder, `Inter.decodeGopFrames`: container
     * walk → avcC SPS → NAL walk → slice parse → PIXELS. The emitted
     * sums and rolling fingerprint are over the DECODED planes, so
     * any defect anywhere in that chain — box offsets, SPS fields,
     * escape handling, alignment, raster order — breaks the hash.
     * One doc class (id % 5 == 0) carries a zero run that forces
     * 00 00 0x sequences into the RBSP, so the escape path is
-    * exercised under the gate, not just in specs. Transform-coded
-    * macroblocks (CAVLC residuals, intra prediction) remain the
-    * documented seam — the decoder REFUSES them loudly.
+    * exercised under the gate, not just in specs. The same decoder
+    * takes transform-coded macroblocks (m34 on), so this gate pins
+    * its mb_type 25 arm.
     *
     * 100 TB shape: the m27 contract — pictures are born, encoded,
     * decoded and reduced inside one partition pass; only one row per
     * video reaches the exchange. */
   def m33PcmDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.Codecs
+    import graft.operators.{Codecs, Inter}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
         it.map { id =>
@@ -1937,9 +1938,9 @@ object MediaQueries {
           }
           val mp4 = Codecs.Mp4.mux(nals, keyframes = (1 to n),
             timescale = 90000, sampleDelta = 3000, width = w, height = h)
-          // decodeIPcmFrames is a LAZY iterator — fold frame count
+          // decodeGopFrames is a LAZY iterator — fold frame count
           // into the single pass (one decoded frame in flight)
-          val dec = Codecs.Mp4.decodeIPcmFrames(mp4)
+          val dec = Inter.decodeGopFrames(mp4)
           var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
           var nDec = 0
           dec.foreach { fr =>
@@ -2001,20 +2002,22 @@ object MediaQueries {
     * coded_block_pattern 0/0), its only residual the CAVLC-coded
     * Intra16x16DCLevel block with at most one nonzero coefficient —
     * is ENCODED (real §9.2 bitstream: coeff_token, trailing-ones
-    * sign, level_prefix with the first-level +2 rule, total_zeros),
-    * muxed into real MP4, then decoded back through container walk →
-    * avcC SPS → CAVLC parse → inverse 4×4 Hadamard → §8.5.10 DC
-    * dequant → lone-DC core transform → DC intra prediction. The
-    * gate hashes the reconstructed pixel sums and a per-4×4-block
-    * fingerprint; the oracle restates the reconstruction in closed
-    * form (a lone coefficient at zigzag position z inverse-
-    * transforms to ±level patterns given by the Hadamard row signs).
+    * sign, level_prefix with the first-level +2 rule, total_zeros,
+    * written by the general `buildI16x16Slice`), muxed into real
+    * MP4, then decoded back by `Inter.decodeGopFrames` through
+    * container walk → avcC SPS → CAVLC parse → inverse 4×4 Hadamard
+    * → §8.5.10 DC dequant → lone-DC core transform → DC intra
+    * prediction. The gate hashes the reconstructed pixel sums and a
+    * per-4×4-block fingerprint; the oracle restates the
+    * reconstruction in closed form (a lone coefficient at zigzag
+    * position z inverse-transforms to ±level patterns given by the
+    * Hadamard row signs).
     *
     * 100 TB shape: like m33 — encode+decode run partition-local per
     * document (pixels never shuffle), one row out per doc. */
   def m34CavlcDcDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.Codecs
+    import graft.operators.{Codecs, Inter}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
         val zig = Array(0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
@@ -2030,14 +2033,15 @@ object MediaQueries {
               else sgn * (2 + ((id + f * 3) % 6)).toInt
             val dc = new Array[Int](16)
             if (lvl != 0) dc(zig(z)) = lvl
-            Seq(Codecs.Mp4.buildI16x16DcSlice(Seq(dc), 1, 1,
+            Seq(Codecs.Mp4.buildI16x16Slice(
+              Seq((dc, Array.fill(16)(null: Array[Int]))), 1, 1,
               frameNum = 0, frameNumBits = 4, idrPicId = f % 8))
           }
           val mp4 = Codecs.Mp4.mux(nals, keyframes = (1 to n),
             timescale = 90000, sampleDelta = 3000, width = 16, height = 16)
           var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
           var nDec = 0
-          Codecs.Mp4.decodeI16x16DcFrames(mp4).foreach { fr =>
+          Inter.decodeGopFrames(mp4).foreach { fr =>
             nDec += 1
             require(fr.width == 16 && fr.height == 16,
               s"decoded dims ${fr.width}x${fr.height}")
@@ -2115,14 +2119,15 @@ object MediaQueries {
     * suffix-length escalation, total_zeros and run_before, coded
     * under the spec nC neighbour contexts (frame classes drive nC
     * through 0≤nC<2, 2≤nC<4, 4≤nC<8 and the ≥8 FLC column) — is
-    * encoded, muxed into real MP4, and decoded back through
-    * container walk → avcC SPS → general CAVLC parse → Hadamard +
-    * §8.5.10 DC dequant → §8.5.12 AC dequant + integer inverse core
-    * transform → DC intra prediction. The gate hashes the full
-    * 16×16 luma raster per frame; the oracle restates the
-    * reconstruction in closed form (QP 26 makes every dequantized
-    * coefficient divisible by 4, so the half-weight butterflies are
-    * exactly the linear B-matrix form).
+    * encoded, muxed into real MP4, and decoded back by
+    * `Inter.decodeGopFrames` through container walk → avcC SPS →
+    * general CAVLC parse → Hadamard + §8.5.10 DC dequant →
+    * §8.5.12 AC dequant + integer inverse core transform → DC intra
+    * prediction. The gate hashes the full 16×16 luma raster per
+    * frame; the oracle restates the reconstruction in closed form
+    * (QP 26 makes every dequantized coefficient divisible by 4, so
+    * the half-weight butterflies are exactly the linear B-matrix
+    * form).
     *
     * Frame classes: kind 0 = DC-only (mb_type 3, the m34 grammar
     * stays hot); kind 1 = one strided AC block (total_zeros +
@@ -2135,7 +2140,7 @@ object MediaQueries {
     * partition-local per document, one row out per doc. */
   def m35CavlcFullDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.Codecs
+    import graft.operators.{Codecs, Inter}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
         val zig = Array(0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
@@ -2176,7 +2181,7 @@ object MediaQueries {
             timescale = 90000, sampleDelta = 3000, width = 16, height = 16)
           var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
           var nDec = 0
-          Codecs.Mp4.decodeI16x16Frames(mp4).foreach { fr =>
+          Inter.decodeGopFrames(mp4).foreach { fr =>
             nDec += 1
             require(fr.width == 16 && fr.height == 16,
               s"decoded dims ${fr.width}x${fr.height}")
@@ -2304,7 +2309,7 @@ object MediaQueries {
     * partition-local per document, one row out per doc. */
   def m36MixedIntraDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.Codecs
+    import graft.operators.{Codecs, Inter}
     import Codecs.Mp4.{I16Mb, I4Mb}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
@@ -2357,7 +2362,7 @@ object MediaQueries {
             timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
           var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
           var nDec = 0
-          Codecs.Mp4.decodeIntraFrames(mp4).foreach { fr =>
+          Inter.decodeGopFrames(mp4).foreach { fr =>
             nDec += 1
             require(fr.width == 32 && fr.height == 16,
               s"decoded dims ${fr.width}x${fr.height}")
@@ -2520,7 +2525,7 @@ object MediaQueries {
     * partition-local per document, one row out per doc. */
   def m37IntraModes(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.Codecs
+    import graft.operators.{Codecs, Inter}
     import Codecs.Mp4.{I16Mb, I4Mb}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
@@ -2568,7 +2573,7 @@ object MediaQueries {
             timescale = 90000, sampleDelta = 3000, width = 32, height = 32)
           var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
           var nDec = 0
-          Codecs.Mp4.decodeIntraFrames(mp4).foreach { fr =>
+          Inter.decodeGopFrames(mp4).foreach { fr =>
             nDec += 1
             require(fr.width == 32 && fr.height == 32,
               s"decoded dims ${fr.width}x${fr.height}")
@@ -2832,7 +2837,7 @@ object MediaQueries {
     * partition-local per document, one row out per doc. */
   def m38ChromaResiduals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.Codecs
+    import graft.operators.{Codecs, Inter}
     import Codecs.Mp4.{ChromaRes, I16Mb, I4Mb}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
@@ -2904,7 +2909,7 @@ object MediaQueries {
             timescale = 90000, sampleDelta = 3000, width = 16, height = 16)
           var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
           var nDec = 0
-          Codecs.Mp4.decodeIntraFrames(mp4).foreach { fr =>
+          Inter.decodeGopFrames(mp4).foreach { fr =>
             nDec += 1
             require(fr.width == 16 && fr.height == 16,
               s"decoded dims ${fr.width}x${fr.height}")
@@ -3140,7 +3145,7 @@ object MediaQueries {
     * partition-local per document, one row out per doc. */
   def m39Deblock(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.Codecs
+    import graft.operators.{Codecs, Inter}
     import Codecs.Mp4.{ChromaRes, I16Mb, I4Mb}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
@@ -3199,7 +3204,7 @@ object MediaQueries {
             timescale = 90000, sampleDelta = 3000, width = w, height = 16)
           var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
           var nDec = 0
-          Codecs.Mp4.decodeIntraFrames(mp4).foreach { fr =>
+          Inter.decodeGopFrames(mp4).foreach { fr =>
             nDec += 1
             require(fr.width == w && fr.height == 16,
               s"decoded dims ${fr.width}x${fr.height}")
@@ -3245,7 +3250,7 @@ object MediaQueries {
     * partition-local per document, one row out per doc. */
   def m40CabacDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.{Cabac, Codecs}
+    import graft.operators.{Cabac, Codecs, Inter}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
         val zig = Array(0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
@@ -3288,7 +3293,7 @@ object MediaQueries {
             ppsOverride = cabacPps)
           var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
           var nDec = 0
-          Codecs.Mp4.decodeIntraFrames(mp4).foreach { fr =>
+          Inter.decodeGopFrames(mp4).foreach { fr =>
             nDec += 1
             require(fr.width == 16 && fr.height == 16,
               s"decoded dims ${fr.width}x${fr.height}")
@@ -3980,7 +3985,7 @@ object MediaQueries {
     * inside one partition pass, one row out. */
   def m44CabacChroma(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.{Cabac, Codecs}
+    import graft.operators.{Cabac, Codecs, Inter}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
         def sgn(x: Long): Int = if (x % 2 == 0) 1 else -1
@@ -4015,7 +4020,7 @@ object MediaQueries {
             ppsOverride = cabacPps)
           var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
           var nDec = 0
-          Codecs.Mp4.decodeIntraFrames(mp4).foreach { fr =>
+          Inter.decodeGopFrames(mp4).foreach { fr =>
             nDec += 1
             require(fr.width == 32 && fr.height == 16,
               s"decoded dims ${fr.width}x${fr.height}")

@@ -255,9 +255,19 @@ object RetrievalQueries {
     * postings so serving needs no per-term stats row. The doclen
     * join is keyed by doc_id (broadcastable while postings for a
     * query are small — the high-selectivity regime an inverted index
-    * exists for). */
-  val lexBuckets: Int =
-    sys.env.get("SPARK_GRAFT_LEX_BUCKETS").map(_.toInt).getOrElse(64)
+    * exists for). An index records the B it was built with, and
+    * `IndexedLex` refuses to serve or extend it under another B. */
+  lazy val lexBuckets: Int =
+    parseLexBuckets(sys.env.get("SPARK_GRAFT_LEX_BUCKETS"))
+
+  /** `SPARK_GRAFT_LEX_BUCKETS`, or 64 when unset; anything but a
+    * positive integer refuses by name. */
+  private[graft] def parseLexBuckets(v: Option[String]): Int =
+    v.fold(64) { s =>
+      s.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_LEX_BUCKETS='$s' is not a positive integer"))
+    }
 
   /** Run independent Spark ACTIONS (sink writes of already-pinned
     * inputs) as concurrent jobs and wait for ALL OF THEM TO SETTLE:

@@ -23,7 +23,11 @@ import graft.queries.RetrievalQueries
   * is scoped to the batch's `ingest_id` partition with overwrite
   * semantics (an at-least-once replay REPLACES its own partial
   * output), and a `_ingested_<id>` marker written last through the
-  * Hadoop FileSystem API short-circuits completed batches.
+  * Hadoop FileSystem API short-circuits completed batches. Beside
+  * the markers, `_lex_buckets` records the term-hash bucket count B
+  * the postings were laid out with; every entry point refuses an
+  * index whose B differs from `SPARK_GRAFT_LEX_BUCKETS`, since the
+  * serve predicate would prune to the wrong buckets.
   *
   * 100 TB shape: each micro-batch costs one narrow tokenize pass
   * over the BATCH plus three batch-sized writes; stats stay one row
@@ -65,6 +69,31 @@ object IndexedLex {
   private def markerOf(path: String, batchId: Long) =
     new org.apache.hadoop.fs.Path(path, s"_ingested_$batchId")
 
+  /** Check the index's recorded bucket count against
+    * [[RetrievalQueries.lexBuckets]]. The write paths (`record`)
+    * record B on a fresh index; serve and compact refuse an index
+    * with no record. */
+  private def checkBuckets(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, record: Boolean): Unit = {
+    val f = new org.apache.hadoop.fs.Path(path, "_lex_buckets")
+    val b = RetrievalQueries.lexBuckets
+    if (fs.exists(f)) {
+      val in = fs.open(f)
+      val built =
+        try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
+      require(built == b.toString,
+        s"lexical index $path was built with $built term-hash buckets " +
+          s"but SPARK_GRAFT_LEX_BUCKETS gives $b — use " +
+          s"SPARK_GRAFT_LEX_BUCKETS=$built or rebuild the index")
+    } else {
+      require(record, s"lexical index $path records no term-hash " +
+        "bucket count (_lex_buckets) — rebuild it with ingestBatch " +
+        "or backfill")
+      val out = fs.create(f, false)
+      try out.write(b.toString.getBytes("UTF-8")) finally out.close()
+    }
+  }
+
   /** One ingest step (the foreachBatch body and the x69 gate's unit):
     * tokenize `batch` once, write postings/doclen/stats under
     * `ingest_id=<batchId>`, marker last. */
@@ -73,6 +102,7 @@ object IndexedLex {
     val hconf = spark.sessionState.newHadoopConf()
     val marker = markerOf(path, batchId)
     val fs = marker.getFileSystem(hconf)
+    checkBuckets(fs, path, record = true)
     if (fs.exists(marker)) return
     val tok = tokPin(batch)
     RetrievalQueries.awaitAll(sinkActions(path, tok, batchId): _*)
@@ -93,6 +123,7 @@ object IndexedLex {
       batches: Seq[(DataFrame, Long)]): Unit = {
     val hconf = spark.sessionState.newHadoopConf()
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
+    checkBuckets(fs, path, record = true)
     val todo = batches.filter { case (_, id) =>
       !fs.exists(markerOf(path, id))
     }
@@ -176,6 +207,7 @@ object IndexedLex {
     val hconf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(hconf)
+    checkBuckets(fs, path, record = false)
     finishSwap(fs, path)
     val stage = new org.apache.hadoop.fs.Path(s"$path/_compact_stage")
     fs.delete(stage, true)
@@ -227,6 +259,9 @@ object IndexedLex {
     * summing the per-batch one-row partials. */
   def serve(spark: SparkSession, path: String,
       terms: Seq[String]): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    checkBuckets(root.getFileSystem(spark.sessionState.newHadoopConf()),
+      path, record = false)
     val ts = terms.sorted
     val post = spark.read.parquet(s"$path/postings")
       .where(RetrievalQueries.bucketPredFor(ts) && col("term").isin(ts: _*))

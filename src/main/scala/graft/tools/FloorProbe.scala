@@ -39,12 +39,13 @@ object FloorProbe {
       li.groupBy(col("l_returnflag")).agg(sum(col("l_quantity")).as("s"))
         .write.format("noop").mode("overwrite").save()
     }
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     med("aggNoAqe") {
       li.groupBy(col("l_returnflag")).agg(sum(col("l_quantity")).as("s"))
         .write.format("noop").mode("overwrite").save()
     }
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
     println("lineitem rows=" + li.count())
     spark.stop()
   }

@@ -49,6 +49,10 @@ object StageProf {
       val df = fn(spark, sfDir)
       df.write.format("noop").mode("overwrite").save()
       val total = (System.nanoTime() - t0) / 1e9
+      // stage events arrive on the async bus: read them only once
+      // it has delivered everything the run posted
+      org.apache.spark.sql.graftbridge.GraftSqlBridge
+        .drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       println(f"STAGEPROF $name total=$total%.3f stages=${stages.size}")
       val rows = stages.values.toSeq.sortBy(s => -(s.completed - s.submitted))

@@ -3,7 +3,8 @@ package graft
 import java.sql.Timestamp
 
 import graft.model.Frame
-import graft.operators.{Codecs, Detect, DetectorConfig, Detectors, GraftNet}
+import graft.operators.{Codecs, Detect, DetectorConfig, Detectors, GraftNet,
+  Inter}
 import graft.operators.Codecs.Mp4.PcmFrame
 
 /** Round-11 additions, part 3: the I_PCM rung of the H.264 pixel
@@ -31,7 +32,7 @@ class Round11cSpec extends SparkTestBase {
     val nal = Codecs.Mp4.buildIdrPcmSlice(f, frameNum = 0, frameNumBits = 4)
     assert((nal(0) & 0x1f) === 5) // IDR NAL
     val sps = Codecs.Mp4.parseSps(Codecs.Mp4.buildSps(32, 16))
-    val back = Codecs.Mp4.parseIdrPcmSlice(nal, sps)
+    val back = Codecs.Mp4.parseIntraSlice(nal, sps)
     assert(back.width === 32 && back.height === 16)
     assert(back.y.toSeq === f.y.toSeq)
     assert(back.cb.toSeq === f.cb.toSeq)
@@ -55,28 +56,10 @@ class Round11cSpec extends SparkTestBase {
       esc(i) == 0 && esc(i + 1) == 0 && (esc(i + 2) & 0xff) <= 2)
     assert(!bad, "escaped NAL still contains a start-code mimic")
     val sps = Codecs.Mp4.parseSps(Codecs.Mp4.buildSps(16, 16))
-    val back = Codecs.Mp4.parseIdrPcmSlice(nal, sps)
+    val back = Codecs.Mp4.parseIntraSlice(nal, sps)
     assert(back.y.toSeq === f.y.toSeq)
     assert(back.cb.toSeq === f.cb.toSeq)
     assert(back.cr.toSeq === f.cr.toSeq)
-  }
-
-  test("transform-coded macroblocks are refused loudly, never garbled") {
-    // a syntactically-valid slice whose first mb_type is 0 (I_NxN)
-    val w = new Codecs.Mp4.BitWriter
-    w.ue(0L); w.ue(7L); w.ue(0L) // first_mb, slice_type I, pps_id
-    w.u(0L, 4)                   // frame_num
-    w.ue(0L)                     // idr_pic_id
-    w.u(0L, 1); w.u(0L, 1)       // dec_ref_pic_marking
-    w.se(0L)                     // slice_qp_delta
-    w.ue(1L)                     // disable_deblocking_filter_idc: off
-    w.ue(0L)                     // mb_type 0: I_NxN — NOT I_PCM
-    w.trailingBits()
-    val nal = (0x65.toByte +: Codecs.Mp4.rbspEscape(w.bytes)).toArray
-    val sps = Codecs.Mp4.parseSps(Codecs.Mp4.buildSps(16, 16))
-    val e = intercept[IllegalArgumentException](
-      Codecs.Mp4.parseIdrPcmSlice(nal, sps))
-    assert(e.getMessage.contains("I_PCM"))
   }
 
   test("MP4 of I_PCM slices decodes container-to-pixels, multi-frame") {
@@ -87,7 +70,7 @@ class Round11cSpec extends SparkTestBase {
     }
     val mp4 = Codecs.Mp4.mux(nals, keyframes = Seq(1, 2, 3),
       timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
-    val dec = Codecs.Mp4.decodeIPcmFrames(mp4).toSeq
+    val dec = Inter.decodeGopFrames(mp4).toSeq
     assert(dec.length === 3)
     dec.zip(frames).foreach { case (d, o) =>
       assert(d.width === 32 && d.height === 16)
@@ -131,7 +114,7 @@ class Round11cSpec extends SparkTestBase {
       val bytes = java.nio.file.Files.readAllBytes(dir.resolve(name))
       val mt = new Timestamp(java.nio.file.Files
         .getLastModifiedTime(dir.resolve(name)).toMillis)
-      Codecs.Mp4.decodeIPcmFrames(bytes).zipWithIndex.map { case (f, i) =>
+      Inter.decodeGopFrames(bytes).zipWithIndex.map { case (f, i) =>
         val planes = f.y ++ f.cb ++ f.cr
         Frame(name, i.toLong, mt, f.height, f.width,
           Codecs.Y4mCodec.yuv420ToRgb(planes, 0, f.width, f.height))
@@ -157,7 +140,7 @@ class Round11cSpec extends SparkTestBase {
     }
     val mp4 = Codecs.Mp4.mux(nals, keyframes = Seq(1, 2),
       timescale = 90000, sampleDelta = 3000, width = w, height = h)
-    val dec = Codecs.Mp4.decodeIPcmFrames(mp4).toSeq
+    val dec = Inter.decodeGopFrames(mp4).toSeq
     // planar YUV -> RGB through the Y4M container hop (BT.601,
     // chroma replication — the same conversion the Y4M path gates)
     val frameRows = dec.zipWithIndex.map { case (fr, i) =>

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Codecs
+import graft.operators.{Codecs, Inter}
 import graft.operators.Codecs.Mp4.PcmFrame
 
 /** Round-12 additions: lazy per-file video decode (one frame in
@@ -29,15 +29,16 @@ class Round12Spec extends SparkTestBase {
       timescale = 90000, sampleDelta = 3000, width = w, height = h)
   }
 
-  test("decodeIPcmFrames is LAZY: frames materialize one at a time, " +
+  test("decodeGopFrames is LAZY: frames materialize one at a time, " +
     "a corrupt later sample is untouched until the walk reaches it") {
     val (w, h) = (16, 16)
     val frames = (0 until 3).map(f => lcgPlanes(w, h, 0xBAD5EEDL + f))
     val mp4 = mux3(frames, w, h)
     // corrupt the THIRD sample's NAL header byte in mdat
-    // (nal_unit_type 5 -> 1): an EAGER whole-file decode would throw
-    // before yielding anything; the lazy walk must still serve
-    // frames 1 and 2 and only fail when asked for frame 3
+    // (nal_unit_type 5 -> 1, so its I-slice header reaches the P
+    // parser): an EAGER whole-file decode would throw before
+    // yielding anything; the lazy walk must still serve frames 1
+    // and 2 and only fail when asked for frame 3
     val mdat = Codecs.Mp4.boxes(mp4, 0, mp4.length)
       .find(_.fourcc == "mdat").get
     val lenPrefix = 4
@@ -47,13 +48,13 @@ class Round12Spec extends SparkTestBase {
     val off3 = mdat.off + sampleLens(0) + sampleLens(1) + lenPrefix
     assert((mp4(off3) & 0x1f) === 5)
     mp4(off3) = ((mp4(off3) & 0xe0) | 1).toByte
-    val it = Codecs.Mp4.decodeIPcmFrames(mp4)
+    val it = Inter.decodeGopFrames(mp4)
     val f1 = it.next()
     val f2 = it.next()
     assert(f1.y.toSeq === frames(0).y.toSeq)
     assert(f2.y.toSeq === frames(1).y.toSeq)
     val e = intercept[IllegalArgumentException] { it.next() }
-    assert(e.getMessage.contains("IDR"))
+    assert(e.getMessage.contains("not a P slice"))
   }
 
   test("IndexedLex.backfill (pipelined tokenize) == sequential " +
@@ -92,6 +93,17 @@ class Round12Spec extends SparkTestBase {
   // dc = f * 13 << 2; then the lone-DC 4x4 core: r = (dc + 32) >> 6
   private def dcResidual(f: Int): Int = (((f * 13) << 2) + 32) >> 6
 
+  private val noAc = Array.fill(16)(null: Array[Int])
+
+  // the 16x16 luma a single-MB picture with one DC coefficient `l`
+  // at `raster` reconstructs to: each 4x4 block flat at 128 + the
+  // closed-form Hadamard residual
+  private def dcOnlyLuma(raster: Int, l: Int): Seq[Int] =
+    Seq.tabulate(256) { p =>
+      val i = p / 64; val j = (p % 16) / 4 // 4x4 block row, column
+      128 + dcResidual(H(i)(raster / 4) * H(j)(raster % 4) * l)
+    }
+
   test("I_16x16 DC-only slice round-trips: CAVLC + Hadamard + dequant " +
     "against the closed form, single macroblock") {
     val zig = Array(0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
@@ -100,22 +112,12 @@ class Round12Spec extends SparkTestBase {
       val dc = new Array[Int](16)
       val raster = zig(z)
       if (l != 0) dc(raster) = l
-      val nal = Codecs.Mp4.buildI16x16DcSlice(Seq(dc), 1, 1,
+      val nal = Codecs.Mp4.buildI16x16Slice(Seq((dc, noAc)), 1, 1,
         frameNum = 0, frameNumBits = 4)
       assert((nal(0) & 0x1f) === 5)
-      val f = Codecs.Mp4.parseI16x16DcSlice(nal, sps)
+      val f = Codecs.Mp4.parseIntraSlice(nal, sps)
       assert(f.width === 16 && f.height === 16)
-      // every 4x4 luma block is flat: 128 + residual from the
-      // closed-form Hadamard of the lone coefficient
-      val r0 = raster / 4; val c0 = raster % 4
-      for (i <- 0 until 4; j <- 0 until 4) {
-        val expected = 128 + dcResidual(
-          if (l == 0) 0 else H(i)(r0) * H(j)(c0) * l)
-        val got = f.y((i * 4) * 16 + j * 4) & 0xff
-        assert(got === expected, s"block ($i,$j) z=$z l=$l")
-        // flatness within the block
-        assert((f.y((i * 4 + 3) * 16 + j * 4 + 3) & 0xff) === expected)
-      }
+      assert(f.y.map(_ & 0xff).toSeq === dcOnlyLuma(raster, l), s"z=$z l=$l")
       // chroma: no neighbours, zero residual -> flat 128
       assert(f.cb.forall(b => (b & 0xff) == 128))
       assert(f.cr.forall(b => (b & 0xff) == 128))
@@ -128,9 +130,10 @@ class Round12Spec extends SparkTestBase {
     // MB0 shifts up (+dc at zigzag 0 -> uniform +residual), others 0
     val dc0 = new Array[Int](16); dc0(0) = 6
     val zero = new Array[Int](16)
-    val nal = Codecs.Mp4.buildI16x16DcSlice(
-      Seq(dc0, zero, zero, zero), 2, 2, frameNum = 0, frameNumBits = 4)
-    val f = Codecs.Mp4.parseI16x16DcSlice(nal, sps)
+    val nal = Codecs.Mp4.buildI16x16Slice(
+      Seq(dc0, zero, zero, zero).map((_, noAc)), 2, 2, frameNum = 0,
+      frameNumBits = 4)
+    val f = Codecs.Mp4.parseIntraSlice(nal, sps)
     val v0 = 128 + dcResidual(6) // MB0 uniform value
     assert((f.y(0) & 0xff) === v0)
     // MB1 (right): left edge = MB0's right column (all v0), top
@@ -143,23 +146,6 @@ class Round12Spec extends SparkTestBase {
     assert((f.y(16 * 32 + 16) & 0xff) === v0)
   }
 
-  test("transform rungs refuse each other loudly: I_PCM parser vs " +
-    "I_16x16 parser") {
-    val sps = Codecs.Mp4.parseSps(Codecs.Mp4.buildSps(16, 16))
-    val dc = new Array[Int](16); dc(0) = 3
-    val dcNal = Codecs.Mp4.buildI16x16DcSlice(Seq(dc), 1, 1, 0, 4)
-    val pcmNal = Codecs.Mp4.buildIdrPcmSlice(
-      lcgPlanes(16, 16, 0xCAFEL), frameNum = 0, frameNumBits = 4)
-    val e1 = intercept[IllegalArgumentException] {
-      Codecs.Mp4.parseIdrPcmSlice(dcNal, sps)
-    }
-    assert(e1.getMessage.contains("I_PCM"))
-    val e2 = intercept[IllegalArgumentException] {
-      Codecs.Mp4.parseI16x16DcSlice(pcmNal, sps)
-    }
-    assert(e2.getMessage.contains("mb_type"))
-  }
-
   test("muxed I_16x16 DC-only stream decodes lazily through the " +
     "container, frame for frame") {
     val frames = (0 until 3).map { f =>
@@ -168,20 +154,17 @@ class Round12Spec extends SparkTestBase {
       dc
     }
     val nals = frames.zipWithIndex.map { case (dc, f) =>
-      Seq(Codecs.Mp4.buildI16x16DcSlice(Seq(dc), 1, 1,
+      Seq(Codecs.Mp4.buildI16x16Slice(Seq((dc, noAc)), 1, 1,
         frameNum = 0, frameNumBits = 4, idrPicId = f))
     }
     val mp4 = Codecs.Mp4.mux(nals, keyframes = Seq(1, 2, 3),
       timescale = 90000, sampleDelta = 3000, width = 16, height = 16)
-    val sps = Codecs.Mp4.spsInfo(mp4)
-    val direct = frames.map(dc =>
-      Codecs.Mp4.parseI16x16DcSlice(
-        Codecs.Mp4.buildI16x16DcSlice(Seq(dc), 1, 1, 0, 4), sps))
-    val viaMp4 = Codecs.Mp4.decodeI16x16DcFrames(mp4).toSeq
+    val viaMp4 = Inter.decodeGopFrames(mp4).toSeq
     assert(viaMp4.size === 3)
-    viaMp4.zip(direct).foreach { case (a, b) =>
-      assert(a.y.toSeq === b.y.toSeq)
-      assert(a.cb.toSeq === b.cb.toSeq)
+    viaMp4.zip(frames).foreach { case (a, dc) =>
+      val raster = dc.indexWhere(_ != 0)
+      assert(a.y.map(_ & 0xff).toSeq === dcOnlyLuma(raster, dc(raster)))
+      assert(a.cb.forall(b => (b & 0xff) == 128))
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.Inter
 import graft.streaming.{IndexedDedup, IndexedLex}
 
 /** Round-13 additions: the two escalation guards the round-12 ledger
@@ -283,7 +284,7 @@ class Round13Spec extends SparkTestBase {
       val nal = Mp4.buildI16x16Slice(mbs, 2, 2, frameNum = 0,
         frameNumBits = 4)
       val sps = Mp4.parseSps(Mp4.buildSps(32, 32))
-      val f = Mp4.parseI16x16Slice(nal, sps)
+      val f = Mp4.parseIntraSlice(nal, sps)
       // independent reference: Hadamard closed form for the DC path,
       // the exact B-matrix linear form for each 4x4 (valid because
       // QP 26 makes every dequantized coefficient divisible by 4),
@@ -329,45 +330,15 @@ class Round13Spec extends SparkTestBase {
         }
       }
       assert(f.y.map(_ & 0xff).toSeq === ref.toSeq, s"trial $trial")
-      // mb_type-3-only content still decodes identically through the
-      // DC-only parser (grammar compatibility downward)
-      val dcOnly = mbs.map { case (dcC, _) =>
-        (dcC.map(v => if (v.abs > 7) 0 else v), Array.fill(16)(null: Array[Int]))
-      }
-      // keep at most one nonzero per DC block for the m34 envelope
-      val dcOne = dcOnly.map { case (dcC, ac) =>
-        val first = dcC.indexWhere(_ != 0)
-        (Array.tabulate(16)(i => if (i == first) dcC(i) else 0), ac)
-      }
-      val nalDc = Mp4.buildI16x16Slice(dcOne, 2, 2, 0, 4)
-      val a = Mp4.parseI16x16Slice(nalDc, sps)
-      val b = Mp4.parseI16x16DcSlice(nalDc, sps)
-      assert(a.y.toSeq === b.y.toSeq && a.cb.toSeq === b.cb.toSeq)
     }
   }
 
-  test("envelope refusals updated: DC-only parser refuses mb_type 15; " +
-    "full parser refuses I_PCM; lazy muxed decode is frame-exact") {
+  test("muxed full-residual I_16x16 stream: lazy GOP decode is " +
+    "frame-exact") {
     import graft.operators.Codecs.Mp4
     val sps = Mp4.parseSps(Mp4.buildSps(16, 16))
-    val ac0 = Array.tabulate(16)(b =>
-      if (b == 0) { val a = new Array[Int](15); a(0) = 4; a(3) = -2; a }
-      else null)
-    val dc0 = new Array[Int](16); dc0(5) = 3
-    val acNal = Mp4.buildI16x16Slice(Seq((dc0, ac0)), 1, 1, 0, 4)
-    val e1 = intercept[IllegalArgumentException] {
-      Mp4.parseI16x16DcSlice(acNal, sps)
-    }
-    assert(e1.getMessage.contains("mb_type"))
-    val pcm = Mp4.buildIdrPcmSlice(Mp4.PcmFrame(16, 16,
-      Array.fill(256)(7.toByte), Array.fill(64)(3.toByte),
-      Array.fill(64)(5.toByte)), 0, 4)
-    val e2 = intercept[IllegalArgumentException] {
-      Mp4.parseI16x16Slice(pcm, sps)
-    }
-    assert(e2.getMessage.contains("parseIntraSlice"))
     // container hop: three full-residual frames through mux +
-    // decodeI16x16Frames == direct parses
+    // decodeGopFrames == direct parses
     val frames = (0 until 3).map { fidx =>
       val dc = new Array[Int](16); dc(zig(fidx * 5)) = 2 - fidx
       val ac = Array.tabulate(16) { b =>
@@ -382,8 +353,8 @@ class Round13Spec extends SparkTestBase {
     }
     val mp4 = Mp4.mux(frames, keyframes = Seq(1, 2, 3),
       timescale = 90000, sampleDelta = 3000, width = 16, height = 16)
-    val got = Mp4.decodeI16x16Frames(mp4).toSeq
-    val want = frames.map(n => Mp4.parseI16x16Slice(n.head, sps))
+    val got = Inter.decodeGopFrames(mp4).toSeq
+    val want = frames.map(n => Mp4.parseIntraSlice(n.head, sps))
     assert(got.size === 3)
     got.zip(want).foreach { case (a, b) =>
       assert(a.y.toSeq === b.y.toSeq && a.cb.toSeq === b.cb.toSeq)
@@ -524,8 +495,8 @@ class Round13Spec extends SparkTestBase {
     }
   }
 
-  test("MIXED I_4x4 / I_16x16 slice decodes to the reference; the " +
-    "I16-only parser refuses it; lazy muxed decode is frame-exact") {
+  test("MIXED I_4x4 / I_16x16 slice decodes to the reference; lazy " +
+    "muxed decode is frame-exact") {
     import graft.operators.Codecs.Mp4
     import graft.operators.Codecs.Mp4.{I16Mb, I4Mb}
     val rnd = new scala.util.Random(1636)
@@ -561,25 +532,21 @@ class Round13Spec extends SparkTestBase {
         if ((mb + fidx) % 2 == 0) randI16() else randI4(mb))
       (mbs, Seq(Mp4.buildMixedIntraSlice(mbs, 2, 2, 0, 4, idrPicId = fidx)))
     }
-    // per-frame: decoded == reference; I16-only parser refuses
+    // per-frame: decoded == reference
     nals.foreach { case (mbs, nal) =>
       val f = Mp4.parseIntraSlice(nal.head, sps)
       assert(f.y.map(_ & 0xff).toSeq === refIntraDecode(mbs, 2, 2).toSeq)
-      val e = intercept[IllegalArgumentException] {
-        Mp4.parseI16x16Slice(nal.head, sps)
-      }
-      assert(e.getMessage.contains("parseIntraSlice"))
     }
     // container hop, lazily
     val mp4 = Mp4.mux(nals.map(_._2), keyframes = Seq(1, 2, 3),
       timescale = 90000, sampleDelta = 3000, width = 32, height = 32)
-    val got = Mp4.decodeIntraFrames(mp4).toSeq
+    val got = Inter.decodeGopFrames(mp4).toSeq
     assert(got.size === 3)
     got.zip(nals).foreach { case (a, (mbs, _)) =>
       assert(a.y.map(_ & 0xff).toSeq === refIntraDecode(mbs, 2, 2).toSeq)
     }
     // a whole-PCM slice decodes through the mixed parser too, byte
-    // for byte with the dedicated PCM parser
+    // for byte with the planes it carries
     val pcmFrame = Mp4.PcmFrame(16, 16,
       Array.tabulate(256)(i => (i % 251).toByte),
       Array.tabulate(64)(i => (i * 3 % 251).toByte),
@@ -587,9 +554,8 @@ class Round13Spec extends SparkTestBase {
     val pcm = Mp4.buildIdrPcmSlice(pcmFrame, 0, 4)
     val sps16 = Mp4.parseSps(Mp4.buildSps(16, 16))
     val viaMixed = Mp4.parseIntraSlice(pcm, sps16)
-    val viaPcm = Mp4.parseIdrPcmSlice(pcm, sps16)
-    assert(viaMixed.y.toSeq === viaPcm.y.toSeq)
-    assert(viaMixed.cb.toSeq === viaPcm.cb.toSeq)
-    assert(viaMixed.cr.toSeq === viaPcm.cr.toSeq)
+    assert(viaMixed.y.toSeq === pcmFrame.y.toSeq)
+    assert(viaMixed.cb.toSeq === pcmFrame.cb.toSeq)
+    assert(viaMixed.cr.toSeq === pcmFrame.cr.toSeq)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Inter
 import graft.operators.Codecs.Mp4
 import graft.operators.Codecs.Mp4.{I16Mb, I4Mb}
 
@@ -282,7 +283,7 @@ class Round13bSpec extends SparkTestBase {
           Array(0, 2, 0, 0), null))), 1, 1, 0, 4, idrPicId = i)))
     val mp4 = Mp4.mux(nals, keyframes = Seq(1, 2), timescale = 90000,
       sampleDelta = 3000, width = 16, height = 16)
-    val got = Mp4.decodeIntraFrames(mp4).toSeq
+    val got = Inter.decodeGopFrames(mp4).toSeq
     assert(got.size === 2)
     got.zip(nals).foreach { case (a, n) =>
       val b = Mp4.parseIntraSlice(n.head, sps16)

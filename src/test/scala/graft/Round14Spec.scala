@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Codecs, Deblock}
+import graft.operators.{Codecs, Deblock, Inter}
 import graft.streaming.{IndexedDedup, IndexedLex}
 import Codecs.Mp4
 
@@ -45,20 +45,8 @@ class Round14Spec extends SparkTestBase {
     assert(pps.deblocking_filter_control_present)
     // default idc = 1 (filter off): decode equals the legacy pixels —
     // the Step-A invariance that kept every m33-m38 hash green
-    val fr = Mp4.decodeIntraFrames(mp4).next()
+    val fr = Inter.decodeGopFrames(mp4).next()
     assert(fr.y.forall(b => (b & 0xff) === 128 + (52 * 2 + 32 >> 6)))
-  }
-
-  test("the DC-only parser refuses a stream that requires the " +
-    "filter (idc 0) instead of decoding it un-deblocked") {
-    val dc = new Array[Int](16); dc(0) = 3
-    val nal = Mp4.buildI16x16DcSlice(Seq(dc), 1, 1, frameNum = 0,
-      frameNumBits = 4, deblockIdc = 0)
-    val sps = Mp4.parseSps(Mp4.buildSps(16, 16))
-    val e = intercept[IllegalArgumentException] {
-      Mp4.parseI16x16DcSlice(nal, sps)
-    }
-    assert(e.getMessage.contains("parseIntraSlice"))
   }
 
   // ---- m39: §8.7 anchors, hand-derived from the spec at QP 26 ------
@@ -74,7 +62,7 @@ class Round14Spec extends SparkTestBase {
       2, 1, frameNum = 0, frameNumBits = 4, deblockIdc = 0)
     val mp4 = Mp4.mux(Seq(Seq(nal)), keyframes = Seq(1),
       timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
-    val fr = Mp4.decodeIntraFrames(mp4).next()
+    val fr = Inter.decodeGopFrames(mp4).next()
     val rows = fr.y.map(_ & 0xff)
     // y-uniform by construction: every row identical
     for (r <- 1 until 16)
@@ -142,7 +130,7 @@ class Round14Spec extends SparkTestBase {
       2, 1, frameNum = 0, frameNumBits = 4, deblockIdc = 0)
     val mp4 = Mp4.mux(Seq(Seq(nal)), keyframes = Seq(1),
       timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
-    val fr = Mp4.decodeIntraFrames(mp4).next()
+    val fr = Inter.decodeGopFrames(mp4).next()
     assert(fr.y.forall(b => (b & 0xff) === 128), "luma flat no-op")
     val cbRow = fr.cb.take(16).map(_ & 0xff)
     for (r <- 1 until 8)
@@ -171,7 +159,7 @@ class Round14Spec extends SparkTestBase {
       1, 1, frameNum = 0, frameNumBits = 4, deblockIdc = 0)
     val mp4 = Mp4.mux(Seq(Seq(nal)), keyframes = Seq(1),
       timescale = 90000, sampleDelta = 3000, width = 16, height = 16)
-    val fr = Mp4.decodeIntraFrames(mp4).next()
+    val fr = Inter.decodeGopFrames(mp4).next()
     val row = fr.y.take(16).map(_ & 0xff)
     for (r <- 1 until 16)
       assert(fr.y.slice(r * 16, r * 16 + 16).map(_ & 0xff).toSeq ===
@@ -196,14 +184,14 @@ class Round14Spec extends SparkTestBase {
       2, 1, frameNum = 0, frameNumBits = 4, deblockIdc = 0)
     val mp4 = Mp4.mux(Seq(Seq(nal)), keyframes = Seq(1),
       timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
-    val withF = Mp4.decodeIntraFrames(mp4).next()
+    val withF = Inter.decodeGopFrames(mp4).next()
     // the same slice with the filter off
     val nalOff = Mp4.buildMixedIntraSlice(Seq(
       Mp4.PcmMb(py, pcb, pcr), Mp4.I16Mb(dc1, noAc)),
       2, 1, frameNum = 0, frameNumBits = 4, deblockIdc = 1)
     val mp4Off = Mp4.mux(Seq(Seq(nalOff)), keyframes = Seq(1),
       timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
-    val noF = Mp4.decodeIntraFrames(mp4Off).next()
+    val noF = Inter.decodeGopFrames(mp4Off).next()
     assert(withF.y.toSeq === noF.y.toSeq &&
       withF.cb.toSeq === noF.cb.toSeq && withF.cr.toSeq === noF.cr.toSeq)
     // and the PCM plane really is the raw bytes
@@ -252,7 +240,7 @@ class Round14Spec extends SparkTestBase {
       timescale = 90000, sampleDelta = 3000, width = 16, height = 32,
       ppsOverride = cabacPps)
     val e1 = intercept[IllegalArgumentException] {
-      Mp4.decodeIntraFrames(tall).next()
+      Inter.decodeGopFrames(tall).next()
     }
     assert(e1.getMessage.contains("one-macroblock-ROW"))
     // a CAVLC-coded payload under a CABAC PPS: loud, never garbled
@@ -263,7 +251,7 @@ class Round14Spec extends SparkTestBase {
       timescale = 90000, sampleDelta = 3000, width = 16, height = 16,
       ppsOverride = cabacPps)
     intercept[IllegalArgumentException] {
-      Mp4.decodeIntraFrames(mixed).next()
+      Inter.decodeGopFrames(mixed).next()
     }
   }
 
@@ -332,6 +320,49 @@ class Round14Spec extends SparkTestBase {
     assert(got.nonEmpty && got === scratch)
     assert(spark.read.parquet(s"$idx/stats")
       .agg(sum("n_docs")).head().getLong(0) === docs.count())
+  }
+
+  test("IndexedLex refuses an index built with a different term-hash " +
+    "bucket count: serve, ingestBatch, backfill and compact all name " +
+    "SPARK_GRAFT_LEX_BUCKETS") {
+    val docs = graft.sources.Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text"))
+    val idx = java.nio.file.Files.createTempDirectory("ixb").toString + "/ix"
+    IndexedLex.ingestBatch(spark, idx, docs.filter(col("doc_id") % 2 === 0), 0L)
+    val terms = Seq("hash", "merge", "spark", "window")
+    assert(IndexedLex.serve(spark, idx, terms).count() > 0)
+    // the same postings, now claimed to be laid out over twice the
+    // buckets: serving would prune to the wrong tbkt directories
+    val fs = new org.apache.hadoop.fs.Path(idx)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val rec = new org.apache.hadoop.fs.Path(idx, "_lex_buckets")
+    assert(fs.exists(rec), "the index records its bucket count")
+    val out = fs.create(rec, true)
+    try out.write((2 * graft.queries.RetrievalQueries.lexBuckets).toString
+      .getBytes("UTF-8")) finally out.close()
+    def refused(body: => Unit): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains("SPARK_GRAFT_LEX_BUCKETS"), e.getMessage)
+    }
+    refused(IndexedLex.serve(spark, idx, terms))
+    refused(IndexedLex.ingestBatch(spark, idx,
+      docs.filter(col("doc_id") % 2 === 1), 1L))
+    refused(IndexedLex.backfill(spark, idx,
+      Seq((docs.filter(col("doc_id") % 2 === 1), 1L))))
+    refused(IndexedLex.compact(spark, idx))
+    // nothing was written under the refused batch id
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(idx, "_ingested_1")))
+  }
+
+  test("SPARK_GRAFT_LEX_BUCKETS: unset means 64; anything but a " +
+    "positive integer refuses by name") {
+    import graft.queries.RetrievalQueries.parseLexBuckets
+    assert(parseLexBuckets(None) === 64)
+    assert(parseLexBuckets(Some("128")) === 128)
+    Seq("0", "-4", "64x", "", "9999999999").foreach { v =>
+      val e = intercept[IllegalArgumentException](parseLexBuckets(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_LEX_BUCKETS"), v)
+    }
   }
 
   test("IndexedDedup: a crashed batch 0 after compaction keeps the " +
@@ -442,13 +473,13 @@ class Round14Spec extends SparkTestBase {
         frameNum = 0, frameNumBits = 4)
       val cavlcMp4 = Mp4.mux(Seq(Seq(cavlcNal)), keyframes = Seq(1),
         timescale = 90000, sampleDelta = 3000, width = 16, height = 16)
-      val a1 = Mp4.decodeIntraFrames(cavlcMp4).next()
+      val a1 = Inter.decodeGopFrames(cavlcMp4).next()
       val cabacNal = graft.operators.Cabac.buildI16x16Slice(dc, ac,
         frameNum = 0, frameNumBits = 4)
       val cabacMp4 = Mp4.mux(Seq(Seq(cabacNal)), keyframes = Seq(1),
         timescale = 90000, sampleDelta = 3000, width = 16, height = 16,
         ppsOverride = graft.operators.Cabac.buildPps())
-      val a2 = Mp4.decodeIntraFrames(cabacMp4).next()
+      val a2 = Inter.decodeGopFrames(cabacMp4).next()
       assert(a1.y.toSeq === a2.y.toSeq, s"trial $trial luma")
       assert(a1.cb.toSeq === a2.cb.toSeq && a1.cr.toSeq === a2.cr.toSeq,
         s"trial $trial chroma")
@@ -477,7 +508,7 @@ class Round14Spec extends SparkTestBase {
       val mp4 = Mp4.mux(Seq(Seq(nal)), keyframes = Seq(1),
         timescale = 90000, sampleDelta = 3000, width = 16, height = 16,
         ppsOverride = graft.operators.Cabac.buildPps())
-      Mp4.decodeIntraFrames(mp4).next()
+      Inter.decodeGopFrames(mp4).next()
     }
     val on = decode(0); val off = decode(1)
     assert(on.y.toSeq === off.y.toSeq)

@@ -220,7 +220,7 @@ class Round14bSpec extends SparkTestBase {
         2, 1, frameNum = 0, frameNumBits = 4)
       val vMp4 = Mp4.mux(Seq(Seq(vNal)), keyframes = Seq(1),
         timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
-      val a1 = Mp4.decodeIntraFrames(vMp4).next()
+      val a1 = Inter.decodeGopFrames(vMp4).next()
       val cNal = Cabac.buildI16x16Row(Seq(
         Cabac.CabacI16(dc0, noAc, cb0, cr0),
         Cabac.CabacI16(dc1, noAc, cb1, cr1)),
@@ -228,7 +228,7 @@ class Round14bSpec extends SparkTestBase {
       val cMp4 = Mp4.mux(Seq(Seq(cNal)), keyframes = Seq(1),
         timescale = 90000, sampleDelta = 3000, width = 32, height = 16,
         ppsOverride = Cabac.buildPps())
-      val a2 = Mp4.decodeIntraFrames(cMp4).next()
+      val a2 = Inter.decodeGopFrames(cMp4).next()
       assert(a1.y.toSeq === a2.y.toSeq, s"trial $trial luma")
       assert(a1.cb.toSeq === a2.cb.toSeq, s"trial $trial cb")
       assert(a1.cr.toSeq === a2.cr.toSeq, s"trial $trial cr")
