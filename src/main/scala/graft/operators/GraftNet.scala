@@ -9,14 +9,16 @@ import graft.model.{Frame, RawDetection}
   * in this container and the build allows no new dependencies, so
   * the runtime here is a small MLP scorer implemented directly:
   * a committed `.gnet` weight artifact (text: layer dims + row-major
-  * weights + biases) is loaded ONCE PER PARTITION, frames run the
-  * full P4–P8 preprocessing chain (normalize → bilinear resize →
-  * layout), are grid-average-pooled to a fixed feature vector, and a
-  * real forward pass (matmul + bias + ReLU, sigmoid-decoded heads)
-  * produces the detection arrays. Every number the detector emits is
-  * computed from the actual pixel bytes — nothing is fabricated —
-  * while `StubDetector` stays the oracle-path double (its integer
-  * arithmetic is restatable in SQL; a float MLP is not).
+  * weights + biases) is loaded ONCE PER PARTITION, frames are
+  * normalized (P4–P6) and bilinear-resized to the model input (P7)
+  * with the grid-average pooling done during the resize, so each
+  * frame becomes a fixed feature vector without a model-input-sized
+  * tensor being built, and a real forward pass (matmul + bias +
+  * ReLU, sigmoid-decoded heads) produces the detection arrays. Every
+  * number the detector emits is computed from the actual pixel bytes
+  * — nothing is fabricated — while `StubDetector` stays the
+  * oracle-path double (its integer arithmetic is restatable in SQL; a
+  * float MLP is not).
   */
 final class GraftNet private (
     val layers: Seq[(Array[Array[Float]], Array[Float])]) extends Serializable {
@@ -111,9 +113,11 @@ object GraftNet {
 
 /** M1+M2 for real: per-partition model load (`Detectors.forConfig`
   * hands one factory per partition to Detect.detect), micro-batched
-  * scoring, and the P4–P8 kernels as the ACTUAL preprocessing of the
+  * scoring, and the P4–P7 kernels as the ACTUAL preprocessing of the
   * forward pass — the processSingleFrame composition
-  * (`gst-detection-tf.py:405-419`) with every stage live.
+  * (`gst-detection-tf.py:405-419`) with every stage live. The features
+  * come from `resizePool`, which pools into the g×g grid during the
+  * resize instead of resizing first and pooling after.
   */
 final class GraftNetDetector(modelPath: String, cfg: DetectorConfig)
     extends Detector {
@@ -129,11 +133,9 @@ final class GraftNetDetector(modelPath: String, cfg: DetectorConfig)
   require(grid * grid * 3 == net.inputSize,
     s"input size ${net.inputSize} is not a 3-channel square grid")
 
-  private def features(f: Frame): Array[Float] = {
-    val t = Preprocess.resizeBilinear(
-      normalize(Preprocess.decodeBuffer(f)), cfg.modelInput, cfg.modelInput)
-    gridPool(t, grid)
-  }
+  private def features(f: Frame): Array[Float] =
+    resizePool(normalize(Preprocess.decodeBuffer(f)),
+      cfg.modelInput, cfg.modelInput, grid)
 
   // class-id domain comes from the config (= label-table size), not
   // a hardcoded 25: a differently-sized label file would otherwise
@@ -165,37 +167,94 @@ final class GraftNetDetector(modelPath: String, cfg: DetectorConfig)
 object GraftNetDetector {
   def sigmoid(x: Double): Double = 1.0 / (1.0 + math.exp(-x))
 
-  /** Grid average pooling: HWC tensor → g×g×3 feature vector (cell
-    * means per channel) — the fixed-size bridge from any model-input
-    * resolution to the MLP. */
-  def gridPool(t: Preprocess.Tensor, g: Int): Array[Float] = {
-    val out = new Array[Float](g * g * 3)
-    val counts = new Array[Int](g * g)
-    var y = 0
-    while (y < t.height) {
-      val gy = math.min(g - 1, y * g / t.height)
+  /** P7 bilinear resize fused with grid average pooling: the g×g×3
+    * cell means of `Preprocess.resizeBilinear(t, outH, outW)`, bitwise,
+    * without building the outH×outW×3 tensor — the fixed-size bridge
+    * from any model-input resolution to the MLP. Output pixels are
+    * walked in the resize's order (y, then x, then channel); each value
+    * is the same double-weight blend stored with `.toFloat`, added
+    * straight into its cell's float sum. The column taps are computed
+    * once per call, and the horizontal blends of the two source rows
+    * an output row reads are cached, so a row costs one vertical blend
+    * per value. At identity size the source values are pooled as they
+    * are, as `resizeBilinear` returns its input unchanged. */
+  def resizePool(t: Preprocess.Tensor, outH: Int, outW: Int,
+      g: Int): Array[Float] = {
+    require(t.channels == 3,
+      s"resizePool pools 3-channel tensors, got ${t.channels} channels")
+    require(g > 0, s"pooling grid must be positive, got $g")
+    val ty = Preprocess.bilinearTaps(t.height, outH)
+    val tx = Preprocess.bilinearTaps(t.width, outW)
+    val identity = outH == t.height && outW == t.width
+    val n = outW * 3
+    val src = t.data
+    // horizontal blends of source rows topRow / botRow, per (x, c)
+    var top = new Array[Double](n); var topRow = -1
+    var bot = new Array[Double](n); var botRow = -1
+    def blendRow(r: Int, dst: Array[Double]): Unit = {
+      val base = r * t.width
       var x = 0
-      while (x < t.width) {
-        val gx = math.min(g - 1, x * g / t.width)
-        val cell = gy * g + gx
-        counts(cell) += 1
+      while (x < outW) {
+        val wx = tx.w(x)
+        val a = (base + tx.lo(x)) * 3; val b = (base + tx.hi(x)) * 3
         var c = 0
         while (c < 3) {
-          out(cell * 3 + c) += t.data((y * t.width + x) * t.channels + c)
+          dst(x * 3 + c) = src(a + c) * (1 - wx) + src(b + c) * wx
           c += 1
         }
         x += 1
       }
+    }
+    val cellX = Array.tabulate(outW)(x => math.min(g - 1, x * g / outW) * 3)
+    val sums = new Array[Float](g * g * 3)
+    val row = new Array[Float](n)
+    var y = 0
+    while (y < outH) {
+      if (identity) System.arraycopy(src, y * n, row, 0, n)
+      else {
+        val r0 = ty.lo(y); val r1 = ty.hi(y)
+        if (r0 != topRow) {
+          if (r0 == botRow) {
+            val tb = top; top = bot; bot = tb
+            botRow = topRow; topRow = r0
+          } else { blendRow(r0, top); topRow = r0 }
+        }
+        val lower =
+          if (r1 == topRow) top
+          else { if (r1 != botRow) { blendRow(r1, bot); botRow = r1 }; bot }
+        val wy = ty.w(y)
+        var i = 0
+        while (i < n) {
+          row(i) = (top(i) * (1 - wy) + lower(i) * wy).toFloat
+          i += 1
+        }
+      }
+      val cellRow = math.min(g - 1, y * g / outH) * g * 3
+      var x = 0
+      while (x < outW) {
+        val s = cellRow + cellX(x)
+        sums(s) += row(x * 3)
+        sums(s + 1) += row(x * 3 + 1)
+        sums(s + 2) += row(x * 3 + 2)
+        x += 1
+      }
       y += 1
     }
+    // cell pixel counts: rows in the cell's band × columns in its band
+    val rows = new Array[Int](g); val cols = new Array[Int](g)
+    var i = 0
+    while (i < outH) { rows(math.min(g - 1, i * g / outH)) += 1; i += 1 }
+    i = 0
+    while (i < outW) { cols(math.min(g - 1, i * g / outW)) += 1; i += 1 }
     var cell = 0
     while (cell < g * g) {
-      if (counts(cell) > 0) {
+      val count = rows(cell / g) * cols(cell % g)
+      if (count > 0) {
         var c = 0
-        while (c < 3) { out(cell * 3 + c) /= counts(cell); c += 1 }
+        while (c < 3) { sums(cell * 3 + c) /= count; c += 1 }
       }
       cell += 1
     }
-    out
+    sums
   }
 }

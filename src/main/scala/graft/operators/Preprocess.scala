@@ -112,41 +112,66 @@ object Preprocess {
     }
   }
 
+  /** Bilinear taps along one axis: output index `i` reads source
+    * indices `lo(i)` and `hi(i)`, with weight `w(i)` on `hi(i)` and
+    * `1 - w(i)` on `lo(i)`. */
+  final case class Taps(lo: Array[Int], hi: Array[Int], w: Array[Double])
+
+  /** The P7 interpolation convention, defined once for every bilinear
+    * kernel: align_corners=false / half-pixel centers, edge clamp. */
+  def bilinearTaps(inSize: Int, outSize: Int): Taps = {
+    require(inSize > 0 && outSize > 0,
+      s"bilinear resize needs positive sizes, got $inSize -> $outSize")
+    val lo = new Array[Int](outSize)
+    val hi = new Array[Int](outSize)
+    val w = new Array[Double](outSize)
+    val scale = inSize.toDouble / outSize
+    var i = 0
+    while (i < outSize) {
+      val f = math.max(0.0, (i + 0.5) * scale - 0.5)
+      lo(i) = math.min(inSize - 1, f.toInt)
+      hi(i) = math.min(inSize - 1, lo(i) + 1)
+      w(i) = f - lo(i)
+      i += 1
+    }
+    Taps(lo, hi, w)
+  }
+
   /** P7: bilinear resize (the cv2.resize /
-    * tf.image.resize(BILINEAR) kernel, `gst-detection-tf.py:356,364,374`),
-    * align_corners=false / half-pixel centers. */
+    * tf.image.resize(BILINEAR) kernel, `gst-detection-tf.py:356,364,374`)
+    * on the `bilinearTaps` convention. Each value is the double-weight
+    * blend of its four taps, stored with `.toFloat`. */
   def resizeBilinear(t: Tensor, outH: Int, outW: Int): Tensor = {
     if (outH == t.height && outW == t.width) return t
-    val out = new Array[Float](outH * outW * t.channels)
-    val sy = t.height.toDouble / outH
-    val sx = t.width.toDouble / outW
+    val ty = bilinearTaps(t.height, outH)
+    val tx = bilinearTaps(t.width, outW)
+    val ch = t.channels
+    val d = t.data
+    val out = new Array[Float](outH * outW * ch)
+    var o = 0
     var y = 0
     while (y < outH) {
-      val fy = math.max(0.0, (y + 0.5) * sy - 0.5)
-      val y0 = math.min(t.height - 1, fy.toInt)
-      val y1 = math.min(t.height - 1, y0 + 1)
-      val wy = fy - y0
+      val row0 = ty.lo(y) * t.width
+      val row1 = ty.hi(y) * t.width
+      val wy = ty.w(y)
       var x = 0
       while (x < outW) {
-        val fx = math.max(0.0, (x + 0.5) * sx - 0.5)
-        val x0 = math.min(t.width - 1, fx.toInt)
-        val x1 = math.min(t.width - 1, x0 + 1)
-        val wx = fx - x0
+        val wx = tx.w(x)
+        val a = (row0 + tx.lo(x)) * ch; val b = (row0 + tx.hi(x)) * ch
+        val p = (row1 + tx.lo(x)) * ch; val q = (row1 + tx.hi(x)) * ch
         var c = 0
-        while (c < t.channels) {
-          def px(yy: Int, xx: Int): Float =
-            t.data((yy * t.width + xx) * t.channels + c)
-          val top = px(y0, x0) * (1 - wx) + px(y0, x1) * wx
-          val bot = px(y1, x0) * (1 - wx) + px(y1, x1) * wx
-          out((y * outW + x) * t.channels + c) =
-            (top * (1 - wy) + bot * wy).toFloat
+        while (c < ch) {
+          val top = d(a + c) * (1 - wx) + d(b + c) * wx
+          val bot = d(p + c) * (1 - wx) + d(q + c) * wx
+          out(o) = (top * (1 - wy) + bot * wy).toFloat
+          o += 1
           c += 1
         }
         x += 1
       }
       y += 1
     }
-    Tensor(outH, outW, t.channels, out)
+    Tensor(outH, outW, ch, out)
   }
 
   /** P8: HWC → NCHW (batch dim 1) for GPU-style layouts
@@ -208,14 +233,20 @@ object Detectors {
     * container and fail fast. With no modelPath the deterministic
     * stub serves tests/oracles. Precision (M3) selects the
     * artifact — opaque to the engine, exactly as in the reference. */
-  def forConfig(cfg: DetectorConfig): () => Detector = cfg.modelPath match {
-    case Some(p) if p.endsWith(".gnet") => () => new GraftNetDetector(p, cfg)
-    case Some(p) =>
-      throw new UnsupportedOperationException(
-        s"no inference runtime bundled for model artifact $p " +
-          s"(device=${cfg.device}, dtype=${cfg.dataType}); " +
-          "use a .gnet artifact or plug an ONNX/TF-Java Detector here")
-    case None => () => new PreprocessingDetector(StubDetector, cfg)
+  def forConfig(cfg: DetectorConfig): () => Detector = {
+    // a non-positive edge would resize every frame to nothing and give
+    // all frames the same (all-zero) features
+    require(cfg.modelInput > 0,
+      s"model_input (DetectorConfig.modelInput) must be positive, got ${cfg.modelInput}")
+    cfg.modelPath match {
+      case Some(p) if p.endsWith(".gnet") => () => new GraftNetDetector(p, cfg)
+      case Some(p) =>
+        throw new UnsupportedOperationException(
+          s"no inference runtime bundled for model artifact $p " +
+            s"(device=${cfg.device}, dtype=${cfg.dataType}); " +
+            "use a .gnet artifact or plug an ONNX/TF-Java Detector here")
+      case None => () => new PreprocessingDetector(StubDetector, cfg)
+    }
   }
 
   /** M3 precision → bundled artifact (the reference's benchmark.sh

@@ -58,12 +58,13 @@ object VideoPipeline {
     * query (`total_frames` semantics). */
   def run(spark: SparkSession, cfg: PipelineConfig,
       store: MetadataStore): StreamingQuery = {
-    val frames = FrameSource.frameStream(spark, cfg.videoPath)
-    val labels = Labels.fromIdNameFile(spark, cfg.labelFile)
+    // the detector config is checked before any source is opened
     val detectorFactory = Detectors.forConfig(DetectorConfig(
       device = cfg.device, dataType = cfg.dataType,
       preprocFw = cfg.preprocFw, modelPath = cfg.modelPath,
       modelInput = cfg.modelInput))
+    val frames = FrameSource.frameStream(spark, cfg.videoPath)
+    val labels = Labels.fromIdNameFile(spark, cfg.labelFile)
     val ckpt = if (cfg.checkpointDir.nonEmpty) cfg.checkpointDir
       else java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
     if (cfg.totalFrames > 0)

@@ -521,11 +521,111 @@ class GraftNetSpec extends SparkTestBase {
   test("grid pooling: cell means over a known tensor") {
     val t = graft.operators.Preprocess.Tensor(4, 4, 3,
       Array.tabulate(48)(i => (i / 3).toFloat)) // pixel p has value p in all channels
-    val pooled = GraftNetDetector.gridPool(t, 2)
+    val pooled = GraftNetDetector.resizePool(t, 4, 4, 2) // identity size
     assert(pooled.length === 12)
     // top-left 2x2 cell holds pixels 0,1,4,5 -> mean 2.5
     assert(pooled(0) === 2.5f)
     // bottom-right cell holds pixels 10,11,14,15 -> mean 12.5
     assert(pooled(9) === 12.5f)
+  }
+
+  /** The two-step feature path `resizePool` replaced: resize to the
+    * model input, then average-pool the tensor into a g×g×3 grid. */
+  private def resizeThenPool(t: graft.operators.Preprocess.Tensor,
+      outH: Int, outW: Int, g: Int): Array[Float] = {
+    val r = graft.operators.Preprocess.resizeBilinear(t, outH, outW)
+    val out = new Array[Float](g * g * 3)
+    val counts = new Array[Int](g * g)
+    for (y <- 0 until r.height; x <- 0 until r.width) {
+      val cell = math.min(g - 1, y * g / r.height) * g +
+        math.min(g - 1, x * g / r.width)
+      counts(cell) += 1
+      for (c <- 0 until 3) out(cell * 3 + c) += r.data((y * r.width + x) * 3 + c)
+    }
+    for (cell <- 0 until g * g if counts(cell) > 0; c <- 0 until 3)
+      out(cell * 3 + c) /= counts(cell)
+    out
+  }
+
+  private def rawBits(a: Array[Float]): Seq[Int] =
+    a.toSeq.map(java.lang.Float.floatToRawIntBits)
+
+  test("fused resize-pool is bitwise equal to resize then pool") {
+    import graft.operators.Preprocess
+    // (source w, source h, output h, output w, grid)
+    val geometries = Seq(
+      (320, 240, 1200, 1200, 8), // the benchmark's upscale
+      (24, 24, 24, 24, 8),       // identity
+      (24, 18, 24, 24, 8),       // one axis at identity
+      (64, 48, 20, 20, 8),       // downscale: source rows skipped
+      (40, 30, 5, 5, 8),         // output edge < grid: empty cells
+      (1, 1, 32, 32, 8),         // 1x1 source
+      (37, 23, 51, 51, 8),       // odd sizes
+      (23, 37, 13, 29, 3),       // odd, non-square output
+      (5, 7, 3, 11, 4),          // mixed down/up per axis
+      (9, 9, 2, 2, 8),           // 2x2 output
+      (300, 2, 7, 7, 8),         // thin source
+      (2, 300, 9, 9, 8))         // tall source
+    val fws = Seq("cv2", "np", "tf")
+    for ((w, h, oh, ow, g) <- geometries; fw <- fws) {
+      val buffers = Seq(
+        "full" -> rgbPattern(w, h, w + h),
+        "short" -> rgbPattern(w, h, 7).take(w * h * 3 / 2),
+        "null" -> (null: Array[Byte]))
+      for ((kind, data) <- buffers) {
+        val t = Preprocess.normalizer(fw)(Preprocess.decodeBuffer(frame(1L, w, h, data)))
+        assert(rawBits(GraftNetDetector.resizePool(t, oh, ow, g)) ===
+          rawBits(resizeThenPool(t, oh, ow, g)),
+          s"${w}x$h -> ${oh}x$ow grid $g, $fw, $kind buffer")
+      }
+    }
+  }
+
+  /** Order-dependent hash of every bit of a detector's output. */
+  private def detectionDigest(dets: Seq[Seq[graft.model.RawDetection]]): Long =
+    dets.flatten.foldLeft(17L) { (h, d) =>
+      (Seq(d.ymin, d.xmin, d.ymax, d.xmax, d.score)
+        .map(v => java.lang.Float.floatToRawIntBits(v).toLong) :+ d.class_id.toLong)
+        .foldLeft(h)((a, v) => a * 1000003L + v)
+    }
+
+  test("detectBatch outputs are unchanged for the FP32 and INT8 artifacts") {
+    // digests of the same outputs from the detector that resized to
+    // the model input first and pooled the tensor after
+    val pinned = Map(
+      GraftNet.BundledModel -> -6467266211769696465L,
+      GraftNet.BundledModelInt8 -> 2483794496120535043L)
+    val frames = (1 to 3).map(i => frame(i, 80 + i, 60, rgbPattern(80 + i, 60, i))) :+
+      frame(4L, 31, 17, rgbPattern(31, 17, 4).take(100)) :+
+      frame(5L, 8, 8, null)
+    for ((model, digest) <- pinned) {
+      val dets = for (fw <- Seq("cv2", "np", "tf"); edge <- Seq(1200, 33, 4)) yield
+        new GraftNetDetector(model,
+          DetectorConfig(preprocFw = fw, modelInput = edge)).detectBatch(frames)
+      assert(detectionDigest(dets.flatten) === digest, model)
+    }
+  }
+
+  test("a non-positive model_input or non-RGB tensor is refused by name") {
+    import graft.operators.Preprocess
+    for (edge <- Seq(0, -2); path <- Seq(Some(GraftNet.BundledModel), None)) {
+      val e = intercept[IllegalArgumentException](
+        Detectors.forConfig(DetectorConfig(modelPath = path, modelInput = edge)))
+      assert(e.getMessage.contains("model_input"), e.getMessage)
+    }
+    // the pipeline entry point refuses before it opens any source
+    val cfg = graft.streaming.PipelineConfig(videoPath = "/nonexistent/frames",
+      labelFile = "/nonexistent/labels", modelInput = -2)
+    val e = intercept[IllegalArgumentException](
+      graft.streaming.VideoPipeline.run(spark, cfg, new graft.streaming.InMemoryStore))
+    assert(e.getMessage.contains("model_input"), e.getMessage)
+    // the kernels themselves refuse what would pool to all zeros
+    val t = Preprocess.Tensor(2, 2, 3, Array.fill(12)(1f))
+    intercept[IllegalArgumentException](Preprocess.resizeBilinear(t, 0, 0))
+    intercept[IllegalArgumentException](GraftNetDetector.resizePool(t, -2, -2, 8))
+    val gray = Preprocess.Tensor(2, 2, 1, Array.fill(4)(1f))
+    val c = intercept[IllegalArgumentException](
+      GraftNetDetector.resizePool(gray, 4, 4, 2))
+    assert(c.getMessage.contains("3-channel"), c.getMessage)
   }
 }
