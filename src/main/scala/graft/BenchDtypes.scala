@@ -12,10 +12,11 @@ import graft.operators.{Detect, DetectorConfig, Detectors}
   *
   * For each bundled precision the SAME deterministic frame set runs
   * the full real path (P4–P8 preprocess → GraftNet forward → head
-  * decode) through Detect.detect; the JSON line reports per-dtype
-  * wall time (median of 3 timed runs after a warm-up, like Bench)
-  * and the accuracy deltas of INT8 vs FP32: box-coordinate and score
-  * drift plus class-id agreement over every (frame, head). BF16 is
+  * decode) through Detect.detect (the DetectExec plan node); the JSON
+  * line reports per-dtype wall time (median of 3 timed runs after a
+  * warm-up, like Bench) and the accuracy deltas of INT8 vs FP32:
+  * box-coordinate and score drift plus class-id agreement over every
+  * (frame, head). BF16 is
   * reported as unavailable — no JVM representation without an
   * accelerated runtime (DEPLOYMENT.md maps where it would plug in).
   *

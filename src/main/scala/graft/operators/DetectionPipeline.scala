@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * Input contract: a DataFrame with columns
   *   video_id, frame_id, height, width,
   *   detections ARRAY<STRUCT<ymin,xmin,ymax,xmax FLOAT/DOUBLE, score, class_id INT>>
-  * (what `Detect.detect` produces).
+  * (what `Detect.detect`, the DetectExec plan node, produces).
   */
 object DetectionPipeline {
 

@@ -69,35 +69,20 @@ object Detect {
   /** The `predict` operator: partition-scoped scoring with
     * per-partition model init and intra-partition micro-batching —
     * the standard Spark model-serving pattern (SURVEY.md §4 custom
-    * piece 1). Narrow transformation: no shuffle; pixels never leave
+    * piece 1). Planned as the DetectNode → DetectExec plan node
+    * (`plans/DetectPlan.scala`, injected by GraftExtensions), so the
+    * operator and its batch size show in explain output, in batch and
+    * streaming plans alike. Narrow: no shuffle; pixels never leave
     * the partition. */
   def detect(
       frames: Dataset[Frame],
       detectorFactory: () => Detector,
       batchSize: Int = 32): Dataset[FrameDetections] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[FrameDetections]
-    frames.mapPartitions { it =>
-      val detector = detectorFactory() // once per partition ≈ per-process init
-      it.grouped(batchSize).flatMap { batch =>
-        detector.detectBatch(batch).lazyZip(batch).map { (dets, f) =>
-          FrameDetections(f.video_id, f.frame_id, f.height, f.width, dets)
-        }
-      }
-    }
-  }
-
-  /** The same operator as `detect`, but as a first-class Catalyst
-    * plan node (graft.plans.DetectNode/DetectExec, planned by the
-    * strategy GraftExtensions registers): the operator and its batch
-    * size appear in explain output. */
-  def detectPlanned(
-      frames: Dataset[Frame],
-      detectorFactory: () => Detector,
-      batchSize: Int = 32): org.apache.spark.sql.DataFrame = {
     val node = graft.plans.DetectNode(
       frames.queryExecution.logical, detectorFactory, batchSize)
     org.apache.spark.sql.graftbridge.GraftSqlBridge.ofRows(
-      frames.sparkSession, node)
+      frames.sparkSession, node).as[FrameDetections]
   }
 
   /** §2.7 error handling, upgraded: the reference halts the pipeline

@@ -112,7 +112,8 @@ object GraftNet {
 }
 
 /** M1+M2 for real: per-partition model load (`Detectors.forConfig`
-  * hands one factory per partition to Detect.detect), micro-batched
+  * hands one factory to Detect.detect, whose DetectExec plan node
+  * calls it once per partition), micro-batched
   * scoring, and the P4–P7 kernels as the ACTUAL preprocessing of the
   * forward pass — the processSingleFrame composition
   * (`gst-detection-tf.py:405-419`) with every stage live. The features

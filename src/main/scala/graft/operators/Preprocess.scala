@@ -213,7 +213,8 @@ object Preprocess {
 /** M1/M3: model lifecycle + device/precision dispatch
   * (`gst-detection-tf.py:154-237`, `settings.yaml:1-9`). The config
   * picks the detector implementation and the preprocessing strategy
-  * once; executors initialize per partition (Detect.detect). */
+  * once; executors initialize per partition (Detect.detect's
+  * DetectExec plan node). */
 final case class DetectorConfig(
     device: String = "CPU",           // CPU | GPU (ARCGPU in reference)
     dataType: String = "FP32",        // FP32 | BF16 | INT8 — model-artifact choice

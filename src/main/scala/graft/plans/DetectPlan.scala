@@ -14,8 +14,8 @@ import graft.operators.Detector
 /** SURVEY.md §4 custom piece 1, the full Catalyst treatment: the
   * detect operator as a first-class plan node — logical node →
   * planner strategy → physical exec — registered through
-  * SparkSessionExtensions (GraftExtensions). Equivalent semantics to
-  * Detect.detect's mapPartitions, but the operator (and its batch
+  * SparkSessionExtensions (GraftExtensions). This is the one
+  * implementation behind `Detect.detect`: the operator (and its batch
   * size) is visible in explain output, participates in plan
   * traversals, and could later carry its own requiredChildDistribution
   * for placement control.
@@ -30,6 +30,8 @@ case class DetectNode(
     output: Seq[Attribute] =
       DataTypeUtils.toAttributes(Encoders.product[FrameDetections].schema))
     extends UnaryNode {
+  // refused here, not inside every task's Iterator.grouped
+  require(batchSize > 0, s"batchSize must be positive, got $batchSize")
   // this node PRODUCES its output (inference results), it does not
   // forward child attributes — without this the analyzer reports
   // them as missing from the child
@@ -76,7 +78,7 @@ case class DetectExec(
     child.execute().mapPartitions { it =>
       val deser = inEnc.createDeserializer()
       val ser = outEnc.createSerializer()
-      val detector = factory() // per-partition init, like Detect.detect
+      val detector = factory() // once per partition ≈ per-process init
       // deserialize BEFORE buffering: the parent's InternalRows are
       // reused mutable buffers, Frame objects are fresh
       it.map(deser(_)).grouped(bs).flatMap { frames =>

@@ -199,9 +199,10 @@ object VideoQueries {
   /** v6: the REAL inference operator on the oracle path — E2/M1/M2.
     * Builds a typed `Dataset[Frame]` from events, runs
     * `Detect.detect` (per-partition detector init + micro-batched
-    * scoring inside `mapPartitions`, `Detector.scala`), then the same
-    * post-inference pipeline as v1. Narrow end-to-end; pixels (empty
-    * here) never leave the partition. The oracle restates
+    * scoring inside the DetectExec plan node,
+    * `plans/DetectPlan.scala`), then the same post-inference pipeline
+    * as v1. Narrow end-to-end; pixels (empty here) never leave the
+    * partition. The oracle restates
     * `StubDetector`'s float32 semantics: coordinates are computed in
     * double, rounded to REAL (`.toFloat`), then re-widened for the
     * pixel scale — bit-exact on both engines. */
@@ -251,23 +252,6 @@ object VideoQueries {
       |SELECT b.video_id, b.frame_id, b.box_ref, b.x, b.y, b.w, b.h,
       |  b.label_id, n.n_name AS label, b.score
       |FROM boxes b JOIN nation n ON b.label_id = n.n_nationkey""".stripMargin
-
-  /** v7: v6's semantics through the CUSTOM PLAN NODE path
-    * (DetectNode → DetectStrategy → DetectExec, injected by
-    * GraftExtensions) — same oracle, different planner route; the
-    * batch size is plan-visible in explain output. */
-  def v7DetectPlanned(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val fr = frames(spark, dir)
-      .withColumn("data", lit(Array.empty[Byte]))
-      .as[graft.model.Frame]
-    val dets = graft.operators.Detect.detectPlanned(fr, () => graft.operators.StubDetector)
-    val boxes = DetectionPipeline.boxes(dets, threshold = 0.7)
-    DetectionPipeline.joinLabels(boxes, Labels.fromNation(spark, dir))
-      .select(col("video_id"), col("frame_id"), col("box_ref"),
-        col("x"), col("y"), col("w"), col("h"),
-        col("label_id"), col("label"), col("score"))
-  }
 
   val v5Sql: String = detSql +
     """SELECT frame_id, box_ref,

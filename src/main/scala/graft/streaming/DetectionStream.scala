@@ -8,7 +8,7 @@ import graft.operators.{Detect, DetectionPipeline, Detector}
 
 /** §2.7: the reference's streaming execution model under Structured
   * Streaming. The gst-launch pipeline (`/root/reference/run.sh:53`)
-  * becomes: frame stream → mapPartitions inference → threshold →
+  * becomes: frame stream → DetectExec inference → threshold →
   * explode → scale → broadcast label join → VDMS-shaped foreachBatch
   * sink, with the semantics the reference implements imperatively:
   *
@@ -95,20 +95,22 @@ object DetectionStream {
       .start()
     // quit_gracefully analog: a listener stops the query once the
     // limit is reached (stop() is safe from the listener thread,
-    // unlike from inside foreachBatch).
+    // unlike from inside foreachBatch). The listener leaves with its
+    // query however that query ends: limit, failure or a user stop.
     val limiter = new org.apache.spark.sql.streaming.StreamingQueryListener {
       override def onQueryStarted(
           e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryProgress(
           e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.id == query.id && seen.get() >= frameLimit) {
-          query.stop()
-          spark.streams.removeListener(this)
-        }
+        if (e.progress.id == query.id && seen.get() >= frameLimit) query.stop()
       override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (e.id == query.id) spark.streams.removeListener(this)
     }
     spark.streams.addListener(limiter)
+    // the query may have ended before the listener was registered, so
+    // its terminated event is never seen
+    if (!query.isActive) spark.streams.removeListener(limiter)
     query
   }
 

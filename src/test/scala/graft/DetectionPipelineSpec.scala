@@ -32,6 +32,13 @@ class DetectionPipelineSpec extends SparkTestBase {
     out.foreach { fd =>
       assert(fd.detections == StubDetector.detectOne(fd.frame_id))
     }
+    // a batch size Iterator.grouped cannot take is refused by name
+    // when the operator is built, not inside every task
+    for (bad <- Seq(0, -3)) {
+      val e = intercept[IllegalArgumentException](
+        Detect.detect(ds, () => StubDetector, batchSize = bad))
+      assert(e.getMessage.contains("batchSize"), e.getMessage)
+    }
   }
 
   test("threshold filter is strict > (0.70 boundary excluded)") {

@@ -244,20 +244,21 @@ class LlmPipelineSpec extends AnyFunSuite with SparkTestBase {
     s.foreach { case (q, c) => assert(m(q) >= c - 1e-12) }
   }
 
-  test("custom plan node: DetectExec matches mapPartitions detect") {
+  test("custom plan node: DetectExec matches per-frame detectOne") {
     import java.sql.Timestamp
     val frames = (1L to 20L).map(i =>
       graft.model.Frame("v", i, new Timestamp(i * 1000), 480, 640,
         Array.empty[Byte]))
     val ds = spark.createDataset(frames)
-    val planned = graft.operators.Detect.detectPlanned(ds,
+    val planned = graft.operators.Detect.detect(ds,
       () => graft.operators.StubDetector, batchSize = 7)
     assert(planned.queryExecution.executedPlan.toString()
       .contains("DetectExec(batchSize=7)"))
-    val viaMapPartitions = graft.operators.Detect.detect(ds,
-      () => graft.operators.StubDetector).toDF()
-    assert(planned.collect().map(_.toString).sorted.toSeq ===
-      viaMapPartitions.collect().map(_.toString).sorted.toSeq)
+    // reference outside Spark: the detector applied frame by frame
+    val expected = frames.map(f => graft.model.FrameDetections(f.video_id,
+      f.frame_id, f.height, f.width,
+      graft.operators.StubDetector.detectOne(f.frame_id)))
+    assert(planned.collect().sortBy(_.frame_id).toSeq === expected)
   }
 
   test("lsh near-dup join never compares across buckets") {

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.functions._
 import graft.model.Frame
 import graft.operators.StubDetector
@@ -34,6 +35,10 @@ class StreamingSpec extends SparkTestBase {
     val q = DetectionStream.runAvailableNow(mem.toDS(), labelsDf,
       () => StubDetector, store, tmpDir())
     q.awaitTermination(60000)
+    // the streaming planner plans detect through the same plan node
+    val executed = q.asInstanceOf[StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.toString
+    assert(executed.contains("DetectExec(batchSize=32)"), executed)
     // batch reference: same operators on a static Dataset; multiset
     // compare — identical wire records from different frames are
     // distinct uploads
@@ -810,6 +815,22 @@ class StreamingSpec extends SparkTestBase {
     // partition, so the detector factory initialized exactly once —
     // the count() afterwards read the cache, not a second execution
     assert(inits.value === 1L)
+  }
+
+  test("frame limit: the listener leaves with a query stopped before its limit") {
+    import testImplicits._
+    InMemoryStore.reset()
+    implicit val sqlCtx = spark.sqlContext
+    val before = spark.streams.listListeners().length
+    val mem = MemoryStream[Frame]
+    mem.addData(mkFrames(1 to 5))
+    val q = DetectionStream.runWithFrameLimit(spark, mem.toDS(), labelsDf,
+      () => StubDetector, new InMemoryStore, tmpDir(), frameLimit = 1000)
+    q.processAllAvailable()
+    assert(q.isActive) // 5 of 1000 frames: the limit never stops it
+    q.stop()
+    GraftSqlBridge.drainListenerBus(spark.sparkContext)
+    assert(spark.streams.listListeners().length === before)
   }
 
   test("streaming near-dedup: LSH-keyed state drops near-duplicates across batches") {
