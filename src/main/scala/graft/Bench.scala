@@ -136,8 +136,10 @@ object Bench {
     java.nio.file.Files.write(out, detail.getBytes("UTF-8"))
     // committed copy at the repo root: the stdout line is capped, so
     // the full per-query record has to live somewhere the round's
-    // snapshot keeps (target/ is not tracked)
-    java.nio.file.Files.write(
+    // snapshot keeps (target/ is not tracked). A filtered run would
+    // replace that full record with a partial one, so only an
+    // unfiltered run writes it.
+    if (only.isEmpty) java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_DETAIL.json"), detail.getBytes("UTF-8"))
     println(line)
     spark.stop()

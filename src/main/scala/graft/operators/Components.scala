@@ -227,8 +227,6 @@ object Components {
       cur = next
       sig = nextSig
       iter += 1
-      if (sys.props.contains("graft.cc.debug"))
-        println(s"CC2 round $iter: edges=${nextSig._1} converged=$converged")
     }
     // terminal authority: if signatures never matched (e.g. skewed by
     // retries), one real set-diff decides before declaring failure

@@ -404,7 +404,7 @@ object Graph {
     * divisions in micro-units over exact edge counts, summed as
     * longs.
     *
-    * 100 TB shape: Components' bounded min-label rounds + one
+    * 100 TB shape: Components' two-phase star-contraction rounds + one
     * cluster-keyed partial agg over the EDGE list (each edge joins
     * its doc_a's label — one equi-join) + a one-row broadcast total. */
   def modularity(pairs0: DataFrame): DataFrame = {

@@ -2151,9 +2151,10 @@ object LlmQueries {
     * d9 — so the driver hash gate certifies that both distributed
     * formulations compute the identical closure, and a corpus that
     * trips min-label's round budget has a drop-in replacement whose
-    * round count is diameter-independent. ComponentsSpec adds the
+    * round count is diameter-independent. Round9Spec adds the
     * complementary property on a 200-node path graph: two-phase
-    * closes it in a handful of rounds where min-label needs ~200. */
+    * closes it inside a 30-round budget, where min-label would need
+    * 199 rounds, past its default budget of 50. */
   def d16DedupClustersTwoPhase(spark: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.nearDupPairs(Tables.spread(Tables.documents(spark, dir)),
       threshold = 0.8)

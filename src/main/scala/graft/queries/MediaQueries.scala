@@ -625,8 +625,8 @@ object MediaQueries {
 
   /** m17: IMAGE DEDUP CLUSTERS — the d9 recipe on the media side:
     * m16's verified near-dup pair graph closed into connected
-    * components (`Components.connectedComponents`, the alternating
-    * min-label propagation), one row per image in the graph with its
+    * components (`Components.connectedComponents`, the min-label
+    * propagation), one row per image in the graph with its
     * cluster id and the min-id survivor flag — the keep/drop
     * decision list an image-corpus curation run consumes. Families
     * connect THROUGH perturbed members (even A ~ odd A' ~ even B

@@ -961,11 +961,11 @@ object VideoQueries {
     * heap by THAT video's edges — GUARDED: a per-video box count
     * (boxes upper-bound edges, since the argmax gives each box at
     * most one parent) over the caller-pinned box relation routes any
-    * video above `maxEdgesPerVideo` to the distributed iterative
-    * min-label closure (Components.connectedComponents — each
-    * association forest is a tree, so the component minimum IS the
-    * chain root) while everything else keeps the one-shuffle
-    * in-partition walk; the oversized-video list itself is
+    * video above `maxEdgesPerVideo` to the distributed two-phase
+    * star-contraction closure (Components.connectedComponentsTwoPhase,
+    * O(log² n) rounds whatever the chain length — each association
+    * forest is a tree, so the component minimum IS the chain root)
+    * while everything else keeps the one-shuffle in-partition walk; the oversized-video list itself is
     * driver-scale by construction (only pathological keys cross the
     * threshold). The final label attach is one left join back
     * to the box relation: unmatched boxes and roots label

@@ -70,7 +70,7 @@ object IndexedDedup {
     val pairs = Dedup.nearDupPairs(docs, threshold)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
     val batchDups = Components.connectedComponents(pairs)
-      .filter(col("label") =!= col("node"))
+      .filter(col("cluster") =!= col("node"))
       .select(col("node").as("doc_id"))
     val reps = docs.join(batchDups, Seq("doc_id"), "left_anti")
       .localCheckpoint(true)

@@ -103,4 +103,31 @@ class ScaleTechniquesSpec extends SparkTestBase {
     assert(xTouched >= 15L, s"xTouched=$xTouched")
     assert(zTouched * 2 <= xTouched, s"zTouched=$zTouched xTouched=$xTouched")
   }
+
+  test("Prof: three profiled runs of q1_agg, every run counts jobs, " +
+    "stages and tasks, the stage table is well-formed, the session " +
+    "config is untouched, and the record is one JSON line") {
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val line = graft.tools.Prof.profile(spark, sf, "q1_agg")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === aqe)
+    assert(!line.contains('\n'))
+    val rec = spark.read.json(Seq(line).toDS())
+    assert(!rec.columns.contains("_corrupt_record"), line)
+    assert(rec.count() === 1L)
+    assert(rec.select(col("query")).head().getString(0) === "q1_agg")
+    val runs = rec.select(explode(col("runs")).as("r")).select("r.*")
+    assert(runs.count() === 3L)
+    assert(runs.filter(col("jobs") > 0 && col("stages") > 0 &&
+      col("tasks") > 0).count() === 3L, line)
+    for (part <- Seq("total_s", "construct_s", "plan_s", "execute_s")) {
+      val s = rec.select(s"$part.*").head()
+      val (lo, mid, hi) = (s.getAs[Double]("min"),
+        s.getAs[Double]("median"), s.getAs[Double]("max"))
+      assert(0.0 <= lo && lo <= mid && mid <= hi, s"$part: $line")
+    }
+    val stages = rec.select(explode(col("stage_table")).as("s")).select("s.*")
+    assert(stages.count() > 0L, line)
+    assert(stages.filter(col("wall_s") < 0 || col("tasks") <= 0).count() === 0L,
+      line)
+  }
 }
