@@ -85,12 +85,26 @@ object Detect {
       frames.sparkSession, node).as[FrameDetections]
   }
 
+  /** `detector.detectBatch(frames)`, refused by name unless it holds
+    * one detection list per frame: the callers pair lists with frames
+    * by position, which would otherwise drop unmatched frames
+    * silently. */
+  private[graft] def detectAligned(detector: Detector,
+      frames: Seq[Frame]): Seq[Seq[RawDetection]] = {
+    val dets = detector.detectBatch(frames)
+    if (dets.length != frames.length) throw new IllegalStateException(
+      s"detectBatch returned ${dets.length} detection lists for ${frames.length} frames")
+    dets
+  }
+
   /** §2.7 error handling, upgraded: the reference halts the pipeline
     * on the first bad frame (`gst-detection-tf.py:443-453` returns
     * FlowReturn.ERROR); at 100 TB one corrupt record must not kill
     * the job, so failures become data — an error column — and flow
     * to a quarantine sink while good frames proceed. Scoring drops
-    * to per-frame batches only for the failing micro-batch. */
+    * to per-frame batches only for the failing micro-batch, and a
+    * batch whose results do not line up with its frames counts as
+    * failing. */
   def detectWithErrors(
       frames: Dataset[Frame],
       detectorFactory: () => Detector,
@@ -100,7 +114,7 @@ object Detect {
       val detector = detectorFactory()
       def one(f: Frame): FrameResult =
         try {
-          val dets = detector.detectBatch(Seq(f)).head
+          val dets = detectAligned(detector, Seq(f)).head
           FrameResult(f.video_id, f.frame_id, f.height, f.width, dets, "")
         } catch {
           case e: Exception =>
@@ -108,7 +122,7 @@ object Detect {
               s"${e.getClass.getSimpleName}: ${e.getMessage}")
         }
       it.grouped(batchSize).flatMap { batch =>
-        try detector.detectBatch(batch).lazyZip(batch).map { (dets, f) =>
+        try detectAligned(detector, batch).lazyZip(batch).map { (dets, f) =>
           FrameResult(f.video_id, f.frame_id, f.height, f.width, dets, "")
         }
         catch { case _: Exception => batch.map(one) }

@@ -11,7 +11,7 @@ import graft.model.{Frame, RawDetection}
   * a committed `.gnet` weight artifact (text: layer dims + row-major
   * weights + biases) is loaded ONCE PER PARTITION, frames are
   * normalized (P4–P6) and bilinear-resized to the model input (P7)
-  * with the grid-average pooling done during the resize, so each
+  * and grid-average pooled in one separable linear map, so each
   * frame becomes a fixed feature vector without a model-input-sized
   * tensor being built, and a real forward pass (matmul + bias +
   * ReLU, sigmoid-decoded heads) produces the detection arrays. Every
@@ -117,8 +117,9 @@ object GraftNet {
   * scoring, and the P4–P7 kernels as the ACTUAL preprocessing of the
   * forward pass — the processSingleFrame composition
   * (`gst-detection-tf.py:405-419`) with every stage live. The features
-  * come from `resizePool`, which pools into the g×g grid during the
-  * resize instead of resizing first and pooling after.
+  * come from `resizePool`, which maps the frame straight to the g×g
+  * cell means of its resize instead of resizing first and pooling
+  * after.
   */
 final class GraftNetDetector(modelPath: String, cfg: DetectorConfig)
     extends Detector {
@@ -169,93 +170,80 @@ object GraftNetDetector {
   def sigmoid(x: Double): Double = 1.0 / (1.0 + math.exp(-x))
 
   /** P7 bilinear resize fused with grid average pooling: the g×g×3
-    * cell means of `Preprocess.resizeBilinear(t, outH, outW)`, bitwise,
-    * without building the outH×outW×3 tensor — the fixed-size bridge
-    * from any model-input resolution to the MLP. Output pixels are
-    * walked in the resize's order (y, then x, then channel); each value
-    * is the same double-weight blend stored with `.toFloat`, added
-    * straight into its cell's float sum. The column taps are computed
-    * once per call, and the horizontal blends of the two source rows
-    * an output row reads are cached, so a row costs one vertical blend
-    * per value. At identity size the source values are pooled as they
-    * are, as `resizeBilinear` returns its input unchanged. */
+    * cell means of `Preprocess.resizeBilinear(t, outH, outW)` without
+    * building the outH×outW×3 tensor — the fixed-size bridge from any
+    * model-input resolution to the MLP. Resize and pooling are linear
+    * and the resize is separable, so each channel's cell sums are
+    * `A · X · Bᵀ`, where the g×H `A` and g×W `B` are `bandMap`s. The
+    * product runs in double, `T = X · Bᵀ` per source row, then `A · T`;
+    * each sum is divided by its cell's output count and stored with
+    * `.toFloat`. That is within 1e-6 · max(1, |mean|) of the exact
+    * cell means, closer than summing the float-stored resized values
+    * would be. */
   def resizePool(t: Preprocess.Tensor, outH: Int, outW: Int,
       g: Int): Array[Float] = {
     require(t.channels == 3,
       s"resizePool pools 3-channel tensors, got ${t.channels} channels")
     require(g > 0, s"pooling grid must be positive, got $g")
-    val ty = Preprocess.bilinearTaps(t.height, outH)
-    val tx = Preprocess.bilinearTaps(t.width, outW)
-    val identity = outH == t.height && outW == t.width
-    val n = outW * 3
+    val a = bandMap(t.height, outH, g)
+    val b = bandMap(t.width, outW, g)
     val src = t.data
-    // horizontal blends of source rows topRow / botRow, per (x, c)
-    var top = new Array[Double](n); var topRow = -1
-    var bot = new Array[Double](n); var botRow = -1
-    def blendRow(r: Int, dst: Array[Double]): Unit = {
-      val base = r * t.width
-      var x = 0
-      while (x < outW) {
-        val wx = tx.w(x)
-        val a = (base + tx.lo(x)) * 3; val b = (base + tx.hi(x)) * 3
-        var c = 0
-        while (c < 3) {
-          dst(x * 3 + c) = src(a + c) * (1 - wx) + src(b + c) * wx
-          c += 1
-        }
-        x += 1
+    val n = g * 3
+    // T = X · Bᵀ: per source row r, cell column j and channel c
+    val xb = new Array[Double](t.height * n)
+    for (r <- 0 until t.height; j <- 0 until g) {
+      val wj = b.w(j)
+      var p = (r * t.width + b.lo(j)) * 3
+      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0
+      var k = 0
+      while (k < wj.length) {
+        s0 += wj(k) * src(p); s1 += wj(k) * src(p + 1); s2 += wj(k) * src(p + 2)
+        p += 3
+        k += 1
+      }
+      xb(r * n + j * 3) = s0; xb(r * n + j * 3 + 1) = s1; xb(r * n + j * 3 + 2) = s2
+    }
+    // A · T, one cell row at a time
+    val out = new Array[Float](g * n)
+    val acc = new Array[Double](n)
+    for (i <- 0 until g) {
+      java.util.Arrays.fill(acc, 0.0)
+      for (k <- a.w(i).indices) {
+        val wk = a.w(i)(k)
+        val row = (a.lo(i) + k) * n
+        var m = 0
+        while (m < n) { acc(m) += wk * xb(row + m); m += 1 }
+      }
+      for (m <- 0 until n) {
+        val count = a.count(i) * b.count(m / 3)
+        if (count > 0) out(i * n + m) = (acc(m) / count).toFloat
       }
     }
-    val cellX = Array.tabulate(outW)(x => math.min(g - 1, x * g / outW) * 3)
-    val sums = new Array[Float](g * g * 3)
-    val row = new Array[Float](n)
-    var y = 0
-    while (y < outH) {
-      if (identity) System.arraycopy(src, y * n, row, 0, n)
-      else {
-        val r0 = ty.lo(y); val r1 = ty.hi(y)
-        if (r0 != topRow) {
-          if (r0 == botRow) {
-            val tb = top; top = bot; bot = tb
-            botRow = topRow; topRow = r0
-          } else { blendRow(r0, top); topRow = r0 }
-        }
-        val lower =
-          if (r1 == topRow) top
-          else { if (r1 != botRow) { blendRow(r1, bot); botRow = r1 }; bot }
-        val wy = ty.w(y)
-        var i = 0
-        while (i < n) {
-          row(i) = (top(i) * (1 - wy) + lower(i) * wy).toFloat
-          i += 1
-        }
-      }
-      val cellRow = math.min(g - 1, y * g / outH) * g * 3
-      var x = 0
-      while (x < outW) {
-        val s = cellRow + cellX(x)
-        sums(s) += row(x * 3)
-        sums(s + 1) += row(x * 3 + 1)
-        sums(s + 2) += row(x * 3 + 2)
-        x += 1
-      }
-      y += 1
+    out
+  }
+
+  /** One axis of `resizePool`'s map. Cell i's output band (the
+    * indices o with `min(g-1, o*g/out) == i`) holds `count(i)` outputs;
+    * together their bilinear taps give source index `lo(i) + k` the
+    * weight `w(i)(k)`. An empty band has no weights. */
+  private final class BandMap(val lo: Array[Int], val w: Array[Array[Double]],
+      val count: Array[Int])
+
+  private def bandMap(in: Int, out: Int, g: Int): BandMap = {
+    val taps = Preprocess.bilinearTaps(in, out)
+    val cell = Array.tabulate(out)(o => math.min(g - 1, o * g / out))
+    val count = new Array[Int](g)
+    val lo = Array.fill(g)(in); val hi = new Array[Int](g)
+    for (o <- 0 until out) {
+      val i = cell(o)
+      count(i) += 1
+      lo(i) = math.min(lo(i), taps.lo(o)); hi(i) = math.max(hi(i), taps.hi(o) + 1)
     }
-    // cell pixel counts: rows in the cell's band × columns in its band
-    val rows = new Array[Int](g); val cols = new Array[Int](g)
-    var i = 0
-    while (i < outH) { rows(math.min(g - 1, i * g / outH)) += 1; i += 1 }
-    i = 0
-    while (i < outW) { cols(math.min(g - 1, i * g / outW)) += 1; i += 1 }
-    var cell = 0
-    while (cell < g * g) {
-      val count = rows(cell / g) * cols(cell % g)
-      if (count > 0) {
-        var c = 0
-        while (c < 3) { sums(cell * 3 + c) /= count; c += 1 }
-      }
-      cell += 1
+    val w = Array.tabulate(g)(i => new Array[Double](math.max(0, hi(i) - lo(i))))
+    for (o <- 0 until out) {
+      w(cell(o))(taps.lo(o) - lo(cell(o))) += 1 - taps.w(o)
+      w(cell(o))(taps.hi(o) - lo(cell(o))) += taps.w(o)
     }
-    sums
+    new BandMap(lo, w, count)
   }
 }

@@ -25,8 +25,13 @@ object Preprocess {
 
   /** P2: buffer → tensor reinterpret. Packed RGB uint8 bytes become
     * an HWC float tensor (0..255). An empty/short buffer (hermetic
-    * tests) zero-fills — deterministic, like a black frame. */
+    * tests) zero-fills — deterministic, like a black frame. A frame
+    * with a non-positive height or width (one a user's parquet can
+    * carry through `FrameSource.conform`) is refused by name. */
   def decodeBuffer(f: Frame): Tensor = {
+    require(f.height > 0 && f.width > 0,
+      s"frame ${f.video_id}/${f.frame_id} has non-positive dimensions " +
+        s"${f.height}x${f.width} (height x width)")
     val n = f.height * f.width * 3
     val out = new Array[Float](n)
     val m = math.min(n, if (f.data == null) 0 else f.data.length)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import graft.model.{Frame, FrameDetections}
-import graft.operators.Detector
+import graft.operators.{Detect, Detector}
 
 /** SURVEY.md §4 custom piece 1, the full Catalyst treatment: the
   * detect operator as a first-class plan node — logical node →
@@ -82,7 +82,7 @@ case class DetectExec(
       // deserialize BEFORE buffering: the parent's InternalRows are
       // reused mutable buffers, Frame objects are fresh
       it.map(deser(_)).grouped(bs).flatMap { frames =>
-        detector.detectBatch(frames).lazyZip(frames).map { (dets, f) =>
+        Detect.detectAligned(detector, frames).lazyZip(frames).map { (dets, f) =>
           ser(FrameDetections(f.video_id, f.frame_id, f.height, f.width, dets))
             .copy() // serializer reuses its row buffer
         }

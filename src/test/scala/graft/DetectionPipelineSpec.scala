@@ -41,6 +41,22 @@ class DetectionPipelineSpec extends SparkTestBase {
     }
   }
 
+  test("a detector that returns too few detection lists is refused, not zipped short") {
+    val ds = spark.createDataset(mkFrames(20)).repartition(2)
+    val e = intercept[Exception](
+      Detect.detect(ds, () => DropsLast, batchSize = 4).collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(messages.contains("detectBatch returned 3 detection lists for 4 frames"), messages)
+    // the error-isolating variant keeps one row per frame: the short
+    // batch falls back to per-frame scoring, where each frame fails
+    val rows = Detect.detectWithErrors(ds, () => DropsLast, batchSize = 4).collect()
+    assert(rows.map(_.frame_id).sorted.toSeq === (0L until 20L))
+    rows.foreach { r =>
+      assert(r.error.contains("detectBatch returned 0 detection lists for 1 frames"), r.error)
+    }
+  }
+
   test("threshold filter is strict > (0.70 boundary excluded)") {
     val ds = spark.createDataset(mkFrames(100))
     val dets = Detect.detect(ds, () => StubDetector).toDF()
@@ -112,4 +128,10 @@ class DetectionPipelineSpec extends SparkTestBase {
     assert(json ==
       """{"AddBoundingBox":{"_ref":1,"rectangle":{"x":120,"y":320,"w":384,"h":575}},"properties":{"label":3}}""")
   }
+}
+
+/** A misaligned detector: it drops the last frame of every batch. */
+private object DropsLast extends graft.operators.Detector {
+  override def detectBatch(frames: Seq[Frame]): Seq[Seq[RawDetection]] =
+    StubDetector.detectBatch(frames.dropRight(1))
 }

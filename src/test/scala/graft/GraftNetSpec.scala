@@ -529,28 +529,33 @@ class GraftNetSpec extends SparkTestBase {
     assert(pooled(9) === 12.5f)
   }
 
-  /** The two-step feature path `resizePool` replaced: resize to the
-    * model input, then average-pool the tensor into a g×g×3 grid. */
+  /** The two-step feature path: resize to the model input, then
+    * average-pool the tensor into a g×g×3 grid. With `exact` the cell
+    * sums run in double, giving the exact cell means of the resize;
+    * without it they run in float, as the detector's features did
+    * before `resizePool` became a separable map. */
   private def resizeThenPool(t: graft.operators.Preprocess.Tensor,
-      outH: Int, outW: Int, g: Int): Array[Float] = {
+      outH: Int, outW: Int, g: Int, exact: Boolean): Array[Float] = {
     val r = graft.operators.Preprocess.resizeBilinear(t, outH, outW)
-    val out = new Array[Float](g * g * 3)
+    val sums = new Array[Double](g * g * 3)
     val counts = new Array[Int](g * g)
     for (y <- 0 until r.height; x <- 0 until r.width) {
       val cell = math.min(g - 1, y * g / r.height) * g +
         math.min(g - 1, x * g / r.width)
       counts(cell) += 1
-      for (c <- 0 until 3) out(cell * 3 + c) += r.data((y * r.width + x) * 3 + c)
+      for (c <- 0 until 3) {
+        val v = r.data((y * r.width + x) * 3 + c)
+        val i = cell * 3 + c
+        sums(i) = if (exact) sums(i) + v else (sums(i).toFloat + v).toDouble
+      }
     }
-    for (cell <- 0 until g * g if counts(cell) > 0; c <- 0 until 3)
-      out(cell * 3 + c) /= counts(cell)
-    out
+    Array.tabulate(g * g * 3) { i =>
+      val n = counts(i / 3)
+      if (n == 0) 0f else if (exact) (sums(i) / n).toFloat else sums(i).toFloat / n
+    }
   }
 
-  private def rawBits(a: Array[Float]): Seq[Int] =
-    a.toSeq.map(java.lang.Float.floatToRawIntBits)
-
-  test("fused resize-pool is bitwise equal to resize then pool") {
+  test("resize-pool matches the exact cell means of the bilinear resize") {
     import graft.operators.Preprocess
     // (source w, source h, output h, output w, grid)
     val geometries = Seq(
@@ -574,9 +579,13 @@ class GraftNetSpec extends SparkTestBase {
         "null" -> (null: Array[Byte]))
       for ((kind, data) <- buffers) {
         val t = Preprocess.normalizer(fw)(Preprocess.decodeBuffer(frame(1L, w, h, data)))
-        assert(rawBits(GraftNetDetector.resizePool(t, oh, ow, g)) ===
-          rawBits(resizeThenPool(t, oh, ow, g)),
-          s"${w}x$h -> ${oh}x$ow grid $g, $fw, $kind buffer")
+        val got = GraftNetDetector.resizePool(t, oh, ow, g)
+        val ref = resizeThenPool(t, oh, ow, g, exact = true)
+        assert(got.length === ref.length)
+        for (i <- ref.indices)
+          assert(math.abs(got(i) - ref(i)) <= 1e-6 * math.max(1.0, math.abs(ref(i))),
+            s"${w}x$h -> ${oh}x$ow grid $g, $fw, $kind buffer, value $i: " +
+              s"${got(i)} vs ${ref(i)}")
       }
     }
   }
@@ -590,20 +599,65 @@ class GraftNetSpec extends SparkTestBase {
     }
 
   test("detectBatch outputs are unchanged for the FP32 and INT8 artifacts") {
-    // digests of the same outputs from the detector that resized to
-    // the model input first and pooled the tensor after
+    import graft.operators.Preprocess
+    // digests of the outputs with features from the separable map
     val pinned = Map(
-      GraftNet.BundledModel -> -6467266211769696465L,
-      GraftNet.BundledModelInt8 -> 2483794496120535043L)
+      GraftNet.BundledModel -> 8762786973804685511L,
+      GraftNet.BundledModelInt8 -> 3048001067403865560L)
     val frames = (1 to 3).map(i => frame(i, 80 + i, 60, rgbPattern(80 + i, 60, i))) :+
       frame(4L, 31, 17, rgbPattern(31, 17, 4).take(100)) :+
       frame(5L, 8, 8, null)
+    val labels = DetectorConfig().labelDomain
+    def cls(logit: Float) =
+      math.min(labels - 1, (GraftNetDetector.sigmoid(logit) * labels).toInt)
+    def kept(logit: Float) = GraftNetDetector.sigmoid(logit).toFloat > 0.5f
     for ((model, digest) <- pinned) {
-      val dets = for (fw <- Seq("cv2", "np", "tf"); edge <- Seq(1200, 33, 4)) yield
+      val net = GraftNet.load(model)
+      val grid = math.sqrt(net.inputSize / 3.0).toInt
+      val dets = for (fw <- Seq("cv2", "np", "tf"); edge <- Seq(1200, 33, 4)) yield {
+        // against the float-summed resize-then-pool features the
+        // detector used before: logits within 1e-4, and every head
+        // keeps its class bucket and its side of the 0.5 score cut
+        for (f <- frames) {
+          val t = Preprocess.normalizer(fw)(Preprocess.decodeBuffer(f))
+          val now = net.forward(GraftNetDetector.resizePool(t, edge, edge, grid))
+          val old = net.forward(resizeThenPool(t, edge, edge, grid, exact = false))
+          val where = s"$model, $fw, edge $edge, frame ${f.frame_id}"
+          for (i <- now.indices)
+            assert(math.abs(now(i) - old(i)) <= 1e-4, s"$where, logit $i")
+          for (head <- 0 until now.length / 6) {
+            assert(cls(now(head * 6 + 5)) === cls(old(head * 6 + 5)), s"$where, head $head")
+            assert(kept(now(head * 6 + 4)) === kept(old(head * 6 + 4)), s"$where, head $head")
+          }
+        }
         new GraftNetDetector(model,
           DetectorConfig(preprocFw = fw, modelInput = edge)).detectBatch(frames)
+      }
       assert(detectionDigest(dets.flatten) === digest, model)
     }
+  }
+
+  test("a frame with a non-positive height or width is refused by name") {
+    import graft.operators.Preprocess
+    for ((h, w) <- Seq((-1, 8), (8, -1), (0, 8), (8, 0), (0, 0))) {
+      val e = intercept[IllegalArgumentException](
+        Preprocess.decodeBuffer(Frame("clip7", 42L, new Timestamp(0L), h, w, null)))
+      assert(e.getMessage.contains("clip7/42") &&
+        e.getMessage.contains(s"${h}x$w"), e.getMessage)
+    }
+    // the error-isolating detect path turns it into that frame's row
+    import spark.implicits._
+    val frames = Seq(frame(1L, 8, 8, rgbPattern(8, 8, 1)),
+      Frame("vid", 2L, new Timestamp(0L), -1, 8, null),
+      Frame("vid", 3L, new Timestamp(0L), 0, 8, null))
+    val factory = Detectors.forConfig(
+      DetectorConfig(modelPath = Some(GraftNet.BundledModel), modelInput = 16))
+    val rows = Detect.detectWithErrors(frames.toDS(), factory, batchSize = 3)
+      .collect().sortBy(_.frame_id)
+    assert(rows.map(_.frame_id).toSeq === Seq(1L, 2L, 3L))
+    assert(rows(0).error === "" && rows(0).detections.nonEmpty)
+    assert(rows(1).error.contains("vid/2") && rows(1).error.contains("-1x8"), rows(1).error)
+    assert(rows(2).error.contains("vid/3") && rows(2).error.contains("0x8"), rows(2).error)
   }
 
   test("a non-positive model_input or non-RGB tensor is refused by name") {
