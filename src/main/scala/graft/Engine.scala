@@ -99,6 +99,19 @@ object Engine {
     } else df.localCheckpoint(true)
   }
 
+  /** Frees a superseded [[snapshot]] now; the frame must not be read
+    * again. `Dataset.unpersist()` cannot: a local checkpoint is not in
+    * the CacheManager, so its blocks stay until the driver's
+    * ContextCleaner happens to GC the RDD. This unpersists the RDD
+    * behind a local-mode snapshot. It is a no-op on a lazy frame, and
+    * in reliable mode, whose files go at application end. */
+  def release(df: org.apache.spark.sql.DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false); ()
+      case _ => ()
+    }
+
   /** Restore task fan-out after a lineage-truncating snapshot.
     * AQE legitimately coalesces a small shuffle to few partitions,
     * but a checkpoint FREEZES that layout: heavy narrow work
@@ -108,16 +121,19 @@ object Engine {
     * repartition to the default parallelism when the snapshot
     * landed below it; a no-op at scale, where any data-sized
     * snapshot already carries >= cores partitions (AQE never
-    * re-splits an explicit repartition count). */
+    * re-splits an explicit repartition count). `df` must be a snapshot
+    * the caller does not keep: a replaced one is released. */
   def ensureParallelism(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target)
+    if (df.rdd.getNumPartitions < target) {
       // re-snapshot so multi-consumer plans read the fanned-out
       // layout directly instead of re-planning the repartition
       // exchange once per consumer
-      snapshot(df.repartition(target))
-    else df
+      val fanned = snapshot(df.repartition(target))
+      release(df)
+      fanned
+    } else df
   }
 
   /** postfix sugar so operator loops read `frame.snapshot()` at the

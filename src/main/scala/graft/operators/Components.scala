@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Engine
 import graft.Engine.SnapshotOps
 
 /** Distributed connected components over an undirected edge list —
@@ -77,8 +78,8 @@ object Components {
       .distinct().snapshot()
     // round 0's labels are a LAZY view over the cached sym — the
     // round-1 materialization computes them in its own pass, so no
-    // separate init job exists (unpersist on the lazy frame is a
-    // no-op, keeping the loop's release discipline uniform)
+    // separate init job exists (releasing the lazy frame is a no-op,
+    // keeping the loop's release discipline uniform)
     var labels = sym.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     var iter = 0
@@ -105,12 +106,12 @@ object Components {
       // release the superseded round's snapshot NOW — without this,
       // up to maxIters dead label tables pile up in storage memory
       // until the driver's ContextCleaner happens to GC them
-      labels.unpersist()
+      Engine.release(labels)
       labels = next
       converged = changed.value == 0L
       iter += 1
     }
-    sym.unpersist()
+    Engine.release(sym)
     require(converged, s"connectedComponents did not converge in $maxIters rounds")
     labels.select(col("node"), col("label").as("cluster"))
   }
@@ -223,7 +224,7 @@ object Components {
         .snapshot()
       val nextSig = (cnt.value.longValue, xor.value.longValue)
       converged = nextSig == sig && next.except(cur).isEmpty
-      cur.unpersist()
+      Engine.release(cur)
       cur = next
       sig = nextSig
       iter += 1

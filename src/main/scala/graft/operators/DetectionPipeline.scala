@@ -84,23 +84,6 @@ object DetectionPipeline {
       ).as("AddBoundingBox"),
       struct(col("label_id").as("label")).as("properties"))
 
-  /** P12: box annotation as render-command generation — the
-    * analytics analog of cv2.rectangle + cv2.putText
-    * (`gst-detection-tf.py:331-337,394-400`): the engine emits one
-    * draw command per box (rect + int_to_rgb color + label text);
-    * rasterization onto pixels happens at display time, outside the
-    * analytics path. Input: the label-joined box records. */
-  def drawCommands(joined: DataFrame): Column =
-    struct(
-      struct(col("x"), col("y"), col("w"), col("h")).as("rect"),
-      struct(
-        graft.functions.ColorFunctions.rgbR(col("label_id")).as("r"),
-        graft.functions.ColorFunctions.rgbG(col("label_id")).as("g"),
-        graft.functions.ColorFunctions.rgbB(col("label_id")).as("b")
-      ).as("color"),
-      concat(col("label"), lit(": "),
-        format_number(col("score"), 2)).as("text"))
-
   /** Full post-inference chain: mask → explode → scale. */
   def boxes(detections: DataFrame, threshold: Double): DataFrame =
     scaleBoxes(explodeBoxes(thresholdFilter(detections, threshold)))

@@ -55,16 +55,6 @@ object StubDetector extends Detector {
     frames.map(f => detectOne(f.frame_id))
 }
 
-/** Per-frame outcome of the error-isolating detect variant: either a
-  * detection list or the error text, never a failed task. */
-final case class FrameResult(
-    video_id: String,
-    frame_id: Long,
-    height: Int,
-    width: Int,
-    detections: Seq[RawDetection],
-    error: String) // empty = success (no nulls in engine outputs)
-
 object Detect {
   /** The `predict` operator: partition-scoped scoring with
     * per-partition model init and intra-partition micro-batching —
@@ -95,38 +85,5 @@ object Detect {
     if (dets.length != frames.length) throw new IllegalStateException(
       s"detectBatch returned ${dets.length} detection lists for ${frames.length} frames")
     dets
-  }
-
-  /** §2.7 error handling, upgraded: the reference halts the pipeline
-    * on the first bad frame (`gst-detection-tf.py:443-453` returns
-    * FlowReturn.ERROR); at 100 TB one corrupt record must not kill
-    * the job, so failures become data — an error column — and flow
-    * to a quarantine sink while good frames proceed. Scoring drops
-    * to per-frame batches only for the failing micro-batch, and a
-    * batch whose results do not line up with its frames counts as
-    * failing. */
-  def detectWithErrors(
-      frames: Dataset[Frame],
-      detectorFactory: () => Detector,
-      batchSize: Int = 32): Dataset[FrameResult] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[FrameResult]
-    frames.mapPartitions { it =>
-      val detector = detectorFactory()
-      def one(f: Frame): FrameResult =
-        try {
-          val dets = detectAligned(detector, Seq(f)).head
-          FrameResult(f.video_id, f.frame_id, f.height, f.width, dets, "")
-        } catch {
-          case e: Exception =>
-            FrameResult(f.video_id, f.frame_id, f.height, f.width, Nil,
-              s"${e.getClass.getSimpleName}: ${e.getMessage}")
-        }
-      it.grouped(batchSize).flatMap { batch =>
-        try detectAligned(detector, batch).lazyZip(batch).map { (dets, f) =>
-          FrameResult(f.video_id, f.frame_id, f.height, f.width, dets, "")
-        }
-        catch { case _: Exception => batch.map(one) }
-      }
-    }
   }
 }

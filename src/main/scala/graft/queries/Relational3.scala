@@ -737,10 +737,7 @@ object Relational3 {
     * COUNT per hour is min(N, hour_count) independent of which
     * events win — so the report is pure integer arithmetic over ONE
     * (user, hour) partial agg + a per-user rollup, no window
-    * function and no ordering anywhere. The streaming form
-    * (StatefulOps.quotaState) maintains the same per-hour counts as
-    * keyed state and converges to these exact rows under adversarial
-    * replay (parity spec). */
+    * function and no ordering anywhere. */
   def r46RateLimit(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(col("user_id"),

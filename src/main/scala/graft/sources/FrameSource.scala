@@ -55,8 +55,9 @@ object FrameSource {
   /** S1+S2 fused on REAL VIDEO FILES: watch a directory of MP4s as a
     * stream (the reference's `filesrc location=*.mp4` shape,
     * `run.sh:53`), decode each arriving container to pixels — the
-    * full hop: box walk → avcC SPS → NAL walk → I_PCM slice parse →
-    * planar YUV → BT.601 RGB — and emit the same `Frame` rows the
+    * full hop: box walk → avcC SPS/PPS → NAL walk → slice decode by
+    * `Inter.decodeGopFrames` (the full envelope below) → planar YUV →
+    * BT.601 RGB — and emit the same `Frame` rows the
     * detection pipeline consumes. `maxFilesPerTrigger` is the
     * backpressure knob (whole files are the admission unit, exactly
     * the decode/inference decoupling queue's role).

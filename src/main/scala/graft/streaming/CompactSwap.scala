@@ -2,12 +2,11 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** The staged-compaction swap shared by the two persisted-index
-  * lifecycles (IndexedDedup bands/features, IndexedLex postings/
-  * doclen/stats): apply — or re-apply after a crash — a CERTIFIED
-  * staged rebuild by moving each live table aside to
-  * `_compact_trash` and renaming the staged one in. No-op (stage
-  * cleared) when the `_stage_complete` marker is absent.
+/** The staged-compaction swap of the persisted lexical index
+  * (IndexedLex postings/doclen/stats): apply — or re-apply after a
+  * crash — a CERTIFIED staged rebuild by moving each live table
+  * aside to `_compact_trash` and renaming the staged one in. No-op
+  * (stage cleared) when the `_stage_complete` marker is absent.
   *
   * Failure discipline: Hadoop's FileSystem.rename signals failure by
   * RETURNING FALSE, not throwing — so every rename's boolean is

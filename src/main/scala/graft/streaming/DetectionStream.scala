@@ -113,16 +113,4 @@ object DetectionStream {
     if (!query.isActive) spark.streams.removeListener(limiter)
     query
   }
-
-  /** A4/S5: the fps-display sink analog — event-time windowed frame
-    * rate with a watermark (late frames beyond `lateness` are
-    * dropped, finalized windows emitted in append mode). */
-  def fpsWindow(frames: Dataset[Frame], window_ : String = "1 second",
-      lateness: String = "10 seconds"): DataFrame =
-    frames.toDF()
-      .withWatermark("ts", lateness)
-      .groupBy(col("video_id"), window(col("ts"), window_))
-      .agg(count(lit(1)).as("n_frames"))
-      .select(col("video_id"), col("window.start").as("ws"),
-        col("n_frames"))
 }

@@ -8,26 +8,26 @@ import graft.queries.RetrievalQueries
 
 /** Streaming ingest for the PERSISTED LEXICAL INDEX — x40/x41's
   * production arrival path, completing the index-lifecycle symmetry
-  * the engine already ships for vectors (s17 append) and near-dup
-  * bands (IndexedDedup): documents arrive as micro-batches, every
-  * batch is tokenized ONCE and lands its postings (term-hash-bucket
-  * layout), doclen rows and corpus-stats PARTIAL under its own
-  * `ingest_id=<batch>` partition; the standing index is never read,
-  * rewritten or re-tokenized. Serving aggregates the one-row stats
-  * partials (counts and sums add — the x39 mergeable-profile
-  * property) and runs the exact x40 bucket-pruned BM25 plan, so a
-  * streamed index is bit-identical to a fresh batch build — the
-  * x69 hash gate and the streaming parity spec both certify it.
+  * the engine already ships for vectors (s17 append): documents
+  * arrive as micro-batches, every batch is tokenized ONCE and lands
+  * its postings (term-hash-bucket layout), doclen rows and
+  * corpus-stats PARTIAL under its own `ingest_id=<batch>` partition;
+  * the standing index is never read, rewritten or re-tokenized.
+  * Serving aggregates the one-row stats partials (counts and sums add
+  * — the x39 mergeable-profile property) and runs the exact x40
+  * bucket-pruned BM25 plan, so a streamed index is bit-identical to a
+  * fresh batch build — the x69 hash gate and the streaming parity
+  * spec both certify it.
   *
-  * Idempotence: the IndexedDedup discipline verbatim — every write
-  * is scoped to the batch's `ingest_id` partition with overwrite
-  * semantics (an at-least-once replay REPLACES its own partial
-  * output), and a `_ingested_<id>` marker written last through the
-  * Hadoop FileSystem API short-circuits completed batches. Beside
-  * the markers, `_lex_buckets` records the term-hash bucket count B
-  * the postings were laid out with; every entry point refuses an
-  * index whose B differs from `SPARK_GRAFT_LEX_BUCKETS`, since the
-  * serve predicate would prune to the wrong buckets.
+  * Idempotence: every write is scoped to the batch's `ingest_id`
+  * partition with overwrite semantics (an at-least-once replay
+  * REPLACES its own partial output), and a `_ingested_<id>` marker
+  * written last through the Hadoop FileSystem API short-circuits
+  * completed batches. Beside the markers, `_lex_buckets` records the
+  * term-hash bucket count B the postings were laid out with; every
+  * entry point refuses an index whose B differs from
+  * `SPARK_GRAFT_LEX_BUCKETS`, since the serve predicate would prune
+  * to the wrong buckets.
   *
   * 100 TB shape: each micro-batch costs one narrow tokenize pass
   * over the BATCH plus three batch-sized writes; stats stay one row
@@ -159,7 +159,7 @@ object IndexedLex {
   }
 
   /** The streaming wrapper (foreachBatch — the index is a
-    * cross-batch external store, the VdmsSink/IndexedDedup shape);
+    * cross-batch external store, the VdmsSink shape);
     * AvailableNow drains the source and stops. */
   def start(docs: DataFrame, path: String,
       checkpointDir: String): StreamingQuery =
@@ -178,10 +178,9 @@ object IndexedLex {
     * per-ingest small files inside each term bucket. Compacting
     * rewrites all three as single collapsed layouts (postings
     * re-co-located per term bucket exactly like the x40 build,
-    * stats summed to ONE row) and swaps them in with the same
-    * staged, marker-certified rename discipline as
-    * IndexedDedup.compact: a crash before `_stage_complete` leaves
-    * the live index untouched; a crash mid-swap is repaired by the
+    * stats summed to ONE row) and swaps them in with the staged,
+    * marker-certified rename discipline of [[CompactSwap]]: a crash
+    * before `_stage_complete` leaves the live index untouched; a crash mid-swap is repaired by the
     * next compact(). Serving is unchanged — the bucket-pruning
     * predicate never depended on how many batches built the index.
     *
@@ -247,7 +246,7 @@ object IndexedLex {
   }
 
   /** Apply (or re-apply after a crash) a certified staged
-    * compaction — the shared [[CompactSwap]] discipline (rename
+    * compaction — the [[CompactSwap]] discipline (rename
     * booleans checked, cleanup gated on live-table existence) for
     * the three lexical tables. No-op without the stage marker. */
   private def finishSwap(fs: org.apache.hadoop.fs.FileSystem,

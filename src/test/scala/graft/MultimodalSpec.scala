@@ -41,19 +41,6 @@ class MultimodalSpec extends SparkTestBase {
     assert(got === expect)
   }
 
-  test("draw commands carry rect, rgb color and label text (P12)") {
-    import graft.operators.DetectionPipeline
-    val joined = Seq((10, 20, 30, 40, 5, "person", 0.875f))
-      .toDF("x", "y", "w", "h", "label_id", "label", "score")
-    val cmd = joined.select(DetectionPipeline.drawCommands(joined).as("c"))
-      .select("c.rect.x", "c.color.r", "c.color.g", "c.color.b", "c.text")
-      .head()
-    assert(cmd.getInt(0) === 10)
-    val num = (5.0 / 80.0 * 255.0).toInt
-    assert(cmd.getInt(1) === (num & 255))
-    assert(cmd.getString(4) === "person: 0.88")
-  }
-
   test("plan dump sink writes a formatted physical plan (S9)") {
     val path = Files.createTempFile("graft-plan-", ".txt").toString
     Engine.dumpPlan(spark.range(10).toDF().filter(col("id") > 3), path)

@@ -117,20 +117,6 @@ class PropertiesSpec extends AnyFunSuite {
     })
   }
 
-  test("streaming jaccardSorted == batch set-based jaccard") {
-    import graft.streaming.StreamingDedup.jaccardSorted
-    val gen = for {
-      a <- Gen.listOf(Gen.chooseNum(0L, 40L))
-      b <- Gen.listOf(Gen.chooseNum(0L, 40L))
-    } yield (a.distinct.sorted.toArray, b.distinct.sorted.toArray)
-    check(Prop.forAll(gen) { case (a, b) =>
-      val inter = a.toSet.intersect(b.toSet).size
-      val union = a.toSet.union(b.toSet).size
-      val expect = if (union == 0) 1.0 else inter.toDouble / union
-      jaccardSorted(a, b) == expect
-    })
-  }
-
   test("gnet forward: deterministic and batch-order-independent") {
     val net = graft.operators.GraftNet.load(graft.operators.GraftNet.BundledModel)
     val gen = Gen.listOfN(net.inputSize, Gen.chooseNum(-100, 100))

@@ -74,42 +74,6 @@ class Relational3Spec extends SparkTestBase {
     assert(got.forall(r => r._1.contains('1')))
   }
 
-  test("streaming compactState converges to the batch compaction") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StatefulOps
-    implicit val sqlCtx = spark.sqlContext
-    // real corpus slice, streamed out of order across micro-batches
-    val ev = graft.sources.Tables.events(spark, sf)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .as[StatefulOps.EventChange].collect().toSeq
-    val shuffled = ev.sortBy(e => (e.event_id * 2654435761L) % 1000003L)
-    val mem = MemoryStream[StatefulOps.EventChange]
-    val q = StatefulOps.compactState(mem.toDS())
-      .writeStream.format("memory").queryName("compact_out")
-      .outputMode("update")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-compact-").toString)
-      .start()
-    shuffled.grouped(200).foreach { b => mem.addData(b); q.processAllAvailable() }
-    q.stop()
-    // final state per user = the emitted row with max n_changes
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("n_changes").desc)
-    val streamed = spark.table("compact_out")
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .filter(col("last_type") =!= "error")
-      .select("user_id", "last_type", "last_ts_us", "last_event",
-        "last_cents", "n_changes")
-      .as[(Long, String, Long, Long, Long, Long)].collect().toSet
-    val batch = Relational3.compactLog(graft.sources.Tables.events(spark, sf))
-      .select("user_id", "last_type", "last_ts_us", "last_event",
-        "last_cents", "n_changes")
-      .as[(Long, String, Long, Long, Long, Long)].collect().toSet
-    assert(streamed === batch)
-    assert(batch.nonEmpty)
-  }
-
   test("s17: incrementally appended index serves the full-corpus search") {
     import graft.queries.LlmQueries
     val incr = LlmQueries.s17IndexUpdate(spark, sf)
@@ -290,40 +254,6 @@ class Relational3Spec extends SparkTestBase {
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
-  }
-
-  test("streaming funnelState converges to the batch funnel under " +
-    "out-of-order replay") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StatefulOps
-    implicit val sqlCtx = spark.sqlContext
-    val ev = graft.sources.Tables.events(spark, sf)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      .as[StatefulOps.FunnelEvent].collect().toSeq
-    // adversarial order: reverse-ish shuffle so late-arriving EARLY
-    // views re-qualify earlier clicks in later micro-batches
-    val shuffled = ev.sortBy(e => -((e.event_id * 2654435761L) % 1000003L))
-    val mem = MemoryStream[StatefulOps.FunnelEvent]
-    val q = StatefulOps.funnelState(mem.toDS())
-      .writeStream.format("memory").queryName("funnel_out")
-      .outputMode("update")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-funnel-").toString)
-      .start()
-    shuffled.grouped(150).foreach { b => mem.addData(b); q.processAllAvailable() }
-    q.stop()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("n_events").desc)
-    val streamed = spark.table("funnel_out")
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select("user_id", "reached", "t_view_us", "t_click_us",
-        "t_purchase_us")
-      .as[(Long, String, Long, Long, Long)].collect().toSet
-    val batch = graft.queries.Relational3
-      .funnel(graft.sources.Tables.events(spark, sf))
-      .as[(Long, String, Long, Long, Long)].collect().toSet
-    assert(streamed === batch)
-    assert(batch.nonEmpty)
   }
 
   test("r37 small quantity: integer threshold matches the 0.2*avg " +

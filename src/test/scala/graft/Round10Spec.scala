@@ -718,84 +718,6 @@ class Round10Spec extends SparkTestBase {
     intercept[Exception] { Codecs.Mp4.index(bad) }
   }
 
-  test("indexed streaming dedup: chunked stream == rebuilt-index batch reference") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.operators.{Components, Dedup}
-    import graft.streaming.IndexedDedup
-    val th = 0.7
-    def doc(id: Long, base: String, extra: String) = (id, base + extra)
-    val A = "the quick brown fox jumps over the lazy dog near the river bank today"
-    val B = "a completely different catalog of machine parts listed by weight and size for audit"
-    val C = "seven streaming engines compared on throughput latency state size and recovery behavior overall"
-    val D = "final unrelated text about mountain weather patterns in early spring measured hourly"
-    val chunks: Seq[Seq[(Long, String)]] = Seq(
-      Seq(doc(1, A, ""), doc(2, A, " again"), doc(10, B, "")),
-      Seq(doc(3, A, " twice"), doc(20, C, ""), doc(21, C, " more")),
-      Seq(doc(11, B, " redux"), doc(30, D, ""), doc(4, A, " thrice")))
-
-    // ---- streaming run: one micro-batch per chunk (AvailableNow
-    // drains what is queued; re-starting on the same checkpoint
-    // assigns consecutive batch ids)
-    val root = java.nio.file.Files.createTempDirectory("ixdedup").toString
-    val idx = s"$root/index"; val ckp = s"$root/ckp"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(idx))
-    val mem = MemoryStream[(Long, String)](spark)
-    chunks.foreach { c =>
-      mem.addData(c)
-      val q = IndexedDedup.start(
-        mem.toDF().toDF("doc_id", "text"), idx, th, ckp)
-      q.awaitTermination(120000)
-    }
-    val got = spark.read.parquet(s"$idx/verdicts")
-      .select(col("doc_id"), col("is_dup"), col("reason"))
-      .as[(Long, Boolean, Option[String])].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
-
-    // ---- sequential batch reference: same per-chunk semantics, but
-    // the index is REBUILT from scratch with d13's build half each
-    // step — parity here proves the streamed APPEND path drifts from
-    // the canonical build in neither candidates nor verdicts
-    var survivors = Seq.empty[(Long, String)]
-    val expected = scala.collection.mutable.Map[Long, (Boolean, Option[String])]()
-    var step = 0
-    chunks.foreach { c =>
-      val cdf = c.toDF("doc_id", "text")
-      val pairs = Dedup.nearDupPairs(cdf, th)
-        .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      val batchDup = Components.connectedComponents(pairs)
-        .filter(col("label") =!= col("node"))
-        .select(col("node")).as[Long].collect().toSet
-      val reps = c.filterNot(d => batchDup.contains(d._1))
-      val corpusDup: Set[Long] =
-        if (survivors.isEmpty) Set.empty
-        else {
-          val ref = s"$root/ref$step"
-          Dedup.nearDupIndexBuild(survivors.toDF("doc_id", "text"), ref)
-          Dedup.nearDupIndexProbe(spark, ref,
-              reps.toDF("doc_id", "text"), th)
-            .select(col("doc_batch")).as[Long].collect().toSet
-        }
-      c.foreach { d =>
-        expected(d._1) =
-          if (batchDup.contains(d._1)) (true, Some("batch"))
-          else if (corpusDup.contains(d._1)) (true, Some("corpus"))
-          else (false, None)
-      }
-      survivors = survivors ++ reps.filterNot(d => corpusDup.contains(d._1))
-      step += 1
-    }
-    assert(got === expected.toMap)
-    // the dedup actually fired along every path
-    assert(expected.values.count(_._2 == Some("batch")) >= 2)
-    assert(expected.values.count(_._2 == Some("corpus")) >= 2)
-    assert(expected.values.count(v => !v._1) >= 4)
-    // idempotent replay: re-running a completed batch id is a no-op
-    val before = spark.read.parquet(s"$idx/features").count()
-    IndexedDedup.ingestBatch(spark, idx,
-      chunks(0).toDF("doc_id", "text"), th, batchId = 0L)
-    assert(spark.read.parquet(s"$idx/features").count() === before)
-  }
-
   test("s32 top PC: planted dominant axis recovered, variance share ~1") {
     import graft.operators.Similarity
     // 40 vectors along +/- axis 5 with amplitude ramp, tiny fixed

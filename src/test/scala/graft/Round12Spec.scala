@@ -216,46 +216,6 @@ class Round12Spec extends SparkTestBase {
     assert(canon(IndexedLex.serve(spark, idx, terms)) === scratch)
   }
 
-  test("IndexedDedup.compact: ingest -> compact -> probe equals " +
-    "fresh-build -> probe, cap re-applied, idempotent") {
-    import org.apache.spark.sql.functions._
-    import graft.operators.Dedup
-    import graft.streaming.IndexedDedup
-    val docs = graft.sources.Tables.documents(spark, sf)
-      .select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("ixcmp").toString
-    val ing = s"$root/ingested"; val fresh = s"$root/fresh"
-    (0L until 3L).foreach { b =>
-      IndexedDedup.ingestBatch(spark, ing,
-        docs.filter(col("doc_id") % 3 === b), threshold = 0.7, b)
-    }
-    // the index holds only SURVIVORS — rebuild the reference index
-    // from exactly those docs, with the same (small) cap so the cap
-    // actually bites at spec scale
-    val survivors = docs.join(
-      spark.read.parquet(s"$ing/verdicts").filter(!col("is_dup"))
-        .select(col("doc_id")), Seq("doc_id"))
-    val cap = 2
-    Dedup.nearDupIndexBuild(survivors, fresh, maxBucket = cap)
-    IndexedDedup.compact(spark, ing, maxBucket = cap)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    val probeFresh = canon(
-      Dedup.nearDupIndexProbe(spark, fresh, docs, 0.7))
-    val probeCompacted = canon(
-      Dedup.nearDupIndexProbe(spark, ing, docs, 0.7))
-    assert(probeFresh.nonEmpty && probeCompacted === probeFresh)
-    // the cap really dropped rows: compacted band rows == fresh
-    // build's capped count, strictly below the uncapped append total
-    val compactedRows = spark.read.parquet(s"$ing/bands").count()
-    assert(compactedRows === spark.read.parquet(s"$fresh/bands").count())
-    // compacting again is a no-op on content
-    IndexedDedup.compact(spark, ing, maxBucket = cap)
-    assert(canon(Dedup.nearDupIndexProbe(spark, ing, docs, 0.7))
-      === probeFresh)
-    assert(spark.read.parquet(s"$ing/bands").count() === compactedRows)
-  }
-
   test("v18 zone transitions: every tracklet of k boxes contributes " +
     "exactly k - 1 transitions, zones stay in the 4x4 grid") {
     import org.apache.spark.sql.functions._

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Inter
-import graft.streaming.{IndexedDedup, IndexedLex}
+import graft.streaming.IndexedLex
 
 /** Round-13 additions: the two escalation guards the round-12 ledger
   * declared but did not code (tracklet-closure fallback, r76
@@ -114,41 +114,6 @@ class Round13Spec extends SparkTestBase {
     // stats did NOT double-count: compacted row + batch-1 partial
     assert(spark.read.parquet(s"$idx/stats")
       .agg(sum("n_docs")).head().getLong(0) === docs.count())
-  }
-
-  // ---- crashed-ingest compaction: near-dup index ---------------------
-
-  test("IndexedDedup.compact drops a markerless batch; crash + " +
-    "compact + replay equals compact-then-ingest") {
-    val docs = graft.sources.Tables.documents(spark, sf)
-      .select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("nddc").toString
-    val crashed = s"$root/crashed"; val ref = s"$root/ref"
-    val b0 = docs.filter(col("doc_id") % 2 === 0)
-    val b1 = docs.filter(col("doc_id") % 2 === 1)
-    val thr = 0.8
-    // crashed path: ingest 0, ingest 1, lose 1's marker, compact,
-    // replay 1
-    IndexedDedup.ingestBatch(spark, crashed, b0, thr, 0L)
-    IndexedDedup.ingestBatch(spark, crashed, b1, thr, 1L)
-    val fs = new org.apache.hadoop.fs.Path(crashed)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.delete(
-      new org.apache.hadoop.fs.Path(crashed, "_ingested_1"), false))
-    IndexedDedup.compact(spark, crashed, maxBucket = 4)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$crashed/features/ingest_id=1")))
-    IndexedDedup.ingestBatch(spark, crashed, b1, thr, 1L)
-    // reference path: the same operation order without the crash
-    IndexedDedup.ingestBatch(spark, ref, b0, thr, 0L)
-    IndexedDedup.compact(spark, ref, maxBucket = 4)
-    IndexedDedup.ingestBatch(spark, ref, b1, thr, 1L)
-    def canon(path: String, table: String) =
-      spark.read.parquet(s"$path/$table").collect()
-        .map(_.toString).sorted.toSeq
-    Seq("bands", "features", "verdicts").foreach { t =>
-      assert(canon(crashed, t) === canon(ref, t), t)
-    }
   }
 
   // ---- g8: kCorePeel assembly fusion ---------------------------------

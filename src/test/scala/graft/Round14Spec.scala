@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{Codecs, Deblock, Inter}
-import graft.streaming.{IndexedDedup, IndexedLex}
+import graft.streaming.IndexedLex
 import Codecs.Mp4
 
 /** Round-14 additions: conformance-true H.264 fixtures (the PPS now
@@ -362,44 +362,6 @@ class Round14Spec extends SparkTestBase {
     Seq("0", "-4", "64x", "", "9999999999").foreach { v =>
       val e = intercept[IllegalArgumentException](parseLexBuckets(Some(v)))
       assert(e.getMessage.contains("SPARK_GRAFT_LEX_BUCKETS"), v)
-    }
-  }
-
-  test("IndexedDedup: a crashed batch 0 after compaction keeps the " +
-    "compacted base; replay restores parity with the no-crash path") {
-    val docs = graft.sources.Tables.documents(spark, sf)
-      .select(col("doc_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("ndc0").toString
-    val crashed = s"$root/crashed"; val ref = s"$root/ref"
-    val b0 = docs.filter(col("doc_id") % 2 === 0)
-    val b1 = docs.filter(col("doc_id") % 2 === 1)
-    val thr = 0.8
-    // crashed path: ingest @5, compact (base), crashed batch 0,
-    // compact again, replay batch 0
-    IndexedDedup.ingestBatch(spark, crashed, b0, thr, 5L)
-    IndexedDedup.compact(spark, crashed, maxBucket = 4)
-    val fs = new org.apache.hadoop.fs.Path(crashed)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    IndexedDedup.ingestBatch(spark, crashed, b1, thr, 0L)
-    assert(fs.delete(
-      new org.apache.hadoop.fs.Path(crashed, "_ingested_0"), false))
-    IndexedDedup.compact(spark, crashed, maxBucket = 4)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$crashed/features/ingest_id=0")))
-    // the certified batch-5 rows survive both compactions
-    assert(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$crashed/features/ingest_id=5")))
-    IndexedDedup.ingestBatch(spark, crashed, b1, thr, 0L)
-    // reference path: same operations without the crash + recompact
-    IndexedDedup.ingestBatch(spark, ref, b0, thr, 5L)
-    IndexedDedup.compact(spark, ref, maxBucket = 4)
-    IndexedDedup.ingestBatch(spark, ref, b1, thr, 0L)
-    def canon(path: String, table: String) =
-      spark.read.parquet(s"$path/$table")
-        .drop("ingest_id") // physical layout differs; content must not
-        .collect().map(_.toString).sorted.toSeq
-    Seq("bands", "features", "verdicts").foreach { t =>
-      assert(canon(crashed, t) === canon(ref, t), t)
     }
   }
 

@@ -742,6 +742,24 @@ class Round9Spec extends SparkTestBase {
       Seq.empty[(Long, Long)].toDF("a", "b")).count() === 0L)
   }
 
+  test("connectedComponents and connectedComponentsTwoPhase release " +
+    "every superseded round: a 12-node path leaves at most one new " +
+    "persisted RDD, the one behind the result") {
+    import org.apache.spark.sql.DataFrame
+    import graft.operators.Components
+    val sc = spark.sparkContext
+    val path = (0L until 11L).map(i => (i, i + 1)).toDF("a", "b")
+    for ((name, cc) <- Seq[(String, DataFrame => DataFrame)](
+        "connectedComponents" -> (Components.connectedComponents(_)),
+        "connectedComponentsTwoPhase" -> (Components.connectedComponentsTwoPhase(_)))) {
+      val before = sc.getPersistentRDDs.keySet
+      val got = cc(path).collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(got.length === 12 && got.forall(_._2 === 0L), name)
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.size <= 1, s"$name left ${added.size} RDDs persisted")
+    }
+  }
+
   test("r60 rollingDistinct: interval-merge deltas equal a brute-force " +
     "window recount on deterministic pseudo-random activity, and " +
     "island boundaries are exercised (gap = 6 merges, gap = 7 splits)") {

@@ -1,29 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.SkewJoin
 
-/** Scale-technique demonstrations: salted skew joins and bucketed
+/** Scale-technique demonstrations: partition pruning and bucketed
   * co-located joins — the §2.8 answers to "would this hold at
   * 1000× the data". */
 class ScaleTechniquesSpec extends SparkTestBase {
   import testImplicits._
-
-  test("salted join: identical results to a plain join, salt spread out") {
-    // skew: 90% of fact rows share key 1
-    val fact = (1 to 1000).map(i => (if (i <= 900) 1 else i % 50, s"row$i"))
-      .toDF("k", "payload")
-    val dim = (0 until 50).map(i => (i, s"dim$i")).toDF("k", "name")
-    val plain = fact.join(dim, Seq("k")).select("k", "payload", "name")
-    val salted = SkewJoin.saltedJoin(fact, dim, "k", salts = 8)
-      .select("k", "payload", "name")
-    assert(salted.collect().toSet === plain.collect().toSet)
-    // the hot key's rows really do carry distinct salts
-    val saltsUsed = fact.withColumn("__salt",
-        pmod(hash(fact.columns.map(col).toIndexedSeq: _*), lit(8)))
-      .filter(col("k") === 1).select("__salt").distinct().count()
-    assert(saltsUsed > 1)
-  }
 
   test("partitioned write: directory layout prunes key-scoped reads") {
     val out = java.nio.file.Files.createTempDirectory("graft-out-").toString

@@ -94,31 +94,6 @@ class StreamingSpec extends SparkTestBase {
     assert(InMemoryStore.all.toSet === expected)
   }
 
-  test("fps window: watermarked event-time rate, finalized in append mode") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Frame]
-    val q = DetectionStream.fpsWindow(mem.toDS())
-      .writeStream.format("memory").queryName("fps_out")
-      .outputMode("append").start()
-    // batch 1: three frames in second 0, one in second 1
-    mem.addData(Seq(0L, 200L, 400L, 1200L).zipWithIndex.map { case (ms, i) =>
-      Frame("vid", i.toLong, new Timestamp(1700000000000L + ms), 480, 640,
-        Array.empty[Byte])
-    })
-    q.processAllAvailable()
-    // batch 2: a frame far past the watermark horizon finalizes them
-    mem.addData(Seq(Frame("vid", 99L,
-      new Timestamp(1700000000000L + 60000L), 480, 640, Array.empty[Byte])))
-    q.processAllAvailable()
-    val rows = spark.table("fps_out")
-      .select(col("ws").cast("long"), col("n_frames")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    q.stop()
-    assert(rows(1700000000L) === 3L)
-    assert(rows(1700000001L) === 1L)
-  }
-
   test("file-based frame stream: parquet dir -> conform -> pipeline (S1/S3)") {
     import testImplicits._
     InMemoryStore.reset()
@@ -187,187 +162,6 @@ class StreamingSpec extends SparkTestBase {
     val expected = DetectionStream.pipeline(mkFrames(1 to 32).toDS(),
       labelsDf, () => StubDetector, 0.7).collect().map(_.getString(0)).toSet
     assert(InMemoryStore.all.toSet === expected)
-  }
-
-  test("per-record error isolation: bad frames become data, not task failures") {
-    import testImplicits._
-    val frames = mkFrames(1 to 10)
-    val flaky: () => graft.operators.Detector = () =>
-      new graft.operators.Detector {
-        def detectBatch(fs: Seq[Frame]) = fs.map { f =>
-          if (f.frame_id == 4L) throw new IllegalStateException("corrupt frame")
-          StubDetector.detectOne(f.frame_id)
-        }
-      }
-    val out = graft.operators.Detect
-      .detectWithErrors(frames.toDS(), flaky, batchSize = 3)
-      .collect().map(r => r.frame_id -> r).toMap
-    assert(out.size === 10)
-    assert(out(4L).error.contains("corrupt frame") && out(4L).detections.isEmpty)
-    assert(out.filterNot(_._1 == 4L).values.forall(_.error.isEmpty))
-    assert(out(7L).detections === StubDetector.detectOne(7L))
-  }
-
-  test("keyed state: running per-video frame counts across batches") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Frame]
-    val q = graft.streaming.StatefulOps.runningFrameCounts(mem.toDS())
-      .writeStream.format("memory").queryName("state_out")
-      .outputMode("update").option("checkpointLocation", tmpDir()).start()
-    mem.addData(mkFrames(1 to 5).map(_.copy(video_id = "a"))
-      ++ mkFrames(1 to 3).map(_.copy(video_id = "b")))
-    q.processAllAvailable()
-    mem.addData(mkFrames(6 to 9).map(_.copy(video_id = "a")))
-    q.processAllAvailable()
-    val rows = spark.table("state_out")
-      .groupBy(col("video_id"))
-      .agg(max(col("frames_total")).as("n"), max(col("max_frame_id")).as("hi"))
-      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    q.stop()
-    assert(rows("a") === ((9L, 9L)))
-    assert(rows("b") === ((3L, 3L)))
-  }
-
-  test("stream-stream interval join: matches within window, drops beyond") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = 1700000000000L
-    def ts(s: Long) = new Timestamp(t0 + s * 1000L)
-    val imps = MemoryStream[(Long, Timestamp)]
-    val clicks = MemoryStream[(Long, Timestamp)]
-    val joined = graft.streaming.StreamJoins.intervalJoin(
-      imps.toDF().toDF("imp_user", "imp_time"),
-      clicks.toDF().toDF("clk_user", "clk_time"),
-      "imp_user", "clk_user", "imp_time", "clk_time", "10 seconds")
-    val q = joined.select(col("imp_user"), col("imp_time"), col("clk_time"))
-      .writeStream.format("memory").queryName("ssj_out")
-      .outputMode("append").option("checkpointLocation", tmpDir()).start()
-    // user 1: click 5s after impression (joins); user 2: click 30s
-    // after (outside the interval, never joins); user 3: click with
-    // no impression
-    imps.addData((1L, ts(0)), (2L, ts(0)))
-    clicks.addData((1L, ts(5)), (2L, ts(30)), (3L, ts(6)))
-    q.processAllAvailable()
-    // advance both watermarks far past the interval so buffered state
-    // for users 2/3 is provably evictable, then flush
-    imps.addData((99L, ts(1000)))
-    clicks.addData((98L, ts(1000)))
-    q.processAllAvailable()
-    val rows = spark.table("ssj_out").collect()
-      .map(r => (r.getLong(0), r.getTimestamp(2).getTime - r.getTimestamp(1).getTime))
-    q.stop()
-    assert(rows.toSeq === Seq((1L, 5000L)))
-  }
-
-  test("stream-static enrichment join: stateless, matches the batch join") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq((0, "person"), (1, "car"), (2, "dog"))
-      .toDF("class_id", "label")
-    val det = MemoryStream[(Long, Int, Double)]
-    val enriched = graft.streaming.StreamJoins.enrichJoin(
-      det.toDF().toDF("frame_id", "class_id", "score"), dim, "class_id")
-    val q = enriched.select(col("frame_id"), col("label"), col("score"))
-      .writeStream.format("memory").queryName("enrich_out")
-      .outputMode("append").option("checkpointLocation", tmpDir()).start()
-    det.addData((1L, 0, 0.9), (2L, 1, 0.8))
-    q.processAllAvailable()
-    det.addData((3L, 2, 0.7), (4L, 1, 0.6))
-    q.processAllAvailable()
-    // stateless contract: the state-store metrics report NO keyed state
-    val progress = q.lastProgress
-    assert(progress.stateOperators.isEmpty,
-      "enrichment join must not create a state store")
-    val rows = spark.table("enrich_out").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-    q.stop()
-    // parity with the batch join on the same inputs
-    val batch = Seq((1L, 0, 0.9), (2L, 1, 0.8), (3L, 2, 0.7), (4L, 1, 0.6))
-      .toDF("frame_id", "class_id", "score")
-      .join(dim, Seq("class_id"))
-      .select(col("frame_id"), col("label"), col("score"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-    assert(rows === batch)
-  }
-
-  test("interval LEFT OUTER join: unmatched rows NULL-complete after watermark") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = 1700000000000L
-    def ts(s: Long) = new Timestamp(t0 + s * 1000L)
-    val imps = MemoryStream[(Long, Timestamp)]
-    val clicks = MemoryStream[(Long, Timestamp)]
-    val joined = graft.streaming.StreamJoins.intervalJoinLeftOuter(
-      imps.toDF().toDF("imp_user", "imp_time"),
-      clicks.toDF().toDF("clk_user", "clk_time"),
-      "imp_user", "clk_user", "imp_time", "clk_time", "10 seconds")
-    val q = joined.select(col("imp_user"),
-        coalesce(col("clk_user"), lit(-1L)).as("clk"))
-      .writeStream.format("memory").queryName("ssj_outer")
-      .outputMode("append").option("checkpointLocation", tmpDir()).start()
-    // user 1 clicks inside the interval; user 2 never clicks
-    imps.addData((1L, ts(0)), (2L, ts(0)))
-    clicks.addData((1L, ts(5)))
-    q.processAllAvailable()
-    // the match emits immediately; user 2's NULL row must NOT exist
-    // yet — "no click" only becomes a fact once the watermark passes
-    val early = spark.table("ssj_outer").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(early.toSet === Set((1L, 1L)))
-    // advance both watermarks far past the interval, then flush
-    imps.addData((99L, ts(1000)))
-    clicks.addData((98L, ts(1000)))
-    q.processAllAvailable()
-    imps.addData((97L, ts(2000)))
-    clicks.addData((96L, ts(2000)))
-    q.processAllAvailable()
-    val rows = spark.table("ssj_outer").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    q.stop()
-    // user 2 NULL-completed exactly once; user 1 not duplicated
-    assert(rows.contains((2L, -1L)))
-    assert(rows.count(_._1 == 1L) === 1)
-  }
-
-  test("interval join: checkpoint restart restores buffered state, no re-emits") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = 1700000000000L
-    def ts(s: Long) = new Timestamp(t0 + s * 1000L)
-    val imps = MemoryStream[(Long, Timestamp)]
-    val clicks = MemoryStream[(Long, Timestamp)]
-    def joined = graft.streaming.StreamJoins.intervalJoin(
-        imps.toDF().toDF("imp_user", "imp_time"),
-        clicks.toDF().toDF("clk_user", "clk_time"),
-        "imp_user", "clk_user", "imp_time", "clk_time", "10 seconds")
-      .select(col("imp_user"), col("imp_time"), col("clk_time"))
-    val ckpt = tmpDir()
-    val out = tmpDir()
-    // file sink: the one built-in sink with exactly-once recovery
-    // (its metadata log is what makes the no-re-emit claim checkable)
-    def start() = joined.writeStream.format("parquet")
-      .outputMode("append").option("path", out)
-      .option("checkpointLocation", ckpt).start()
-    // phase 1: user 1 matches and commits; user 2's impression is
-    // buffered in join state with no click yet
-    val q1 = start()
-    imps.addData((1L, ts(0)), (2L, ts(2)))
-    clicks.addData((1L, ts(5)))
-    q1.processAllAvailable()
-    q1.stop()
-    assert(spark.read.parquet(out).collect().map(_.getLong(0)).toSeq === Seq(1L))
-    // phase 2: restart over the same checkpoint. user 2's click can
-    // only match if the buffered impression was RESTORED from state;
-    // user 1's committed match must not be emitted again (the same
-    // trust property the dedup path's restart spec pins)
-    val q2 = start()
-    clicks.addData((2L, ts(7)))
-    q2.processAllAvailable()
-    q2.stop()
-    val rows = spark.read.parquet(out).collect()
-      .map(r => (r.getLong(0), r.getTimestamp(2).getTime - r.getTimestamp(1).getTime))
-      .sortBy(_._1)
-    assert(rows.toSeq === Seq((1L, 5000L), (2L, 5000L)))
   }
 
   test("streaming session windows: gap-merged sessions finalize in append mode") {
@@ -517,264 +311,6 @@ class StreamingSpec extends SparkTestBase {
     assert(got == expected && expected.nonEmpty)
   }
 
-  test("streaming transition state converges to the batch r55 matrix " +
-    "under out-of-order replay") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{TransEvent, TransitionSnap}
-    val src = graft.sources.Tables.events(spark, sf)
-      .select(col("user_id"), expr("unix_micros(ts)").as("ts_us"),
-        col("event_id"), col("event_type"))
-      .as[(Long, Long, Long, String)].collect()
-      .map(t => TransEvent(t._1, t._2, t._3, t._4))
-    val expected = graft.queries.Relational4.r55TransitionMatrix(spark, sf)
-      .select("from_type", "to_type", "n_steps")
-      .as[(String, String, Long)].collect().toSet
-    val shuffled = new scala.util.Random(55).shuffle(src.toSeq)
-    val chunks = shuffled.grouped((shuffled.size + 2) / 3).toSeq
-    val mem = MemoryStream[TransEvent]
-    val q = graft.streaming.StatefulOps.transitionState(mem.toDS())
-      .writeStream.format("memory").queryName("trans_out")
-      .outputMode("update").option("checkpointLocation", tmpDir()).start()
-    chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
-    q.stop()
-    // n_events is monotone per key: the final snapshot is the max row
-    val finals = spark.table("trans_out").as[TransitionSnap].collect()
-      .groupBy(_.user_id).values.map(_.maxBy(_.n_events))
-    val got = finals.flatMap(_.steps)
-      .groupBy(s => (s.from_type, s.to_type))
-      .map { case ((f, t), xs) => (f, t, xs.map(_.n).sum) }.toSet
-    assert(got == expected && expected.nonEmpty)
-  }
-
-  test("streaming session state converges to the batch r20 session " +
-    "windows under out-of-order replay (late events bridge sessions)") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{SessEvent, SessionSnap}
-    val src = graft.sources.Tables.events(spark, sf)
-      .filter(col("user_id") < 30)
-      .select(col("user_id"), expr("unix_micros(ts)").as("ts_us"))
-      .as[(Long, Long)].collect().map(t => SessEvent(t._1, t._2))
-    val expected = graft.queries.Relational2.r20SessionWindow(spark, sf)
-      .select(col("user_id"),
-        expr("unix_micros(cast(session_start as timestamp))"),
-        col("n_events"))
-      .as[(Long, Long, Long)].collect().toSet
-    val shuffled = new scala.util.Random(20).shuffle(src.toSeq)
-    val chunks = shuffled.grouped((shuffled.size + 2) / 3).toSeq
-    val mem = MemoryStream[SessEvent]
-    val q = graft.streaming.StatefulOps.sessionState(mem.toDS())
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode("update").option("checkpointLocation", tmpDir()).start()
-    chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
-    q.stop()
-    val finals = spark.table("sess_out").as[SessionSnap].collect()
-      .groupBy(_.user_id).values.map(_.maxBy(_.n_events))
-    val got = finals.flatMap(s =>
-      s.sessions.map(sp => (s.user_id, sp.start_us, sp.n))).toSet
-    val missing = (expected -- got).toSeq.sortBy(t => (t._1, t._2)).take(5)
-    val extra = (got -- expected).toSeq.sortBy(t => (t._1, t._2)).take(5)
-    val nSeen = finals.map(_.n_events).sum
-    val nUsers = finals.size
-    assert(got == expected && expected.nonEmpty,
-      s"\nmissing=$missing\nextra=$extra\n|got|=${got.size} |exp|=${expected.size}" +
-      s"\nevents seen=$nSeen sent=${src.length} users=$nUsers")
-    // session count < event count: merging actually happened
-    assert(got.size < src.length)
-  }
-
-  test("streaming bounded top-k state converges to the batch rank " +
-    "window under out-of-order replay") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{TopKObs, TopKSnap}
-    val base = graft.sources.Tables.events(spark, sf)
-      .select(col("event_type"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"),
-        col("event_id"))
-    val expected = base
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("event_type"))
-          .orderBy(col("cents").desc, col("event_id"))))
-      .filter(col("rk") <= 5)
-      .select(col("event_type"), col("cents"), col("event_id"))
-      .as[(String, Long, Long)].collect().toSet
-    val src = base.as[(String, Long, Long)].collect()
-      .map(t => TopKObs(t._1, t._2, t._3))
-    val shuffled = new scala.util.Random(13).shuffle(src.toSeq)
-    val chunks = shuffled.grouped((shuffled.size + 2) / 3).toSeq
-    val mem = MemoryStream[TopKObs]
-    val q = graft.streaming.StatefulOps.topKState(mem.toDS())
-      .writeStream.format("memory").queryName("topk_out")
-      .outputMode("update").option("checkpointLocation", tmpDir()).start()
-    chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
-    q.stop()
-    val got = spark.table("topk_out").as[TopKSnap].collect()
-      .groupBy(_.event_type).values.map(_.maxBy(_.n_seen))
-      .flatMap(s => s.top.map(e => (s.event_type, e.cents, e.event_id)))
-      .toSet
-    assert(got == expected && expected.nonEmpty)
-  }
-
-  test("streaming moment state converges to the batch integer moments " +
-    "under out-of-order replay") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{MomentObs, MomentSnap}
-    val base = graft.sources.Tables.events(spark, sf)
-      .select(col("event_type"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-    val expected = base.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
-        sum(col("cents") * col("cents")).as("sumsq"))
-      .as[(String, Long, Long, Long)].collect().toSet
-    val src = base.as[(String, Long)].collect()
-      .map(t => MomentObs(t._1, t._2))
-    val shuffled = new scala.util.Random(31).shuffle(src.toSeq)
-    val chunks = shuffled.grouped((shuffled.size + 2) / 3).toSeq
-    val mem = MemoryStream[MomentObs]
-    val q = graft.streaming.StatefulOps.momentState(mem.toDS())
-      .writeStream.format("memory").queryName("mom_out")
-      .outputMode("update").option("checkpointLocation", tmpDir()).start()
-    chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
-    q.stop()
-    // n is monotone per key: the final snapshot is the max row
-    val got = spark.table("mom_out").as[MomentSnap].collect()
-      .groupBy(_.event_type).values.map(_.maxBy(_.n))
-      .map(s => (s.event_type, s.n, s.sum_cents, s.sumsq)).toSet
-    assert(got == expected && expected.nonEmpty)
-  }
-
-  test("streaming heavy-hitter state converges to the batch x36 " +
-    "selection under out-of-order replay") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{TermObs, TermCount}
-    val src = graft.sources.Tables.documents(spark, sf)
-      .select(explode(graft.functions.TextFunctions.tokens(col("text")))
-        .as("term"))
-      .as[String].collect().map(TermObs(_))
-    val expected = graft.queries.CorpusQueries.x36HeavyHitters(spark, sf)
-      .select(col("term"), col("cnt"))
-      .as[(String, Long)].collect().toSet
-    val shuffled = new scala.util.Random(36).shuffle(src.toSeq)
-    val chunks = shuffled.grouped((shuffled.size + 2) / 3).toSeq
-    val mem = MemoryStream[TermObs]
-    val q = graft.streaming.StatefulOps.heavyHitterState(mem.toDS())
-      .writeStream.format("memory").queryName("hh_out")
-      .outputMode("update").option("checkpointLocation", tmpDir()).start()
-    chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
-    q.stop()
-    // cnt is monotone per term: the final snapshot is the max row
-    val finals = spark.table("hh_out").as[TermCount].collect()
-      .groupBy(_.term).values.map(_.maxBy(_.cnt)).toSeq
-    val n = finals.map(_.cnt).sum
-    assert(n == src.length.toLong)
-    val got = finals.filter(t => t.cnt * 64L >= n)
-      .map(t => (t.term, t.cnt)).toSet
-    assert(got == expected && expected.nonEmpty,
-      s"|got|=${got.size} |exp|=${expected.size} n=$n")
-  }
-
-  test("streaming bottom-k sketch state converges to the batch x62 " +
-    "sketch under out-of-order replay, state bounded at k") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{HashObs, KmvSnap}
-    val k = 32
-    val lh = graft.sources.Tables.documents(spark, sf)
-      .select(col("lang"),
-        explode(graft.functions.TextFunctions.tokens(col("text")))
-          .as("term"))
-      .select(col("lang"),
-        graft.functions.TextFunctions.polyHash(col("term")).as("h"))
-    val src = lh.as[(String, Long)].collect().map(t => HashObs(t._1, t._2))
-    // batch sketch: per lang the k smallest DISTINCT hashes
-    val expected = src.groupBy(_.lang).map { case (lang, xs) =>
-      lang -> xs.map(_.h).distinct.sorted.take(k).toSeq
-    }
-    val shuffled = new scala.util.Random(62).shuffle(src.toSeq)
-    val chunks = shuffled.grouped((shuffled.size + 2) / 3).toSeq
-    val mem = MemoryStream[HashObs]
-    val q = graft.streaming.StatefulOps.kmvState(mem.toDS(), k)
-      .writeStream.format("memory").queryName("kmv_out")
-      .outputMode("update").option("checkpointLocation", tmpDir()).start()
-    chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
-    q.stop()
-    // n_seen is monotone per lang: the final snapshot is the max row
-    val finals = spark.table("kmv_out").as[KmvSnap].collect()
-      .groupBy(_.lang).values.map(_.maxBy(_.n_seen)).toSeq
-    val got = finals.map(s => s.lang -> s.sketch).toMap
-    assert(got === expected && expected.nonEmpty)
-    finals.foreach { s =>
-      assert(s.n_sketch <= k && s.kth === s.sketch.last)
-    }
-  }
-
-  test("streaming quota state converges to the batch r46 rate-limit rows") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{QuotaEvent, QuotaSnap}
-    val src = graft.sources.Tables.events(spark, sf)
-      .select(col("user_id"), expr("unix_micros(ts) div 3600000000").as("hb"))
-      .as[(Long, Long)].collect().map(t => QuotaEvent(t._1, t._2))
-    val expected = graft.queries.Relational3.r46RateLimit(spark, sf)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val shuffled = new scala.util.Random(23).shuffle(src.toSeq)
-    val chunks = shuffled.grouped((shuffled.size + 2) / 3).toSeq
-    val mem = MemoryStream[QuotaEvent]
-    val q = graft.streaming.StatefulOps.quotaState(mem.toDS())
-      .writeStream.format("memory").queryName("quota_out")
-      .outputMode("update").option("checkpointLocation", tmpDir()).start()
-    chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
-    q.stop()
-    // n_events is monotone per key: the final snapshot is the max row
-    val got = spark.table("quota_out").as[QuotaSnap].collect()
-      .groupBy(_.user_id).values
-      .map(_.maxBy(_.n_events))
-      .map(s => (s.user_id, s.n_events, s.n_accepted, s.n_rejected)).toSet
-    assert(got == expected && expected.nonEmpty)
-    // rejection semantics on a deterministic burst: 5 events in one
-    // hour + 1 in the next -> 4 accepted, 2 rejected... (3 + 1)
-    val mem2 = MemoryStream[QuotaEvent]
-    val q2 = graft.streaming.StatefulOps.quotaState(mem2.toDS())
-      .writeStream.format("memory").queryName("quota_burst")
-      .outputMode("update").option("checkpointLocation", tmpDir()).start()
-    mem2.addData(Seq.fill(5)(QuotaEvent(7L, 100L)) :+ QuotaEvent(7L, 101L))
-    q2.processAllAvailable()
-    q2.stop()
-    val burst = spark.table("quota_burst").as[QuotaSnap].collect()
-      .maxBy(_.n_events)
-    assert(burst == QuotaSnap(7L, 6L, 4L, 2L))
-  }
-
-  test("dropDuplicatesWithinWatermark: redelivered frames collapse, state bounded") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Frame]
-    val q = graft.streaming.StatefulOps
-      .dedupWithinWatermark(mem.toDS(), "10 seconds")
-      .select(col("video_id"), col("frame_id"))
-      .writeStream.format("memory").queryName("wmdedup_out")
-      .outputMode("append").option("checkpointLocation", tmpDir()).start()
-    // batch 1: frames 1-3; batch 2 redelivers 2-3 (at-least-once
-    // upstream) plus new frame 4 — redeliveries must collapse
-    mem.addData(mkFrames(1 to 3))
-    q.processAllAvailable()
-    mem.addData(mkFrames(2 to 4))
-    q.processAllAvailable()
-    // advance the watermark far past the dedup horizon, then emit a
-    // fresh frame to flush finalized rows
-    mem.addData(mkFrames(1000 to 1000))
-    q.processAllAvailable()
-    val got = spark.table("wmdedup_out").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).sorted
-    q.stop()
-    assert(got.map(_._2).toSeq === Seq(1L, 2L, 3L, 4L, 1000L))
-  }
-
   test("streaming exact dedup: duplicate frames across batches dropped") {
     import testImplicits._
     implicit val sqlCtx = spark.sqlContext
@@ -833,110 +369,6 @@ class StreamingSpec extends SparkTestBase {
     assert(spark.streams.listListeners().length === before)
   }
 
-  test("streaming near-dedup: LSH-keyed state drops near-duplicates across batches") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = (1 to 40).map(i => s"tok$i").mkString(" ")
-    val mem = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingDedup.verdicts(
-        mem.toDS().toDF("doc_id", "text"), threshold = 0.8)
-      .writeStream.format("memory").queryName("neardedup_out")
-      .outputMode("append").option("checkpointLocation", tmpDir()).start()
-    // batch 1: two distinct docs
-    mem.addData(Seq(1L -> base,
-      2L -> (1 to 40).map(i => s"other$i").mkString(" ")))
-    q.processAllAvailable()
-    // batch 2: a near-dup of doc 1 (one appended token, Jaccard ~0.97),
-    // a brand-new doc, and an in-batch near-dup pair (5L older, 6L newer)
-    val inBatch = (1 to 40).map(i => s"pair$i").mkString(" ")
-    mem.addData(Seq(3L -> (base + " extra"),
-      4L -> (1 to 40).map(i => s"fresh$i").mkString(" "),
-      5L -> inBatch, 6L -> (inBatch + " tail")))
-    q.processAllAvailable()
-    val verdicts = graft.streaming.StreamingDedup.combine(
-        spark.table("neardedup_out"))
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    q.stop()
-    assert(verdicts.size === 6)
-    assert(!verdicts(1L) && !verdicts(2L)) // originals survive
-    assert(verdicts(3L)) // cross-batch near-dup: state remembered doc 1
-    assert(!verdicts(4L)) // genuinely new doc survives
-    assert(!verdicts(5L) && verdicts(6L)) // in-batch: older doc_id survives
-  }
-
-  test("stream-vs-batch dedup parity: identical survivor sets on the same corpus") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    // the property that makes "incremental corpus = batch corpus"
-    // trustworthy: the SAME documents, streamed in id order across
-    // micro-batches, drop exactly the docs the batch path drops.
-    // Dup classes here are cliques (every member within threshold of
-    // every other), where the batch pairwise convention (drop every
-    // doc_b = every non-min id) and the streaming greedy convention
-    // (first-seen survivor absorbs the rest) provably coincide; a
-    // CHAIN (A~B~C, A!~C) would separate the two by design — the
-    // streaming path is the online greedy.
-    def words(p: String) = (1 to 40).map(i => s"$p$i").mkString(" ")
-    val corpus: Seq[(Long, String)] = Seq(
-      1L -> words("alpha"), 2L -> (words("alpha") + " x"),   // in-batch pair
-      3L -> words("beta"), 4L -> (words("beta") + " y"),     // cross-batch
-      5L -> (words("beta") + " z"),                          // 3-clique
-      6L -> words("gamma"),                                  // unique
-      7L -> words("delta"), 8L -> (words("delta") + " q"))   // final batch
-    val batchDrop = graft.operators.Dedup
-      .nearDupPairs(corpus.toDF("doc_id", "text"), threshold = 0.8)
-      .select("doc_b").distinct().as[Long].collect().toSet
-    val mem = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingDedup.verdicts(
-        mem.toDS().toDF("doc_id", "text"), threshold = 0.8)
-      .writeStream.format("memory").queryName("parity_dedup_out")
-      .outputMode("append").option("checkpointLocation", tmpDir()).start()
-    corpus.grouped(3).foreach { b => mem.addData(b); q.processAllAvailable() }
-    val streamDrop = graft.streaming.StreamingDedup.combine(
-        spark.table("parity_dedup_out"))
-      .filter(col("is_dup")).select("doc_id").as[Long].collect().toSet
-    q.stop()
-    assert(batchDrop === Set(2L, 4L, 5L, 8L)) // every clique's non-min ids
-    assert(streamDrop === batchDrop) // the parity property
-  }
-
-  test("streaming curation: near-dedup verdicts + quality gate compose") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    // the x10 batch capstone, incrementally: stream docs, drop LSH
-    // near-dups via keyed state, gate survivors on a row-local
-    // quality proxy (token count) inside the same micro-batch
-    val mem = MemoryStream[(Long, String)]
-    val collected = scala.collection.concurrent.TrieMap[Long, Boolean]()
-    val sink: (org.apache.spark.sql.Dataset[graft.streaming.StreamingDedup.BandVerdict], Long) => Unit =
-      (batch, _) => {
-        graft.streaming.StreamingDedup.combine(batch.toDF())
-          .collect().foreach(r => collected(r.getLong(0)) = r.getBoolean(1))
-        ()
-      }
-    val q = graft.streaming.StreamingDedup.verdicts(
-        mem.toDS().toDF("doc_id", "text"), threshold = 0.8)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", tmpDir())
-      .foreachBatch(sink).start()
-    val good = (1 to 40).map(i => s"w$i").mkString(" ")
-    mem.addData(Seq(10L -> good, 11L -> "too short"))
-    q.processAllAvailable()
-    mem.addData(Seq(12L -> (good + " tail"))) // near-dup of 10 across batches
-    q.processAllAvailable()
-    q.stop()
-    // survivors = not near-dup AND quality (>= 5 tokens) — the gate
-    // is a plain filter over the verdict stream joined back to docs;
-    // here token count stands in for the x1 quality score
-    val docs = Map(10L -> good, 11L -> "too short", 12L -> (good + " tail"))
-    // a shingle-less doc (11) emits no verdict -> not a dup by contract
-    val curated = docs.keys.filter(id =>
-      !collected.getOrElse(id, false) &&
-        docs(id).split("\\s+").length >= 5).toSet
-    assert(collected(12L)) // state caught the cross-batch near-dup
-    assert(curated === Set(10L)) // 11 fails quality, 12 is a dup
-  }
-
   test("observed metrics reach the listener (A3/S5 analog)") {
     import testImplicits._
     InMemoryStore.reset()
@@ -954,105 +386,5 @@ class StreamingSpec extends SparkTestBase {
         .exists(_.asInstanceOf[Long] === InMemoryStore.size.toLong))
       assert(listener.totalInputRows === 25L)
     } finally spark.streams.removeListener(listener)
-  }
-
-  test("streaming interval-coverage state converges to the batch " +
-    "r61 rows under shuffled chunked arrival") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{IvObs, IvSnap}
-    val src = graft.sources.Tables.events(spark, sf)
-      .select(col("event_type"), unix_micros(col("ts")),
-        greatest(floor(col("value") * 1000000).cast("long"), lit(0L)))
-      .as[(String, Long, Long)].collect()
-      .map(t => IvObs(t._1, t._2, t._3))
-    val expected = graft.queries.Relational5
-      .r61IntervalCoverage(spark, sf)
-      .as[(String, Long, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    val shuffled = new scala.util.Random(65).shuffle(src.toSeq)
-    val chunks = shuffled.grouped((shuffled.size + 3) / 4).toSeq
-    val mem = MemoryStream[IvObs]
-    val q = graft.streaming.StatefulOps.intervalCoverageState(mem.toDS())
-      .writeStream.format("memory").queryName("ivcov_out")
-      .outputMode("update").option("checkpointLocation", tmpDir()).start()
-    chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
-    q.stop()
-    val finals = spark.table("ivcov_out").as[IvSnap].collect()
-      .groupBy(_.key).values.map(_.maxBy(_.n_intervals)).toSeq
-    val got = finals.map(s =>
-      s.key -> ((s.covered_us, s.n_intervals, s.span_us))).toMap
-    assert(got === expected && expected.nonEmpty)
-  }
-
-  test("streaming first-k state rebuilds the batch r65 session paths " +
-    "under shuffled chunked arrival (late openers displace)") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{SessEvObs, FirstKSnap}
-    val src = graft.sources.Tables.events(spark, sf)
-      .select(col("user_id"),
-        unix_micros(date_trunc("day", col("ts"))),
-        unix_micros(col("ts")), col("event_id"), col("event_type"))
-      .as[(Long, Long, Long, Long, String)].collect()
-      .map(t => SessEvObs(t._1, t._2, t._3, t._4, t._5))
-    // batch expectation: r65's per-session paths before aggregation
-    val expected = src.groupBy(e => (e.user_id, e.day_us))
-      .map { case (kk, xs) =>
-        kk -> xs.sortBy(e => (e.ts_us, e.event_id)).take(3)
-          .map(_.event_type).mkString(">")
-      }
-    val shuffled = new scala.util.Random(66).shuffle(src.toSeq)
-    val chunks = shuffled.grouped((shuffled.size + 3) / 4).toSeq
-    val mem = MemoryStream[SessEvObs]
-    val q = graft.streaming.StatefulOps.firstKState(mem.toDS())
-      .writeStream.format("memory").queryName("firstk_out")
-      .outputMode("update").option("checkpointLocation", tmpDir()).start()
-    chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
-    q.stop()
-    val finals = spark.table("firstk_out").as[FirstKSnap].collect()
-      .groupBy(s => (s.user_id, s.day_us)).values
-      .map(_.maxBy(_.n_seen)).toSeq
-    val got = finals.map(s => (s.user_id, s.day_us) -> s.path).toMap
-    assert(got === expected && expected.nonEmpty)
-  }
-
-  test("streaming skyline state converges to the batch Pareto " +
-    "frontier per brand under shuffled chunked arrival") {
-    import testImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StatefulOps.{PointObs, SkylineSnap}
-    val src = spark.read.parquet(s"$sf/part.parquet")
-      .select(col("p_brand"), col("p_partkey"), col("p_size"),
-        col("p_retailprice"))
-      .as[(String, Long, Int, Double)].collect()
-      .map(t => PointObs(t._1, t._2, t._3, t._4))
-    // batch frontier per brand: brute-force dominance
-    val expected = src.groupBy(_.grp).map { case (g, xs) =>
-      g -> xs.filter(p => !xs.exists(q =>
-        q.sz <= p.sz && q.price >= p.price &&
-          (q.sz < p.sz || q.price > p.price)))
-        .map(_.id).toSet
-    }
-    val shuffled = new scala.util.Random(64).shuffle(src.toSeq)
-    val chunks = shuffled.grouped((shuffled.size + 2) / 3).toSeq
-    val mem = MemoryStream[PointObs]
-    val q = graft.streaming.StatefulOps.skylineState(mem.toDS())
-      .writeStream.format("memory").queryName("skyline_out")
-      .outputMode("update").option("checkpointLocation", tmpDir()).start()
-    chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
-    q.stop()
-    val finals = spark.table("skyline_out").as[SkylineSnap].collect()
-      .groupBy(_.grp).values.map(_.maxBy(_.n_seen)).toSeq
-    val got = finals.map(s => s.grp -> s.frontier.map(_.id).toSet).toMap
-    assert(got === expected && expected.nonEmpty)
-    // state stayed bounded: the frontier never exceeds what it holds,
-    // and every snapshot's frontier is internally non-dominated
-    finals.foreach { s =>
-      assert(s.n_frontier === s.frontier.size)
-      assert(s.frontier.forall(p => !s.frontier.exists(q =>
-        q.sz <= p.sz && q.price >= p.price &&
-          (q.sz < p.sz || q.price > p.price) && q != p)))
-    }
   }
 }
