@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session factory for the graft engine.
   *
@@ -45,11 +45,12 @@ object Engine {
       .getOrCreate()
   }
 
-  /** Lineage-truncating materialization point for iterative
-    * operators (connected components, k-core/k-truss peels, label
-    * propagation, LSH index builds): by default `localCheckpoint`
-    * (executor-local shuffle files — the fast, right choice in local
-    * mode and on a stable cluster), or, when
+  /** The one lineage-truncating materialization point: every pin in
+    * iterative operators (connected components, k-core/k-truss
+    * peels, label propagation, LSH index builds) and in queries that
+    * share a relation between consumers goes through here. By default
+    * `localCheckpoint` (executor-local shuffle files — the fast, right
+    * choice in local mode and on a stable cluster), or, when
     * `spark.graft.reliableSnapshots=true`, a RELIABLE snapshot:
     * the frame is persisted as parquet under
     * `spark.graft.snapshotDir` (default: a per-application temp dir)
@@ -66,15 +67,14 @@ object Engine {
     * Lifecycle: the base dir (per-application by default) registers
     * for recursive deletion when the application ends — once per
     * base, through the Hadoop FileSystem API so the cleanup is
-    * cluster-true on HDFS/S3 scratch space too. Within a run the
-    * snapshot volume is bounded by rounds × frame size (operators
-    * release superseded rounds' cached reads); the end-of-app hook
-    * bounds the on-disk lifetime to the application's. */
+    * cluster-true on HDFS/S3 scratch space too. [[release]] frees a
+    * local-mode snapshot's blocks at once; a reliable snapshot's
+    * files stay until the end-of-app hook, so within a run their
+    * volume is bounded by rounds × frame size. */
   private val cleanupRegistered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  def snapshot(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  def snapshot(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     if (spark.conf.get("spark.graft.reliableSnapshots", "false").toBoolean) {
       val base = spark.conf.get("spark.graft.snapshotDir",
@@ -105,12 +105,42 @@ object Engine {
     * ContextCleaner happens to GC the RDD. This unpersists the RDD
     * behind a local-mode snapshot. It is a no-op on a lazy frame, and
     * in reliable mode, whose files go at application end. */
-  def release(df: org.apache.spark.sql.DataFrame): Unit =
+  def release(df: DataFrame): Unit =
     df.queryExecution.logical match {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
         r.rdd.unpersist(blocking = false); ()
       case _ => ()
     }
+
+  /** The one round loop over [[snapshot]]s. Round `i` (1-based, at
+    * most `maxRounds`) pins `step(prev, i)` as `next`, then asks
+    * `done(prev, next)` while `prev` is still readable, then frees
+    * `prev` with [[release]]. It stops after the first round `done`
+    * accepts and returns the last frame with whether `done` accepted
+    * it; zero rounds return `init` itself, unconverged.
+    *
+    * Contract: the loop pins one frame per round and frees the one it
+    * replaces, so of its pins only the returned frame survives. It
+    * never frees `init` (often a lazy view over the caller's own
+    * pins) nor the frame it returns: the caller frees what it pinned
+    * once nothing it returns reads it. A convergence signal that the
+    * step folds into an accumulator is final once `next` is pinned,
+    * because the snapshot is eager. */
+  def iterate(init: DataFrame, maxRounds: Int,
+      done: (DataFrame, DataFrame) => Boolean = (_, _) => false)(
+      step: (DataFrame, Int) => DataFrame): (DataFrame, Boolean) = {
+    var cur = init
+    var round = 0
+    var converged = false
+    while (!converged && round < maxRounds) {
+      round += 1
+      val next = snapshot(step(cur, round))
+      converged = done(cur, next)
+      if (cur ne init) release(cur)
+      cur = next
+    }
+    (cur, converged)
+  }
 
   /** Restore task fan-out after a lineage-truncating snapshot.
     * AQE legitimately coalesces a small shuffle to few partitions,
@@ -123,8 +153,7 @@ object Engine {
     * snapshot already carries >= cores partitions (AQE never
     * re-splits an explicit repartition count). `df` must be a snapshot
     * the caller does not keep: a replaced one is released. */
-  def ensureParallelism(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  def ensureParallelism(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) {
       // re-snapshot so multi-consumer plans read the fanned-out
@@ -136,20 +165,19 @@ object Engine {
     } else df
   }
 
-  /** postfix sugar so operator loops read `frame.snapshot()` at the
-    * same spot `.localCheckpoint(true)` used to sit. */
-  implicit class SnapshotOps(private val df: org.apache.spark.sql.DataFrame)
+  /** postfix sugar: `frame.snapshot()` pins a frame where it is
+    * built. */
+  implicit class SnapshotOps(private val df: DataFrame)
       extends AnyVal {
-    def snapshot(): org.apache.spark.sql.DataFrame = Engine.snapshot(df)
-    def ensureParallelism(): org.apache.spark.sql.DataFrame =
-      Engine.ensureParallelism(df)
+    def snapshot(): DataFrame = Engine.snapshot(df)
+    def ensureParallelism(): DataFrame = Engine.ensureParallelism(df)
   }
 
   /** S9: the debug-graph-dump sink analog
     * (`/root/reference/run.sh:26-28`, `gst_graph=1` → .dot file):
     * writes the formatted physical plan — Exchange/Sort/codegen
     * boundaries visible — to a file for plan audits. */
-  def dumpPlan(df: org.apache.spark.sql.DataFrame, path: String): Unit =
+  def dumpPlan(df: DataFrame, path: String): Unit =
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
       df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))

@@ -37,22 +37,3 @@ final case class FrameDetections(
     height: Int,
     width: Int,
     detections: Seq[RawDetection])
-
-/** Flat post-pipeline box record (the VDMS-shaped payload of
-  * `gst-detection-tf.py:308-322`). Quirks preserved deliberately:
-  * `box_ref` is the 1-based ordinal within the frame's *surviving*
-  * (post-threshold) boxes (`_ref = i + 1`, `gst-detection-tf.py:398`),
-  * and x/y/w/h hold the four int-truncated scaled corners
-  * `{ymin*h, xmin*w, ymax*h, xmax*w}` in that order — the reference
-  * writes the corners directly into the rectangle fields
-  * (`gst-detection-tf.py:296-318`). */
-final case class BoxRecord(
-    video_id: String,
-    frame_id: Long,
-    box_ref: Int,
-    x: Int,
-    y: Int,
-    w: Int,
-    h: Int,
-    label_id: Int,
-    score: Float)

@@ -20,11 +20,10 @@ import graft.Engine.SnapshotOps
   * of rounds closes 100 TB of pairs. Each round is one equi-join +
   * one partial-agg groupBy on the node key — no driver-side graph,
   * and `Engine.snapshot` truncates the growing lineage each round
-  * (localCheckpoint by default; spark.graft.reliableSnapshots=true
+  * (a local checkpoint by default; spark.graft.reliableSnapshots=true
   * persists rounds to the shared FS — the executor-loss-safe
-  * cluster setting). The driver-side
-  * `count()` per round is the convergence test every iterative
-  * distributed algorithm pays.
+  * cluster setting). Both algorithms run their rounds on
+  * `Engine.iterate`, which frees each superseded round.
   *
   * Contract: a pathological deep-chain corpus (each doc near-duping
   * only the next) needs O(n) rounds and fails loudly at `maxIters`;
@@ -76,19 +75,19 @@ object Components {
     // symmetric closure once, reused every round
     val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
       .distinct().snapshot()
-    // round 0's labels are a LAZY view over the cached sym — the
+    // round 0's labels are a LAZY view over the pinned sym — the
     // round-1 materialization computes them in its own pass, so no
-    // separate init job exists (releasing the lazy frame is a no-op,
-    // keeping the loop's release discipline uniform)
-    var labels = sym.select(col("a").as("node")).distinct()
+    // separate init job exists
+    val labels0 = sym.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val changed = spark.sparkContext.longAccumulator(s"cc-changed-$iter")
+    var changed: org.apache.spark.util.LongAccumulator = null
+    val (labels, converged) = Engine.iterate(labels0, maxIters,
+        done = (_, _) => changed.value == 0L) { (labels, round) =>
+      val acc = spark.sparkContext.longAccumulator(s"cc-changed-${round - 1}")
+      changed = acc
       val nbrMin = sym.join(labels, sym("b") === labels("node"))
         .groupBy(col("a")).agg(min(col("label")).as("nbr_min"))
-      val next = labels.alias("l")
+      labels.alias("l")
         .join(nbrMin.alias("p"), col("l.node") === col("p.a"), "left")
         .select(col("l.node").as("node"),
           least(col("l.label"), coalesce(col("p.nbr_min"), col("l.label")))
@@ -97,19 +96,11 @@ object Components {
         .as[(Long, Long, Long)]
         .mapPartitions { it =>
           it.map { case (n, nl, ol) =>
-            if (nl != ol) changed.add(1L)
+            if (nl != ol) acc.add(1L)
             (n, nl)
           }
         }
         .toDF("node", "label")
-        .snapshot() // eager: runs the pass, populating `changed`
-      // release the superseded round's snapshot NOW — without this,
-      // up to maxIters dead label tables pile up in storage memory
-      // until the driver's ContextCleaner happens to GC them
-      Engine.release(labels)
-      labels = next
-      converged = changed.value == 0L
-      iter += 1
     }
     Engine.release(sym)
     require(converged, s"connectedComponents did not converge in $maxIters rounds")
@@ -129,8 +120,8 @@ object Components {
     * Both phases are the same 100 TB shape as a min-label round: one
     * partial-agg groupBy (per-node neighborhood min) + one equi-join
     * re-emitting each edge against its group's min — no driver-side
-    * graph, `localCheckpoint` truncating lineage per round
-    * (`checkpoint` on a real cluster). Edges stay canonical
+    * graph, `Engine.snapshot` truncating lineage per round (reliable
+    * snapshots on a real cluster). Edges stay canonical
     * (large → small), so the working set never exceeds the distinct
     * edge count and shrinks as stars contract.
     *
@@ -154,7 +145,7 @@ object Components {
       col("b").cast("long").as("b"))
       .filter(col("a") =!= col("b"))
     // canonical orientation large → small; (u, v) with u > v
-    var cur = e
+    val cur0 = e
       .select(greatest(col("a"), col("b")).as("u"),
         least(col("a"), col("b")).as("v"))
       .distinct().snapshot()
@@ -198,43 +189,43 @@ object Components {
         .distinct()
     }
 
-    var sig = signature(cur)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      // the round signature rides the materialization pass (the
-      // min-label accumulator discipline): count + order-free XOR of
-      // per-edge hashes, folded while the snapshot job computes the
-      // rows — no separate aggregate job per round. A task RETRY
-      // skews both folds (xor self-cancels, count over-counts), but
-      // never the RESULT: signature equality is only ever a
-      // trigger for the authoritative except-diff confirm below, and
-      // a skew-missed equality just runs one more round (bounded by
-      // the terminal confirm at maxIters).
-      val cnt = spark.sparkContext.longAccumulator(s"cc2-count-$iter")
+    // the round signature rides the materialization pass (the
+    // min-label accumulator discipline): count + order-free XOR of
+    // per-edge hashes, folded while the snapshot job computes the
+    // rows — no separate aggregate job per round. A task RETRY
+    // skews both folds (xor self-cancels, count over-counts), but
+    // never the RESULT: signature equality is only ever a
+    // trigger for the authoritative except-diff confirm in `done`,
+    // and a skew-missed equality just runs one more round (bounded by
+    // the terminal confirm at maxIters).
+    var sig = signature(cur0)
+    var roundSig: () => (Long, Long) = null
+    val (cur, sigConverged) = Engine.iterate(cur0, maxIters,
+        done = { (prev, next) =>
+          val nextSig = roundSig()
+          val same = nextSig == sig && next.except(prev).isEmpty
+          sig = nextSig
+          same
+        }) { (cur, round) =>
+      val cnt = spark.sparkContext.longAccumulator(s"cc2-count-${round - 1}")
       val xor = new XorAccumulator
-      spark.sparkContext.register(xor, s"cc2-xor-$iter")
-      val next = smallStar(largeStar(cur))
+      spark.sparkContext.register(xor, s"cc2-xor-${round - 1}")
+      roundSig = () => (cnt.value.longValue, xor.value.longValue)
+      smallStar(largeStar(cur))
         .select(col("u"), col("v"), xxhash64(col("u"), col("v")).as("h"))
         .as[(Long, Long, Long)]
         .mapPartitions { it =>
           it.map { case (u, v, h) => cnt.add(1L); xor.add(h); (u, v) }
         }
         .toDF("u", "v")
-        .snapshot()
-      val nextSig = (cnt.value.longValue, xor.value.longValue)
-      converged = nextSig == sig && next.except(cur).isEmpty
-      Engine.release(cur)
-      cur = next
-      sig = nextSig
-      iter += 1
     }
+    if (cur ne cur0) Engine.release(cur0)
     // terminal authority: if signatures never matched (e.g. skewed by
     // retries), one real set-diff decides before declaring failure
-    if (!converged && {
+    val converged = sigConverged || {
       val prev = smallStar(largeStar(cur))
       prev.except(cur).isEmpty && cur.except(prev).isEmpty
-    }) converged = true
+    }
     require(converged,
       s"connectedComponentsTwoPhase did not converge in $maxIters rounds")
     // star forest → labels: non-centers point at their center;

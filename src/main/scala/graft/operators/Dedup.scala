@@ -245,7 +245,7 @@ object Dedup {
     * truth-universe caveat.
     *
     * Scale contract: the sweep is an INSTRUMENT, run on a bounded
-    * sample (the signature frame is localCheckpoint'ed once and
+    * sample (the signature frame is snapshotted once and
     * shared by all arms); r=1 banding on a full 100 TB corpus would
     * need the d2 mega-bucket cap, which would perturb the very
     * counts being measured — sample, don't cap. */

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Engine
 import graft.Engine.SnapshotOps
 
 /** Iterative/combinatorial graph analytics over pair lists — the
@@ -10,10 +11,12 @@ import graft.Engine.SnapshotOps
   * over the near-dup pair graphs the d-family emits. Like
   * Components, everything is DataFrame joins + partial-agg groupBys
   * (one keyed shuffle per round), with `Engine.snapshot` lineage
-  * truncation between rounds (localCheckpoint by default; the
+  * truncation between rounds (a local checkpoint by default; the
   * spark.graft.reliableSnapshots switch persists each round to the
-  * shared FS for executor-loss-safe cluster runs) and eager release
-  * of superseded snapshots.
+  * shared FS for executor-loss-safe cluster runs). Round loops run on
+  * `Engine.iterate`, which releases each superseded round; every
+  * operator releases the other frames it pinned once nothing it
+  * returns reads them.
   *
   * Both operators are INTEGER-exact by construction (ranks live in
   * micro-units, every division is a floor division of non-negative
@@ -46,21 +49,18 @@ object Graph {
         .select(col("doc_b").cast("long").as("src"), col("doc_a").cast("long").as("dst")))
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val edges = sym.join(deg, Seq("src")).snapshot()
-    // round-0 ranks: lazy view over the cached edge table (round 1's
+    // round-0 ranks: lazy view over the pinned edge table (round 1's
     // materialization computes them; no separate init job)
-    var rank = edges.select(col("src").as("node")).distinct()
+    val rank0 = edges.select(col("src").as("node")).distinct()
       .select(col("node"), lit(scale).as("pr"))
-    (1 to iters).foreach { _ =>
-      val next = edges.join(rank, edges("src") === rank("node"))
+    val (rank, _) = Engine.iterate(rank0, iters) { (rank, _) =>
+      edges.join(rank, edges("src") === rank("node"))
         .select(col("dst"), expr("pr div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
         .select(col("dst").as("node"),
           expr(s"(15 * CAST($scale AS BIGINT) + 85 * s) div 100").as("pr"))
-        .snapshot()
-      rank.unpersist()
-      rank = next
     }
-    edges.unpersist()
+    if (iters > 0) Engine.release(edges) // zero rounds: rank0 reads it
     rank.select(col("node").as("doc_id"), col("pr").as("rank_micro"))
   }
 
@@ -79,8 +79,8 @@ object Graph {
     *
     * 100 TB shape: identical to pageRank — per round ONE edge⋈rank
     * equi-join + one partial-agg groupBy on dst, then a left join
-    * back to the (cached) node list to re-inject teleport mass;
-    * lineage truncated per round, superseded snapshots released. */
+    * back to the (pinned) node list to re-inject teleport mass;
+    * lineage truncated per round, superseded rounds released. */
   def personalizedPageRank(pairs: DataFrame, seedMod: Long, iters: Int,
       scale: Long = 1000000L): DataFrame = {
     val sym = pairs
@@ -94,24 +94,20 @@ object Graph {
         when(col("node") % seedMod === 0, lit(1L)).otherwise(lit(0L))
           .as("is_seed"))
       .snapshot()
-    // round-0 ranks: lazy view over the cached node set
-    var rank = nodes.select(col("node"), (col("is_seed") * scale).as("pr"))
-    (1 to iters).foreach { _ =>
+    // round-0 ranks: lazy view over the pinned node set
+    val rank0 = nodes.select(col("node"), (col("is_seed") * scale).as("pr"))
+    val (rank, _) = Engine.iterate(rank0, iters) { (rank, _) =>
       val contrib = edges.join(rank, edges("src") === rank("node"))
         .select(col("dst"), expr("pr div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      val next = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
+      nodes.join(contrib, nodes("node") === contrib("dst"), "left")
         .select(col("node"),
           expr(s"(15 * CAST($scale AS BIGINT) * is_seed + " +
             "85 * coalesce(s, CAST(0 AS BIGINT))) div 100").as("pr"))
-        .snapshot()
-      rank.unpersist()
-      rank = next
     }
-    edges.unpersist()
-    val out = rank.select(col("node").as("doc_id"), col("pr").as("ppr_micro"))
-    nodes.unpersist()
-    out
+    Engine.release(edges)
+    if (iters > 0) Engine.release(nodes) // zero rounds: rank0 reads it
+    rank.select(col("node").as("doc_id"), col("pr").as("ppr_micro"))
   }
 
   /** Per-node triangle counts over an undirected pair list (columns
@@ -149,10 +145,9 @@ object Graph {
     val wedges = e1.join(e2, Seq("u")).filter(col("v") =!= col("w"))
     val tris = wedges.join(
       oriented.select(col("src").as("v"), col("dst").as("w")), Seq("v", "w"))
-    val credited = tris.select(explode(array(col("u"), col("v"), col("w")))
-      .as("doc_id"))
-    oriented.unpersist()
-    credited.groupBy(col("doc_id"))
+    // the result reads `oriented` lazily, so its pin outlives the call
+    tris.select(explode(array(col("u"), col("v"), col("w"))).as("doc_id"))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_triangles"))
   }
 
@@ -222,9 +217,10 @@ object Graph {
     * list on the source key and anti-joins out already-visited
     * nodes, so a round's shuffle is |frontier ∪ its neighbors| rows,
     * never |graph|; `maxHops` bounds the rounds (no driver-side
-    * convergence count needed), and `localCheckpoint` truncates
-    * lineage per round with eager release of superseded snapshots —
-    * the Components/PageRank discipline. */
+    * convergence count needed). The round state is the one `dist`
+    * frame — round i's frontier is its hops = i−1 slice — pinned once
+    * per round on `Engine.iterate`, which releases the round it
+    * replaces: the Components/PageRank discipline. */
   def bfsLayers(pairs: DataFrame, seedMod: Long, maxHops: Int): DataFrame = {
     val sym = pairs
       .select(col("doc_a").cast("long").as("s"), col("doc_b").cast("long").as("d"))
@@ -232,27 +228,21 @@ object Graph {
         .select(col("doc_b").cast("long").as("s"), col("doc_a").cast("long").as("d")))
       .distinct().snapshot()
     val nodes = sym.select(col("s").as("node")).distinct().snapshot()
-    // round-0 frontier/dist: lazy views over the cached node set
-    // (computed inside round 1's materializations; no init jobs)
-    var dist = nodes.filter(col("node") % seedMod === 0)
+    // round-0 dist: lazy view over the pinned node set (computed
+    // inside round 1's materialization; no init job)
+    val dist0 = nodes.filter(col("node") % seedMod === 0)
       .select(col("node"), lit(0L).as("hops"))
-    var frontier = dist.select(col("node"))
-    (1 to maxHops).foreach { i =>
+    val (dist, _) = Engine.iterate(dist0, maxHops) { (dist, i) =>
+      val frontier = dist.filter(col("hops") === i - 1L).select(col("node"))
       val nxt = sym.join(frontier, sym("s") === frontier("node"))
         .select(col("d").as("node")).distinct()
         .join(dist, Seq("node"), "left_anti")
-        .snapshot()
-      val nd = dist.union(nxt.select(col("node"), lit(i.toLong).as("hops")))
-        .snapshot()
-      dist.unpersist(); frontier.unpersist()
-      dist = nd
-      frontier = nxt
+      dist.union(nxt.select(col("node"), lit(i.toLong).as("hops")))
     }
-    val out = nodes.join(dist, Seq("node"), "left")
+    Engine.release(sym)
+    nodes.join(dist, Seq("node"), "left")
       .select(col("node").as("doc_id"),
         coalesce(col("hops"), lit(-1L)).as("hops"))
-    frontier.unpersist(); sym.unpersist()
-    out
   }
 
   /** Bounded k-CORE PEELING: iteratively remove nodes of degree < k
@@ -288,9 +278,10 @@ object Graph {
     * cached count instead of the old 2 jobs + probe. Round snapshots
     * pin until the result is assembled (the output reads every
     * round's alive set — a bounded-horizon peel holds ≤ `rounds`
-    * shrinking edge lists, the declared memory admission); the
-    * assembled result is materialized ONCE and every pinned frame is
-    * released before returning. */
+    * shrinking edge lists, the declared memory admission), which is
+    * why this loop is its own and not `Engine.iterate`; the assembled
+    * result is materialized ONCE and every round snapshot is released
+    * with `Engine.release` before returning. */
   def kCorePeel(pairs: DataFrame, k: Long, rounds: Int): DataFrame = {
     val sym = pairs
       .select(col("doc_a").cast("long").as("s"), col("doc_b").cast("long").as("d"))
@@ -366,7 +357,7 @@ object Graph {
         when(col("maxl") === executed, col("deg"))
           .otherwise(lit(-1L)).as("core_degree"))
         .snapshot()
-      edgeRounds.foreach(_.unpersist())
+      edgeRounds.foreach(Engine.release)
       return out0
     }
     val presence = (0 to executed).map(i =>
@@ -388,7 +379,7 @@ object Graph {
       .select(col("node").as("doc_id"), col("peel_round"), col("core_degree"))
       .snapshot()
     // the result is materialized — release every round frame it read
-    edgeRounds.foreach(_.unpersist())
+    edgeRounds.foreach(Engine.release)
     out
   }
 
@@ -487,7 +478,8 @@ object Graph {
     * partial-agg min per node (the Components discipline); `rounds`
     * bounds the path length considered — a declared horizon the
     * oracle unrolls, and distances only tighten with more rounds.
-    * Unreached nodes report -1, never NULL. */
+    * Unreached nodes report -1, never NULL. Rounds run on
+    * `Engine.iterate`, which releases each superseded `dist`. */
   def weightedPaths(pairs: DataFrame, seedMod: Long, rounds: Int): DataFrame = {
     val sym = pairs
       .select(col("doc_a").cast("long").as("src"),
@@ -499,24 +491,20 @@ object Graph {
       .snapshot()
     val nodes = sym.select(col("src").as("node")).distinct()
       .snapshot()
-    // round-0 frontier: lazy view over the cached node set (the
+    // round-0 frontier: lazy view over the pinned node set (the
     // round-1 materialization computes it; no separate init job)
-    var dist = nodes.filter(col("node") % seedMod === 0)
+    val dist0 = nodes.filter(col("node") % seedMod === 0)
       .select(col("node"), lit(0L).as("wd"))
-    (1 to rounds).foreach { _ =>
+    val (dist, _) = Engine.iterate(dist0, rounds) { (dist, _) =>
       val relaxed = sym.join(dist, sym("src") === dist("node"))
         .select(col("dst").as("node"), (col("wd") + col("w")).as("wd"))
-      val nd = dist.unionByName(relaxed)
+      dist.unionByName(relaxed)
         .groupBy(col("node")).agg(min(col("wd")).as("wd"))
-        .snapshot()
-      dist.unpersist()
-      dist = nd
     }
-    val out = nodes.join(dist, Seq("node"), "left")
+    Engine.release(sym)
+    nodes.join(dist, Seq("node"), "left")
       .select(col("node").as("doc_id"),
         coalesce(col("wd"), lit(-1L)).as("wdist"))
-    sym.unpersist()
-    out
   }
 
   /** COMMUNITY DETECTION via fixed-round synchronous label
@@ -536,31 +524,29 @@ object Graph {
     * 100 TB shape: per round ONE edge⋈label equi-join + one
     * (node, label) partial-agg count + one node-keyed
     * WindowGroupLimit argmax — all keyed by node, reusing the same
-    * partitioning; lineage truncated per round. */
+    * partitioning; lineage truncated per round, superseded rounds
+    * released. */
   def labelPropagation(pairs: DataFrame, rounds: Int): DataFrame = {
     val sym = pairs
       .select(col("doc_a").cast("long").as("s"), col("doc_b").cast("long").as("d"))
       .union(pairs
         .select(col("doc_b").cast("long").as("s"), col("doc_a").cast("long").as("d")))
       .snapshot()
-    // round-0 labels: lazy view over the cached sym (the round-1
+    // round-0 labels: lazy view over the pinned sym (the round-1
     // materialization computes them; no separate init job)
-    var labels = sym.select(col("s").as("node")).distinct()
+    val labels0 = sym.select(col("s").as("node")).distinct()
       .select(col("node"), col("node").as("lab"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("node")).orderBy(col("c").desc, col("lab"))
-    (1 to rounds).foreach { _ =>
-      val next = sym.join(labels, sym("d") === labels("node"))
+    val (labels, _) = Engine.iterate(labels0, rounds) { (labels, _) =>
+      sym.join(labels, sym("d") === labels("node"))
         .groupBy(sym("s").as("node"), col("lab"))
         .agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("node"), col("lab"))
-        .snapshot()
-      labels.unpersist()
-      labels = next
     }
-    sym.unpersist()
+    if (rounds > 0) Engine.release(sym) // zero rounds: labels0 reads it
     labels.select(col("node").as("doc_id"), col("lab").as("community"))
   }
 
@@ -580,7 +566,10 @@ object Graph {
     *
     * Output: (doc_a, doc_b, peel_round, truss_support) — survivors
     * carry peel_round = −1 and their final support; peeled edges
-    * carry their round and support = −1. */
+    * carry their round and support = −1. The output reads every
+    * round's scored frame, so the rounds stay pinned in this loop of
+    * its own until the result is materialized; then every pin is
+    * released with `Engine.release`. */
   def kTruss(pairs: DataFrame, k: Long, rounds: Int): DataFrame = {
     def support(edges: DataFrame, sym: DataFrame): DataFrame =
       edges
@@ -609,17 +598,18 @@ object Graph {
         .snapshot()
       val newPeeled = scored.filter(col("sup") < k - 2)
       if (newPeeled.isEmpty) {
-        scored.unpersist()
+        Engine.release(scored)
         done = true
       } else {
         pinnedScored += scored
         peeledParts += newPeeled
           .select(col("a"), col("b"), lit(r.toLong).as("peel_round"))
         // the superseded edge snapshot (round 0 = the canonical pair
-        // list) is dead once replaced — release it eagerly; `scored`
-        // stays pinned because the peel views and the next round's
-        // edges read it.
-        edges.unpersist()
+        // list) is dead once replaced — release it eagerly (later
+        // rounds' edges are lazy views, a no-op); `scored` stays
+        // pinned because the peel views and the next round's edges
+        // read it.
+        Engine.release(edges)
         edges = scored.filter(col("sup") >= k - 2)
           .select(col("a"), col("b"))
         r += 1
@@ -642,8 +632,8 @@ object Graph {
         col("peel_round"), col("truss_support"))
       .snapshot()
     // the result is materialized — release every round frame it read
-    pinnedScored.foreach(_.unpersist())
-    edges.unpersist()
+    pinnedScored.foreach(Engine.release)
+    Engine.release(edges)
     out
   }
 

@@ -31,11 +31,6 @@ object Multimodal {
       media_id: Long, kind: String, byte_len: Int, checksum: Long,
       width: Int, height: Int, channels: Int, n_frames: Int)
 
-  /** One sampled frame reference (decode-on-demand pointer, not
-    * pixels — frame payloads stay partition-local). */
-  final case class FrameRef(media_id: Long, frame_idx: Int,
-      width: Int, height: Int)
-
   /** The codec seam. Real implementation = JavaCV/ffmpeg; init once
     * per partition (expensive native setup), decode per item. */
   trait Codec extends Serializable {
@@ -69,14 +64,8 @@ object Multimodal {
     }
   }
 
-  /** P7 analog: a resize is a metadata rewrite + a kernel that runs
-    * inside the decode/inference stage; plan-side it is a pure
-    * projection on the decoded metadata. */
-  def resizeMeta(decoded: DataFrame, w: Int, h: Int): DataFrame =
-    decoded.withColumn("width", lit(w)).withColumn("height", lit(h))
-
   /** Frame sampling: every `step`-th frame of each stream as a
-    * FrameRef row — the 1→N generator (posexplode pattern) without
+    * (media_id, frame_idx, width, height) row — the 1→N generator (posexplode pattern) without
     * materializing pixels. */
   def sampleFrames(decoded: Dataset[DecodedMedia], step: Int): DataFrame =
     decoded.toDF().select(col("media_id"), col("width"), col("height"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.cosineSim
 import graft.functions.VectorFunctions.lshBucket
+import graft.Engine
 import graft.Engine.SnapshotOps
 
 /** Similarity search over an embeddings table (vec_id LONG,
@@ -765,8 +766,11 @@ object Similarity {
     * (replaceable by any s-family ANN shortlist); everything after
     * — the ≤k² pair sims and the unrolled argmax steps — is
     * shortlist-sized. Shortlist + pair relations are eagerly
-    * checkpointed so the 5-step plan re-reads k·|queries| rows, not
-    * the corpus. */
+    * snapshotted so the 5-step plan re-reads k·|queries| rows, not
+    * the corpus. The step state is the one `selected` frame — the
+    * still-eligible candidates are the shortlist left-anti it —
+    * pinned once per step on `Engine.iterate`, which releases the
+    * step it replaces. */
   def mmrDiversify(embeddings: DataFrame, queries: DataFrame,
       kShort: Int = 20, kOut: Int = 5): DataFrame = {
     val scored = embeddings.alias("c")
@@ -790,13 +794,18 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("ida"), col("idb"),
         cosineSim(col("ea.embedding"), col("eb.embedding")).as("sim"))
       .snapshot()
-    var selected = sl.withColumn("rk", row_number().over(wSl))
+    val selected0 = sl.withColumn("rk", row_number().over(wSl))
       .filter(col("rk") === 1)
       .select(col("query_id"), col("vec_id"),
         lit(1).as("step"), col("rel").as("mmr"))
-    var remaining = sl.join(selected.select(col("query_id"), col("vec_id")),
-      Seq("query_id", "vec_id"), "left_anti")
-    (2 to kOut).foreach { st =>
+    // one iterate round per step ≥ 2 — truncating lineage per step
+    // (the Components/PageRank discipline): without it each step's
+    // plan re-nests every prior step's windows and anti-joins, and the
+    // final plan re-evaluates them multiplicatively — the frames are
+    // kOut·|queries| rows, so the eager materialization is cheap
+    val (selected, _) = Engine.iterate(selected0, kOut - 1) { (selected, i) =>
+      val remaining = sl.join(selected.select(col("query_id"), col("vec_id")),
+        Seq("query_id", "vec_id"), "left_anti")
       val cand = remaining.alias("r")
         .join(pair.alias("p"),
           col("r.query_id") === col("p.query_id") &&
@@ -814,20 +823,11 @@ object Similarity {
       val pick = cand.withColumn("rk", row_number().over(wPick))
         .filter(col("rk") === 1)
         .select(col("query_id"), col("vec_id"),
-          lit(st).as("step"), col("score").as("mmr"))
-      // truncate lineage per round (the Components/PageRank
-      // discipline): without it each round's plan re-nests every
-      // prior round's windows and anti-joins, and the final plan
-      // re-evaluates them multiplicatively — the frames are
-      // kOut·|queries| rows, so the eager materialization is cheap
-      val prevSel = selected
-      val prevRem = remaining
-      selected = selected.union(pick).snapshot()
-      remaining = remaining.join(
-        pick.select(col("query_id"), col("vec_id")),
-        Seq("query_id", "vec_id"), "left_anti").snapshot()
-      prevSel.unpersist(); prevRem.unpersist()
+          lit(i + 1).as("step"), col("score").as("mmr"))
+      selected.union(pick)
     }
+    Engine.release(pair)
+    if (kOut > 1) Engine.release(sl) // one step: selected0 reads it
     selected.select(col("query_id"), col("vec_id"), col("step"),
       round(col("mmr"), 6).as("mmr"))
   }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Scrub}
 import graft.sources.Tables
+import graft.Engine
+import graft.Engine.SnapshotOps
 
 /** Corpus-curation operators begun in round 5 and wired in round 6 —
   * first-class steps of a large-scale training-data pipeline beyond
@@ -1326,16 +1328,17 @@ object CorpusQueries {
     * word-type-level counting shape production BPE trainers
     * (HuggingFace tokenizers) actually use. */
   def bpeTrain(docsIn: DataFrame, rounds: Int): DataFrame = {
-    import graft.Engine.SnapshotOps
     val SEP = "\u001f"
-    var words = docsIn
+    val words0 = docsIn
       .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
       .select(array_join(array_remove(split(col("tok"), ""), ""), SEP)
         .as("seg"), col("c"))
       .snapshot()
+    // each round's 1-row rule stays pinned (the result reads every
+    // one); the resegmented words are the iterate state
     val ruleRows = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    for (round <- 1 to rounds) {
+    val (words, _) = Engine.iterate(words0, rounds) { (words, round) =>
       val pairs = TextFunctions.bind(split(col("seg"), SEP), a =>
         when(size(a) >= 2, transform(sequence(lit(1), size(a) - 1),
           i => struct(element_at(a, i).as("lhs"),
@@ -1349,14 +1352,12 @@ object CorpusQueries {
         .snapshot()
       ruleRows += rule.select(lit(round).as("merge_round"), col("lhs"),
         col("rhs"), col("n_occurrences"))
-      val merged = words.crossJoin(broadcast(
+      words.crossJoin(broadcast(
           rule.select(col("lhs").as("ml"), col("rhs").as("mr"))))
         .select(bpeFold(SEP).as("seg"), col("c"))
-        .snapshot()
-      words.unpersist()
-      words = merged
     }
-    words.unpersist()
+    Engine.release(words0)
+    Engine.release(words)
     ruleRows.reduce(_ union _)
   }
 
@@ -1409,7 +1410,6 @@ object CorpusQueries {
     * x72 (rolls up on source), so both reports cost x68 + one
     * tiny closing agg. */
   private def bpeHeldoutPerDoc(spark: SparkSession, dir: String): DataFrame = {
-    import graft.Engine.SnapshotOps
     val SEP = "\u001f"
     val rounds = 3
     val docs = Tables.spread(Tables.documents(spark, dir))
@@ -2528,13 +2528,13 @@ object CorpusQueries {
     * on constructed vocabularies. */
   def kmvJaccard(lt0: DataFrame, k: Int): DataFrame = {
     val lt = lt0.select(col("lang"), col("term")).distinct()
-      .localCheckpoint(true)
+      .snapshot()
     val lh = lt.select(col("lang"), TextFunctions.polyHash(col("term"))
       .as("h")).distinct()
     val wk = Window.partitionBy(col("lang")).orderBy(col("h"))
     val sk = lh.withColumn("rn", row_number().over(wk))
       .filter(col("rn") <= k).select(col("lang"), col("h"))
-      .localCheckpoint(true)
+      .snapshot()
     val pairs = sk.select(col("lang").as("lang_a")).distinct()
       .join(sk.select(col("lang").as("lang_b")).distinct(),
         col("lang_a") < col("lang_b"))
@@ -2660,7 +2660,7 @@ object CorpusQueries {
   def collocations(docs: DataFrame, minSupport: Int, topK: Int): DataFrame = {
     val tk = docs
       .select(TextFunctions.tokens(col("text")).as("ts"))
-      .localCheckpoint(true)
+      .snapshot()
     val uni = tk.select(explode(col("ts")).as("w"))
     val uc = uni.groupBy(col("w")).agg(count(lit(1)).as("c"))
     val nTot = uni.agg(count(lit(1)).as("n"))

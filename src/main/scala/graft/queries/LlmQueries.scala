@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Similarity}
 import graft.sources.Tables
+import graft.Engine.SnapshotOps
 
 /** LLM-data-pipeline queries (BASELINE.json north star): dedup,
   * similarity search, and text analysis over the `documents` /
@@ -1351,7 +1352,7 @@ object LlmQueries {
     val emb = Tables.embeddings(spark, dir)
     val q = queryVecs(spark, dir)
     val truth = Similarity.knnBruteForce(emb, q, k = 3)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
+      .select(col("query_id"), col("neighbor_id")).snapshot()
     Seq(5, 10, 20).map { sl =>
       val ann = Similarity.knnBinaryRerank(emb, q, shortlist = sl, k = 3)
         .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
@@ -1971,7 +1972,7 @@ object LlmQueries {
     * GIF. Plan shape: one partition-scoped decode pass produces the
     * stream metadata AND the per-frame sums (pixels never leave the
     * partition — only the ≤4-element sums array does), sampleFrames
-    * explodes the sampled FrameRef rows from the metadata, and an
+    * explodes the sampled frame rows from the metadata, and an
     * equi-join on media_id attaches each sampled frame's decoded
     * sum. In production the decoded metadata + per-frame stats table
     * is materialized once and this join is exactly how a sampler
@@ -2188,12 +2189,12 @@ object LlmQueries {
     val pairs = Dedup.nearDupPairs(Tables.spread(Tables.documents(spark, dir)),
       threshold = 0.8)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .localCheckpoint(true)
+      .snapshot()
     val isNew = (c: org.apache.spark.sql.Column) => c % 10 === 7
     val oldPairs = pairs.filter(!isNew(col("a")) && !isNew(col("b")))
     val newPairs = pairs.filter(isNew(col("a")) || isNew(col("b")))
+    // already a projection of the final label snapshot — no re-pin
     val labels0 = graft.operators.Components.connectedComponents(oldPairs)
-      .localCheckpoint(true)
     graft.operators.Components.incrementalComponents(labels0, newPairs)
       .select(col("node").as("doc_id"), col("cluster"),
         (col("node") === col("cluster")).as("survivor"))
@@ -2224,9 +2225,8 @@ object LlmQueries {
     * without the snapshot the whole d17 posting-join subtree runs
     * twice inside one plan. */
   def x64DedupLedger(spark: SparkSession, dir: String): DataFrame = {
-    import graft.Engine.SnapshotOps
     val docs = Tables.spread(Tables.documents(spark, dir))
-      .localCheckpoint(true)
+      .snapshot()
     val exactDrop = docs
       .select(col("doc_id"), md5(col("text")).as("content_hash"))
       .withColumn("keep_id",
@@ -2408,7 +2408,6 @@ object LlmQueries {
     * pre-materialized by the connectedComponents fixpoint (driver-
     * side iteration at construction time — see PLANS.md's caveat). */
   def x20CurationV2(spark: SparkSession, dir: String): DataFrame = {
-    import graft.Engine.SnapshotOps
     val docs = Tables.spread(Tables.documents(spark, dir))
     val nonSurvivors = d9DedupClusters(spark, dir)
       .filter(!col("survivor")).select(col("doc_id"))
@@ -2580,7 +2579,6 @@ object LlmQueries {
     // barrier after the scored projection: the quality gate would
     // otherwise push below every join and exchange into the
     // single-split scan (measured: one task, 1.7 CPU-s)
-    import graft.Engine.SnapshotOps
     val stats = x1TextStats(spark, dir)
       .select(col("doc_id"), col("n_tokens"), col("quality"))
       .snapshot().ensureParallelism()
@@ -3473,7 +3471,7 @@ object LlmQueries {
       .select(col("doc_a"), col("doc_b"),
         coalesce(col("in_lsh"), lit(0L)).as("in_lsh"),
         coalesce(col("in_sim"), lit(0L)).as("in_sim"))
-      .localCheckpoint()
+      .snapshot()
     val simOnlyTrue = j.filter(col("in_lsh") === 0)
       .join(feats.select(col("doc_id").as("doc_a"),
         col("hashes").as("ha")), Seq("doc_a"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import graft.Engine.SnapshotOps
 
 /** Media-column queries beyond LlmQueries' m1–m7: perceptual image
   * hashing (m8) — the image-side dedup primitive that ties the
@@ -595,7 +596,7 @@ object MediaQueries {
       // the fingerprint relation is tiny (one 30-byte row per image);
       // materializing it once means the expensive ImageIO decode runs
       // ONCE instead of once per self-join side
-      .localCheckpoint(true)
+      .snapshot()
     val bands = ph.select(col("doc_id"), col("width"), col("height"),
       col("phash"), explode(sequence(lit(0), lit(3))).as("band"))
       .withColumn("bk",
@@ -695,7 +696,7 @@ object MediaQueries {
           (id, n, hash)
         }
       }.toDF("doc_id", "n_samples", "ahash")
-      .localCheckpoint(true)
+      .snapshot()
     val bands = ph.select(col("doc_id"), col("n_samples"), col("ahash"),
       explode(sequence(lit(0), lit(3))).as("band"))
       .withColumn("bk",
@@ -984,7 +985,7 @@ object MediaQueries {
           (id, hashes.length, hashes)
         }
       }.toDF("doc_id", "n_hashes", "fhashes")
-      .localCheckpoint(true)
+      .snapshot()
     val ex = fp.select(col("doc_id"), col("n_hashes"), col("fhashes"),
       explode(col("fhashes")).as("fh"))
     val cand = ex.alias("a")
@@ -1429,7 +1430,7 @@ object MediaQueries {
           }
         }
       }.toDF("doc_id", "is_snip", "w", "h")
-      .localCheckpoint(true)
+      .snapshot()
     val t = lm.filter(!col("is_snip"))
       .select(col("doc_id").as("track_id"), col("w").as("tw"), col("h"))
     val s = lm.filter(col("is_snip"))

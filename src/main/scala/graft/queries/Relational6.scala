@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import graft.Engine
+import graft.Engine.SnapshotOps
 
 /** Round-11 relational additions: the nonparametric-statistics
   * shapes the r-family had not yet covered — the Mann-Whitney U
@@ -70,7 +72,7 @@ object Relational6 {
         when(col("o_orderpriority") === prioB, 1L).otherwise(0L).as("b"))
       .groupBy(col("v"))
       .agg(sum(col("a")).as("na"), sum(col("b")).as("nb"))
-      .localCheckpoint()
+      .snapshot()
     val nValues = cents.count()
     // pinned frames to release once the 1-row result is materialized
     // (ADVICE r13: the checkpoint blocks leaked across invocations)
@@ -91,7 +93,7 @@ object Relational6 {
           .repartitionByRange(spark.sessionState.conf.numShufflePartitions,
             col("v"))
           .withColumn("r", spark_partition_id())
-          .localCheckpoint()
+          .snapshot()
         pinned ::= ranged
         val offsets = ranged.groupBy(col("r"))
           .agg(sum(col("nb")).as("range_nb"))
@@ -109,9 +111,9 @@ object Relational6 {
           .withColumn("cumb", col("cumb_in") + col("off"))
       }
     // materialize the single result row EAGERLY, then release the
-    // checkpointed frames — the unpersist discipline kCorePeel and
-    // connectedComponents already follow; returning a lazy plan over
-    // the pinned blocks would leak them for the caller's lifetime
+    // snapshots with `Engine.release`, as kCorePeel and
+    // connectedComponents do; returning a lazy plan over the pinned
+    // blocks would leak them for the caller's lifetime
     val row = withCumb
       .agg(sum(col("na")).as("n_a"), sum(col("nb")).as("n_b"),
         sum(expr(s"cast(na as $dec) * (2 * cumb + nb)")).as("u2d"))
@@ -120,7 +122,7 @@ object Relational6 {
         expr("cast(cast(2 as decimal(38,0)) * n_a * n_b - u2d as bigint)")
           .as("u2_b"))
       .head() // 1-row scalar fetch, not a data-sized collect
-    pinned.foreach(_.unpersist())
+    pinned.foreach(Engine.release)
     import spark.implicits._
     Seq((row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3)))
       .toDF("n_a", "n_b", "u2_a", "u2_b")
@@ -432,14 +434,14 @@ object Relational6 {
     * larger-buckets-first semantics — same tiling, no single-task
     * sort. Everything after the tile is a 10-row frame, which is
     * materialized eagerly so the pinned inputs release
-    * (mannWhitney's unpersist discipline). */
+    * (mannWhitney's release discipline). */
   def lorenz(ordersIn: DataFrame,
       maxSingleTaskRows: Long = 1L << 22): DataFrame = {
     val spark = ordersIn.sparkSession
     val o = ordersIn
       .select(floor(col("o_totalprice") * 100).cast("long").as("cents"),
         col("o_orderkey"))
-      .localCheckpoint()
+      .snapshot()
     var pinned: List[DataFrame] = List(o)
     val n = o.count()
     val tiled =
@@ -452,7 +454,7 @@ object Relational6 {
           .repartitionByRange(spark.sessionState.conf.numShufflePartitions,
             col("cents"), col("o_orderkey"))
           .withColumn("r", spark_partition_id())
-          .localCheckpoint() // pin the range ids (see r76)
+          .snapshot() // pin the range ids (see r76)
         pinned ::= ranged
         val wOff = Window.orderBy(col("r"))
           .rowsBetween(Window.unboundedPreceding, -1)
@@ -491,7 +493,7 @@ object Relational6 {
         expr("cast(cast(cum_cents as decimal(38,0)) * 1000000 " +
           "div total_cents as bigint)").as("cum_share_ppm"))
       .collect() // the 10-row decile frame, never data-sized
-    pinned.foreach(_.unpersist())
+    pinned.foreach(Engine.release)
     import spark.implicits._
     out.toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -539,7 +541,6 @@ object Relational6 {
     * the cell frame and broadcast back — nothing corpus-sized moves
     * after the first agg. */
   def r82ChiSquare(spark: SparkSession, dir: String): DataFrame = {
-    import graft.Engine.SnapshotOps
     val dec = "decimal(38,0)"
     // ONE fact scan: the ≤|prios|·|statuses|-row cell frame pins and
     // every total (row, column, grand) derives from it — without the
@@ -619,7 +620,6 @@ object Relational6 {
     * against a tiny step frame and the fold runs on one ≤|days|-row
     * array. */
   def r83KaplanMeier(spark: SparkSession, dir: String): DataFrame = {
-    import graft.Engine.SnapshotOps
     val ev = Tables.events(spark, dir)
     // ONE fact scan: first/last activity and first failure all fold
     // in the same per-user partial agg (min of a CASE is the first

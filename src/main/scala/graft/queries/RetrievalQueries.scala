@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.Similarity
 import graft.sources.Tables
+import graft.Engine.SnapshotOps
 
 /** Lexical retrieval + filtered vector search — the query-time half
   * of the corpus the d/x families curate. BM25 keyword search (x28)
@@ -284,7 +285,7 @@ object RetrievalQueries {
   }
 
   /** awaitAll where one action also PRODUCES a value (e.g. an eager
-    * localCheckpoint pin riding the same concurrent wave as sink
+    * snapshot pin riding the same concurrent wave as sink
     * writes). All actions settle before the first failure rethrows. */
   private[graft] def awaitAllWith[T](value: () => T)(
       actions: (() => Unit)*): T = {
@@ -317,7 +318,7 @@ object RetrievalQueries {
     // the token arrays; without the pin the corpus tokenizes three
     // times, once inside each writer's plan
     val tok = docs.select(col("doc_id"),
-      TextFunctions.tokens(col("text")).as("toks")).localCheckpoint(true)
+      TextFunctions.tokens(col("text")).as("toks")).snapshot()
     val dl = tok.select(col("doc_id"),
       size(col("toks")).cast("long").as("dl"))
     // the three sinks are independent reads of the SAME pinned token
@@ -409,7 +410,7 @@ object RetrievalQueries {
     // tokenize each corpus slice ONCE (pinned) — same discipline as
     // x40: postings, doclen and stats all read the token arrays
     def tok(d: DataFrame) = d.select(col("doc_id"),
-      TextFunctions.tokens(col("text")).as("toks")).localCheckpoint(true)
+      TextFunctions.tokens(col("text")).as("toks")).snapshot()
     def postings(t: DataFrame) = t
       .select(col("doc_id"), explode(col("toks")).as("term"))
       .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.ColorFunctions
 import graft.operators.DetectionPipeline
 import graft.sources.{Labels, Tables}
+import graft.Engine.SnapshotOps
 
 /** Oracle-checkable form of the video-analytics pipeline.
   *
@@ -287,7 +288,7 @@ object VideoQueries {
       // remaining cost is the shared v-family detection-explode
       // baseline itself, not the join tree. At 100 TB this is the
       // standard cache of a derived relation reused within one job.
-      .localCheckpoint()
+      .snapshot()
     val pf = boxes.select(col("video_id"), col("frame_id")).distinct()
       .withColumn("prev_frame", lag(col("frame_id"), 1).over(
         Window.partitionBy(col("video_id")).orderBy(col("frame_id"))))
@@ -464,13 +465,13 @@ object VideoQueries {
     * the lead() window share ONE (video, label)-keyed exchange; gap
     * explosion is bounded by gap length (real tracks: short); the
     * closing aggs are |videos| rows. boxes materializes once for its
-    * consumers (the v8 localCheckpoint discipline). */
+    * consumers (the v8 snapshot discipline). */
   def v10TrackInterpolate(spark: SparkSession, dir: String): DataFrame = {
     val dets = withDetections(frames(spark, dir))
     val boxes = DetectionPipeline.boxes(dets, threshold = 0.7)
       .select(col("video_id"), col("frame_id"), col("box_ref"),
         col("x"), col("y"), col("w"), col("h"), col("label_id"))
-      .localCheckpoint()
+      .snapshot()
     trackInterpolate(boxes)
   }
 
@@ -699,7 +700,7 @@ object VideoQueries {
     val boxes = DetectionPipeline.boxes(dets, threshold = 0.7)
       .select(col("video_id"), col("frame_id"), col("box_ref"),
         col("x"), col("y"), col("w"), col("h"), col("label_id"))
-      .localCheckpoint()
+      .snapshot()
     trackKinematics(boxes)
   }
 
@@ -888,7 +889,7 @@ object VideoQueries {
     val boxes = DetectionPipeline.boxes(dets, threshold = 0.7)
       .select(col("video_id"), col("frame_id"), col("box_ref"),
         col("x"), col("y"), col("w"), col("h"), col("label_id"))
-      .localCheckpoint()
+      .snapshot()
     trackAssociation(boxes)
   }
 
@@ -1044,7 +1045,7 @@ object VideoQueries {
     val boxes = DetectionPipeline.boxes(dets, threshold = 0.7)
       .select(col("video_id"), col("frame_id"), col("box_ref"),
         col("x"), col("y"), col("w"), col("h"), col("label_id"))
-      .localCheckpoint()
+      .snapshot()
     tracklets(boxes)
   }
 
@@ -1101,7 +1102,7 @@ object VideoQueries {
     val boxes = DetectionPipeline.boxes(dets, threshold = 0.7)
       .select(col("video_id"), col("frame_id"), col("box_ref"),
         col("x"), col("y"), col("w"), col("h"), col("label_id"))
-      .localCheckpoint()
+      .snapshot()
     val tr = tracklets(boxes)
     val zb = boxes
       .withColumn("height", lit(480) + (col("frame_id") % 3) * 240)
@@ -1153,7 +1154,7 @@ object VideoQueries {
     val boxes = DetectionPipeline.boxes(dets, threshold = 0.7)
       .select(col("video_id"), col("frame_id"), col("box_ref"),
         col("x"), col("y"), col("w"), col("h"), col("label_id"))
-      .localCheckpoint()
+      .snapshot()
     val tr = tracklets(boxes)
     val zb = boxes
       .withColumn("height", lit(480) + (col("frame_id") % 3) * 240)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.TextFunctions
 import graft.queries.RetrievalQueries
+import graft.Engine
+import graft.Engine.SnapshotOps
 
 /** Streaming ingest for the PERSISTED LEXICAL INDEX — x40/x41's
   * production arrival path, completing the index-lifecycle symmetry
@@ -39,10 +41,11 @@ import graft.queries.RetrievalQueries
 object IndexedLex {
 
   /** One tokenize pass, pinned — postings, doclen and stats all read
-    * the token arrays (the x40/x41 discipline). */
+    * the token arrays (the x40/x41 discipline). The caller frees the
+    * pin with `Engine.release` once the batch's writes settle. */
   private def tokPin(batch: DataFrame): DataFrame =
     batch.select(col("doc_id"),
-      TextFunctions.tokens(col("text")).as("toks")).localCheckpoint(true)
+      TextFunctions.tokens(col("text")).as("toks")).snapshot()
 
   /** The three per-batch sink writes off a pinned token frame: they
     * land in DIFFERENT ingest_id-scoped directories, so they run as
@@ -105,9 +108,10 @@ object IndexedLex {
     checkBuckets(fs, path, record = true)
     if (fs.exists(marker)) return
     val tok = tokPin(batch)
-    RetrievalQueries.awaitAll(sinkActions(path, tok, batchId): _*)
-    fs.create(marker, true).close()
-    tok.unpersist()
+    try {
+      RetrievalQueries.awaitAll(sinkActions(path, tok, batchId): _*)
+      fs.create(marker, true).close()
+    } finally Engine.release(tok)
     ()
   }
 
@@ -130,7 +134,7 @@ object IndexedLex {
     if (todo.isEmpty) return
     val first = (tokPin(todo.head._1), todo.head._2)
     // failure discipline: a sink failure must not leak pinned token
-    // frames — batch i's tok always unpersists (finally), and the
+    // frames — batch i's tok is always released (finally), and the
     // eagerly-pinned batch i+1 frame is captured through a box so the
     // catch can release it even though awaitAllWith lost the value
     // when it rethrew (awaitAllWith settles ALL actions first, so the
@@ -144,9 +148,9 @@ object IndexedLex {
           }(sinkActions(path, tok, id): _*)
           catch {
             case t: Throwable =>
-              Option(pinned.get()).foreach(_.unpersist())
+              Option(pinned.get()).foreach(Engine.release)
               throw t
-          } finally tok.unpersist()
+          } finally Engine.release(tok)
         fs.create(markerOf(path, id), true).close()
         (nextTok, nextId)
     }
@@ -154,7 +158,7 @@ object IndexedLex {
       RetrievalQueries.awaitAll(
         sinkActions(path, lastPinned._1, lastPinned._2): _*)
       fs.create(markerOf(path, lastPinned._2), true).close()
-    } finally lastPinned._1.unpersist()
+    } finally Engine.release(lastPinned._1)
     ()
   }
 

@@ -82,6 +82,24 @@ class Round12Spec extends SparkTestBase {
     assert(canon(IndexedLex.serve(spark, pipIdx, terms)) === seqServe)
   }
 
+  test("IndexedLex releases its token pins: ingestBatch, then a backfill " +
+    "of two slices, adds no entry to the persisted RDDs") {
+    import org.apache.spark.sql.functions._
+    import graft.streaming.IndexedLex
+    val sc = spark.sparkContext
+    val docs = graft.sources.Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text"))
+    val idx = java.nio.file.Files.createTempDirectory("ixrel").toString
+    val before = sc.getPersistentRDDs.keySet
+    IndexedLex.ingestBatch(spark, idx, docs.filter(col("doc_id") % 3 === 0), 0L)
+    IndexedLex.backfill(spark, idx,
+      Seq(1L, 2L).map(b => (docs.filter(col("doc_id") % 3 === b), b)))
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"left ${added.size} RDDs persisted")
+    assert(IndexedLex.serve(spark, idx,
+      Seq("hash", "merge", "spark", "window")).count() > 0L)
+  }
+
   // H matrix rows of the 4x4 Hadamard — the closed form the tests
   // check against: a single DC coefficient `l` at raster (r0, c0)
   // inverse-transforms to f(i,j) = H(i)(r0) * H(j)(c0) * l

@@ -760,6 +760,67 @@ class Round9Spec extends SparkTestBase {
     }
   }
 
+  test("every round-looping graph, retrieval and corpus operator releases " +
+    "every superseded round, at zero rounds too: only the pins its " +
+    "result reads survive, and the result collects the same rows twice") {
+    import org.apache.spark.sql.DataFrame
+    import graft.operators.{Graph, Similarity}
+    import graft.queries.CorpusQueries
+    val sc = spark.sparkContext
+    // a 9-node path, a triangle on 20-22 and a pendant pair; seeds are
+    // the ids ≡ 0 mod 7
+    val pairs = ((0L until 8L).map(i => (i, i + 1, (i % 3).toInt)) ++
+      Seq((20L, 21L, 0), (21L, 22L, 1), (22L, 20L, 2), (30L, 31L, 0)))
+      .toDF("doc_a", "doc_b", "hamming")
+    val emb = (0L until 12L).map { i =>
+      (i, Array.tabulate(4)(d => ((i * 7 + d * 3) % 11 + 1).toFloat))
+    }.toDF("vec_id", "embedding")
+    val queries = emb.filter($"vec_id" < 2)
+    val docs = Seq((1L, "thee thee the"), (2L, "than thaw"))
+      .toDF("doc_id", "text")
+    // (operator, rounds, pins its result reads): the result reads one
+    // pin, except bfsLayers/weightedPaths, which join the pinned node
+    // set to the last round, and bpeTrain, which unions one pinned
+    // 1-row rule per round. Zero rounds leave one pin, the input the
+    // lazy round-0 view reads.
+    val rows = Seq[(String, Int, Int, Int => DataFrame)](
+      ("pageRank", 3, 1, n => Graph.pageRank(pairs, iters = n)),
+      ("pageRank", 0, 1, n => Graph.pageRank(pairs, iters = n)),
+      ("personalizedPageRank", 3, 1,
+        n => Graph.personalizedPageRank(pairs, seedMod = 7L, iters = n)),
+      ("personalizedPageRank", 0, 1,
+        n => Graph.personalizedPageRank(pairs, seedMod = 7L, iters = n)),
+      ("bfsLayers", 3, 2, n => Graph.bfsLayers(pairs, seedMod = 7L, maxHops = n)),
+      ("bfsLayers", 0, 1, n => Graph.bfsLayers(pairs, seedMod = 7L, maxHops = n)),
+      ("weightedPaths", 3, 2,
+        n => Graph.weightedPaths(pairs, seedMod = 7L, rounds = n)),
+      ("weightedPaths", 0, 1,
+        n => Graph.weightedPaths(pairs, seedMod = 7L, rounds = n)),
+      ("labelPropagation", 3, 1, n => Graph.labelPropagation(pairs, rounds = n)),
+      ("labelPropagation", 0, 1, n => Graph.labelPropagation(pairs, rounds = n)),
+      ("kCorePeel", 3, 1, n => Graph.kCorePeel(pairs, k = 2L, rounds = n)),
+      ("kCorePeel", 0, 1, n => Graph.kCorePeel(pairs, k = 2L, rounds = n)),
+      ("kTruss", 3, 1, n => Graph.kTruss(pairs, k = 3L, rounds = n)),
+      ("kTruss", 0, 1, n => Graph.kTruss(pairs, k = 3L, rounds = n)),
+      ("triangleCounts", 0, 1, _ => Graph.triangleCounts(pairs)),
+      ("mmrDiversify", 3, 1,
+        n => Similarity.mmrDiversify(emb, queries, kShort = 5, kOut = n)),
+      ("mmrDiversify", 1, 1,
+        n => Similarity.mmrDiversify(emb, queries, kShort = 5, kOut = n)),
+      ("bpeTrain", 1, 1, n => CorpusQueries.bpeTrain(docs, rounds = n)),
+      ("bpeTrain", 3, 3, n => CorpusQueries.bpeTrain(docs, rounds = n)))
+    for ((name, n, pins, op) <- rows) {
+      val before = sc.getPersistentRDDs.keySet
+      val out = op(n)
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.size <= pins,
+        s"$name($n) left ${added.size} RDDs persisted, its result reads $pins")
+      val first = out.collect().map(_.toString).sorted.toSeq
+      assert(first.nonEmpty, s"$name($n)")
+      assert(out.collect().map(_.toString).sorted.toSeq === first, s"$name($n)")
+    }
+  }
+
   test("r60 rollingDistinct: interval-merge deltas equal a brute-force " +
     "window recount on deterministic pseudo-random activity, and " +
     "island boundaries are exercised (gap = 6 merges, gap = 7 splits)") {

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Find src/main definitions that only the tests call.
+"""Find src/main definitions that no code outside the tests calls.
 
 Usage (from the repository root):
 
@@ -10,13 +10,14 @@ perfbench/ and tools/ with comments stripped, so a name mentioned
 only in a comment does not count as a caller. A `def`, `object`,
 `class` or `trait` of src/main is an orphan when its name occurs
 nowhere in src/main, perfbench/ or tools/ except in its own
-definitions, yet occurs in src/test. `override` and `implicit`
+definitions: either only src/test names it (test-only) or no file
+names it at all (dead). `override` and `implicit`
 definitions (called by the compiler, not by name) are skipped, and an
 object that has a `def main` is an entry point and never an orphan.
 
 Prints one orphan per line as `Owner.name` (or the type name for an
-object/class/trait) and exits 1 unless each printed name is in
-ALLOWED below.
+object/class/trait), dead ones marked `(named by no file)`, and exits
+1 unless each printed name is in ALLOWED below.
 """
 import io
 import os
@@ -184,18 +185,25 @@ def main():
     def callers(name):
         return sum(counts[r][name] for r in ("src/main", "perfbench", "tools"))
 
-    orphans = set()
+    orphans, dead = set(), set()
     for name, owner, kind, skip in defs:
         if skip or name == "main" or name in mains or owner in mains:
             continue
-        if callers(name) == defined[name] and counts["src/test"][name] > 0:
-            orphans.add(name if kind != "def" or owner is None else f"{owner}.{name}")
+        if callers(name) == defined[name]:
+            qual = name if kind != "def" or owner is None else f"{owner}.{name}"
+            orphans.add(qual)
+            if counts["src/test"][name] == 0:
+                dead.add(qual)
 
     bad = sorted(o for o in orphans if o not in ALLOWED)
     for o in sorted(orphans):
-        print(o if o in bad else f"{o}  (allowed: {ALLOWED[o]})")
+        if o in dead:
+            print(f"{o}  (named by no file)")
+        else:
+            print(o if o in bad else f"{o}  (allowed: {ALLOWED[o]})")
     if bad:
-        print(f"{len(bad)} src/main definition(s) called only from src/test", file=sys.stderr)
+        print(f"{len(bad)} src/main definition(s) called by no code outside "
+              "src/test", file=sys.stderr)
         return 1
     return 0
 
