@@ -1490,7 +1490,7 @@ object Codecs {
     // ---- I_16x16 luma DC path (§8.5.10), shared with Cabac -------
 
     /** 4×4 zigzag scan (§8.5.6): scan index → raster index. */
-    private[operators] val zigzag4x4: Array[Int] =
+    private[graft] val zigzag4x4: Array[Int] =
       Array(0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
 
     /** Inverse 4×4 Hadamard for the Intra16x16 luma DC block

@@ -232,12 +232,17 @@ object Graph {
     // inside round 1's materialization; no init job)
     val dist0 = nodes.filter(col("node") % seedMod === 0)
       .select(col("node"), lit(0L).as("hops"))
+    // the union appends nxt's partitions every round; a narrow
+    // coalesce keeps the pinned dist at the node set's layout, so
+    // later rounds do not scan one partition group per earlier layer
+    val parts = nodes.rdd.getNumPartitions
     val (dist, _) = Engine.iterate(dist0, maxHops) { (dist, i) =>
       val frontier = dist.filter(col("hops") === i - 1L).select(col("node"))
       val nxt = sym.join(frontier, sym("s") === frontier("node"))
         .select(col("d").as("node")).distinct()
         .join(dist, Seq("node"), "left_anti")
       dist.union(nxt.select(col("node"), lit(i.toLong).as("hops")))
+        .coalesce(parts)
     }
     Engine.release(sym)
     nodes.join(dist, Seq("node"), "left")

@@ -1871,10 +1871,7 @@ object LlmQueries {
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
         it.map { id =>
-          val w = (8 + id % 13).toInt; val h = (8 + id % 7).toInt
-          val rgb = Array.tabulate(w * h * 3)(i =>
-            ((id * 7 + i * 13) % 256).toByte)
-          val png = Codecs.ImageIoCodecs.encodeRgb("png", w, h, rgb)
+          val (_, _, png) = SyntheticMedia.pngImage(id)
           val dec = Codecs.AutoCodec.decode(
             Multimodal.MediaRecord(id, "image", png))
           val (dw, dh, back) = Codecs.ImageIoCodecs.decodeRgb(png)
@@ -1916,18 +1913,9 @@ object LlmQueries {
     import graft.operators.{Codecs, Multimodal}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        val palR = Array.tabulate(256)(v => v.toByte)
-        val palG = Array.tabulate(256)(v => ((v * 37) % 256).toByte)
-        val palB = Array.tabulate(256)(v => ((v * 91) % 256).toByte)
         it.map { id =>
-          val w = (6 + id % 9).toInt; val h = (6 + id % 5).toInt
           val nf = (1 + id % 4).toInt
-          val frames = (0 until nf).map { f =>
-            Array.tabulate(w * h)(i =>
-              ((id * 7 + f * 31 + i * 13) % 256).toByte)
-          }
-          val gif = Codecs.ImageIoCodecs.GifCodec.encodeIndexedFrames(
-            w, h, palR, palG, palB, frames)
+          val (w, h, gif) = SyntheticMedia.gifClip(id, nf)
           val dec = Codecs.AutoCodec.decode(
             Multimodal.MediaRecord(id, "video", gif))
           val decoded = Codecs.ImageIoCodecs.GifCodec.extractAllFramesRgb(gif)
@@ -1983,18 +1971,9 @@ object LlmQueries {
     val stats = Tables.spread(Tables.documents(spark, dir)
       .select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        val palR = Array.tabulate(256)(v => v.toByte)
-        val palG = Array.tabulate(256)(v => ((v * 37) % 256).toByte)
-        val palB = Array.tabulate(256)(v => ((v * 91) % 256).toByte)
         it.map { id =>
-          val w = (6 + id % 9).toInt; val h = (6 + id % 5).toInt
           val nf = (1 + id % 4).toInt
-          val frames = (0 until nf).map { f =>
-            Array.tabulate(w * h)(i =>
-              ((id * 7 + f * 31 + i * 13) % 256).toByte)
-          }
-          val gif = Codecs.ImageIoCodecs.GifCodec.encodeIndexedFrames(
-            w, h, palR, palG, palB, frames)
+          val (_, _, gif) = SyntheticMedia.gifClip(id, nf)
           val dec = Codecs.AutoCodec.decode(
             Multimodal.MediaRecord(id, "video", gif))
           val sums = Codecs.ImageIoCodecs.GifCodec.extractAllFramesRgb(gif)
@@ -3006,8 +2985,7 @@ object LlmQueries {
       .mapPartitions { it =>
         it.map { id =>
           val n = (64 + id % 97).toInt
-          val samples = Array.tabulate(n)(i =>
-            (((id * 31 + i.toLong * 97) % 65536) - 32768).toShort)
+          val samples = SyntheticMedia.pcmRamp(id, n)
           val wav = Codecs.WavCodec.encodePcm16(8000, 1, samples)
           val meta = Codecs.AutoCodec.decode(
             Multimodal.MediaRecord(id, "audio", wav))
@@ -3060,8 +3038,7 @@ object LlmQueries {
       .mapPartitions { it =>
         it.flatMap { id =>
           val n = (64 + id % 97).toInt
-          val samples = Array.tabulate(n)(i =>
-            (((id * 31 + i.toLong * 97) % 65536) - 32768).toShort)
+          val samples = SyntheticMedia.pcmRamp(id, n)
           val wav = Codecs.WavCodec.encodePcm16(8000, 1, samples)
           val meta = Codecs.AutoCodec.decode(
             Multimodal.MediaRecord(id, "audio", wav))
@@ -3210,10 +3187,7 @@ object LlmQueries {
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
         it.map { id =>
-          val w = (8 + id % 13).toInt; val h = (8 + id % 7).toInt
-          val rgb = Array.tabulate(w * h * 3)(i =>
-            ((id * 7 + i * 13) % 256).toByte)
-          val png = Codecs.ImageIoCodecs.encodeRgb("png", w, h, rgb)
+          val (_, _, png) = SyntheticMedia.pngImage(id)
           val meta = Codecs.AutoCodec.decode(
             Multimodal.MediaRecord(id, "image", png))
           val (dw, dh, back) = Codecs.ImageIoCodecs.decodeRgb(png)
@@ -3564,10 +3538,7 @@ object LlmQueries {
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
         it.flatMap { id =>
-          val w = (8 + id % 13).toInt; val h = (8 + id % 7).toInt
-          val rgb = Array.tabulate(w * h * 3)(i =>
-            ((id * 7 + i * 13) % 256).toByte)
-          val png = Codecs.ImageIoCodecs.encodeRgb("png", w, h, rgb)
+          val (_, _, png) = SyntheticMedia.pngImage(id)
           val meta = Codecs.AutoCodec.decode(
             Multimodal.MediaRecord(id, "image", png))
           val (dw, dh, back) = Codecs.ImageIoCodecs.decodeRgb(png)

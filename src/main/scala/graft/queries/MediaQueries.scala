@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.Engine.SnapshotOps
+import graft.operators.Codecs.Mp4.zigzag4x4
+import SyntheticMedia.sgn
 
 /** Media-column queries beyond LlmQueries' m1–m7: perceptual image
   * hashing (m8) — the image-side dedup primitive that ties the
@@ -96,18 +98,9 @@ object MediaQueries {
     import graft.operators.{Codecs, Multimodal}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        val palR = Array.tabulate(256)(v => v.toByte)
-        val palG = Array.tabulate(256)(v => ((v * 37) % 256).toByte)
-        val palB = Array.tabulate(256)(v => ((v * 91) % 256).toByte)
         it.flatMap { id =>
-          val w = (6 + id % 9).toInt; val h = (6 + id % 5).toInt
           val nf = (1 + id % 4).toInt
-          val frames = (0 until nf).map { f =>
-            Array.tabulate(w * h)(i =>
-              ((id * 7 + f * 31 + i * 13) % 256).toByte)
-          }
-          val gif = Codecs.ImageIoCodecs.GifCodec.encodeIndexedFrames(
-            w, h, palR, palG, palB, frames)
+          val (w, h, gif) = SyntheticMedia.gifClip(id, nf)
           val dec = Codecs.AutoCodec.decode(
             Multimodal.MediaRecord(id, "video", gif))
           val rgb = Codecs.ImageIoCodecs.GifCodec.extractAllFramesRgb(gif)
@@ -166,18 +159,9 @@ object MediaQueries {
     val (oh, ow) = (4, 5)
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        val palR = Array.tabulate(256)(v => v.toByte)
-        val palG = Array.tabulate(256)(v => ((v * 37) % 256).toByte)
-        val palB = Array.tabulate(256)(v => ((v * 91) % 256).toByte)
         it.map { id =>
-          val w = (6 + id % 9).toInt; val h = (6 + id % 5).toInt
           val nf = (1 + id % 4).toInt
-          val frames = (0 until nf).map { f =>
-            Array.tabulate(w * h)(i =>
-              ((id * 7 + f * 31 + i * 13) % 256).toByte)
-          }
-          val gif = Codecs.ImageIoCodecs.GifCodec.encodeIndexedFrames(
-            w, h, palR, palG, palB, frames)
+          val (w, h, gif) = SyntheticMedia.gifClip(id, nf)
           val meta = Codecs.AutoCodec.decode(
             Multimodal.MediaRecord(id, "video", gif))
           require(meta.n_frames == nf, s"frame count mismatch for doc $id")
@@ -292,8 +276,7 @@ object MediaQueries {
       .mapPartitions { it =>
         it.map { id =>
           val n = (64 + id % 97).toInt
-          val samples = Array.tabulate(n)(i =>
-            (((id * 31 + i.toLong * 97) % 65536) - 32768).toShort)
+          val samples = SyntheticMedia.pcmRamp(id, n)
           val wav = Codecs.WavCodec.encodePcm16(8000, 1, samples)
           val (h, back) = Codecs.WavCodec.decodePcm16(wav)
           require(h.nSampleFrames == n, s"wav sample count mismatch for doc $id")
@@ -361,10 +344,7 @@ object MediaQueries {
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
         it.flatMap { id =>
-          val w = (8 + id % 13).toInt; val h = (8 + id % 7).toInt
-          val rgb = Array.tabulate(w * h * 3)(i =>
-            ((id * 7 + i * 13) % 256).toByte)
-          val png = Codecs.ImageIoCodecs.encodeRgb("png", w, h, rgb)
+          val (_, _, png) = SyntheticMedia.pngImage(id)
           val meta = Codecs.AutoCodec.decode(
             Multimodal.MediaRecord(id, "image", png))
           val (dw, dh, back) = Codecs.ImageIoCodecs.decodeRgb(png)
@@ -406,8 +386,7 @@ object MediaQueries {
       .mapPartitions { it =>
         it.map { id =>
           val n = (64 + id % 97).toInt
-          val samples = Array.tabulate(n)(i =>
-            (((id * 31 + i.toLong * 97) % 65536) - 32768).toShort)
+          val samples = SyntheticMedia.pcmRamp(id, n)
           val wav = Codecs.WavCodec.encodePcm16(8000, 1, samples)
           val (h, back) = Codecs.WavCodec.decodePcm16(wav)
           require(h.nSampleFrames == n, s"wav sample count mismatch for doc $id")
@@ -460,8 +439,7 @@ object MediaQueries {
       .mapPartitions { it =>
         it.map { id =>
           val n = (64 + id % 97).toInt
-          def samp(i: Int): Short =
-            (((id * 31 + i.toLong * 97) % 65536) - 32768).toShort
+          val samp = SyntheticMedia.pcmRamp(id, n)
           val inter = new Array[Short](2 * n)
           var i = 0
           while (i < n) {
@@ -941,9 +919,7 @@ object MediaQueries {
     val fp = Tables.spread(Tables.documents(spark, dir).select(col("doc_id")))
       .as[Long]
       .mapPartitions { it =>
-        val palR = Array.tabulate(256)(v => v.toByte)
-        val palG = Array.tabulate(256)(v => ((v * 37) % 256).toByte)
-        val palB = Array.tabulate(256)(v => ((v * 91) % 256).toByte)
+        import SyntheticMedia.{palR, palG, palB}
         def aHash(w: Int, h: Int, px: Array[Byte]): Long = {
           val grays = new Array[Long](64)
           var total = 0L
@@ -1110,10 +1086,7 @@ object MediaQueries {
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
         it.flatMap { id =>
-          val w = (8 + id % 13).toInt; val h = (8 + id % 7).toInt
-          val rgb = Array.tabulate(w * h * 3)(i =>
-            ((id * 7 + i * 13) % 256).toByte)
-          val png = Codecs.ImageIoCodecs.encodeRgb("png", w, h, rgb)
+          val (w, h, png) = SyntheticMedia.pngImage(id)
           val (dw, dh, back) = Codecs.ImageIoCodecs.decodeRgb(png)
           require(dw == w && dh == h, s"decode dims disagree for doc $id")
           val nPx = new Array[Long](4)
@@ -1176,18 +1149,9 @@ object MediaQueries {
     import graft.operators.Codecs
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        val palR = Array.tabulate(256)(v => v.toByte)
-        val palG = Array.tabulate(256)(v => ((v * 37) % 256).toByte)
-        val palB = Array.tabulate(256)(v => ((v * 91) % 256).toByte)
         it.map { id =>
-          val w = (6 + id % 9).toInt; val h = (6 + id % 5).toInt
           val nf = (1 + id % 4).toInt
-          val frames = (0 until nf).map { f =>
-            Array.tabulate(w * h)(i =>
-              ((id * 7 + f * 31 + i * 13) % 256).toByte)
-          }
-          val gif = Codecs.ImageIoCodecs.GifCodec.encodeIndexedFrames(
-            w, h, palR, palG, palB, frames)
+          val (w, h, gif) = SyntheticMedia.gifClip(id, nf)
           val decoded = Codecs.ImageIoCodecs.GifCodec.extractAllFramesRgb(gif)
           require(decoded.length == nf, s"frame count for doc $id")
           val lums = decoded.map { case (fw, fh, rgb) =>
@@ -1258,18 +1222,9 @@ object MediaQueries {
     import graft.operators.{Codecs, Multimodal}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        val palR = Array.tabulate(256)(v => v.toByte)
-        val palG = Array.tabulate(256)(v => ((v * 37) % 256).toByte)
-        val palB = Array.tabulate(256)(v => ((v * 91) % 256).toByte)
         it.flatMap { id =>
-          val w = (6 + id % 9).toInt; val h = (6 + id % 5).toInt
           val nf = (2 + id % 7).toInt
-          val frames = (0 until nf).map { f =>
-            Array.tabulate(w * h)(i =>
-              ((id * 7 + f * 31 + i * 13) % 256).toByte)
-          }
-          val gif = Codecs.ImageIoCodecs.GifCodec.encodeIndexedFrames(
-            w, h, palR, palG, palB, frames)
+          val (w, h, gif) = SyntheticMedia.gifClip(id, nf)
           val dec = Codecs.AutoCodec.decode(
             Multimodal.MediaRecord(id, "video", gif))
           val rgb = Codecs.ImageIoCodecs.GifCodec.extractAllFramesRgb(gif)
@@ -1915,7 +1870,7 @@ object MediaQueries {
     * video reaches the exchange. */
   def m33PcmDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.{Codecs, Inter}
+    import graft.operators.Codecs
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
         it.map { id =>
@@ -1939,23 +1894,8 @@ object MediaQueries {
           }
           val mp4 = Codecs.Mp4.mux(nals, keyframes = (1 to n),
             timescale = 90000, sampleDelta = 3000, width = w, height = h)
-          // decodeGopFrames is a LAZY iterator — fold frame count
-          // into the single pass (one decoded frame in flight)
-          val dec = Inter.decodeGopFrames(mp4)
-          var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
-          var nDec = 0
-          dec.foreach { fr =>
-            nDec += 1
-            require(fr.width == w && fr.height == h,
-              s"decoded dims ${fr.width}x${fr.height} != ${w}x$h")
-            def fold(p: Array[Byte], add: Long => Unit): Unit =
-              p.foreach { b =>
-                val v = b & 0xffL
-                add(v); fp = (fp * 31 + v) % 1000000007L
-              }
-            fold(fr.y, ys += _); fold(fr.cb, cbs += _); fold(fr.cr, crs += _)
-          }
-          require(nDec == n, s"decoded $nDec of $n frames")
+          val (ys, cbs, crs, fp) =
+            SyntheticMedia.gopDigest(mp4, n, w, h, fpChroma = true)
           (id, n, w, h, ys, cbs, crs, fp)
         }
       }.toDF("doc_id", "n_frames", "width", "height", "y_sum",
@@ -2021,7 +1961,6 @@ object MediaQueries {
     import graft.operators.{Codecs, Inter}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        val zig = Array(0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
         it.map { id =>
           val n = (2 + id % 3).toInt
           val nals = (0 until n).map { f =>
@@ -2033,7 +1972,7 @@ object MediaQueries {
               else if (sel < 12) sgn
               else sgn * (2 + ((id + f * 3) % 6)).toInt
             val dc = new Array[Int](16)
-            if (lvl != 0) dc(zig(z)) = lvl
+            if (lvl != 0) dc(zigzag4x4(z)) = lvl
             Seq(Codecs.Mp4.buildI16x16Slice(
               Seq((dc, Array.fill(16)(null: Array[Int]))), 1, 1,
               frameNum = 0, frameNumBits = 4, idrPicId = f % 8))
@@ -2141,10 +2080,9 @@ object MediaQueries {
     * partition-local per document, one row out per doc. */
   def m35CavlcFullDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.{Codecs, Inter}
+    import graft.operators.Codecs
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        val zig = Array(0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
         it.map { id =>
           val n = (2 + id % 3).toInt
           val nals = (0 until n).map { f =>
@@ -2153,7 +2091,7 @@ object MediaQueries {
             val ld = (if ((id + f) % 2 == 0) 1 else -1) *
               (1 + ((id + f * 3) % 7)).toInt
             val dc = new Array[Int](16)
-            dc(zig(z)) = ld
+            dc(zigzag4x4(z)) = ld
             def lvl(b: Int, k: Int): Int =
               (if ((id + f + b + k) % 2 == 0) 1 else -1) *
                 (1 + ((id + f + b * 3 + k * 5) % 9)).toInt
@@ -2180,20 +2118,8 @@ object MediaQueries {
           }
           val mp4 = Codecs.Mp4.mux(nals, keyframes = (1 to n),
             timescale = 90000, sampleDelta = 3000, width = 16, height = 16)
-          var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
-          var nDec = 0
-          Inter.decodeGopFrames(mp4).foreach { fr =>
-            nDec += 1
-            require(fr.width == 16 && fr.height == 16,
-              s"decoded dims ${fr.width}x${fr.height}")
-            fr.y.foreach { b =>
-              val v = b & 0xffL
-              ys += v; fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cb.foreach(b => cbs += (b & 0xffL))
-            fr.cr.foreach(b => crs += (b & 0xffL))
-          }
-          require(nDec == n, s"decoded $nDec of $n frames")
+          val (ys, cbs, crs, fp) =
+            SyntheticMedia.gopDigest(mp4, n, 16, 16, fpChroma = false)
           (id, n, 16, 16, ys, cbs, crs, fp)
         }
       }.toDF("doc_id", "n_frames", "width", "height", "y_sum",
@@ -2310,12 +2236,10 @@ object MediaQueries {
     * partition-local per document, one row out per doc. */
   def m36MixedIntraDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.{Codecs, Inter}
+    import graft.operators.Codecs
     import Codecs.Mp4.{I16Mb, I4Mb}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        val zig = Array(0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
-        def sgn(x: Long): Int = if (x % 2 == 0) 1 else -1
         it.map { id =>
           val n = (2 + id % 3).toInt
           val nals = (0 until n).map { f =>
@@ -2345,7 +2269,7 @@ object MediaQueries {
             val zd = ((id * 13 + f * 11) % 16).toInt
             val ld16 = sgn(id + f + 1) * (1 + ((id + f) % 7)).toInt
             val dc16 = new Array[Int](16)
-            dc16(zig(zd)) = ld16
+            dc16(zigzag4x4(zd)) = ld16
             val ba = ((id * 7 + f) % 16).toInt
             val s16 = 1 + ((id + f + 1) % 3).toInt
             val p16 = 1 + ((id * 3 + f + 2) % 4).toInt
@@ -2361,20 +2285,8 @@ object MediaQueries {
           }
           val mp4 = Codecs.Mp4.mux(nals, keyframes = (1 to n),
             timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
-          var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
-          var nDec = 0
-          Inter.decodeGopFrames(mp4).foreach { fr =>
-            nDec += 1
-            require(fr.width == 32 && fr.height == 16,
-              s"decoded dims ${fr.width}x${fr.height}")
-            fr.y.foreach { b =>
-              val v = b & 0xffL
-              ys += v; fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cb.foreach(b => cbs += (b & 0xffL))
-            fr.cr.foreach(b => crs += (b & 0xffL))
-          }
-          require(nDec == n, s"decoded $nDec of $n frames")
+          val (ys, cbs, crs, fp) =
+            SyntheticMedia.gopDigest(mp4, n, 32, 16, fpChroma = false)
           (id, n, 32, 16, ys, cbs, crs, fp)
         }
       }.toDF("doc_id", "n_frames", "width", "height", "y_sum",
@@ -2526,18 +2438,16 @@ object MediaQueries {
     * partition-local per document, one row out per doc. */
   def m37IntraModes(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.{Codecs, Inter}
+    import graft.operators.Codecs
     import Codecs.Mp4.{I16Mb, I4Mb}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        val zig = Array(0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
-        def sgn(x: Long): Int = if (x % 2 == 0) 1 else -1
         it.map { id =>
           val n = (2 + id % 3).toInt
           val nals = (0 until n).map { f =>
             // MB0: I_16x16 DC-pred, lone DC + one strided AC block
             val dc0 = new Array[Int](16)
-            dc0(zig(((id * 13 + f * 11) % 16).toInt)) =
+            dc0(zigzag4x4(((id * 13 + f * 11) % 16).toInt)) =
               sgn(id + f) * (1 + ((id + f * 3) % 7)).toInt
             val ba0 = ((id * 7 + f) % 16).toInt
             val s0 = 1 + ((id + f) % 3).toInt
@@ -2548,11 +2458,11 @@ object MediaQueries {
             val ac0 = Array.fill(16)(null: Array[Int]); ac0(ba0) = a0
             // MB1: I_16x16 HORIZONTAL, lone-DC residual (mb_type 14)
             val dc1 = new Array[Int](16)
-            dc1(zig(((id * 7 + f * 3) % 16).toInt)) =
+            dc1(zigzag4x4(((id * 7 + f * 3) % 16).toInt)) =
               sgn(id + f + 1) * (1 + ((id * 2 + f) % 7)).toInt
             // MB2: I_16x16 VERTICAL, lone-DC residual (mb_type 13)
             val dc2 = new Array[Int](16)
-            dc2(zig(((id * 11 + f * 5) % 16).toInt)) =
+            dc2(zigzag4x4(((id * 11 + f * 5) % 16).toInt)) =
               sgn(id + f) * (1 + ((id * 3 + f * 2) % 7)).toInt
             // MB3: plane or an I_4x4 diagonal walk, by frame parity
             val mb3: Codecs.Mp4.IntraMb =
@@ -2572,20 +2482,8 @@ object MediaQueries {
           }
           val mp4 = Codecs.Mp4.mux(nals, keyframes = (1 to n),
             timescale = 90000, sampleDelta = 3000, width = 32, height = 32)
-          var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
-          var nDec = 0
-          Inter.decodeGopFrames(mp4).foreach { fr =>
-            nDec += 1
-            require(fr.width == 32 && fr.height == 32,
-              s"decoded dims ${fr.width}x${fr.height}")
-            fr.y.foreach { b =>
-              val v = b & 0xffL
-              ys += v; fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cb.foreach(b => cbs += (b & 0xffL))
-            fr.cr.foreach(b => crs += (b & 0xffL))
-          }
-          require(nDec == n, s"decoded $nDec of $n frames")
+          val (ys, cbs, crs, fp) =
+            SyntheticMedia.gopDigest(mp4, n, 32, 32, fpChroma = false)
           (id, n, 32, 32, ys, cbs, crs, fp)
         }
       }.toDF("doc_id", "n_frames", "width", "height", "y_sum",
@@ -2838,12 +2736,10 @@ object MediaQueries {
     * partition-local per document, one row out per doc. */
   def m38ChromaResiduals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.{Codecs, Inter}
+    import graft.operators.Codecs
     import Codecs.Mp4.{ChromaRes, I16Mb, I4Mb}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        val zig = Array(0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
-        def sgn(x: Long): Int = if (x % 2 == 0) 1 else -1
         it.map { id =>
           val n = (2 + id % 3).toInt
           val q = (id % 2).toInt
@@ -2876,7 +2772,7 @@ object MediaQueries {
               if (q == 0) {
                 // I_16x16: lone luma DC + one strided AC block
                 val dcY = new Array[Int](16)
-                dcY(zig(((id * 13 + f * 11) % 16).toInt)) =
+                dcY(zigzag4x4(((id * 13 + f * 11) % 16).toInt)) =
                   sgn(id + f) * (1 + ((id + f * 3) % 7)).toInt
                 val baY = ((id * 7 + f) % 16).toInt
                 val sY = 1 + ((id + f) % 3).toInt
@@ -2908,26 +2804,8 @@ object MediaQueries {
           }
           val mp4 = Codecs.Mp4.mux(nals, keyframes = (1 to n),
             timescale = 90000, sampleDelta = 3000, width = 16, height = 16)
-          var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
-          var nDec = 0
-          Inter.decodeGopFrames(mp4).foreach { fr =>
-            nDec += 1
-            require(fr.width == 16 && fr.height == 16,
-              s"decoded dims ${fr.width}x${fr.height}")
-            fr.y.foreach { b =>
-              val v = b & 0xffL; ys += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cb.foreach { b =>
-              val v = b & 0xffL; cbs += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cr.foreach { b =>
-              val v = b & 0xffL; crs += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-          }
-          require(nDec == n, s"decoded $nDec of $n frames")
+          val (ys, cbs, crs, fp) =
+            SyntheticMedia.gopDigest(mp4, n, 16, 16, fpChroma = true)
           (id, n, 16, 16, ys, cbs, crs, fp)
         }
       }.toDF("doc_id", "n_frames", "width", "height", "y_sum",
@@ -3146,11 +3024,10 @@ object MediaQueries {
     * partition-local per document, one row out per doc. */
   def m39Deblock(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.{Codecs, Inter}
+    import graft.operators.Codecs
     import Codecs.Mp4.{ChromaRes, I16Mb, I4Mb}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        def sgn(x: Long): Int = if (x % 2 == 0) 1 else -1
         // lone-DC magnitudes sweeping the luma step δ = (52m+32)>>6
         // through ±{1,2,3,4 | strong} {5,6,7,10,13 | weak} {15,16 | off}
         val lmags = Array(1, 2, 4, 5, 6, 7, 8, 12, 16, 18, 20)
@@ -3203,26 +3080,8 @@ object MediaQueries {
           }
           val mp4 = Codecs.Mp4.mux(nals, keyframes = (1 to n),
             timescale = 90000, sampleDelta = 3000, width = w, height = 16)
-          var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
-          var nDec = 0
-          Inter.decodeGopFrames(mp4).foreach { fr =>
-            nDec += 1
-            require(fr.width == w && fr.height == 16,
-              s"decoded dims ${fr.width}x${fr.height}")
-            fr.y.foreach { b =>
-              val v = b & 0xffL; ys += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cb.foreach { b =>
-              val v = b & 0xffL; cbs += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cr.foreach { b =>
-              val v = b & 0xffL; crs += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-          }
-          require(nDec == n, s"decoded $nDec of $n frames")
+          val (ys, cbs, crs, fp) =
+            SyntheticMedia.gopDigest(mp4, n, w, 16, fpChroma = true)
           (id, n, w, 16, ys, cbs, crs, fp)
         }
       }.toDF("doc_id", "n_frames", "width", "height", "y_sum",
@@ -3251,10 +3110,9 @@ object MediaQueries {
     * partition-local per document, one row out per doc. */
   def m40CabacDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.{Cabac, Codecs, Inter}
+    import graft.operators.{Cabac, Codecs}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        val zig = Array(0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
         val cabacPps = Cabac.buildPps()
         it.map { id =>
           val n = (2 + id % 3).toInt
@@ -3264,7 +3122,7 @@ object MediaQueries {
             val ld = (if ((id + f) % 2 == 0) 1 else -1) *
               (1 + ((id + f * 3) % 7)).toInt
             val dc = new Array[Int](16)
-            dc(zig(z)) = ld
+            dc(zigzag4x4(z)) = ld
             def lvl(b: Int, k: Int): Int =
               (if ((id + f + b + k) % 2 == 0) 1 else -1) *
                 (1 + ((id + f + b * 3 + k * 5) % 9)).toInt
@@ -3292,20 +3150,8 @@ object MediaQueries {
           val mp4 = Codecs.Mp4.mux(nals, keyframes = (1 to n),
             timescale = 90000, sampleDelta = 3000, width = 16, height = 16,
             ppsOverride = cabacPps)
-          var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
-          var nDec = 0
-          Inter.decodeGopFrames(mp4).foreach { fr =>
-            nDec += 1
-            require(fr.width == 16 && fr.height == 16,
-              s"decoded dims ${fr.width}x${fr.height}")
-            fr.y.foreach { b =>
-              val v = b & 0xffL
-              ys += v; fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cb.foreach(b => cbs += (b & 0xffL))
-            fr.cr.foreach(b => crs += (b & 0xffL))
-          }
-          require(nDec == n, s"decoded $nDec of $n frames")
+          val (ys, cbs, crs, fp) =
+            SyntheticMedia.gopDigest(mp4, n, 16, 16, fpChroma = false)
           (id, n, 16, 16, ys, cbs, crs, fp)
         }
       }.toDF("doc_id", "n_frames", "width", "height", "y_sum",
@@ -3349,7 +3195,6 @@ object MediaQueries {
     import Codecs.Mp4.{ChromaRes, I16Mb}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        def sgn(x: Long): Int = if (x % 2 == 0) 1 else -1
         val lmags = Array(1, 2, 4, 5, 6, 7, 8, 12, 16, 18, 20)
         val cmags = Array(1, 2, 3, 4, 5, 6, 8, 10)
         val shifts = Array(-16, -12, -8, -4, 4, 8, 12, 16)
@@ -3382,26 +3227,8 @@ object MediaQueries {
           val mp4 = Codecs.Mp4.mux(
             Seq(Seq(iNal)) ++ pNals.map(Seq(_)), keyframes = Seq(1),
             timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
-          var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
-          var nDec = 0
-          Inter.decodeGopFrames(mp4).foreach { fr =>
-            nDec += 1
-            require(fr.width == 32 && fr.height == 16,
-              s"decoded dims ${fr.width}x${fr.height}")
-            fr.y.foreach { b =>
-              val v = b & 0xffL; ys += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cb.foreach { b =>
-              val v = b & 0xffL; cbs += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cr.foreach { b =>
-              val v = b & 0xffL; crs += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-          }
-          require(nDec == n, s"decoded $nDec of $n frames")
+          val (ys, cbs, crs, fp) =
+            SyntheticMedia.gopDigest(mp4, n, 32, 16, fpChroma = true)
           (id, n, 32, 16, ys, cbs, crs, fp)
         }
       }.toDF("doc_id", "n_frames", "width", "height", "y_sum",
@@ -3554,7 +3381,6 @@ object MediaQueries {
     import Codecs.Mp4.{ChromaRes, I16Mb}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        def sgn(x: Long): Int = if (x % 2 == 0) 1 else -1
         val lmags = Array(1, 2, 4, 5, 6, 7, 8, 12, 16, 18, 20)
         val cmags = Array(1, 2, 3, 4, 5, 6, 8, 10)
         // quarter-pel: every xFrac class, both signs, incl. full-pel
@@ -3590,26 +3416,8 @@ object MediaQueries {
           val mp4 = Codecs.Mp4.mux(
             Seq(Seq(iNal)) ++ pNals.map(Seq(_)), keyframes = Seq(1),
             timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
-          var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
-          var nDec = 0
-          Inter.decodeGopFrames(mp4).foreach { fr =>
-            nDec += 1
-            require(fr.width == 32 && fr.height == 16,
-              s"decoded dims ${fr.width}x${fr.height}")
-            fr.y.foreach { b =>
-              val v = b & 0xffL; ys += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cb.foreach { b =>
-              val v = b & 0xffL; cbs += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cr.foreach { b =>
-              val v = b & 0xffL; crs += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-          }
-          require(nDec == n, s"decoded $nDec of $n frames")
+          val (ys, cbs, crs, fp) =
+            SyntheticMedia.gopDigest(mp4, n, 32, 16, fpChroma = true)
           (id, n, 32, 16, ys, cbs, crs, fp)
         }
       }.toDF("doc_id", "n_frames", "width", "height", "y_sum",
@@ -3753,7 +3561,6 @@ object MediaQueries {
     import Codecs.Mp4.{ChromaRes, I16Mb}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        def sgn(x: Long): Int = if (x % 2 == 0) 1 else -1
         val lmags = Array(1, 2, 4, 5, 6, 7, 8, 12, 16, 18, 20)
         val cmags = Array(1, 2, 3, 4, 5, 6, 8, 10)
         val dxs = Array(-10, -7, -6, -5, -3, -2, 2, 3, 5, 6, 7, 8)
@@ -3808,26 +3615,8 @@ object MediaQueries {
           val mp4 = Codecs.Mp4.mux(
             Seq(Seq(iNal)) ++ pNals.map(Seq(_)), keyframes = Seq(1),
             timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
-          var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
-          var nDec = 0
-          Inter.decodeGopFrames(mp4).foreach { fr =>
-            nDec += 1
-            require(fr.width == 32 && fr.height == 16,
-              s"decoded dims ${fr.width}x${fr.height}")
-            fr.y.foreach { b =>
-              val v = b & 0xffL; ys += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cb.foreach { b =>
-              val v = b & 0xffL; cbs += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cr.foreach { b =>
-              val v = b & 0xffL; crs += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-          }
-          require(nDec == n, s"decoded $nDec of $n frames")
+          val (ys, cbs, crs, fp) =
+            SyntheticMedia.gopDigest(mp4, n, 32, 16, fpChroma = true)
           (id, n, 32, 16, ys, cbs, crs, fp)
         }
       }.toDF("doc_id", "n_frames", "width", "height", "y_sum",
@@ -3986,10 +3775,9 @@ object MediaQueries {
     * inside one partition pass, one row out. */
   def m44CabacChroma(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.{Cabac, Codecs, Inter}
+    import graft.operators.{Cabac, Codecs}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
-        def sgn(x: Long): Int = if (x % 2 == 0) 1 else -1
         val lmags = Array(1, 2, 4, 5, 6, 7, 8, 12, 16, 18, 20)
         val cmags = Array(1, 2, 3, 4, 5, 6, 8, 10)
         val noAc = Array.fill(16)(null: Array[Int])
@@ -4019,26 +3807,8 @@ object MediaQueries {
           val mp4 = Codecs.Mp4.mux(nals, keyframes = (1 to n),
             timescale = 90000, sampleDelta = 3000, width = 32, height = 16,
             ppsOverride = cabacPps)
-          var ys = 0L; var cbs = 0L; var crs = 0L; var fp = 0L
-          var nDec = 0
-          Inter.decodeGopFrames(mp4).foreach { fr =>
-            nDec += 1
-            require(fr.width == 32 && fr.height == 16,
-              s"decoded dims ${fr.width}x${fr.height}")
-            fr.y.foreach { b =>
-              val v = b & 0xffL; ys += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cb.foreach { b =>
-              val v = b & 0xffL; cbs += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-            fr.cr.foreach { b =>
-              val v = b & 0xffL; crs += v
-              fp = (fp * 31 + v) % 1000000007L
-            }
-          }
-          require(nDec == n, s"decoded $nDec of $n frames")
+          val (ys, cbs, crs, fp) =
+            SyntheticMedia.gopDigest(mp4, n, 32, 16, fpChroma = true)
           (id, n, 32, 16, ys, cbs, crs, fp)
         }
       }.toDF("doc_id", "n_frames", "width", "height", "y_sum",
