@@ -691,7 +691,7 @@ object Cabac {
     if (deblockIdc != 1)
       Deblock.filterIntra(y, cb, cr, w, 16, mbW, 1, Array.fill(mbW)(qp),
         pps.chroma_qp_index_offset, offA, offB)
-    PcmFrame(w, 16, y.map(_.toByte), cb.map(_.toByte), cr.map(_.toByte))
+    PcmFrame(w, 16, Mp4.toBytes(y), Mp4.toBytes(cb), Mp4.toBytes(cr))
   }
 
   /** A minimal CABAC PPS (the CAVLC one with

@@ -202,26 +202,46 @@ object Codecs {
       (h.width, h.height, yuv420ToRgb(d, offs(idx), h.width, h.height))
     }
 
+    // The BT.601 full-range double expressions, evaluated once per
+    // operand: R and B as byte tables indexed by (Y << 8 | Cr or Cb),
+    // G's two chroma products per chroma value, which the kernel
+    // subtracts from Y in the expression's order (the same doubles)
+    private val rTable = Array.tabulate(256 * 256) { i =>
+      clamp((i >> 8) + 1.402 * ((i & 0xff) - 128.0))
+    }
+    private val bTable = Array.tabulate(256 * 256) { i =>
+      clamp((i >> 8) + 1.772 * ((i & 0xff) - 128.0))
+    }
+    private val gCb = Array.tabulate(256)(v => 0.344136 * (v - 128.0))
+    private val gCr = Array.tabulate(256)(v => 0.714136 * (v - 128.0))
+
     /** The BT.601 full-range 4:2:0→RGB conversion shared by the Y4M
-      * frame extractor and the H.264 I_PCM pixel path: planar
-      * Y + Cb + Cr at `base`, chroma upsampled by replication. */
+      * frame extractor and the H.264 pixel path: planar Y + Cb + Cr
+      * packed at `base`, chroma upsampled by replication. */
     def yuv420ToRgb(d: Array[Byte], base: Int, w: Int,
+        ht: Int): Array[Byte] =
+      yuv420ToRgb(d, base, d, base + w * ht, d, base + w * ht + w * ht / 4, w, ht)
+
+    /** The one 4:2:0→RGB kernel: Y, Cb and Cr each read from its own
+      * (array, offset), so decoded planes convert without a packed
+      * copy. */
+    def yuv420ToRgb(yP: Array[Byte], yOff: Int, cbP: Array[Byte],
+        cbOff: Int, crP: Array[Byte], crOff: Int, w: Int,
         ht: Int): Array[Byte] = {
-      val uBase = base + w * ht
-      val vBase = uBase + w * ht / 4
       val out = new Array[Byte](w * ht * 3)
       var y = 0
       while (y < ht) {
+        val cRow = (y / 2) * (w / 2)
         var x = 0
         while (x < w) {
-          val yy = (d(base + y * w + x) & 0xff).toDouble
-          val ci = (y / 2) * (w / 2) + (x / 2)
-          val cb = (d(uBase + ci) & 0xff) - 128.0
-          val cr = (d(vBase + ci) & 0xff) - 128.0
+          val yy = yP(yOff + y * w + x) & 0xff
+          val ci = cRow + (x / 2)
+          val cb = cbP(cbOff + ci) & 0xff
+          val cr = crP(crOff + ci) & 0xff
           val t = (y * w + x) * 3
-          out(t) = clamp(yy + 1.402 * cr)
-          out(t + 1) = clamp(yy - 0.344136 * cb - 0.714136 * cr)
-          out(t + 2) = clamp(yy + 1.772 * cb)
+          out(t) = rTable((yy << 8) | cr)
+          out(t + 1) = clamp(yy.toDouble - gCb(cb) - gCr(cr))
+          out(t + 2) = bTable((yy << 8) | cb)
           x += 1
         }
         y += 1
@@ -1295,6 +1315,15 @@ object Codecs {
     final case class PcmFrame(width: Int, height: Int,
         y: Array[Byte], cb: Array[Byte], cr: Array[Byte])
 
+    /** Narrow a reconstructed 0..255 sample plane to the bytes a
+      * [[PcmFrame]] holds. */
+    private[operators] def toBytes(p: Array[Int]): Array[Byte] = {
+      val out = new Array[Byte](p.length)
+      var i = 0
+      while (i < p.length) { out(i) = p(i).toByte; i += 1 }
+      out
+    }
+
     /** Slice-header deblocking tail (§7.3.3) under the
       * control-present PPS: disable_deblocking_filter_idc, plus the
       * zero α/β offsets when the filter runs (idc != 1). */
@@ -2232,10 +2261,10 @@ object Codecs {
       w.u(0L, 1); w.u(0L, 1)
       w.se(0L)
       writeDeblockHeader(w, deblockIdc)
-      val grid = Array.fill(mbH * 4, mbW * 4)(0)
+      val grid = Array.ofDim[Int](mbH * 4, mbW * 4)
       val modeGrid = Array.fill(mbH * 4, mbW * 4)(2)
-      val cbGrid = Array.fill(mbH * 2, mbW * 2)(0)
-      val crGrid = Array.fill(mbH * 2, mbW * 2)(0)
+      val cbGrid = Array.ofDim[Int](mbH * 2, mbW * 2)
+      val crGrid = Array.ofDim[Int](mbH * 2, mbW * 2)
       // chroma residual writes (§7.3.5.3.3 order: both DC blocks,
       // then Cb's 4 AC blocks, then Cr's) — shared by both MB kinds
       def writeChroma(chroma: ChromaRes, mbx: Int, mby: Int): Unit = {
@@ -2425,13 +2454,13 @@ object Codecs {
       // per-MB QPY — the §8.7 filter's qPp/qPq inputs (I_PCM
       // macroblocks deblock at QPY 0, which zeroes α/β around them)
       val qpByMb = Array.fill(sps.mb_width * sps.mb_height)(qpSlice)
-      val grid = Array.fill(sps.mb_height * 4, sps.mb_width * 4)(0)
+      val grid = Array.ofDim[Int](sps.mb_height * 4, sps.mb_width * 4)
       // §8.3.1.1 mode predictor grid: non-I_4x4 macroblocks (and
       // anything not yet decoded) predict DC (2)
       val modeGrid = Array.fill(sps.mb_height * 4, sps.mb_width * 4)(2)
       // per-component chroma 4x4 TotalCoeff grids (§9.2.1 nC)
-      val cbGrid = Array.fill(sps.mb_height * 2, sps.mb_width * 2)(0)
-      val crGrid = Array.fill(sps.mb_height * 2, sps.mb_width * 2)(0)
+      val cbGrid = Array.ofDim[Int](sps.mb_height * 2, sps.mb_width * 2)
+      val crGrid = Array.ofDim[Int](sps.mb_height * 2, sps.mb_width * 2)
       // chroma residual parse (§7.3.5.3.3 order: Cb DC, Cr DC, then
       // Cb's 4 AC blocks, then Cr's) — shared by both MB kinds
       def readChroma(cbpChroma: Int, mbx: Int, mby: Int)
@@ -2755,8 +2784,7 @@ object Codecs {
         Deblock.filterIntra(y, cbP, crP, wpx, hpx,
           sps.mb_width, sps.mb_height, qpByMb,
           pps.chroma_qp_index_offset, offA, offB)
-      PcmFrame(wpx, hpx, y.map(_.toByte), cbP.map(_.toByte),
-        crP.map(_.toByte))
+      PcmFrame(wpx, hpx, toBytes(y), toBytes(cbP), toBytes(crP))
     }
 
     // ---- fixture writer ------------------------------------------

@@ -105,92 +105,130 @@ object Inter {
   @inline private def clip255(v: Int): Int =
     if (v < 0) 0 else if (v > 255) 255 else v
 
-  /** QUARTER-sample luma MC for one MB (§8.4.2.2.1, the m42 rung):
-    * half-sample positions through the 6-tap (1,−5,20,20,−5,1)
-    * filter — the centre position j from UNROUNDED horizontal
-    * intermediates, (j1+512)≫10 — and quarter positions as the
-    * rounded averages of Table 8-12 (a/c/d/n against integer
-    * samples, e/g/p/r against the two flanking halves, f/i/k/q
-    * against j). Reference sample positions are clamped to the
-    * picture per §8.4.2.2. `mvx`/`mvy` are quarter-pel. */
-  private def mcLuma(ref: Array[Byte], w: Int, h: Int, mx: Int,
-      my: Int, mvx: Int, mvy: Int, out: Array[Int]): Unit = {
-    val dx = mvx >> 2; val dy = mvy >> 2 // floor of the integer part
-    val xF = mvx & 3; val yF = mvy & 3
-    @inline def L(xx: Int, yy: Int): Int =
-      ref(clampI(yy, h - 1) * w + clampI(xx, w - 1)) & 0xff
-    @inline def hsum(xx: Int, yy: Int): Int =
-      L(xx - 2, yy) - 5 * L(xx - 1, yy) + 20 * L(xx, yy) +
-        20 * L(xx + 1, yy) - 5 * L(xx + 2, yy) + L(xx + 3, yy)
-    @inline def vsum(xx: Int, yy: Int): Int =
-      L(xx, yy - 2) - 5 * L(xx, yy - 1) + 20 * L(xx, yy) +
-        20 * L(xx, yy + 1) - 5 * L(xx, yy + 2) + L(xx, yy + 3)
-    @inline def halfH(xx: Int, yy: Int): Int =
-      clip255((hsum(xx, yy) + 16) >> 5)
-    @inline def halfV(xx: Int, yy: Int): Int =
-      clip255((vsum(xx, yy) + 16) >> 5)
-    @inline def centerJ(xx: Int, yy: Int): Int = {
-      val j1 = hsum(xx, yy - 2) - 5 * hsum(xx, yy - 1) +
-        20 * hsum(xx, yy) + 20 * hsum(xx, yy + 1) -
-        5 * hsum(xx, yy + 2) + hsum(xx, yy + 3)
-      clip255((j1 + 512) >> 10)
-    }
-    @inline def avg(a: Int, b: Int): Int = (a + b + 1) >> 1
-    var y = 0
-    while (y < 16) {
-      var x = 0
-      while (x < 16) {
-        val xx = mx + x + dx; val yy = my + y + dy
-        val v = (xF, yF) match {
-          case (0, 0) => L(xx, yy)
-          case (2, 0) => halfH(xx, yy)
-          case (0, 2) => halfV(xx, yy)
-          case (2, 2) => centerJ(xx, yy)
-          case (1, 0) => avg(L(xx, yy), halfH(xx, yy))
-          case (3, 0) => avg(halfH(xx, yy), L(xx + 1, yy))
-          case (0, 1) => avg(L(xx, yy), halfV(xx, yy))
-          case (0, 3) => avg(halfV(xx, yy), L(xx, yy + 1))
-          case (2, 1) => avg(halfH(xx, yy), centerJ(xx, yy))
-          case (2, 3) => avg(centerJ(xx, yy), halfH(xx, yy + 1))
-          case (1, 2) => avg(halfV(xx, yy), centerJ(xx, yy))
-          case (3, 2) => avg(centerJ(xx, yy), halfV(xx + 1, yy))
-          case (1, 1) => avg(halfH(xx, yy), halfV(xx, yy))
-          case (3, 1) => avg(halfH(xx, yy), halfV(xx + 1, yy))
-          case (1, 3) => avg(halfH(xx, yy + 1), halfV(xx, yy))
-          case (3, 3) => avg(halfH(xx, yy + 1), halfV(xx + 1, yy))
-          case _ => throw new IllegalStateException("unreachable")
-        }
-        out((my + y) * w + mx + x) = v
-        x += 1
+  /** Copy the n×n reference block whose top-left sample is (x0, y0)
+    * into `dst` (row stride n), each coordinate clamped to the
+    * picture per §8.4.2.2 — the one clamp a block's MC needs. */
+  private def gather(ref: Array[Byte], w: Int, h: Int, x0: Int, y0: Int,
+      n: Int, dst: Array[Int]): Unit = {
+    // most windows lie inside the picture's columns: copy those
+    // rows without the per-sample column clamp
+    val inside = x0 >= 0 && x0 + n <= w
+    var r = 0
+    while (r < n) {
+      val row = clampI(y0 + r, h - 1) * w
+      var c = 0
+      if (inside) while (c < n) { dst(r * n + c) = ref(row + x0 + c) & 0xff; c += 1 }
+      else while (c < n) {
+        dst(r * n + c) = ref(row + clampI(x0 + c, w - 1)) & 0xff; c += 1
       }
-      y += 1
+      r += 1
     }
   }
 
-  /** §8.4.2.2.2 chroma eighth-sample bilinear MC for one MB's 8×8
-    * chroma block. `mvx`/`mvy` are the LUMA quarter-pel MV. */
-  private def mcChroma(ref: Array[Byte], cw: Int, ch: Int, cx: Int,
-      cy: Int, mvx: Int, mvy: Int, out: Array[Int]): Unit = {
-    val bx = mvx >> 3; val by = mvy >> 3 // floor shifts (Java >>)
-    val xF = mvx & 7; val yF = mvy & 7
-    var y = 0
-    while (y < 8) {
-      var x = 0
-      while (x < 8) {
-        val x0 = clampI(cx + x + bx, cw - 1)
-        val x1 = clampI(cx + x + bx + 1, cw - 1)
-        val y0 = clampI(cy + y + by, ch - 1)
-        val y1 = clampI(cy + y + by + 1, ch - 1)
-        val a = ref(y0 * cw + x0) & 0xff
-        val b = ref(y0 * cw + x1) & 0xff
-        val c = ref(y1 * cw + x0) & 0xff
-        val d = ref(y1 * cw + x1) & 0xff
-        out((cy + y) * cw + cx + x) =
-          ((8 - xF) * (8 - yF) * a + xF * (8 - yF) * b +
-            (8 - xF) * yF * c + xF * yF * d + 32) >> 6
-        x += 1
+  /** The motion-compensation kernels plus their scratch windows: one
+    * instance per P slice, reused by every macroblock of it. */
+  private[graft] final class Mc {
+    private val win = new Array[Int](21 * 21) // luma window, stride 21
+    private val hs = new Array[Int](21 * 16)  // unrounded row 6-tap sums
+    private val cwin = new Array[Int](9 * 9)  // chroma window, stride 9
+
+    /** QUARTER-sample luma MC for one MB (§8.4.2.2.1, the m42 rung):
+      * half-sample positions through the 6-tap (1,−5,20,20,−5,1)
+      * filter — the centre position j from UNROUNDED horizontal
+      * intermediates, (j1+512)≫10 — and quarter positions as the
+      * rounded averages of Table 8-12 (a/c/d/n against integer
+      * samples, e/g/p/r against the two flanking halves, f/i/k/q
+      * against j). The 21×21 window the 6-tap reaches is gathered
+      * once, clamped to the picture per §8.4.2.2; the row sums are
+      * filtered only when the fraction needs b or j. `mvx`/`mvy` are
+      * quarter-pel. */
+    def luma(ref: Array[Byte], w: Int, h: Int, mx: Int, my: Int,
+        mvx: Int, mvy: Int, out: Array[Int]): Unit = {
+      val xF = mvx & 3; val yF = mvy & 3
+      // window (0, 0) is the sample two left of and two above the
+      // MB's integer-displaced top-left, so pixel (x, y)'s integer
+      // sample G sits at window (x + 2, y + 2)
+      gather(ref, w, h, mx + (mvx >> 2) - 2, my + (mvy >> 2) - 2, 21, win)
+      if (xF != 0) {
+        var r = 0
+        while (r < 21) {
+          var x = 0
+          while (x < 16) {
+            val p = r * 21 + x
+            hs(r * 16 + x) = win(p) - 5 * win(p + 1) + 20 * win(p + 2) +
+              20 * win(p + 3) - 5 * win(p + 4) + win(p + 5)
+            x += 1
+          }
+          r += 1
+        }
       }
-      y += 1
+      @inline def g(x: Int, y: Int): Int = win((y + 2) * 21 + x + 2)
+      // b: horizontal half at window row r
+      @inline def b(x: Int, r: Int): Int = clip255((hs(r * 16 + x) + 16) >> 5)
+      // h: vertical half at window column x + 2
+      @inline def hv(x: Int, y: Int): Int = {
+        val p = y * 21 + x + 2
+        clip255((win(p) - 5 * win(p + 21) + 20 * win(p + 42) +
+          20 * win(p + 63) - 5 * win(p + 84) + win(p + 105) + 16) >> 5)
+      }
+      @inline def j(x: Int, y: Int): Int = {
+        val p = y * 16 + x
+        clip255((hs(p) - 5 * hs(p + 16) + 20 * hs(p + 32) +
+          20 * hs(p + 48) - 5 * hs(p + 64) + hs(p + 80) + 512) >> 10)
+      }
+      @inline def avg(a: Int, c: Int): Int = (a + c + 1) >> 1
+      // 4·yFrac + xFrac runs through Table 8-12's sample names in
+      // order: G a b c, d e f g, h i j k, n p q r
+      val frac = yF * 4 + xF
+      var y = 0
+      while (y < 16) {
+        var x = 0
+        while (x < 16) {
+          val v = frac match {
+            case 0 => g(x, y)
+            case 1 => avg(g(x, y), b(x, y + 2))
+            case 2 => b(x, y + 2)
+            case 3 => avg(b(x, y + 2), g(x + 1, y))
+            case 4 => avg(g(x, y), hv(x, y))
+            case 5 => avg(b(x, y + 2), hv(x, y))
+            case 6 => avg(b(x, y + 2), j(x, y))
+            case 7 => avg(b(x, y + 2), hv(x + 1, y))
+            case 8 => hv(x, y)
+            case 9 => avg(hv(x, y), j(x, y))
+            case 10 => j(x, y)
+            case 11 => avg(j(x, y), hv(x + 1, y))
+            case 12 => avg(hv(x, y), g(x, y + 1))
+            case 13 => avg(b(x, y + 3), hv(x, y))
+            case 14 => avg(j(x, y), b(x, y + 3))
+            case 15 => avg(b(x, y + 3), hv(x + 1, y))
+          }
+          out((my + y) * w + mx + x) = v
+          x += 1
+        }
+        y += 1
+      }
+    }
+
+    /** §8.4.2.2.2 chroma eighth-sample bilinear MC for one MB's 8×8
+      * chroma block over its clamped 9×9 window. `mvx`/`mvy` are the
+      * LUMA quarter-pel MV. */
+    def chroma(ref: Array[Byte], cw: Int, ch: Int, cx: Int, cy: Int,
+        mvx: Int, mvy: Int, out: Array[Int]): Unit = {
+      val xF = mvx & 7; val yF = mvy & 7
+      gather(ref, cw, ch, cx + (mvx >> 3), cy + (mvy >> 3), 9, cwin)
+      val wa = (8 - xF) * (8 - yF); val wb = xF * (8 - yF)
+      val wc = (8 - xF) * yF; val wd = xF * yF
+      var y = 0
+      while (y < 8) {
+        var x = 0
+        while (x < 8) {
+          val p = y * 9 + x
+          out((cy + y) * cw + cx + x) = (wa * cwin(p) + wb * cwin(p + 1) +
+            wc * cwin(p + 9) + wd * cwin(p + 10) + 32) >> 6
+          x += 1
+        }
+        y += 1
+      }
     }
   }
 
@@ -218,7 +256,7 @@ object Inter {
     val st = new Array[Nb](mbW * mbH)
     // §9.2.1 nC grid (TotalCoeff per 4×4) across the slice's coded
     // residual blocks; skipped / residual-free MBs contribute 0
-    val grid = Array.fill(mbH * 4, mbW * 4)(0)
+    val grid = Array.ofDim[Int](mbH * 4, mbW * 4)
     var skipRun = 0
     def writeMove(i: Int, mvx: Int, mvy: Int,
         coeffs: Array[Array[Int]]): Unit = {
@@ -307,13 +345,14 @@ object Inter {
     val cb = new Array[Int](cw * chh)
     val cr = new Array[Int](cw * chh)
     val st = new Array[Nb](mbW * mbH)
-    val grid = Array.fill(mbH * 4, mbW * 4)(0)
+    val grid = Array.ofDim[Int](mbH * 4, mbW * 4)
+    val mc = new Mc
     var i = 0
     def reconstruct(idx: Int, mvx: Int, mvy: Int): Unit = {
       val mbx = idx % mbW; val mby = idx / mbW
-      mcLuma(ref.y, w, h, mbx * 16, mby * 16, mvx, mvy, y)
-      mcChroma(ref.cb, cw, chh, mbx * 8, mby * 8, mvx, mvy, cb)
-      mcChroma(ref.cr, cw, chh, mbx * 8, mby * 8, mvx, mvy, cr)
+      mc.luma(ref.y, w, h, mbx * 16, mby * 16, mvx, mvy, y)
+      mc.chroma(ref.cb, cw, chh, mbx * 8, mby * 8, mvx, mvy, cb)
+      mc.chroma(ref.cr, cw, chh, mbx * 8, mby * 8, mvx, mvy, cr)
     }
     while (i < mbW * mbH) {
       var run = r.ue().toInt
@@ -375,7 +414,7 @@ object Inter {
         i += 1
       }
     }
-    PcmFrame(w, h, y.map(_.toByte), cb.map(_.toByte), cr.map(_.toByte))
+    PcmFrame(w, h, Mp4.toBytes(y), Mp4.toBytes(cb), Mp4.toBytes(cr))
   }
 
   /** Decode a muxed GOP lazily — the engine's one MP4 → pixels

@@ -57,7 +57,8 @@ object FrameSource {
     * `run.sh:53`), decode each arriving container to pixels — the
     * full hop: box walk → avcC SPS/PPS → NAL walk → slice decode by
     * `Inter.decodeGopFrames` (the full envelope below) → planar YUV →
-    * BT.601 RGB — and emit the same `Frame` rows the
+    * BT.601 RGB, converted straight from the decoded picture's three
+    * planes (no packed YUV copy) — and emit the same `Frame` rows the
     * detection pipeline consumes. `maxFilesPerTrigger` is the
     * backpressure knob (whole files are the admission unit, exactly
     * the decode/inference decoupling queue's role).
@@ -100,9 +101,9 @@ object FrameSource {
         val vid = decoded.substring(decoded.lastIndexOf('/') + 1)
         graft.operators.Inter.decodeGopFrames(bytes).zipWithIndex.map {
           case (f, i) =>
-            val planes = f.y ++ f.cb ++ f.cr
             Frame(vid, i.toLong, mt, f.height, f.width,
-              Codecs.Y4mCodec.yuv420ToRgb(planes, 0, f.width, f.height))
+              Codecs.Y4mCodec.yuv420ToRgb(f.y, 0, f.cb, 0, f.cr, 0,
+                f.width, f.height))
         }
       }
   }
