@@ -123,9 +123,16 @@ object Engine {
     * replaces, so of its pins only the returned frame survives. It
     * never frees `init` (often a lazy view over the caller's own
     * pins) nor the frame it returns: the caller frees what it pinned
-    * once nothing it returns reads it. A convergence signal that the
-    * step folds into an accumulator is final once `next` is pinned,
-    * because the snapshot is eager. */
+    * once nothing it returns reads it.
+    *
+    * Signal contract: a step that needs a convergence signal attaches
+    * a fresh `Observation` to the frame it returns
+    * (`Dataset.observe`), and `done` reads it with `get`. The metric
+    * rides the pin's result stage, so it costs no job of its own, and
+    * Spark applies a result task's metric once however often the task
+    * is retried. It is read once the eager pin has returned, so it is
+    * final. The hand-rolled peel loops (`Graph.kCorePeel`,
+    * `Graph.kTruss`) observe their pins the same way. */
   def iterate(init: DataFrame, maxRounds: Int,
       done: (DataFrame, DataFrame) => Boolean = (_, _) => false)(
       step: (DataFrame, Int) => DataFrame): (DataFrame, Boolean) = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.Engine
 import graft.Engine.SnapshotOps
@@ -34,44 +34,30 @@ import graft.Engine.SnapshotOps
   */
 object Components {
 
-  /** Order-free 64-bit XOR fold as an AccumulatorV2. XOR is
-    * self-inverse, so a retried task CANCELS its own contribution —
-    * which is why every consumer treats the folded signature as a
-    * trigger for an authoritative set-diff, never as the verdict
-    * itself. */
-  final class XorAccumulator
-    extends org.apache.spark.util.AccumulatorV2[java.lang.Long, java.lang.Long] {
-    private var x = 0L
-    override def isZero: Boolean = x == 0L
-    override def copy(): XorAccumulator = {
-      val c = new XorAccumulator; c.x = x; c
-    }
-    override def reset(): Unit = x = 0L
-    override def add(v: java.lang.Long): Unit = x ^= v.longValue
-    override def merge(
-        o: org.apache.spark.util.AccumulatorV2[java.lang.Long, java.lang.Long])
-        : Unit = x ^= o.value.longValue
-    override def value: java.lang.Long = x
-  }
+  /** `edges` as non-nullable LONG (a, b), minus the edges with a null
+    * endpoint (the `coalesce` only declares what the filter proved).
+    * Non-nullable labels keep min-label's two reads of the previous
+    * round on the same exchange, so ReuseExchange shuffles them once
+    * per round. */
+  private def edgeList(edges: DataFrame): DataFrame =
+    edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
+      .select(coalesce(col("a"), lit(0L)).as("a"),
+        coalesce(col("b"), lit(0L)).as("b"))
 
   /** Connected components of the undirected graph given by `edges`
     * (two LONG columns `a`, `b`). Returns one row per distinct node:
-    * (node, cluster) where cluster = min node id reachable.
+    * (node, cluster) where cluster = min node id reachable. An edge
+    * with a null endpoint is dropped, as in
+    * `connectedComponentsTwoPhase`; both results' columns are
+    * non-nullable.
     *
-    * Convergence detection rides the materialization job for FREE:
-    * the round's snapshot already computes every (old, new) label
-    * pair, so a changed-row accumulator incremented inside that pass
-    * replaces any separate probe — one Spark job per round total,
-    * for every CC consumer (d9/d18, g10, g11, m17,
-    * x20/x24/x42/x49). Task retries can only OVER-count the
-    * accumulator, and over-counting a zero-change round is
-    * impossible (its retries add 0), so `changed == 0 ⟺ fixpoint`
-    * holds exactly even under speculative/re-run tasks. */
+    * Convergence: each round's pin observes how many labels changed
+    * (`Engine.iterate`'s signal contract), so a round is one Spark
+    * job for every CC consumer (d9/d18, g10, g11, m17,
+    * x20/x24/x42/x49), and `changed == 0` is the fixpoint. */
   def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = edges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"))
+    val e = edgeList(edges)
     // symmetric closure once, reused every round
     val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
       .distinct().snapshot()
@@ -80,11 +66,10 @@ object Components {
     // separate init job exists
     val labels0 = sym.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    var changed: org.apache.spark.util.LongAccumulator = null
+    var changed: Observation = null
     val (labels, converged) = Engine.iterate(labels0, maxIters,
-        done = (_, _) => changed.value == 0L) { (labels, round) =>
-      val acc = spark.sparkContext.longAccumulator(s"cc-changed-${round - 1}")
-      changed = acc
+        done = (_, _) => changed.get("changed") == 0L) { (labels, _) =>
+      changed = Observation()
       val nbrMin = sym.join(labels, sym("b") === labels("node"))
         .groupBy(col("a")).agg(min(col("label")).as("nbr_min"))
       labels.alias("l")
@@ -93,14 +78,8 @@ object Components {
           least(col("l.label"), coalesce(col("p.nbr_min"), col("l.label")))
             .as("label"),
           col("l.label").as("old"))
-        .as[(Long, Long, Long)]
-        .mapPartitions { it =>
-          it.map { case (n, nl, ol) =>
-            if (nl != ol) acc.add(1L)
-            (n, nl)
-          }
-        }
-        .toDF("node", "label")
+        .observe(changed, count_if(col("label") =!= col("old")).as("changed"))
+        .select(col("node"), col("label"))
     }
     Engine.release(sym)
     require(converged, s"connectedComponents did not converge in $maxIters rounds")
@@ -125,36 +104,31 @@ object Components {
     * (large → small), so the working set never exceeds the distinct
     * edge count and shrinks as stars contract.
     *
-    * Convergence detector: (edge count, XOR of per-edge xxhash64)
-    * folded by accumulators INSIDE each round's materialization pass
-    * — zero extra jobs (XOR is order-independent and cannot
-    * overflow). Signature equality is necessary but not sufficient,
-    * so the terminal round CONFIRMS with one real set diff
-    * (`except`) — the expensive comparison runs exactly once, and a
-    * hash collision or a retry-skewed fold can only send the loop
-    * around again (or trip the one-shot maxIters confirm), never end
-    * it on a non-fixpoint. At the fixpoint the edge
-    * set is a star forest: every non-minimum node holds exactly one
+    * Convergence detector: each pin, round 0's included, observes
+    * its edge set's signature (edge count, XOR of per-edge xxhash64;
+    * XOR is order-free and cannot overflow), so no round runs a job
+    * of its own. Signature equality is necessary but not sufficient,
+    * so the round whose signature repeats CONFIRMS with one real set
+    * diff (`except`), and a loop that runs out of rounds gets one
+    * terminal set diff: a hash collision can only send the loop
+    * around again, never end it on a non-fixpoint. At the fixpoint
+    * the edge set is a star forest: every non-minimum node holds exactly one
     * edge to its component minimum. Returns the same contract as
     * `connectedComponents`: (node, cluster = min reachable id). */
   def connectedComponentsTwoPhase(edges: DataFrame,
       maxIters: Int = 30): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = edges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
+    val e = edgeList(edges).filter(col("a") =!= col("b"))
+    // `ed` with its signature observed into `o`
+    def signed(ed: DataFrame, o: Observation): DataFrame =
+      ed.observe(o, count(lit(1)).as("n"),
+        bit_xor(xxhash64(col("u"), col("v"))).as("x"))
+
     // canonical orientation large → small; (u, v) with u > v
-    val cur0 = e
+    var sig = Observation()
+    val cur0 = signed(e
       .select(greatest(col("a"), col("b")).as("u"),
         least(col("a"), col("b")).as("v"))
-      .distinct().snapshot()
-
-    def signature(ed: DataFrame): (Long, Long) = {
-      val r = ed.agg(count(lit(1)),
-        bit_xor(xxhash64(col("u"), col("v")))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
+      .distinct(), sig).snapshot()
 
     // large-star: every node x links its LARGER neighbors y to
     // m(x) = min(N(x) ∪ {x}); each undirected edge is re-emitted
@@ -178,10 +152,11 @@ object Components {
 
     // small-star: every node u links its SMALLER neighbors (all of
     // them, in canonical orientation) plus itself to
-    // m(u) = min of those; emitted pairs stay canonical because
-    // m(u) is the group minimum
+    // m(u) = min of those (spelled with `least`, m is non-nullable);
+    // emitted pairs stay canonical because m(u) is the group minimum
     def smallStar(ed: DataFrame): DataFrame = {
-      val mins = ed.groupBy(col("u")).agg(min(col("v")).as("m"))
+      val mins = ed.groupBy(col("u"))
+        .agg(least(col("u"), min(col("v"))).as("m"))
       ed.join(mins, Seq("u"))
         .filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
@@ -189,39 +164,19 @@ object Components {
         .distinct()
     }
 
-    // the round signature rides the materialization pass (the
-    // min-label accumulator discipline): count + order-free XOR of
-    // per-edge hashes, folded while the snapshot job computes the
-    // rows — no separate aggregate job per round. A task RETRY
-    // skews both folds (xor self-cancels, count over-counts), but
-    // never the RESULT: signature equality is only ever a
-    // trigger for the authoritative except-diff confirm in `done`,
-    // and a skew-missed equality just runs one more round (bounded by
-    // the terminal confirm at maxIters).
-    var sig = signature(cur0)
-    var roundSig: () => (Long, Long) = null
+    var nextSig: Observation = null
     val (cur, sigConverged) = Engine.iterate(cur0, maxIters,
         done = { (prev, next) =>
-          val nextSig = roundSig()
-          val same = nextSig == sig && next.except(prev).isEmpty
+          val same = nextSig.get == sig.get && next.except(prev).isEmpty
           sig = nextSig
           same
-        }) { (cur, round) =>
-      val cnt = spark.sparkContext.longAccumulator(s"cc2-count-${round - 1}")
-      val xor = new XorAccumulator
-      spark.sparkContext.register(xor, s"cc2-xor-${round - 1}")
-      roundSig = () => (cnt.value.longValue, xor.value.longValue)
-      smallStar(largeStar(cur))
-        .select(col("u"), col("v"), xxhash64(col("u"), col("v")).as("h"))
-        .as[(Long, Long, Long)]
-        .mapPartitions { it =>
-          it.map { case (u, v, h) => cnt.add(1L); xor.add(h); (u, v) }
-        }
-        .toDF("u", "v")
+        }) { (cur, _) =>
+      nextSig = Observation()
+      signed(smallStar(largeStar(cur)), nextSig)
     }
     if (cur ne cur0) Engine.release(cur0)
-    // terminal authority: if signatures never matched (e.g. skewed by
-    // retries), one real set-diff decides before declaring failure
+    // terminal authority: if signatures never matched, one real
+    // set-diff decides before declaring failure
     val converged = sigConverged || {
       val prev = smallStar(largeStar(cur))
       prev.except(cur).isEmpty && cur.except(prev).isEmpty

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.Engine
 import graft.Engine.SnapshotOps
@@ -269,54 +269,52 @@ object Graph {
     * costs it nothing): ONE frame materializes per round — the
     * filtered edge list, whose plan FOLDS IN the degree recompute
     * (the survivor set is a subplan of the filter, not a separately
-    * materialized candidate frame) — plus one cached-scan count that
-    * doubles as the convergence probe: node removal only ever
-    * SHRINKS the edge set, so count equality IS set equality and the
-    * loop stops at the true fixpoint with no emptiness probe. The
+    * materialized candidate frame). Each pin observes its row count
+    * (`Engine.iterate`'s signal contract), and that is the
+    * convergence signal: node removal only ever SHRINKS the edge set,
+    * so count equality IS set equality and the loop stops at the
+    * true fixpoint with no probe job. The
     * alive sets, per-round peel sets and survivor degrees are LAZY
     * one-agg views over the pinned round snapshots (alive_r =
     * degree≥k over edges_{r-1}; the alive sets are NESTED, so a
     * node's peel round is its deepest presence level + 1 — which
     * also catches survivors whose last edges vanished, the degree-0
     * peel), all evaluated as independent branches inside the single
-    * final assembly job. A round therefore costs 1 Spark job + one
-    * cached count instead of the old 2 jobs + probe. Round snapshots
-    * pin until the result is assembled (the output reads every
+    * final assembly job. A round therefore costs 1 Spark job. Round
+    * snapshots pin until the result is assembled (the output reads every
     * round's alive set — a bounded-horizon peel holds ≤ `rounds`
     * shrinking edge lists, the declared memory admission), which is
     * why this loop is its own and not `Engine.iterate`; the assembled
     * result is materialized ONCE and every round snapshot is released
     * with `Engine.release` before returning. */
   def kCorePeel(pairs: DataFrame, k: Long, rounds: Int): DataFrame = {
-    val sym = pairs
+    // `ed` pinned, with its row count
+    def pinCounted(ed: DataFrame): (DataFrame, Long) = {
+      val o = Observation()
+      val pinned = ed.observe(o, count(lit(1)).as("n")).snapshot()
+      (pinned, o.get("n").asInstanceOf[Long])
+    }
+    val (sym, symCnt) = pinCounted(pairs
       .select(col("doc_a").cast("long").as("s"), col("doc_b").cast("long").as("d"))
       .union(pairs
         .select(col("doc_b").cast("long").as("s"), col("doc_a").cast("long").as("d")))
-      .distinct().snapshot()
+      .distinct())
     // nodes whose INDUCED degree in `ed` meets k (degree-0 nodes are
     // implicitly out: they have no s-rows)
     def surv(ed: DataFrame): DataFrame =
       ed.groupBy(col("s")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("s").as("node"))
     val edgeRounds = scala.collection.mutable.ArrayBuffer[DataFrame](sym)
-    // round-14 fusion: sym has NO materializing job of its own — the
-    // round-1 join computes (and caches) it inside its only pass, and
-    // the convergence comparison reads the then-cached count as a
-    // block-metadata scan. Saves the init job (upstream pair-gen ran
-    // twice across init+round1 shapes before); the round-0 count is
-    // only needed lazily, after round 1 populated the cache.
-    var cnt = -1L
+    var cnt = symCnt
     var r = 1
     var done = false
     while (r <= rounds && !done) {
       val cur = edgeRounds.last
       val sv = surv(cur) // subplan of the filter — not materialized
-      val next = cur
+      val (next, nextCnt) = pinCounted(cur
         .join(sv.select(col("node").as("s")), Seq("s"))
         .join(sv.select(col("node").as("d")), Seq("d"))
-        .select(col("s"), col("d")).snapshot()
-      val nextCnt = next.count() // cached scan; convergence probe
-      if (cnt < 0) cnt = sym.count() // now cached — metadata-cheap
+        .select(col("s"), col("d")))
       edgeRounds += next
       if (nextCnt == cnt) done = true
       cnt = nextCnt
@@ -593,16 +591,18 @@ object Graph {
     while (r <= rounds && !done) {
       // kCorePeel's snapshot budget: ONE materialization per round —
       // the scored (a, b, sup) frame — with the peel set and the next
-      // edge list as lazy one-deep views over it; the early-stop
-      // probe scans the cached frame.
+      // edge list as lazy one-deep views over it; the pin observes how
+      // many edges peel, the early-stop signal.
       val sym = edges.select(col("a").as("s"), col("b").as("d"))
         .union(edges.select(col("b").as("s"), col("a").as("d")))
       val sup = support(edges, sym)
+      val peeling = Observation()
       val scored = edges.join(sup, Seq("a", "b"), "left")
         .select(col("a"), col("b"), coalesce(col("sup"), lit(0L)).as("sup"))
+        .observe(peeling, count_if(col("sup") < k - 2).as("peeled"))
         .snapshot()
       val newPeeled = scored.filter(col("sup") < k - 2)
-      if (newPeeled.isEmpty) {
+      if (peeling.get("peeled") == 0L) {
         Engine.release(scored)
         done = true
       } else {

@@ -662,19 +662,26 @@ class Round10Spec extends SparkTestBase {
   }
 
   test("reliable snapshots: an iterative peel runs both ways to the same result") {
-    // g8's k-core peel exercises Engine.snapshot every round (alive /
-    // edges / peeled frames). Default = localCheckpoint; the
+    // g8's k-core peel, g14's k-truss peel and both CC loops pin every
+    // round with Engine.snapshot and read their convergence signal
+    // from the pin's observed metrics. Default = localCheckpoint; the
     // reliableSnapshots switch persists each round as parquet and
-    // reads it back — same rows either way, including the
-    // empty-round-0 accumulator round-trip.
+    // reads it back — same rows either way, so the observation fires
+    // on the parquet write too.
+    import graft.operators.Components
     val pairs = Seq(
       (1L, 2L), (2L, 3L), (3L, 1L),       // triangle: survives k=2
       (3L, 4L), (4L, 5L),                 // chain: peels off
       (6L, 7L))                           // pendant pair: peels round 1
       .toDF("doc_a", "doc_b")
-    def run(): Set[(Long, Long, Long)] =
-      Graph.kCorePeel(pairs, k = 2L, rounds = 10)
-        .as[(Long, Long, Long)].collect().toSet
+    val ab = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
+    def rows(df: org.apache.spark.sql.DataFrame): Set[org.apache.spark.sql.Row] =
+      df.collect().toSet
+    def run(): Seq[Set[org.apache.spark.sql.Row]] = Seq(
+      rows(Graph.kCorePeel(pairs, k = 2L, rounds = 10)),
+      rows(Graph.kTruss(pairs, k = 3L, rounds = 10)),
+      rows(Components.connectedComponents(ab)),
+      rows(Components.connectedComponentsTwoPhase(ab)))
     val local = run()
     val dir = java.nio.file.Files
       .createTempDirectory("graft-snap-spec").toString
@@ -689,8 +696,11 @@ class Round10Spec extends SparkTestBase {
       spark.conf.set("spark.graft.reliableSnapshots", "false")
       spark.conf.unset("spark.graft.snapshotDir")
     }
-    assert(local.exists(_._2 == -1L))     // triangle survives
-    assert(local.exists(_._2 > 0L))       // something peeled
+    val Seq(core, truss, cc, cc2) = local
+    assert(core.exists(_.getLong(1) == -1L))   // triangle survives
+    assert(core.exists(_.getLong(1) > 0L))     // something peeled
+    assert(truss.count(_.getLong(2) == -1L) === 3) // the triangle's edges
+    assert(cc === cc2 && cc.size === 7)
   }
 
   test("mp4: mux/index roundtrip, multi-NAL walk, loud corruption failures") {

@@ -742,6 +742,29 @@ class Round9Spec extends SparkTestBase {
       Seq.empty[(Long, Long)].toDF("a", "b")).count() === 0L)
   }
 
+  test("connectedComponents and connectedComponentsTwoPhase drop an " +
+    "edge with a null endpoint, and both results are non-nullable") {
+    import org.apache.spark.sql.DataFrame
+    import graft.operators.Components
+    val clean = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(3L), Some(2L)), (Some(7L), Some(8L)))
+    val withNulls = clean ++ Seq((Some(3L), None), (None, Some(9L)), (None, None))
+    for ((name, cc) <- Seq[(String, DataFrame => DataFrame)](
+        "connectedComponents" -> (Components.connectedComponents(_)),
+        "connectedComponentsTwoPhase" -> (Components.connectedComponentsTwoPhase(_)))) {
+      def labels(df: DataFrame): Map[Long, Long] =
+        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = labels(cc(clean.toDF("a", "b")))
+      assert(want === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L), name)
+      val got = cc(withNulls.toDF("a", "b"))
+      assert(labels(got) === want, name)
+      // nullable labels would plan two different exchanges for
+      // min-label's two reads of the previous round
+      assert(got.schema.map(f => f.name -> f.nullable) ===
+        Seq("node" -> false, "cluster" -> false), name)
+    }
+  }
+
   test("connectedComponents and connectedComponentsTwoPhase release " +
     "every superseded round: a 12-node path leaves at most one new " +
     "persisted RDD, the one behind the result") {
