@@ -11,7 +11,7 @@ import graft.operators.{Detect, DetectorConfig, Detectors}
   * accuracy" claim (`DEVCATALOG.md:15`) made measurable.
   *
   * For each bundled precision the SAME deterministic frame set runs
-  * the full real path (P4–P8 preprocess → GraftNet forward → head
+  * the full real path (P4–P7 preprocess → GraftNet forward → head
   * decode) through Detect.detect (the DetectExec plan node); the JSON
   * line reports per-dtype wall time (median of 3 timed runs after a
   * warm-up, like Bench) and the accuracy deltas of INT8 vs FP32:

@@ -28,7 +28,7 @@ object TmpPaths {
   private val hooked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete()

@@ -78,9 +78,13 @@ object Detect {
   /** `detector.detectBatch(frames)`, refused by name unless it holds
     * one detection list per frame: the callers pair lists with frames
     * by position, which would otherwise drop unmatched frames
-    * silently. */
+    * silently. A frame with a non-positive height or width (one a
+    * user's parquet can carry through `FrameSource.conform`) is
+    * refused by name first, whatever the detector. */
   private[graft] def detectAligned(detector: Detector,
       frames: Seq[Frame]): Seq[Seq[RawDetection]] = {
+    for (f <- frames) require(f.height > 0 && f.width > 0, s"frame ${f.video_id}/" +
+      s"${f.frame_id} has non-positive dimensions ${f.height}x${f.width} (height x width)")
     val dets = detector.detectBatch(frames)
     if (dets.length != frames.length) throw new IllegalStateException(
       s"detectBatch returned ${dets.length} detection lists for ${frames.length} frames")

@@ -9,11 +9,11 @@ import graft.model.{Frame, RawDetection}
   * in this container and the build allows no new dependencies, so
   * the runtime here is a small MLP scorer implemented directly:
   * a committed `.gnet` weight artifact (text: layer dims + row-major
-  * weights + biases) is loaded ONCE PER PARTITION, frames are
-  * normalized (P4–P6) and bilinear-resized to the model input (P7)
-  * and grid-average pooled in one separable linear map, so each
-  * frame becomes a fixed feature vector without a model-input-sized
-  * tensor being built, and a real forward pass (matmul + bias +
+  * weights + biases) is loaded ONCE PER PARTITION, each frame's bytes
+  * are bilinear-resized to the model input (P7) and grid-average
+  * pooled in one separable linear map, the cell means are normalized
+  * (P4–P6), so each frame becomes a fixed feature vector without a
+  * model-input-sized tensor being built, and a real forward pass (matmul + bias +
   * ReLU, sigmoid-decoded heads) produces the detection arrays. Every
   * number the detector emits is computed from the actual pixel bytes
   * — nothing is fabricated — while `StubDetector` stays the
@@ -117,9 +117,9 @@ object GraftNet {
   * scoring, and the P4–P7 kernels as the ACTUAL preprocessing of the
   * forward pass — the processSingleFrame composition
   * (`gst-detection-tf.py:405-419`) with every stage live. The features
-  * come from `resizePool`, which maps the frame straight to the g×g
-  * cell means of its resize instead of resizing first and pooling
-  * after.
+  * come from `features`, which maps the frame's bytes straight to the
+  * g×g cell means of its resize and normalizes those, instead of
+  * normalizing and resizing the frame first and pooling after.
   */
 final class GraftNetDetector(modelPath: String, cfg: DetectorConfig)
     extends Detector {
@@ -127,17 +127,13 @@ final class GraftNetDetector(modelPath: String, cfg: DetectorConfig)
 
   // loaded once per detector instance = once per partition
   private val net: GraftNet = GraftNet.load(modelPath)
-  private val normalize = Preprocess.normalizer(cfg.preprocFw)
+  private val normalization = Preprocess.normalization(cfg.preprocFw)
   require(net.outputSize % 6 == 0,
     s"head size ${net.outputSize} not a multiple of 6 (boxes x " +
       "(ymin,xmin,ymax,xmax,score,class))")
   private val grid = math.sqrt(net.inputSize / 3.0).toInt
   require(grid * grid * 3 == net.inputSize,
     s"input size ${net.inputSize} is not a 3-channel square grid")
-
-  private def features(f: Frame): Array[Float] =
-    resizePool(normalize(Preprocess.decodeBuffer(f)),
-      cfg.modelInput, cfg.modelInput, grid)
 
   // class-id domain comes from the config (= label-table size), not
   // a hardcoded 25: a differently-sized label file would otherwise
@@ -161,7 +157,8 @@ final class GraftNetDetector(modelPath: String, cfg: DetectorConfig)
 
   override def detectBatch(frames: Seq[Frame]): Seq[Seq[RawDetection]] =
     frames.map { f =>
-      val out = net.forward(features(f))
+      val out = net.forward(
+        features(f, normalization, cfg.modelInput, cfg.modelInput, grid))
       (0 until out.length / 6).map(i => decodeHead(out, i * 6))
     }
 }
@@ -169,35 +166,47 @@ final class GraftNetDetector(modelPath: String, cfg: DetectorConfig)
 object GraftNetDetector {
   def sigmoid(x: Double): Double = 1.0 / (1.0 + math.exp(-x))
 
+  /** A frame's model input: the g×g×3 cell means of the normalized
+    * frame's resize to outH×outW, computed as `resizePool` of its bytes
+    * under the frame's affine `normalization`. */
+  def features(f: Frame, normalization: Preprocess.Normalization,
+      outH: Int, outW: Int, g: Int): Array[Float] = {
+    val px = Preprocess.rgbBytes(f)
+    resizePool(f.height, f.width, px, outH, outW, g,
+      normalization(px, f.height * f.width * 3))
+  }
+
   /** P7 bilinear resize fused with grid average pooling: the g×g×3
-    * cell means of `Preprocess.resizeBilinear(t, outH, outW)` without
-    * building the outH×outW×3 tensor — the fixed-size bridge from any
-    * model-input resolution to the MLP. Resize and pooling are linear
-    * and the resize is separable, so each channel's cell sums are
-    * `A · X · Bᵀ`, where the g×H `A` and g×W `B` are `bandMap`s. The
-    * product runs in double, `T = X · Bᵀ` per source row, then `A · T`;
-    * each sum is divided by its cell's output count and stored with
-    * `.toFloat`. That is within 1e-6 · max(1, |mean|) of the exact
-    * cell means, closer than summing the float-stored resized values
-    * would be. */
-  def resizePool(t: Preprocess.Tensor, outH: Int, outW: Int,
-      g: Int): Array[Float] = {
-    require(t.channels == 3,
-      s"resizePool pools 3-channel tensors, got ${t.channels} channels")
+    * cell means of `Preprocess.resizeBilinear` over the height×width
+    * packed RGB bytes `px`, without building the outH×outW×3 tensor —
+    * the fixed-size bridge from any model-input resolution to the MLP.
+    * Resize and pooling are linear and the resize is separable, so
+    * each channel's cell sums are `A · X · Bᵀ`, where the g×H `A` and
+    * g×W `B` are `bandMap`s. The product runs in double over the
+    * bytes less `norm.shift`, `T = X · Bᵀ` per source row, then
+    * `A · T`; each sum is divided by its cell's output count and
+    * `norm.scale` and stored with `.toFloat`. Weights are non-negative,
+    * so a cell whose taps all read the shift gives exactly 0; every
+    * non-empty cell's weights sum to 1, so the map commutes with the
+    * pooling. Empty cells stay 0. */
+  def resizePool(height: Int, width: Int, px: Array[Byte], outH: Int,
+      outW: Int, g: Int, norm: Preprocess.Affine): Array[Float] = {
     require(g > 0, s"pooling grid must be positive, got $g")
-    val a = bandMap(t.height, outH, g)
-    val b = bandMap(t.width, outW, g)
-    val src = t.data
+    val a = bandMap(height, outH, g)
+    val b = bandMap(width, outW, g)
     val n = g * 3
+    val (sh0, sh1, sh2) = (norm.shift(0), norm.shift(1), norm.shift(2))
     // T = X · Bᵀ: per source row r, cell column j and channel c
-    val xb = new Array[Double](t.height * n)
-    for (r <- 0 until t.height; j <- 0 until g) {
+    val xb = new Array[Double](height * n)
+    for (r <- 0 until height; j <- 0 until g) {
       val wj = b.w(j)
-      var p = (r * t.width + b.lo(j)) * 3
+      var p = (r * width + b.lo(j)) * 3
       var s0 = 0.0; var s1 = 0.0; var s2 = 0.0
       var k = 0
       while (k < wj.length) {
-        s0 += wj(k) * src(p); s1 += wj(k) * src(p + 1); s2 += wj(k) * src(p + 2)
+        s0 += wj(k) * ((px(p) & 0xff) - sh0)
+        s1 += wj(k) * ((px(p + 1) & 0xff) - sh1)
+        s2 += wj(k) * ((px(p + 2) & 0xff) - sh2)
         p += 3
         k += 1
       }
@@ -216,7 +225,7 @@ object GraftNetDetector {
       }
       for (m <- 0 until n) {
         val count = a.count(i) * b.count(m / 3)
-        if (count > 0) out(i * n + m) = (acc(m) / count).toFloat
+        if (count > 0) out(i * n + m) = (acc(m) / count / norm.scale(m % 3)).toFloat
       }
     }
     out

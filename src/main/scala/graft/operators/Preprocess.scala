@@ -2,16 +2,15 @@ package graft.operators
 
 import graft.model.Frame
 
-/** The reference's preprocessing path (SURVEY.md §2.2 P2, P4–P8),
+/** The reference's preprocessing path (SURVEY.md §2.2 P2, P4–P7),
   * re-homed where it belongs in Spark: INSIDE the partition-scoped
-  * inference stage. These are transient tensor ops — they never
+  * inference stage. These are transient per-frame values — they never
   * appear in a schema and never cross a partition boundary, exactly
   * like the reference's ndarray stages
   * (`gst-detection-tf.py:252-283,346-384`).
   *
-  * All kernels are real implementations (pure JVM float math); only
-  * the entry from encoded media to raw RGB bytes is the stub seam
-  * (Multimodal.Codec), since this container ships no codecs.
+  * All kernels are pure JVM math over the frame's packed RGB bytes,
+  * which the in-repo codecs (`Codecs`) decode from encoded media.
   */
 object Preprocess {
 
@@ -23,61 +22,63 @@ object Preprocess {
       s"tensor shape ${height}x${width}x$channels != ${data.length} values")
   }
 
-  /** P2: buffer → tensor reinterpret. Packed RGB uint8 bytes become
-    * an HWC float tensor (0..255). An empty/short buffer (hermetic
-    * tests) zero-fills — deterministic, like a black frame. A frame
-    * with a non-positive height or width (one a user's parquet can
-    * carry through `FrameSource.conform`) is refused by name. */
-  def decodeBuffer(f: Frame): Tensor = {
-    require(f.height > 0 && f.width > 0,
-      s"frame ${f.video_id}/${f.frame_id} has non-positive dimensions " +
-        s"${f.height}x${f.width} (height x width)")
+  /** P2: the frame's packed RGB bytes, holding at least h·w·3 of them;
+    * readers use the first h·w·3. An empty or short buffer (hermetic
+    * tests) is zero-filled, deterministic like a black frame. */
+  def rgbBytes(f: Frame): Array[Byte] = {
     val n = f.height * f.width * 3
-    val out = new Array[Float](n)
-    val m = math.min(n, if (f.data == null) 0 else f.data.length)
-    var i = 0
-    while (i < m) { out(i) = (f.data(i) & 0xff).toFloat; i += 1 }
-    Tensor(f.height, f.width, 3, out)
+    if (f.data != null && f.data.length >= n) f.data
+    else {
+      val out = new Array[Byte](n)
+      if (f.data != null) System.arraycopy(f.data, 0, out, 0, f.data.length)
+      out
+    }
   }
 
-  /** P4 (cv2 path): min-max normalize to [0,1]
-    * (`gst-detection-tf.py:352-354`). Constant image → zeros. */
-  def normalizeMinMax(t: Tensor): Tensor = {
-    var mn = Float.MaxValue; var mx = Float.MinValue
-    t.data.foreach { v => if (v < mn) mn = v; if (v > mx) mx = v }
-    val range = if (mx > mn) mx - mn else 1.0f
-    Tensor(t.height, t.width, t.channels, t.data.map(v => (v - mn) / range))
-  }
-
-  /** P5 (np path): /255 then per-channel (x-mean)/std with the
-    * ImageNet constants of `gst-detection-tf.py:259-264`. */
+  /** ImageNet channel constants of the np path
+    * (`gst-detection-tf.py:259-264`). */
   val ImagenetMean: Array[Float] = Array(0.485f, 0.456f, 0.406f)
   val ImagenetStd: Array[Float] = Array(0.229f, 0.224f, 0.225f)
-  def normalizeImagenet(t: Tensor): Tensor = {
-    val out = new Array[Float](t.data.length)
-    var i = 0
-    while (i < t.data.length) {
-      val c = i % t.channels
-      out(i) = (t.data(i) / 255.0f - ImagenetMean(c)) / ImagenetStd(c)
-      i += 1
+
+  /** A per-channel affine map v ↦ (v − shift(c)) / scale(c) of byte
+    * values. */
+  final class Affine(val shift: Array[Double], val scale: Array[Double])
+
+  /** A frame's normalization, from its first n bytes. */
+  type Normalization = (Array[Byte], Int) => Affine
+
+  /** The preproc_fw strategy knob (`settings.yaml:4`,
+    * `gst-detection-tf.py:351-379`), chosen once at plan time. Every
+    * kernel is affine per channel, so it commutes with any weighted
+    * mean whose weights sum to 1, such as a resize-and-pool cell mean:
+    *  - cv2 (P4, `:352-354`): (v − min)/(max − min) over all n bytes;
+    *    a constant frame maps to zeros;
+    *  - np (P5, `:259-264`): v/255, then (x − mean(c))/std(c) with the
+    *    ImageNet constants;
+    *  - tf (P6, `:362`): tf.image.per_image_standardization,
+    *    (v − μ)/max(σ, 1/√n) over all n bytes. */
+  def normalization(kind: String): Normalization = kind match {
+    case "cv2" => (px, n) => {
+      var mn = 255; var mx = 0; var i = 0
+      while (i < n) { val v = px(i) & 0xff; mn = math.min(mn, v); mx = math.max(mx, v); i += 1 }
+      uniform(mn, if (mx > mn) mx - mn else 1)
     }
-    Tensor(t.height, t.width, t.channels, out)
+    case "np" =>
+      val map = new Affine(ImagenetMean.map(_ * 255.0), ImagenetStd.map(_ * 255.0))
+      (_, _) => map
+    case "tf" => (px, n) => {
+      var sum = 0L; var sumSq = 0L; var i = 0
+      while (i < n) { val v = px(i) & 0xff; sum += v; sumSq += v * v; i += 1 }
+      val mean = sum.toDouble / n
+      val sd = math.sqrt(math.max(0.0, sumSq.toDouble / n - mean * mean))
+      uniform(mean, math.max(sd, 1.0 / math.sqrt(n.toDouble)))
+    }
+    case other => throw new IllegalArgumentException(
+      s"unknown preproc_fw (DetectorConfig.preprocFw): $other; expected cv2, np or tf")
   }
 
-  /** P6 (tf path): per-image standardization —
-    * (x - mean) / max(stddev, 1/sqrt(N)), the
-    * tf.image.per_image_standardization contract
-    * (`gst-detection-tf.py:362`). */
-  def standardize(t: Tensor): Tensor = {
-    val n = t.data.length
-    var sum = 0.0; var sumSq = 0.0
-    t.data.foreach { v => sum += v; sumSq += v.toDouble * v }
-    val mean = sum / n
-    val variance = math.max(0.0, sumSq / n - mean * mean)
-    val adjStd = math.max(math.sqrt(variance), 1.0 / math.sqrt(n.toDouble))
-    Tensor(t.height, t.width, t.channels,
-      t.data.map(v => ((v - mean) / adjStd).toFloat))
-  }
+  private def uniform(shift: Double, scale: Double): Affine =
+    new Affine(Array.fill(3)(shift), Array.fill(3)(scale))
 
   /** Augmentation kernels (training-data image transforms, the
     * P-family beyond resize): pure integer pixel PERMUTATIONS over
@@ -178,41 +179,6 @@ object Preprocess {
     }
     Tensor(outH, outW, ch, out)
   }
-
-  /** P8: HWC → NCHW (batch dim 1) for GPU-style layouts
-    * (`gst-detection-tf.py:269-283`). */
-  def toNCHW(t: Tensor): Array[Float] = {
-    val out = new Array[Float](t.data.length)
-    val hw = t.height * t.width
-    var i = 0
-    while (i < t.data.length) {
-      val c = i % t.channels
-      out(c * hw + i / t.channels) = t.data(i)
-      i += 1
-    }
-    out
-  }
-
-  /** The preproc_fw strategy knob (`settings.yaml:4`,
-    * `gst-detection-tf.py:351-379`): kernel chosen once at plan
-    * time, not per record. */
-  def normalizer(kind: String): Tensor => Tensor = kind match {
-    case "cv2" => normalizeMinMax
-    case "np" => normalizeImagenet
-    case "tf" => standardize
-    case other =>
-      throw new IllegalArgumentException(s"unknown preproc_fw: $other")
-  }
-
-  /** Full preprocess chain: decode → normalize → resize → layout.
-    * Mirrors `processSingleFrame`'s preprocess leg
-    * (`gst-detection-tf.py:346-384`). */
-  def pipeline(frame: Frame, preprocFw: String, modelH: Int, modelW: Int,
-      nchw: Boolean): Array[Float] = {
-    val resized = resizeBilinear(normalizer(preprocFw)(decodeBuffer(frame)),
-      modelH, modelW)
-    if (nchw) toNCHW(resized) else resized.data
-  }
 }
 
 /** M1/M3: model lifecycle + device/precision dispatch
@@ -237,13 +203,16 @@ object Detectors {
     * `gst-detection-tf.py:200-237` with a JVM scorer). Other
     * artifact kinds (frozen TF graphs, ONNX) have no runtime in this
     * container and fail fast. With no modelPath the deterministic
-    * stub serves tests/oracles. Precision (M3) selects the
-    * artifact — opaque to the engine, exactly as in the reference. */
+    * stub serves tests/oracles; it scores by frame_id, so it runs no
+    * preprocessing. Precision (M3) selects the artifact — opaque to
+    * the engine, exactly as in the reference. The whole config is
+    * checked here, before any task runs, for every path. */
   def forConfig(cfg: DetectorConfig): () => Detector = {
     // a non-positive edge would resize every frame to nothing and give
     // all frames the same (all-zero) features
     require(cfg.modelInput > 0,
       s"model_input (DetectorConfig.modelInput) must be positive, got ${cfg.modelInput}")
+    Preprocess.normalization(cfg.preprocFw)
     cfg.modelPath match {
       case Some(p) if p.endsWith(".gnet") => () => new GraftNetDetector(p, cfg)
       case Some(p) =>
@@ -251,7 +220,7 @@ object Detectors {
           s"no inference runtime bundled for model artifact $p " +
             s"(device=${cfg.device}, dtype=${cfg.dataType}); " +
             "use a .gnet artifact or plug an ONNX/TF-Java Detector here")
-      case None => () => new PreprocessingDetector(StubDetector, cfg)
+      case None => () => StubDetector
     }
   }
 
@@ -266,22 +235,5 @@ object Detectors {
     case other => throw new UnsupportedOperationException(
       s"no bundled artifact for dtype $other (BF16 needs an " +
         "accelerated runtime; see DEPLOYMENT.md)")
-  }
-}
-
-/** Decorator that runs the real preprocessing chain before
-  * delegating to the scoring backend — the processSingleFrame
-  * composition (`gst-detection-tf.py:405-419`) with the preproc
-  * kernels actually exercised. */
-final class PreprocessingDetector(inner: Detector, cfg: DetectorConfig)
-    extends Detector {
-  override def detectBatch(frames: Seq[Frame]): Seq[Seq[graft.model.RawDetection]] = {
-    // tensors feed the model in a real backend; the stub scores by
-    // frame_id, so the tensors' only job here is exercising the path
-    frames.foreach { f =>
-      Preprocess.pipeline(f, cfg.preprocFw, cfg.modelInput, cfg.modelInput,
-        nchw = cfg.device != "CPU")
-    }
-    inner.detectBatch(frames)
   }
 }

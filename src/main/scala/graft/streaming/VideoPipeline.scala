@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 import graft.operators.{DetectorConfig, Detectors}
 import graft.sources.{FrameSource, Labels}
 
@@ -55,7 +56,11 @@ object PipelineConfig {
 object VideoPipeline {
   /** Launch the configured pipeline. Bounded (AvailableNow) unless a
     * frame limit is set, in which case the limit listener stops the
-    * query (`total_frames` semantics). */
+    * query (`total_frames` semantics). Without a `checkpoint_dir` the
+    * run checkpoints to a fresh `graft-ckpt-*` directory under
+    * `java.io.tmpdir`, which nothing can resume from, so it is deleted
+    * once the query terminates; a named `checkpoint_dir` is never
+    * touched. */
   def run(spark: SparkSession, cfg: PipelineConfig,
       store: MetadataStore): StreamingQuery = {
     // the detector config is checked before any source is opened
@@ -67,11 +72,34 @@ object VideoPipeline {
     val labels = Labels.fromIdNameFile(spark, cfg.labelFile)
     val ckpt = if (cfg.checkpointDir.nonEmpty) cfg.checkpointDir
       else java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
-    if (cfg.totalFrames > 0)
-      DetectionStream.runWithFrameLimit(spark, frames, labels,
-        detectorFactory, store, ckpt, cfg.totalFrames, cfg.faceThreshold)
-    else
-      DetectionStream.runAvailableNow(frames, labels, detectorFactory,
-        store, ckpt, cfg.faceThreshold)
+    val query =
+      if (cfg.totalFrames > 0)
+        DetectionStream.runWithFrameLimit(spark, frames, labels,
+          detectorFactory, store, ckpt, cfg.totalFrames, cfg.faceThreshold)
+      else
+        DetectionStream.runAvailableNow(frames, labels, detectorFactory,
+          store, ckpt, cfg.faceThreshold)
+    if (cfg.checkpointDir.isEmpty) deleteWhenTerminated(spark, query, new java.io.File(ckpt))
+    query
+  }
+
+  /** Delete `dir` once `query` has terminated, however it ends, with a
+    * listener that leaves with the query, like `runWithFrameLimit`'s. */
+  private def deleteWhenTerminated(spark: SparkSession, query: StreamingQuery,
+      dir: java.io.File): Unit = {
+    def cleanUp(l: StreamingQueryListener): Unit = {
+      spark.streams.removeListener(l)
+      graft.TmpPaths.deleteRecursively(dir)
+    }
+    val cleaner = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.id == query.id) cleanUp(this)
+    }
+    spark.streams.addListener(cleaner)
+    // the query may have ended before the listener was registered, so
+    // its terminated event is never seen
+    if (!query.isActive) cleanUp(cleaner)
   }
 }

@@ -2,11 +2,12 @@ package graft
 
 import java.sql.Timestamp
 import graft.model.Frame
-import graft.operators.{Codecs, Detect, DetectorConfig, Detectors, GraftNet, GraftNetDetector, Multimodal}
+import graft.operators.{Codecs, Detect, DetectorConfig, Detectors, GraftNet, GraftNetDetector, Multimodal, Preprocess, StubDetector}
+import graft.operators.Preprocess.Tensor
 
 /** The real inference runtime (M1/M2) + real codec (S2): committed
   * `.gnet` weights load per partition, BMP bytes decode to real
-  * pixels, and the P4–P8 preprocessing chain feeds a real forward
+  * pixels, and the P4–P7 preprocessing chain feeds a real forward
   * pass. The oracle path stays on StubDetector (SQL-restatable);
   * these specs pin the REAL path's behavior.
   */
@@ -492,9 +493,9 @@ class GraftNetSpec extends SparkTestBase {
   }
 
   test("grid pooling: cell means over a known tensor") {
-    val t = graft.operators.Preprocess.Tensor(4, 4, 3,
-      Array.tabulate(48)(i => (i / 3).toFloat)) // pixel p has value p in all channels
-    val pooled = GraftNetDetector.resizePool(t, 4, 4, 2) // identity size
+    val px = Array.tabulate(48)(i => (i / 3).toByte) // pixel p has value p in all channels
+    val identity = new Preprocess.Affine(Array.fill(3)(0.0), Array.fill(3)(1.0))
+    val pooled = GraftNetDetector.resizePool(4, 4, px, 4, 4, 2, identity) // identity size
     assert(pooled.length === 12)
     // top-left 2x2 cell holds pixels 0,1,4,5 -> mean 2.5
     assert(pooled(0) === 2.5f)
@@ -502,34 +503,70 @@ class GraftNetSpec extends SparkTestBase {
     assert(pooled(9) === 12.5f)
   }
 
-  /** The two-step feature path: resize to the model input, then
-    * average-pool the tensor into a g×g×3 grid. With `exact` the cell
-    * sums run in double, giving the exact cell means of the resize;
-    * without it they run in float, as the detector's features did
-    * before `resizePool` became a separable map. */
-  private def resizeThenPool(t: graft.operators.Preprocess.Tensor,
-      outH: Int, outW: Int, g: Int, exact: Boolean): Array[Float] = {
-    val r = graft.operators.Preprocess.resizeBilinear(t, outH, outW)
-    val sums = new Array[Double](g * g * 3)
-    val counts = new Array[Int](g * g)
-    for (y <- 0 until r.height; x <- 0 until r.width) {
-      val cell = math.min(g - 1, y * g / r.height) * g +
-        math.min(g - 1, x * g / r.width)
-      counts(cell) += 1
-      for (c <- 0 until 3) {
-        val v = r.data((y * r.width + x) * 3 + c)
-        val i = cell * 3 + c
-        sums(i) = if (exact) sums(i) + v else (sums(i).toFloat + v).toDouble
+  /** The feature path the detector had before it pooled the frame's
+    * bytes: the bytes become a zero-filled HWC float tensor, each
+    * value is normalized by the preproc_fw kernel, and the tensor is
+    * resized to the model input and average-pooled into a g×g×3 grid,
+    * the cell sums in double. It is the reference `features` is held
+    * to. */
+  private object ParentPath {
+    def decodeBuffer(f: Frame): Tensor = {
+      val n = f.height * f.width * 3
+      val out = new Array[Float](n)
+      val m = math.min(n, if (f.data == null) 0 else f.data.length)
+      for (i <- 0 until m) out(i) = (f.data(i) & 0xff).toFloat
+      Tensor(f.height, f.width, 3, out)
+    }
+
+    def normalizeMinMax(t: Tensor): Tensor = {
+      var mn = Float.MaxValue; var mx = Float.MinValue
+      t.data.foreach { v => if (v < mn) mn = v; if (v > mx) mx = v }
+      val range = if (mx > mn) mx - mn else 1.0f
+      t.copy(data = t.data.map(v => (v - mn) / range))
+    }
+
+    def normalizeImagenet(t: Tensor): Tensor = t.copy(data = t.data.indices.map { i =>
+      val c = i % t.channels
+      (t.data(i) / 255.0f - Preprocess.ImagenetMean(c)) / Preprocess.ImagenetStd(c)
+    }.toArray)
+
+    def standardize(t: Tensor): Tensor = {
+      val n = t.data.length
+      var sum = 0.0; var sumSq = 0.0
+      t.data.foreach { v => sum += v; sumSq += v.toDouble * v }
+      val mean = sum / n
+      val variance = math.max(0.0, sumSq / n - mean * mean)
+      val adjStd = math.max(math.sqrt(variance), 1.0 / math.sqrt(n.toDouble))
+      t.copy(data = t.data.map(v => ((v - mean) / adjStd).toFloat))
+    }
+
+    def normalizer(fw: String): Tensor => Tensor = fw match {
+      case "cv2" => normalizeMinMax
+      case "np" => normalizeImagenet
+      case "tf" => standardize
+    }
+
+    def resizeThenPool(t: Tensor, outH: Int, outW: Int, g: Int): Array[Float] = {
+      val r = Preprocess.resizeBilinear(t, outH, outW)
+      val sums = new Array[Double](g * g * 3)
+      val counts = new Array[Int](g * g)
+      for (y <- 0 until r.height; x <- 0 until r.width) {
+        val cell = math.min(g - 1, y * g / r.height) * g +
+          math.min(g - 1, x * g / r.width)
+        counts(cell) += 1
+        for (c <- 0 until 3) sums(cell * 3 + c) += r.data((y * r.width + x) * 3 + c)
+      }
+      Array.tabulate(g * g * 3) { i =>
+        val n = counts(i / 3)
+        if (n == 0) 0f else (sums(i) / n).toFloat
       }
     }
-    Array.tabulate(g * g * 3) { i =>
-      val n = counts(i / 3)
-      if (n == 0) 0f else if (exact) (sums(i) / n).toFloat else sums(i).toFloat / n
-    }
+
+    def features(f: Frame, fw: String, outH: Int, outW: Int, g: Int): Array[Float] =
+      resizeThenPool(normalizer(fw)(decodeBuffer(f)), outH, outW, g)
   }
 
   test("resize-pool matches the exact cell means of the bilinear resize") {
-    import graft.operators.Preprocess
     // (source w, source h, output h, output w, grid)
     val geometries = Seq(
       (320, 240, 1200, 1200, 8), // the benchmark's upscale
@@ -544,16 +581,17 @@ class GraftNetSpec extends SparkTestBase {
       (9, 9, 2, 2, 8),           // 2x2 output
       (300, 2, 7, 7, 8),         // thin source
       (2, 300, 9, 9, 8))         // tall source
-    val fws = Seq("cv2", "np", "tf")
-    for ((w, h, oh, ow, g) <- geometries; fw <- fws) {
+    for ((w, h, oh, ow, g) <- geometries; fw <- Seq("cv2", "np", "tf")) {
       val buffers = Seq(
         "full" -> rgbPattern(w, h, w + h),
         "short" -> rgbPattern(w, h, 7).take(w * h * 3 / 2),
         "null" -> (null: Array[Byte]))
       for ((kind, data) <- buffers) {
-        val t = Preprocess.normalizer(fw)(Preprocess.decodeBuffer(frame(1L, w, h, data)))
-        val got = GraftNetDetector.resizePool(t, oh, ow, g)
-        val ref = resizeThenPool(t, oh, ow, g, exact = true)
+        // the cell means of the normalized frame's resize, from the
+        // bytes' cell means through the normalizer's affine map
+        val f = frame(1L, w, h, data)
+        val got = GraftNetDetector.features(f, Preprocess.normalization(fw), oh, ow, g)
+        val ref = ParentPath.features(f, fw, oh, ow, g)
         assert(got.length === ref.length)
         for (i <- ref.indices)
           assert(math.abs(got(i) - ref(i)) <= 1e-6 * math.max(1.0, math.abs(ref(i))),
@@ -572,11 +610,11 @@ class GraftNetSpec extends SparkTestBase {
     }
 
   test("detectBatch outputs are unchanged for the FP32 and INT8 artifacts") {
-    import graft.operators.Preprocess
-    // digests of the outputs with features from the separable map
+    // digests of the outputs with features pooled from the frame's
+    // bytes and normalized as cell means
     val pinned = Map(
-      GraftNet.BundledModel -> 8762786973804685511L,
-      GraftNet.BundledModelInt8 -> 3048001067403865560L)
+      GraftNet.BundledModel -> 2923150675611048370L,
+      GraftNet.BundledModelInt8 -> -5041403546028640963L)
     val frames = (1 to 3).map(i => frame(i, 80 + i, 60, rgbPattern(80 + i, 60, i))) :+
       frame(4L, 31, 17, rgbPattern(31, 17, 4).take(100)) :+
       frame(5L, 8, 8, null)
@@ -588,13 +626,13 @@ class GraftNetSpec extends SparkTestBase {
       val net = GraftNet.load(model)
       val grid = math.sqrt(net.inputSize / 3.0).toInt
       val dets = for (fw <- Seq("cv2", "np", "tf"); edge <- Seq(1200, 33, 4)) yield {
-        // against the float-summed resize-then-pool features the
-        // detector used before: logits within 1e-4, and every head
-        // keeps its class bucket and its side of the 0.5 score cut
+        // against the parent path's features: logits within 1e-4, and
+        // every head keeps its class bucket and its side of the 0.5
+        // score cut
         for (f <- frames) {
-          val t = Preprocess.normalizer(fw)(Preprocess.decodeBuffer(f))
-          val now = net.forward(GraftNetDetector.resizePool(t, edge, edge, grid))
-          val old = net.forward(resizeThenPool(t, edge, edge, grid, exact = false))
+          val now = net.forward(GraftNetDetector.features(f,
+            Preprocess.normalization(fw), edge, edge, grid))
+          val old = net.forward(ParentPath.features(f, fw, edge, edge, grid))
           val where = s"$model, $fw, edge $edge, frame ${f.frame_id}"
           for (i <- now.indices)
             assert(math.abs(now(i) - old(i)) <= 1e-4, s"$where, logit $i")
@@ -611,49 +649,55 @@ class GraftNetSpec extends SparkTestBase {
   }
 
   test("a frame with a non-positive height or width is refused by name") {
-    import graft.operators.Preprocess
     for ((h, w) <- Seq((-1, 8), (8, -1), (0, 8), (8, 0), (0, 0))) {
-      val e = intercept[IllegalArgumentException](
-        Preprocess.decodeBuffer(Frame("clip7", 42L, new Timestamp(0L), h, w, null)))
+      val e = intercept[IllegalArgumentException](Detect.detectAligned(StubDetector,
+        Seq(Frame("clip7", 42L, new Timestamp(0L), h, w, null))))
       assert(e.getMessage.contains("clip7/42") &&
         e.getMessage.contains(s"${h}x$w"), e.getMessage)
     }
     // the detect operator fails the task on it, naming the frame, as
     // the reference halts on its first bad frame; one partition, so
-    // vid/2 is the first bad frame the task meets
+    // vid/2 is the first bad frame the task meets. The stub, which
+    // reads no pixels, refuses it too.
     import spark.implicits._
     val frames = Seq(frame(1L, 8, 8, rgbPattern(8, 8, 1)),
       Frame("vid", 2L, new Timestamp(0L), -1, 8, null),
       Frame("vid", 3L, new Timestamp(0L), 0, 8, null))
-    val factory = Detectors.forConfig(
-      DetectorConfig(modelPath = Some(GraftNet.BundledModel), modelInput = 16))
-    val e = intercept[Exception](
-      Detect.detect(frames.toDS().coalesce(1), factory, batchSize = 3).collect())
-    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .map(_.getMessage).mkString("\n")
-    assert(messages.contains("vid/2") && messages.contains("-1x8"), messages)
+    for (path <- Seq(Some(GraftNet.BundledModel), None)) {
+      val factory = Detectors.forConfig(DetectorConfig(modelPath = path, modelInput = 16))
+      val e = intercept[Exception](
+        Detect.detect(frames.toDS().coalesce(1), factory, batchSize = 3).collect())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("\n")
+      assert(messages.contains("vid/2") && messages.contains("-1x8"), s"$path: $messages")
+    }
   }
 
-  test("a non-positive model_input or non-RGB tensor is refused by name") {
-    import graft.operators.Preprocess
-    for (edge <- Seq(0, -2); path <- Seq(Some(GraftNet.BundledModel), None)) {
+  test("a non-positive model_input or unknown preproc_fw is refused by name") {
+    for (path <- Seq(Some(GraftNet.BundledModel), None)) {
+      for (edge <- Seq(0, -2)) {
+        val e = intercept[IllegalArgumentException](
+          Detectors.forConfig(DetectorConfig(modelPath = path, modelInput = edge)))
+        assert(e.getMessage.contains("model_input"), e.getMessage)
+      }
       val e = intercept[IllegalArgumentException](
-        Detectors.forConfig(DetectorConfig(modelPath = path, modelInput = edge)))
-      assert(e.getMessage.contains("model_input"), e.getMessage)
+        Detectors.forConfig(DetectorConfig(modelPath = path, preprocFw = "torch")))
+      assert(e.getMessage.contains("preproc_fw") && e.getMessage.contains("torch"),
+        e.getMessage)
     }
     // the pipeline entry point refuses before it opens any source
     val cfg = graft.streaming.PipelineConfig(videoPath = "/nonexistent/frames",
-      labelFile = "/nonexistent/labels", modelInput = -2)
-    val e = intercept[IllegalArgumentException](
-      graft.streaming.VideoPipeline.run(spark, cfg, new graft.streaming.InMemoryStore))
-    assert(e.getMessage.contains("model_input"), e.getMessage)
+      labelFile = "/nonexistent/labels")
+    for ((bad, key) <- Seq(cfg.copy(modelInput = -2) -> "model_input",
+        cfg.copy(preprocFw = "torch") -> "preproc_fw")) {
+      val e = intercept[IllegalArgumentException](
+        graft.streaming.VideoPipeline.run(spark, bad, new graft.streaming.InMemoryStore))
+      assert(e.getMessage.contains(key), e.getMessage)
+    }
     // the kernels themselves refuse what would pool to all zeros
-    val t = Preprocess.Tensor(2, 2, 3, Array.fill(12)(1f))
+    val t = Tensor(2, 2, 3, Array.fill(12)(1f))
     intercept[IllegalArgumentException](Preprocess.resizeBilinear(t, 0, 0))
-    intercept[IllegalArgumentException](GraftNetDetector.resizePool(t, -2, -2, 8))
-    val gray = Preprocess.Tensor(2, 2, 1, Array.fill(4)(1f))
-    val c = intercept[IllegalArgumentException](
-      GraftNetDetector.resizePool(gray, 4, 4, 2))
-    assert(c.getMessage.contains("3-channel"), c.getMessage)
+    intercept[IllegalArgumentException](GraftNetDetector.features(
+      frame(1L, 2, 2, null), Preprocess.normalization("np"), -2, -2, 8))
   }
 }

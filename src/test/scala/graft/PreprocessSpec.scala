@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Frame
-import graft.operators.{Detect, DetectorConfig, Detectors, Preprocess, StubDetector}
+import graft.operators.{DetectorConfig, Detectors, GraftNetDetector, Preprocess, StubDetector}
 import graft.operators.Preprocess.Tensor
 
 class PreprocessSpec extends AnyFunSuite {
@@ -11,36 +11,47 @@ class PreprocessSpec extends AnyFunSuite {
   private def frame(id: Long, h: Int, w: Int, bytes: Array[Byte]) =
     Frame("v", id, new Timestamp(0L), h, w, bytes)
 
-  test("decodeBuffer: packed RGB bytes to HWC floats, zero-fill short") {
-    val t = Preprocess.decodeBuffer(
-      frame(1, 1, 2, Array[Byte](0, 127, -1))) // -1 = 255 unsigned
-    assert(t.data.toSeq === Seq(0f, 127f, 255f, 0f, 0f, 0f))
+  /** The detector's features of an e×e frame at model input e on an
+    * e×e grid: one cell per pixel, so each value is that pixel's
+    * normalized byte. */
+  private def perPixel(fw: String, e: Int, bytes: Array[Byte]): Array[Float] =
+    GraftNetDetector.features(frame(1, e, e, bytes), Preprocess.normalization(fw), e, e, e)
+
+  private def near(got: Seq[Float], want: Seq[Double]): Boolean =
+    got.length == want.length &&
+      got.zip(want).forall { case (g, w) => math.abs(g - w) <= 1e-6 * math.max(1.0, math.abs(w)) }
+
+  test("features: short and null buffers zero-fill like a black frame") {
+    // a 2x2 frame with 3 bytes: pixel 0 is (0, 127, 255), the rest black
+    assert(near(perPixel("cv2", 2, Array[Byte](0, 127, -1)), // -1 = 255 unsigned
+      Seq(0.0, 127 / 255.0, 1.0) ++ Seq.fill(9)(0.0)))
+    val black = (0 until 3).map(c =>
+      (0.0 - Preprocess.ImagenetMean(c)) / Preprocess.ImagenetStd(c))
+    assert(near(perPixel("np", 2, null), Seq.fill(4)(black).flatten))
+    assert(near(perPixel("np", 2, Array.emptyByteArray), Seq.fill(4)(black).flatten))
   }
 
   test("min-max normalize maps to [0,1]; constant image to zeros") {
-    val t = Preprocess.normalizeMinMax(Tensor(1, 2, 3,
-      Array(0f, 50f, 100f, 150f, 200f, 250f)))
-    assert(t.data.head === 0f && t.data.last === 1f)
-    assert(t.data(2) === 0.4f)
-    val const = Preprocess.normalizeMinMax(Tensor(1, 1, 3, Array(7f, 7f, 7f)))
-    assert(const.data.forall(_ === 0f))
+    val t = perPixel("cv2", 2, Array(0, 50, 100, 150, 200, 250).map(_.toByte))
+    assert(t.head === 0f && t(5) === 1f)
+    assert(t(2) === 0.4f)
+    assert(perPixel("cv2", 1, Array[Byte](7, 7, 7)).forall(_ === 0f))
   }
 
   test("imagenet normalize applies per-channel constants") {
-    val t = Preprocess.normalizeImagenet(Tensor(1, 1, 3,
-      Array(255f, 255f, 255f)))
     val exp = (0 until 3).map(c =>
-      (1.0f - Preprocess.ImagenetMean(c)) / Preprocess.ImagenetStd(c))
-    assert(t.data.toSeq === exp)
+      (1.0 - Preprocess.ImagenetMean(c)) / Preprocess.ImagenetStd(c))
+    assert(near(perPixel("np", 1, Array[Byte](-1, -1, -1)), exp))
   }
 
   test("per-image standardization: mean ~0, adjusted std ~1") {
-    val vals = Array.tabulate(48)(i => i.toFloat)
-    val t = Preprocess.standardize(Tensor(4, 4, 3, vals))
-    val mean = t.data.sum / t.data.length
+    val t = perPixel("tf", 4, Array.tabulate(48)(_.toByte))
+    val mean = t.sum / t.length
     assert(math.abs(mean) < 1e-5)
-    val varr = t.data.map(v => (v - mean) * (v - mean)).sum / t.data.length
+    val varr = t.map(v => (v - mean) * (v - mean)).sum / t.length
     assert(math.abs(math.sqrt(varr) - 1.0) < 1e-4)
+    // a constant frame has no spread: zeros, not a division by zero
+    assert(perPixel("tf", 2, Array.fill[Byte](12)(9)).forall(_ === 0f))
   }
 
   test("bilinear resize: identity is exact, 1x2 to 1x4 interpolates") {
@@ -51,14 +62,8 @@ class PreprocessSpec extends AnyFunSuite {
     assert(r.data.toSeq === Seq(0f, 25f, 75f, 100f))
   }
 
-  test("HWC to NCHW transpose") {
-    // 1x2 image, channels (r,g,b): [r0 g0 b0 r1 g1 b1]
-    val t = Tensor(1, 2, 3, Array(1f, 2f, 3f, 4f, 5f, 6f))
-    assert(Preprocess.toNCHW(t).toSeq === Seq(1f, 4f, 2f, 5f, 3f, 6f))
-  }
-
   test("preproc_fw dispatch: unknown kernel rejected (GDT:378-379)") {
-    intercept[IllegalArgumentException](Preprocess.normalizer("torch"))
+    intercept[IllegalArgumentException](Preprocess.normalization("torch"))
   }
 
   test("Augment kernels: hand-checked 2x3 image; flip is an involution, " +
@@ -93,12 +98,9 @@ class PreprocessSpec extends AnyFunSuite {
     assert(cr.toSeq === img9.slice(3 * 4, 3 * 4 + 3).toSeq)
   }
 
-  test("PreprocessingDetector preserves stub scoring; model path fails fast") {
-    val det = Detectors.forConfig(DetectorConfig(preprocFw = "cv2",
-      modelInput = 8))()
-    val frames = Seq(frame(7, 4, 4, Array.tabulate(48)(_.toByte)))
-    assert(det.detectBatch(frames) === frames.map(f =>
-      StubDetector.detectOne(f.frame_id)))
+  test("forConfig: no model path gives the stub; an unbundled artifact fails fast") {
+    assert(Detectors.forConfig(DetectorConfig(preprocFw = "cv2", modelInput = 8))() eq
+      StubDetector)
     intercept[UnsupportedOperationException](
       Detectors.forConfig(DetectorConfig(modelPath = Some("/tmp/m.onnx"))))
   }

@@ -4,7 +4,8 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{IntersectCount, PolyHash}
-import graft.operators.Preprocess
+import graft.model.Frame
+import graft.operators.{GraftNetDetector, Preprocess}
 import graft.operators.Preprocess.Tensor
 import org.apache.spark.sql.catalyst.util.ArrayData
 
@@ -91,15 +92,20 @@ class PropertiesSpec extends AnyFunSuite {
   }
 
   test("normalizers preserve shape; min-max lands in [0,1]") {
+    // any frame, any model input, any grid, short buffers included:
+    // every kernel gives g×g×3 finite features, cv2's within [0,1]
     val gen = for {
       h <- Gen.chooseNum(1, 6); w <- Gen.chooseNum(1, 6)
-      data <- Gen.listOfN(h * w * 3, Gen.chooseNum(0, 255))
-    } yield Tensor(h, w, 3, data.map(_.toFloat).toArray)
-    check(Prop.forAll(gen) { t =>
+      len <- Gen.chooseNum(0, h * w * 3)
+      data <- Gen.listOfN(len, Gen.chooseNum(0, 255))
+      edge <- Gen.chooseNum(1, 12); g <- Gen.chooseNum(1, 4)
+    } yield (Frame("v", 1L, new java.sql.Timestamp(0L), h, w,
+      data.map(_.toByte).toArray), edge, g)
+    check(Prop.forAll(gen) { case (f, edge, g) =>
       Seq("cv2", "np", "tf").forall { k =>
-        val out = Preprocess.normalizer(k)(t)
-        out.data.length == t.data.length &&
-          (k != "cv2" || out.data.forall(v => v >= 0f && v <= 1f))
+        val out = GraftNetDetector.features(f, Preprocess.normalization(k), edge, edge, g)
+        out.length == g * g * 3 && out.forall(v => !v.isNaN && !v.isInfinite) &&
+          (k != "cv2" || out.forall(v => v >= 0f && v <= 1f))
       }
     })
   }

@@ -145,6 +145,33 @@ class StreamingSpec extends SparkTestBase {
     assert(InMemoryStore.all.toSet === expected)
   }
 
+  test("a run without checkpoint_dir deletes its own checkpoint; a named one stays") {
+    import testImplicits._
+    val framesDir = tmpDir()
+    val labelFile = Files.createTempFile("labels-", ".label")
+    mkFrames(1 to 5).toDS().write.mode("overwrite").parquet(framesDir)
+    Files.writeString(labelFile, (0 until 25).map(i => s"$i:label_$i").mkString("\n"))
+    def checkpointOf(q: org.apache.spark.sql.streaming.StreamingQuery): java.io.File =
+      new java.io.File(new java.net.URI(
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.resolvedCheckpointRoot))
+    val cfg = PipelineConfig(videoPath = framesDir, labelFile = labelFile.toString)
+    val q = VideoPipeline.run(spark, cfg, new InMemoryStore)
+    val own = checkpointOf(q)
+    assert(own.getName.startsWith("graft-ckpt-"), own)
+    q.awaitTermination(60000)
+    assert(q.exception.isEmpty)
+    // the listener bus delivers the terminated event asynchronously
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (own.exists && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(!own.exists, s"$own left behind")
+    val named = tmpDir()
+    try {
+      val q2 = VideoPipeline.run(spark, cfg.copy(checkpointDir = named), new InMemoryStore)
+      q2.awaitTermination(60000)
+      assert(new java.io.File(named, "offsets").isDirectory)
+    } finally TmpPaths.deleteRecursively(new java.io.File(named))
+  }
+
   test("backpressure: maxFilesPerTrigger bounds each micro-batch") {
     import testImplicits._
     InMemoryStore.reset()
