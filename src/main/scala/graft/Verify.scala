@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -13,14 +14,22 @@ import java.nio.file.{Files, Paths}
   */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
     // optional third arg (local iteration only — the driver passes
     // two): comma-separated query names; restricts the dump AND the
     // oracle manifest to just those queries.
     val only = args.drop(2).headOption.map(_.split(',').toSet)
-    def keep(name: String) = only.forall(_.contains(name))
     val spark = Engine.session("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
+    dump(spark, args(0), args(1), only)
+    spark.stop()
+  }
+
+  /** Dump every query in `only` (all when None) run on `sfDir` to
+    * `outDir`, one parquet dir per query plus `oracle_sql.json`.
+    * A query that fails leaves no dump dir. Leaves `spark` running. */
+  private[graft] def dump(spark: SparkSession, sfDir: String,
+      outDir: String, only: Option[Set[String]]): Unit = {
+    def keep(name: String) = only.forall(_.contains(name))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(e => keep(e._1)).foreach { case (name, fn) =>
       try {
@@ -49,11 +58,7 @@ object Verify {
         // can leave nested _temporary dirs) so the driver records a
         // clean failure instead of comparing rows we just declared
         // unsafe
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(new java.io.File(s"$outDir/$name"))
+        TmpPaths.deleteRecursively(new java.io.File(s"$outDir/$name"))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -71,6 +76,5 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(e => keep(e._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.Engine.SnapshotOps
+import graft.operators.Inter
 import graft.operators.Codecs.Mp4.zigzag4x4
 import SyntheticMedia.sgn
 
@@ -2069,12 +2070,12 @@ object MediaQueries {
     * the half-weight butterflies are exactly the linear B-matrix
     * form).
     *
-    * Frame classes: kind 0 = DC-only (mb_type 3, the m34 grammar
-    * stays hot); kind 1 = one strided AC block (total_zeros +
-    * run_before under ctx0, and its zero neighbours' (0,0) tokens
-    * land in 2≤nC<4); kind 2 = four dense adjacent blocks
-    * (TotalCoeff 3–9 → neighbour nC walks the 2≤nC<4, 4≤nC<8 and
-    * FLC columns).
+    * Frame classes of the `SyntheticMedia.i16Coeffs` fixture:
+    * kind 0 = DC-only (mb_type 3, the m34 grammar stays hot);
+    * kind 1 = one strided AC block (total_zeros + run_before under
+    * ctx0, and its zero neighbours' (0,0) tokens land in 2≤nC<4);
+    * kind 2 = four dense adjacent blocks (TotalCoeff 3–9 →
+    * neighbour nC walks the 2≤nC<4, 4≤nC<8 and FLC columns).
     *
     * 100 TB shape: the m33/m34 contract — encode + decode run
     * partition-local per document, one row out per doc. */
@@ -2086,34 +2087,8 @@ object MediaQueries {
         it.map { id =>
           val n = (2 + id % 3).toInt
           val nals = (0 until n).map { f =>
-            val kind = ((id * 31 + f * 7) % 3).toInt
-            val z = ((id * 13 + f * 11) % 16).toInt
-            val ld = (if ((id + f) % 2 == 0) 1 else -1) *
-              (1 + ((id + f * 3) % 7)).toInt
-            val dc = new Array[Int](16)
-            dc(zigzag4x4(z)) = ld
-            def lvl(b: Int, k: Int): Int =
-              (if ((id + f + b + k) % 2 == 0) 1 else -1) *
-                (1 + ((id + f + b * 3 + k * 5) % 9)).toInt
-            val ac = Array.fill(16)(null: Array[Int])
-            if (kind == 1) {
-              val ba = ((id * 7 + f) % 16).toInt
-              val s = 1 + ((id + f) % 3).toInt
-              val p = 1 + ((id * 3 + f) % 4).toInt
-              val a = new Array[Int](15)
-              for (k <- 1 to p) a(k * s - 1) = lvl(0, k)
-              ac(ba) = a
-            } else if (kind == 2) {
-              for (b <- Seq(0, 1, 4, 5)) {
-                val s = 1 + ((id + f + b) % 2).toInt
-                val p0 = 3 + ((id + f + 2 * b) % 7).toInt
-                val p = if (s == 2) math.min(p0, 7) else p0
-                val a = new Array[Int](15)
-                for (k <- 1 to p) a(k * s - 1) = lvl(b, k)
-                ac(b) = a
-              }
-            }
-            Seq(Codecs.Mp4.buildI16x16Slice(Seq((dc, ac)), 1, 1,
+            Seq(Codecs.Mp4.buildI16x16Slice(
+              Seq(SyntheticMedia.i16Coeffs(id, f)), 1, 1,
               frameNum = 0, frameNumBits = 4, idrPicId = f % 8))
           }
           val mp4 = Codecs.Mp4.mux(nals, keyframes = (1 to n),
@@ -3094,12 +3069,12 @@ object MediaQueries {
     * `decodebin` — CABAC is the default entropy coder of every
     * main/high-profile encoder, and was the biggest envelope refusal
     * a real file hit). Per document, the EXACT m35 coefficient
-    * fixtures (lone zigzag DC + strided/dense AC classes walking the
-    * neighbour-context space) are entropy-coded with the §9.3
-    * arithmetic coder instead of CAVLC — context-initialized
-    * I-slice models, mb_type/chroma-mode/qp-delta bins, residual
-    * significance maps, TU+UEG0 levels, bypass signs, per-MB
-    * terminate — muxed into real MP4 with a CABAC PPS
+    * fixture (`SyntheticMedia.i16Coeffs`: lone zigzag DC +
+    * strided/dense AC classes walking the neighbour-context space)
+    * is entropy-coded with the §9.3 arithmetic coder instead of
+    * CAVLC — context-initialized I-slice models,
+    * mb_type/chroma-mode/qp-delta bins, residual significance maps,
+    * TU+UEG0 levels, bypass signs, per-MB terminate — muxed into real MP4 with a CABAC PPS
     * (entropy_coding_mode_flag = 1), and decoded back through
     * container walk → PPS dispatch → §9.3.3.2 arithmetic decode →
     * the same reconstruction. The pixels are entropy-coder-invariant
@@ -3117,33 +3092,7 @@ object MediaQueries {
         it.map { id =>
           val n = (2 + id % 3).toInt
           val nals = (0 until n).map { f =>
-            val kind = ((id * 31 + f * 7) % 3).toInt
-            val z = ((id * 13 + f * 11) % 16).toInt
-            val ld = (if ((id + f) % 2 == 0) 1 else -1) *
-              (1 + ((id + f * 3) % 7)).toInt
-            val dc = new Array[Int](16)
-            dc(zigzag4x4(z)) = ld
-            def lvl(b: Int, k: Int): Int =
-              (if ((id + f + b + k) % 2 == 0) 1 else -1) *
-                (1 + ((id + f + b * 3 + k * 5) % 9)).toInt
-            val ac = Array.fill(16)(null: Array[Int])
-            if (kind == 1) {
-              val ba = ((id * 7 + f) % 16).toInt
-              val s = 1 + ((id + f) % 3).toInt
-              val p = 1 + ((id * 3 + f) % 4).toInt
-              val a = new Array[Int](15)
-              for (k <- 1 to p) a(k * s - 1) = lvl(0, k)
-              ac(ba) = a
-            } else if (kind == 2) {
-              for (b <- Seq(0, 1, 4, 5)) {
-                val s = 1 + ((id + f + b) % 2).toInt
-                val p0 = 3 + ((id + f + 2 * b) % 7).toInt
-                val p = if (s == 2) math.min(p0, 7) else p0
-                val a = new Array[Int](15)
-                for (k <- 1 to p) a(k * s - 1) = lvl(b, k)
-                ac(b) = a
-              }
-            }
+            val (dc, ac) = SyntheticMedia.i16Coeffs(id, f)
             Seq(Cabac.buildI16x16Slice(dc, ac,
               frameNum = 0, frameNumBits = 4, idrPicId = f % 8))
           }
@@ -3167,22 +3116,24 @@ object MediaQueries {
   /** m41: INTER PREDICTION under the hash gate (reference anchor:
     * run.sh:53 `decodebin` — virtually all real video bits are
     * inter-coded; P slices were the largest remaining refusal after
-    * m40). Per document: one IDR I_16x16 frame (two macroblocks,
-    * lone-DC luma step + a chroma-DC step in MB1 — the m39 fixture
-    * arithmetic with the filter off) followed by 1–3 P frames, each
-    * either ALL-SKIP (§8.4.1.1 zero-MV derivation → an exact copy)
-    * or all-P_L0_16x16 with one horizontal quarter-pel MV per frame
-    * (full-pel luma, so MC is a clamped gather; the chroma MV lands
-    * on eighth positions, so the §8.4.2.2.2 bilinear runs for real
-    * whenever the MV is not a multiple of 8). The builder derives
-    * mvd against the same §8.4.1.3 median prediction the decoder
-    * runs — the first MB codes the full MV, its neighbours code
-    * mvd 0 through the B/C-unavailable → mvA rule.
+    * m40). Per document, the `SyntheticMedia.pGopDigest` clip: one
+    * IDR I_16x16 frame (two macroblocks, lone-DC luma step + a
+    * chroma-DC step in MB1 — the m39 fixture arithmetic with the
+    * filter off) followed by 1–3 P frames, each either ALL-SKIP
+    * (§8.4.1.1 zero-MV derivation → an exact copy) or, here,
+    * all-P_L0_16x16 with one horizontal full-pel MV per frame (so
+    * luma MC is a clamped gather; the chroma MV lands on eighth
+    * positions, so the §8.4.2.2.2 bilinear runs for real whenever
+    * the MV is not a multiple of 8). The builder derives mvd against
+    * the same §8.4.1.3 median prediction the decoder runs — the
+    * first MB codes the full MV, its neighbours code mvd 0 through
+    * the B/C-unavailable → mvA rule.
     *
     * The fixtures stay y-uniform (horizontal MVs only), so the
     * oracle restates each frame as one characteristic row: the luma
-    * row evolves by clamped GATHER (full-pel), the chroma rows by
-    * the exact bilinear, unrolled over the ≤ 3 P steps.
+    * row evolves by the xFrac-0 (clamped gather) case of the
+    * quarter-pel row step, the chroma rows by the exact bilinear,
+    * unrolled over the ≤ 3 P steps.
     *
     * 100 TB shape: the m33..m40 contract — encode + decode run
     * partition-local per document, one row out per doc; the
@@ -3190,57 +3141,33 @@ object MediaQueries {
     * per-task state, exactly how a 1000-executor scan would hold
     * it). */
   def m41InterDecode(spark: SparkSession, dir: String): DataFrame = {
+    val shifts = Array(-16, -12, -8, -4, 4, 8, 12, 16)
+    pGopQuery(spark, dir) { (id, f) =>
+      val dx = shifts(((id * 5 + f * 3) % 8).toInt)
+      Seq(Inter.PMove(dx, 0), Inter.PMove(dx, 0))
+    }
+  }
+
+  /** m41's MV column: P frame `f`'s luma shift in quarter pels. */
+  private def m41DxSql(f: Int): String =
+    s"""[-16,-12,-8,-4,4,8,12,16]
+       |    [CAST((doc_id * 5 + $f * 3) % 8 AS INT) + 1]""".stripMargin
+
+  val m41Sql: String = sqlPGop(m41DxSql)
+
+  /** m41–m43's query: one row per document, its
+    * `SyntheticMedia.pGopDigest` clip with P frame f's macroblocks
+    * from `moved(id, f)`. */
+  private def pGopQuery(spark: SparkSession, dir: String)(
+      moved: (Long, Int) => Seq[Inter.PMb]): DataFrame = {
     import spark.implicits._
-    import graft.operators.{Codecs, Inter}
-    import Codecs.Mp4.{ChromaRes, I16Mb}
     Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
-      .mapPartitions { it =>
-        val lmags = Array(1, 2, 4, 5, 6, 7, 8, 12, 16, 18, 20)
-        val cmags = Array(1, 2, 3, 4, 5, 6, 8, 10)
-        val shifts = Array(-16, -12, -8, -4, 4, 8, 12, 16)
-        val noAc = Array.fill(16)(null: Array[Int])
-        it.map { id =>
-          val n = (2 + id % 3).toInt
-          val c0 = sgn(id) * (1 + (id % 5)).toInt
-          val c1 = sgn(id * 3) * lmags((id * 7 % 11).toInt)
-          val cbc = sgn(id) * cmags((id * 2 % 8).toInt)
-          val crc = sgn(id + 1) * cmags((id * 3 % 8).toInt)
-          val dc0 = new Array[Int](16); dc0(0) = c0
-          val dc1 = new Array[Int](16); dc1(0) = c1
-          val cbDc = new Array[Int](4); cbDc(0) = cbc
-          val crDc = new Array[Int](4); crDc(0) = crc
-          val iNal = Codecs.Mp4.buildMixedIntraSlice(Seq(
-            I16Mb(dc0, noAc),
-            I16Mb(dc1, noAc, 2, ChromaRes(cbDc, null, crDc, null))),
-            2, 1, frameNum = 0, frameNumBits = 4)
-          val pNals = (1 until n).map { f =>
-            if ((id + f) % 4 == 0)
-              Inter.buildPSlice(Seq(Inter.PSkip, Inter.PSkip), 2, 1,
-                frameNum = f, frameNumBits = 4)
-            else {
-              val dx = shifts(((id * 5 + f * 3) % 8).toInt)
-              Inter.buildPSlice(
-                Seq(Inter.PMove(dx, 0), Inter.PMove(dx, 0)), 2, 1,
-                frameNum = f, frameNumBits = 4)
-            }
-          }
-          val mp4 = Codecs.Mp4.mux(
-            Seq(Seq(iNal)) ++ pNals.map(Seq(_)), keyframes = Seq(1),
-            timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
-          val (ys, cbs, crs, fp) =
-            SyntheticMedia.gopDigest(mp4, n, 32, 16, fpChroma = true)
-          (id, n, 32, 16, ys, cbs, crs, fp)
-        }
+      .map { id =>
+        val (n, ys, cbs, crs, fp) = SyntheticMedia.pGopDigest(id)(moved(id, _))
+        (id, n, 32, 16, ys, cbs, crs, fp)
       }.toDF("doc_id", "n_frames", "width", "height", "y_sum",
         "cb_sum", "cr_sum", "pix_fp")
   }
-
-  /** Clamped full-pel gather of a 1-indexed `len`-list `r` by
-    * (quarter-pel) shift expression `dq` — the luma MC row step. */
-  private def sqlGather(r: String, dq: String, len: Int): String =
-    s"""list_transform(range($len), x -> $r[
-       |  least(${len - 1}, greatest(0,
-       |    CAST(x + (($dq) + 32000) // 4 - 8000 AS INT))) + 1])""".stripMargin
 
   /** §8.4.2.2.2 one-row chroma bilinear of 1-indexed `len`-list `r`
     * by luma quarter-pel shift `dq` (yFrac 0): base = floor(dq/8),
@@ -3255,21 +3182,64 @@ object MediaQueries {
        |      CAST(x + ($base) + 1 AS INT))) + 1] + 4) // 8)""".stripMargin
   }
 
-  /** Closed-form restatement of m41: the I frame per the m39
-    * arithmetic with the filter off (two uniform luma macroblocks,
-    * a chroma step in MB1), then each P frame's characteristic rows
-    * evolve by clamped gather (luma, full-pel) and the §8.4.2.2.2
-    * bilinear (chroma, eighth-pel), unrolled over the ≤ 3 P steps;
-    * a skipped frame is the 0-shift identity of both. */
-  val m41Sql: String = {
+  /** §8.4.2.2.1 quarter-pel row step on a 1-indexed `len`-list `r`
+    * by quarter-pel shift `dq`: full (a clamped gather) / half
+    * (6-tap, +16 ≫ 5, clipped) / quarter (rounded average against
+    * the flanking integer sample) by xFrac. The (possibly negative)
+    * 6-tap numerator may be divided with truncating `//` because the
+    * result is clamped at 0 either way. With `offs`, the 1-indexed
+    * per-4×4-column residual-offset list is added under Clip1. */
+  private def sqlQpelRow(r: String, dq: String, len: Int,
+      offs: Option[String] = None): String = {
+    val s = s"(($dq) + 32000) // 4 - 8000"
+    val xf = s"(($dq) - 4 * ($s))"
+    def at(off: Int) =
+      s"$r[least(${len - 1}, greatest(0, " +
+        s"CAST(x + ($s) + ($off) AS INT))) + 1]"
+    val hs = s"(${at(-2)} - 5*${at(-1)} + 20*${at(0)} + " +
+      s"20*${at(1)} - 5*${at(2)} + ${at(3)})"
+    val b = s"least(255, greatest(0, ($hs + 16) // 32))"
+    val pred =
+      s"""CASE ($xf)
+         |  WHEN 0 THEN ${at(0)}
+         |  WHEN 2 THEN $b
+         |  WHEN 1 THEN (${at(0)} + $b + 1) // 2
+         |  ELSE ($b + ${at(1)} + 1) // 2 END""".stripMargin
+    val px = offs.fold(pred)(o =>
+      s"least(255, greatest(0,\n  ($pred)\n  + $o[CAST(x // 4 AS INT) + 1]))")
+    s"list_transform(range($len), x -> $px)"
+  }
+
+  /** Closed-form restatement of the `SyntheticMedia.pGopDigest` clip
+    * (m41–m43): the I frame per the m39 arithmetic with the filter
+    * off (two uniform luma macroblocks, a chroma step in MB1), then
+    * each P frame f's characteristic rows evolve by the quarter-pel
+    * row step (luma) and the §8.4.2.2.2 bilinear (chroma) under the
+    * luma shift d_f — 0 on a skipped frame, else the rung's MV column
+    * `mv(f)` — unrolled over the ≤ 3 P steps. `offs(f)`, when given,
+    * is P frame f's 8-entry residual-offset list (m43). */
+  private def sqlPGop(mv: Int => String,
+      offs: Option[Int => String] = None): String = {
     val v0 = s"least(255, greatest(0, 128 + (${fdiv("52*c0 + 32", 64)})))"
     val off1 = fdiv("52*c1 + 32", 64)
     val offCb = fdiv("104*cbc + 32", 64)
     val offCr = fdiv("104*crc + 32", 64)
-    def dxCol(f: Int): String =
-      s"""CASE WHEN (doc_id + $f) % 4 = 0 THEN 0
-         |  ELSE [-16,-12,-8,-4,4,8,12,16]
-         |    [CAST((doc_id * 5 + $f * 3) % 8 AS INT) + 1] END""".stripMargin
+    val steps = 1 to 3
+    val pCols = steps.map { f =>
+      s"""    CASE WHEN (doc_id + $f) % 4 = 0 THEN 0
+         |      ELSE ${mv(f)} END AS d$f""".stripMargin
+    } ++ offs.toSeq.flatMap(o => steps.map(f => s"    ${o(f)} AS o$f"))
+    val rows = steps.map { f =>
+      val (p, o) = (f - 1, offs.map(_ => s"o$f"))
+      s"""r$f AS (SELECT *,
+         |    ${sqlQpelRow(s"lr$p", s"d$f", 32, o)} AS lr$f,
+         |    ${sqlBilin(s"cbr$p", s"d$f", 16)} AS cbr$f,
+         |    ${sqlBilin(s"crr$p", s"d$f", 16)} AS crr$f
+         |  FROM r$p),""".stripMargin
+    }
+    def pick(c: String): String =
+      s"CASE f WHEN 0 THEN ${c}0 WHEN 1 THEN ${c}1 WHEN 2 THEN ${c}2\n" +
+        s"      ELSE ${c}3 END AS $c"
     s"""WITH d AS (SELECT doc_id, CAST(2 + doc_id % 3 AS INT) AS n
        |  FROM documents),
        |par AS (SELECT doc_id, n,
@@ -3284,55 +3254,30 @@ object MediaQueries {
        |    (CASE WHEN (doc_id + 1) % 2 = 0 THEN 1 ELSE -1 END)
        |      * ([1,2,3,4,5,6,8,10]
        |          [CAST(doc_id * 3 % 8 AS INT) + 1]) AS crc,
-       |    ${dxCol(1)} AS d1,
-       |    ${dxCol(2)} AS d2,
-       |    ${dxCol(3)} AS d3
+       |${pCols.mkString(",\n")}
        |  FROM d),
-       |r0 AS (SELECT doc_id, n, d1, d2, d3,
+       |r0 AS (SELECT *,
        |    list_concat(
        |      list_transform(range(16), x -> CAST($v0 AS BIGINT)),
        |      list_transform(range(16), x ->
        |        CAST(least(255, greatest(0, ($v0) + ($off1))) AS BIGINT)))
-       |      AS lr,
+       |      AS lr0,
        |    list_concat(
        |      list_transform(range(8), x -> CAST(128 AS BIGINT)),
        |      list_transform(range(8), x ->
        |        CAST(least(255, greatest(0, 128 + ($offCb))) AS BIGINT)))
-       |      AS cbr,
+       |      AS cbr0,
        |    list_concat(
        |      list_transform(range(8), x -> CAST(128 AS BIGINT)),
        |      list_transform(range(8), x ->
        |        CAST(least(255, greatest(0, 128 + ($offCr))) AS BIGINT)))
-       |      AS crr
+       |      AS crr0
        |  FROM par),
-       |r1 AS (SELECT doc_id, n, d2, d3, lr AS lr0, cbr AS cbr0,
-       |    crr AS crr0,
-       |    ${sqlGather("lr", "d1", 32)} AS lr1,
-       |    ${sqlBilin("cbr", "d1", 16)} AS cbr1,
-       |    ${sqlBilin("crr", "d1", 16)} AS crr1
-       |  FROM r0),
-       |r2 AS (SELECT doc_id, n, d3, lr0, cbr0, crr0, lr1, cbr1, crr1,
-       |    ${sqlGather("lr1", "d2", 32)} AS lr2,
-       |    ${sqlBilin("cbr1", "d2", 16)} AS cbr2,
-       |    ${sqlBilin("crr1", "d2", 16)} AS crr2
-       |  FROM r1),
-       |r3 AS (SELECT doc_id, n, lr0, cbr0, crr0, lr1, cbr1, crr1,
-       |    lr2, cbr2, crr2,
-       |    ${sqlGather("lr2", "d3", 32)} AS lr3,
-       |    ${sqlBilin("cbr2", "d3", 16)} AS cbr3,
-       |    ${sqlBilin("crr2", "d3", 16)} AS crr3
-       |  FROM r2),
-       |fr AS (SELECT doc_id, n, unnest(range(n)) AS f, lr0, cbr0,
-       |    crr0, lr1, cbr1, crr1, lr2, cbr2, crr2, lr3, cbr3, crr3
-       |  FROM r3),
-       |pf AS (SELECT doc_id, n, f,
-       |    CASE f WHEN 0 THEN lr0 WHEN 1 THEN lr1 WHEN 2 THEN lr2
-       |      ELSE lr3 END AS lr,
-       |    CASE f WHEN 0 THEN cbr0 WHEN 1 THEN cbr1 WHEN 2 THEN cbr2
-       |      ELSE cbr3 END AS cbr,
-       |    CASE f WHEN 0 THEN crr0 WHEN 1 THEN crr1 WHEN 2 THEN crr2
-       |      ELSE crr3 END AS crr
-       |  FROM fr),
+       |${rows.mkString("\n")}
+       |pf AS (SELECT doc_id, n, f, ${pick("lr")},
+       |    ${pick("cbr")},
+       |    ${pick("crr")}
+       |  FROM (SELECT *, unnest(range(n)) AS f FROM r3)),
        |per AS (SELECT doc_id, n, f,
        |    16 * list_reduce(list_prepend(CAST(0 AS BIGINT), lr),
        |      (a, b) -> a + b) AS ys,
@@ -3356,11 +3301,11 @@ object MediaQueries {
 
   // ---- m42: quarter-pel inter interpolation ---------------------------
 
-  /** m42: QUARTER-SAMPLE MOTION under the hash gate — m41's GOP
-    * shape with FRACTIONAL MVs in both axes: the §8.4.2.2.1 6-tap
-    * half-sample filter (centre position from unrounded
-    * intermediates), the Table 8-12 quarter averages, and the
-    * chroma eighth-pel bilinear at arbitrary (xF, yF).
+  /** m42: QUARTER-SAMPLE MOTION under the hash gate — the
+    * `SyntheticMedia.pGopDigest` clip with FRACTIONAL MVs in both
+    * axes: the §8.4.2.2.1 6-tap half-sample filter (centre position
+    * from unrounded intermediates), the Table 8-12 quarter averages,
+    * and the chroma eighth-pel bilinear at arbitrary (xF, yF).
     *
     * Oracle reduction, proved by the filter arithmetic: the fixture
     * pictures are Y-UNIFORM, and the 6-tap's taps sum to 32, so
@@ -3375,287 +3320,72 @@ object MediaQueries {
     *
     * 100 TB shape: the m33..m41 contract — per-doc encode + decode
     * inside one partition pass, one row out. */
-  def m42QpelDecode(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import graft.operators.{Codecs, Inter}
-    import Codecs.Mp4.{ChromaRes, I16Mb}
-    Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
-      .mapPartitions { it =>
-        val lmags = Array(1, 2, 4, 5, 6, 7, 8, 12, 16, 18, 20)
-        val cmags = Array(1, 2, 3, 4, 5, 6, 8, 10)
-        // quarter-pel: every xFrac class, both signs, incl. full-pel
-        val dxs = Array(-10, -7, -6, -5, -3, -2, 2, 3, 5, 6, 7, 8)
-        val dys = Array(-9, -5, -2, 0, 2, 5, 9, 12)
-        val noAc = Array.fill(16)(null: Array[Int])
-        it.map { id =>
-          val n = (2 + id % 3).toInt
-          val c0 = sgn(id) * (1 + (id % 5)).toInt
-          val c1 = sgn(id * 3) * lmags((id * 7 % 11).toInt)
-          val cbc = sgn(id) * cmags((id * 2 % 8).toInt)
-          val crc = sgn(id + 1) * cmags((id * 3 % 8).toInt)
-          val dc0 = new Array[Int](16); dc0(0) = c0
-          val dc1 = new Array[Int](16); dc1(0) = c1
-          val cbDc = new Array[Int](4); cbDc(0) = cbc
-          val crDc = new Array[Int](4); crDc(0) = crc
-          val iNal = Codecs.Mp4.buildMixedIntraSlice(Seq(
-            I16Mb(dc0, noAc),
-            I16Mb(dc1, noAc, 2, ChromaRes(cbDc, null, crDc, null))),
-            2, 1, frameNum = 0, frameNumBits = 4)
-          val pNals = (1 until n).map { f =>
-            if ((id + f) % 4 == 0)
-              Inter.buildPSlice(Seq(Inter.PSkip, Inter.PSkip), 2, 1,
-                frameNum = f, frameNumBits = 4)
-            else {
-              val dx = dxs(((id * 5 + f * 3) % 12).toInt)
-              val dy = dys(((id * 3 + f * 7) % 8).toInt)
-              Inter.buildPSlice(
-                Seq(Inter.PMove(dx, dy), Inter.PMove(dx, dy)), 2, 1,
-                frameNum = f, frameNumBits = 4)
-            }
-          }
-          val mp4 = Codecs.Mp4.mux(
-            Seq(Seq(iNal)) ++ pNals.map(Seq(_)), keyframes = Seq(1),
-            timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
-          val (ys, cbs, crs, fp) =
-            SyntheticMedia.gopDigest(mp4, n, 32, 16, fpChroma = true)
-          (id, n, 32, 16, ys, cbs, crs, fp)
-        }
-      }.toDF("doc_id", "n_frames", "width", "height", "y_sum",
-        "cb_sum", "cr_sum", "pix_fp")
-  }
+  def m42QpelDecode(spark: SparkSession, dir: String): DataFrame =
+    pGopQuery(spark, dir) { (id, f) =>
+      val mv = qpelMove(id, f)
+      Seq(mv, mv)
+    }
 
-  /** §8.4.2.2.1 quarter-pel row step on a 1-indexed `len`-list:
-    * full / half (6-tap, +16 ≫ 5, clipped) / quarter (rounded
-    * average against the flanking integer sample) by xFrac. The
-    * (possibly negative) 6-tap numerator may be divided with
-    * truncating `//` because the result is clamped at 0 either
-    * way. */
-  private def sqlQpelRow(r: String, dq: String, len: Int): String = {
-    val s = s"(($dq) + 32000) // 4 - 8000"
-    val xf = s"(($dq) - 4 * ($s))"
-    def at(off: Int) =
-      s"$r[least(${len - 1}, greatest(0, " +
-        s"CAST(x + ($s) + ($off) AS INT))) + 1]"
-    val hs = s"(${at(-2)} - 5*${at(-1)} + 20*${at(0)} + " +
-      s"20*${at(1)} - 5*${at(2)} + ${at(3)})"
-    val b = s"least(255, greatest(0, ($hs + 16) // 32))"
-    s"""list_transform(range($len), x -> CASE ($xf)
-       |  WHEN 0 THEN ${at(0)}
-       |  WHEN 2 THEN $b
-       |  WHEN 1 THEN (${at(0)} + $b + 1) // 2
-       |  ELSE ($b + ${at(1)} + 1) // 2 END)""".stripMargin
-  }
+  // quarter-pel: every xFrac class, both signs, incl. full-pel
+  private val qpelDxs = Array(-10, -7, -6, -5, -3, -2, 2, 3, 5, 6, 7, 8)
+  private val qpelDys = Array(-9, -5, -2, 0, 2, 5, 9, 12)
+
+  /** m42's (and m43's) MV of a moved P frame `f`. */
+  private def qpelMove(id: Long, f: Int): Inter.PMove =
+    Inter.PMove(qpelDxs(((id * 5 + f * 3) % 12).toInt),
+      qpelDys(((id * 3 + f * 7) % 8).toInt))
+
+  /** `qpelMove`'s horizontal component as the oracle's MV column. */
+  private def qpelDxSql(f: Int): String =
+    s"""[-10,-7,-6,-5,-3,-2,2,3,5,6,7,8]
+       |    [CAST((doc_id * 5 + $f * 3) % 12 AS INT) + 1]""".stripMargin
 
   /** Closed-form restatement of m42 (see the query scaladoc for the
     * y-uniform reduction that folds yFrac out exactly). */
-  val m42Sql: String = {
-    val v0 = s"least(255, greatest(0, 128 + (${fdiv("52*c0 + 32", 64)})))"
-    val off1 = fdiv("52*c1 + 32", 64)
-    val offCb = fdiv("104*cbc + 32", 64)
-    val offCr = fdiv("104*crc + 32", 64)
-    def dxCol(f: Int): String =
-      s"""CASE WHEN (doc_id + $f) % 4 = 0 THEN 0
-         |  ELSE [-10,-7,-6,-5,-3,-2,2,3,5,6,7,8]
-         |    [CAST((doc_id * 5 + $f * 3) % 12 AS INT) + 1] END""".stripMargin
-    s"""WITH d AS (SELECT doc_id, CAST(2 + doc_id % 3 AS INT) AS n
-       |  FROM documents),
-       |par AS (SELECT doc_id, n,
-       |    (CASE WHEN doc_id % 2 = 0 THEN 1 ELSE -1 END)
-       |      * (1 + doc_id % 5) AS c0,
-       |    (CASE WHEN (doc_id * 3) % 2 = 0 THEN 1 ELSE -1 END)
-       |      * ([1,2,4,5,6,7,8,12,16,18,20]
-       |          [CAST(doc_id * 7 % 11 AS INT) + 1]) AS c1,
-       |    (CASE WHEN doc_id % 2 = 0 THEN 1 ELSE -1 END)
-       |      * ([1,2,3,4,5,6,8,10]
-       |          [CAST(doc_id * 2 % 8 AS INT) + 1]) AS cbc,
-       |    (CASE WHEN (doc_id + 1) % 2 = 0 THEN 1 ELSE -1 END)
-       |      * ([1,2,3,4,5,6,8,10]
-       |          [CAST(doc_id * 3 % 8 AS INT) + 1]) AS crc,
-       |    ${dxCol(1)} AS d1,
-       |    ${dxCol(2)} AS d2,
-       |    ${dxCol(3)} AS d3
-       |  FROM d),
-       |r0 AS (SELECT doc_id, n, d1, d2, d3,
-       |    list_concat(
-       |      list_transform(range(16), x -> CAST($v0 AS BIGINT)),
-       |      list_transform(range(16), x ->
-       |        CAST(least(255, greatest(0, ($v0) + ($off1))) AS BIGINT)))
-       |      AS lr,
-       |    list_concat(
-       |      list_transform(range(8), x -> CAST(128 AS BIGINT)),
-       |      list_transform(range(8), x ->
-       |        CAST(least(255, greatest(0, 128 + ($offCb))) AS BIGINT)))
-       |      AS cbr,
-       |    list_concat(
-       |      list_transform(range(8), x -> CAST(128 AS BIGINT)),
-       |      list_transform(range(8), x ->
-       |        CAST(least(255, greatest(0, 128 + ($offCr))) AS BIGINT)))
-       |      AS crr
-       |  FROM par),
-       |r1 AS (SELECT doc_id, n, d2, d3, lr AS lr0, cbr AS cbr0,
-       |    crr AS crr0,
-       |    ${sqlQpelRow("lr", "d1", 32)} AS lr1,
-       |    ${sqlBilin("cbr", "d1", 16)} AS cbr1,
-       |    ${sqlBilin("crr", "d1", 16)} AS crr1
-       |  FROM r0),
-       |r2 AS (SELECT doc_id, n, d3, lr0, cbr0, crr0, lr1, cbr1, crr1,
-       |    ${sqlQpelRow("lr1", "d2", 32)} AS lr2,
-       |    ${sqlBilin("cbr1", "d2", 16)} AS cbr2,
-       |    ${sqlBilin("crr1", "d2", 16)} AS crr2
-       |  FROM r1),
-       |r3 AS (SELECT doc_id, n, lr0, cbr0, crr0, lr1, cbr1, crr1,
-       |    lr2, cbr2, crr2,
-       |    ${sqlQpelRow("lr2", "d3", 32)} AS lr3,
-       |    ${sqlBilin("cbr2", "d3", 16)} AS cbr3,
-       |    ${sqlBilin("crr2", "d3", 16)} AS crr3
-       |  FROM r2),
-       |fr AS (SELECT doc_id, n, unnest(range(n)) AS f, lr0, cbr0,
-       |    crr0, lr1, cbr1, crr1, lr2, cbr2, crr2, lr3, cbr3, crr3
-       |  FROM r3),
-       |pf AS (SELECT doc_id, n, f,
-       |    CASE f WHEN 0 THEN lr0 WHEN 1 THEN lr1 WHEN 2 THEN lr2
-       |      ELSE lr3 END AS lr,
-       |    CASE f WHEN 0 THEN cbr0 WHEN 1 THEN cbr1 WHEN 2 THEN cbr2
-       |      ELSE cbr3 END AS cbr,
-       |    CASE f WHEN 0 THEN crr0 WHEN 1 THEN crr1 WHEN 2 THEN crr2
-       |      ELSE crr3 END AS crr
-       |  FROM fr),
-       |per AS (SELECT doc_id, n, f,
-       |    16 * list_reduce(list_prepend(CAST(0 AS BIGINT), lr),
-       |      (a, b) -> a + b) AS ys,
-       |    8 * list_reduce(list_prepend(CAST(0 AS BIGINT), cbr),
-       |      (a, b) -> a + b) AS cbs,
-       |    8 * list_reduce(list_prepend(CAST(0 AS BIGINT), crr),
-       |      (a, b) -> a + b) AS crs,
-       |    flatten(list_transform(range(16), x -> lr))
-       |      || flatten(list_transform(range(8), x -> cbr))
-       |      || flatten(list_transform(range(8), x -> crr)) AS vals
-       |  FROM pf)
-       |SELECT doc_id, max(n) AS n_frames, 32 AS width, 16 AS height,
-       |  CAST(sum(ys) AS BIGINT) AS y_sum,
-       |  CAST(sum(cbs) AS BIGINT) AS cb_sum,
-       |  CAST(sum(crs) AS BIGINT) AS cr_sum,
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |    flatten(list(vals ORDER BY f))),
-       |    (a, b) -> (a * 31 + b) % 1000000007) AS pix_fp
-       |FROM per GROUP BY doc_id""".stripMargin
-  }
+  val m42Sql: String = sqlPGop(qpelDxSql)
 
   // ---- m43: residual-coded inter macroblocks --------------------------
 
   /** m43: MOTION COMPENSATION + TRANSFORM-CODED RESIDUAL under the
-    * hash gate — the m42 GOP shape where some P frames carry
-    * CodedBlockPatternLuma 15 macroblocks: per frame, two 4×4 block
-    * COLUMNS get a lone scan-0 LumaLevel4x4 coefficient in all four
-    * block rows (uniform (208·c+32)≫6 offsets — y-uniformity holds),
-    * CAVLC-coded under the §9.2.1 nC grid that now spans skipped,
-    * residual-free and coded inter macroblocks, then added onto the
-    * quarter-pel prediction with Clip1. The Table 9-4 INTER column's
-    * carried rows are {0 ↦ 0, 11 ↦ 15}; other patterns refuse.
+    * hash gate — the `SyntheticMedia.pGopDigest` clip with m42's MVs
+    * where some P frames carry CodedBlockPatternLuma 15 macroblocks:
+    * per frame, two 4×4 block COLUMNS get a lone scan-0
+    * LumaLevel4x4 coefficient in all four block rows (uniform
+    * (208·c+32)≫6 offsets — y-uniformity holds), CAVLC-coded under
+    * the §9.2.1 nC grid that now spans skipped, residual-free and
+    * coded inter macroblocks, then added onto the quarter-pel
+    * prediction with Clip1. The Table 9-4 INTER column's carried
+    * rows are {0 ↦ 0, 11 ↦ 15}; other patterns refuse.
     *
     * 100 TB shape: the m33..m42 contract — per-doc encode + decode
     * inside one partition pass, one row out. */
-  def m43InterResidual(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import graft.operators.{Codecs, Inter}
-    import Codecs.Mp4.{ChromaRes, I16Mb}
-    Tables.spread(Tables.documents(spark, dir).select(col("doc_id"))).as[Long]
-      .mapPartitions { it =>
-        val lmags = Array(1, 2, 4, 5, 6, 7, 8, 12, 16, 18, 20)
-        val cmags = Array(1, 2, 3, 4, 5, 6, 8, 10)
-        val dxs = Array(-10, -7, -6, -5, -3, -2, 2, 3, 5, 6, 7, 8)
-        val dys = Array(-9, -5, -2, 0, 2, 5, 9, 12)
-        val noAc = Array.fill(16)(null: Array[Int])
-        it.map { id =>
-          val n = (2 + id % 3).toInt
-          val c0 = sgn(id) * (1 + (id % 5)).toInt
-          val c1 = sgn(id * 3) * lmags((id * 7 % 11).toInt)
-          val cbc = sgn(id) * cmags((id * 2 % 8).toInt)
-          val crc = sgn(id + 1) * cmags((id * 3 % 8).toInt)
-          val dc0 = new Array[Int](16); dc0(0) = c0
-          val dc1 = new Array[Int](16); dc1(0) = c1
-          val cbDc = new Array[Int](4); cbDc(0) = cbc
-          val crDc = new Array[Int](4); crDc(0) = crc
-          val iNal = Codecs.Mp4.buildMixedIntraSlice(Seq(
-            I16Mb(dc0, noAc),
-            I16Mb(dc1, noAc, 2, ChromaRes(cbDc, null, crDc, null))),
-            2, 1, frameNum = 0, frameNumBits = 4)
-          val pNals = (1 until n).map { f =>
-            val kind = ((id + f) % 4).toInt
-            if (kind == 0)
-              Inter.buildPSlice(Seq(Inter.PSkip, Inter.PSkip), 2, 1,
-                frameNum = f, frameNumBits = 4)
-            else {
-              val dx = dxs(((id * 5 + f * 3) % 12).toInt)
-              val dy = dys(((id * 3 + f * 7) % 8).toInt)
-              if (kind != 2)
-                Inter.buildPSlice(
-                  Seq(Inter.PMove(dx, dy), Inter.PMove(dx, dy)), 2, 1,
-                  frameNum = f, frameNumBits = 4)
-              else {
-                // residual frame: lone scan-0 coefficients in two
-                // distinct 4x4 block columns (of the 8 across 2 MBs)
-                val g1 = ((id * 3 + f) % 8).toInt
-                val g2 = (g1 + 1 + ((id + f) % 7).toInt) % 8
-                val cA = sgn(id + f) * (1 + ((id + f * 3) % 4)).toInt
-                val cB = sgn(id + f + 1) * (1 + ((id * 3 + f) % 4)).toInt
-                val per = Array.fill(2)(Array.fill(16)(null: Array[Int]))
-                for ((g, c) <- Seq((g1, cA), (g2, cB)); by <- 0 until 4) {
-                  val a = new Array[Int](16); a(0) = c
-                  per(g / 4)(by * 4 + g % 4) = a
-                }
-                def mb(k: Int): Inter.PMb =
-                  if (per(k).exists(_ != null)) Inter.PMoveRes(dx, dy, per(k))
-                  else Inter.PMove(dx, dy)
-                Inter.buildPSlice(Seq(mb(0), mb(1)), 2, 1,
-                  frameNum = f, frameNumBits = 4)
-              }
-            }
-          }
-          val mp4 = Codecs.Mp4.mux(
-            Seq(Seq(iNal)) ++ pNals.map(Seq(_)), keyframes = Seq(1),
-            timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
-          val (ys, cbs, crs, fp) =
-            SyntheticMedia.gopDigest(mp4, n, 32, 16, fpChroma = true)
-          (id, n, 32, 16, ys, cbs, crs, fp)
+  def m43InterResidual(spark: SparkSession, dir: String): DataFrame =
+    pGopQuery(spark, dir) { (id, f) =>
+      val mv = qpelMove(id, f)
+      if ((id + f) % 4 != 2) Seq(mv, mv)
+      else {
+        // residual frame: lone scan-0 coefficients in two
+        // distinct 4x4 block columns (of the 8 across 2 MBs)
+        val g1 = ((id * 3 + f) % 8).toInt
+        val g2 = (g1 + 1 + ((id + f) % 7).toInt) % 8
+        val cA = sgn(id + f) * (1 + ((id + f * 3) % 4)).toInt
+        val cB = sgn(id + f + 1) * (1 + ((id * 3 + f) % 4)).toInt
+        val per = Array.fill(2)(Array.fill(16)(null: Array[Int]))
+        for ((g, c) <- Seq((g1, cA), (g2, cB)); by <- 0 until 4) {
+          val a = new Array[Int](16); a(0) = c
+          per(g / 4)(by * 4 + g % 4) = a
         }
-      }.toDF("doc_id", "n_frames", "width", "height", "y_sum",
-        "cb_sum", "cr_sum", "pix_fp")
-  }
-
-  /** m43's row step: the quarter-pel prediction row plus the
-    * per-4×4-column residual offsets, Clip1'd. */
-  private def sqlQpelRowRes(r: String, dq: String, offs: String,
-      len: Int): String = {
-    val s = s"(($dq) + 32000) // 4 - 8000"
-    val xf = s"(($dq) - 4 * ($s))"
-    def at(off: Int) =
-      s"$r[least(${len - 1}, greatest(0, " +
-        s"CAST(x + ($s) + ($off) AS INT))) + 1]"
-    val hs = s"(${at(-2)} - 5*${at(-1)} + 20*${at(0)} + " +
-      s"20*${at(1)} - 5*${at(2)} + ${at(3)})"
-    val b = s"least(255, greatest(0, ($hs + 16) // 32))"
-    s"""list_transform(range($len), x -> least(255, greatest(0,
-       |  (CASE ($xf)
-       |  WHEN 0 THEN ${at(0)}
-       |  WHEN 2 THEN $b
-       |  WHEN 1 THEN (${at(0)} + $b + 1) // 2
-       |  ELSE ($b + ${at(1)} + 1) // 2 END)
-       |  + $offs[CAST(x // 4 AS INT) + 1])))""".stripMargin
-  }
+        per.toSeq.map { co =>
+          if (co.exists(_ != null)) Inter.PMoveRes(mv.mvxQpel, mv.mvyQpel, co)
+          else mv
+        }
+      }
+    }
 
   /** Closed-form restatement of m43: m42's evolution with per-frame
     * residual-offset lists (lone scan-0 coefficient c → uniform
     * (208·c+32)≫6 over its 4×4 column) added under Clip1. */
   val m43Sql: String = {
-    val v0 = s"least(255, greatest(0, 128 + (${fdiv("52*c0 + 32", 64)})))"
-    val off1 = fdiv("52*c1 + 32", 64)
-    val offCb = fdiv("104*cbc + 32", 64)
-    val offCr = fdiv("104*crc + 32", 64)
-    def dxCol(f: Int): String =
-      s"""CASE WHEN (doc_id + $f) % 4 = 0 THEN 0
-         |  ELSE [-10,-7,-6,-5,-3,-2,2,3,5,6,7,8]
-         |    [CAST((doc_id * 5 + $f * 3) % 12 AS INT) + 1] END""".stripMargin
     def offCol(f: Int): String = {
       val g1 = s"CAST((doc_id * 3 + $f) % 8 AS INT)"
       val g2 = s"CAST(($g1 + 1 + (doc_id + $f) % 7) % 8 AS INT)"
@@ -3671,91 +3401,7 @@ object MediaQueries {
          |  ELSE list_transform(range(8), g -> CAST(0 AS BIGINT)) END"""
         .stripMargin
     }
-    s"""WITH d AS (SELECT doc_id, CAST(2 + doc_id % 3 AS INT) AS n
-       |  FROM documents),
-       |par AS (SELECT doc_id, n,
-       |    (CASE WHEN doc_id % 2 = 0 THEN 1 ELSE -1 END)
-       |      * (1 + doc_id % 5) AS c0,
-       |    (CASE WHEN (doc_id * 3) % 2 = 0 THEN 1 ELSE -1 END)
-       |      * ([1,2,4,5,6,7,8,12,16,18,20]
-       |          [CAST(doc_id * 7 % 11 AS INT) + 1]) AS c1,
-       |    (CASE WHEN doc_id % 2 = 0 THEN 1 ELSE -1 END)
-       |      * ([1,2,3,4,5,6,8,10]
-       |          [CAST(doc_id * 2 % 8 AS INT) + 1]) AS cbc,
-       |    (CASE WHEN (doc_id + 1) % 2 = 0 THEN 1 ELSE -1 END)
-       |      * ([1,2,3,4,5,6,8,10]
-       |          [CAST(doc_id * 3 % 8 AS INT) + 1]) AS crc,
-       |    ${dxCol(1)} AS d1,
-       |    ${dxCol(2)} AS d2,
-       |    ${dxCol(3)} AS d3,
-       |    ${offCol(1)} AS o1,
-       |    ${offCol(2)} AS o2,
-       |    ${offCol(3)} AS o3
-       |  FROM d),
-       |r0 AS (SELECT doc_id, n, d1, d2, d3, o1, o2, o3,
-       |    list_concat(
-       |      list_transform(range(16), x -> CAST($v0 AS BIGINT)),
-       |      list_transform(range(16), x ->
-       |        CAST(least(255, greatest(0, ($v0) + ($off1))) AS BIGINT)))
-       |      AS lr,
-       |    list_concat(
-       |      list_transform(range(8), x -> CAST(128 AS BIGINT)),
-       |      list_transform(range(8), x ->
-       |        CAST(least(255, greatest(0, 128 + ($offCb))) AS BIGINT)))
-       |      AS cbr,
-       |    list_concat(
-       |      list_transform(range(8), x -> CAST(128 AS BIGINT)),
-       |      list_transform(range(8), x ->
-       |        CAST(least(255, greatest(0, 128 + ($offCr))) AS BIGINT)))
-       |      AS crr
-       |  FROM par),
-       |r1 AS (SELECT doc_id, n, d2, d3, o2, o3, lr AS lr0, cbr AS cbr0,
-       |    crr AS crr0,
-       |    ${sqlQpelRowRes("lr", "d1", "o1", 32)} AS lr1,
-       |    ${sqlBilin("cbr", "d1", 16)} AS cbr1,
-       |    ${sqlBilin("crr", "d1", 16)} AS crr1
-       |  FROM r0),
-       |r2 AS (SELECT doc_id, n, d3, o3, lr0, cbr0, crr0, lr1, cbr1, crr1,
-       |    ${sqlQpelRowRes("lr1", "d2", "o2", 32)} AS lr2,
-       |    ${sqlBilin("cbr1", "d2", 16)} AS cbr2,
-       |    ${sqlBilin("crr1", "d2", 16)} AS crr2
-       |  FROM r1),
-       |r3 AS (SELECT doc_id, n, lr0, cbr0, crr0, lr1, cbr1, crr1,
-       |    lr2, cbr2, crr2,
-       |    ${sqlQpelRowRes("lr2", "d3", "o3", 32)} AS lr3,
-       |    ${sqlBilin("cbr2", "d3", 16)} AS cbr3,
-       |    ${sqlBilin("crr2", "d3", 16)} AS crr3
-       |  FROM r2),
-       |fr AS (SELECT doc_id, n, unnest(range(n)) AS f, lr0, cbr0,
-       |    crr0, lr1, cbr1, crr1, lr2, cbr2, crr2, lr3, cbr3, crr3
-       |  FROM r3),
-       |pf AS (SELECT doc_id, n, f,
-       |    CASE f WHEN 0 THEN lr0 WHEN 1 THEN lr1 WHEN 2 THEN lr2
-       |      ELSE lr3 END AS lr,
-       |    CASE f WHEN 0 THEN cbr0 WHEN 1 THEN cbr1 WHEN 2 THEN cbr2
-       |      ELSE cbr3 END AS cbr,
-       |    CASE f WHEN 0 THEN crr0 WHEN 1 THEN crr1 WHEN 2 THEN crr2
-       |      ELSE crr3 END AS crr
-       |  FROM fr),
-       |per AS (SELECT doc_id, n, f,
-       |    16 * list_reduce(list_prepend(CAST(0 AS BIGINT), lr),
-       |      (a, b) -> a + b) AS ys,
-       |    8 * list_reduce(list_prepend(CAST(0 AS BIGINT), cbr),
-       |      (a, b) -> a + b) AS cbs,
-       |    8 * list_reduce(list_prepend(CAST(0 AS BIGINT), crr),
-       |      (a, b) -> a + b) AS crs,
-       |    flatten(list_transform(range(16), x -> lr))
-       |      || flatten(list_transform(range(8), x -> cbr))
-       |      || flatten(list_transform(range(8), x -> crr)) AS vals
-       |  FROM pf)
-       |SELECT doc_id, max(n) AS n_frames, 32 AS width, 16 AS height,
-       |  CAST(sum(ys) AS BIGINT) AS y_sum,
-       |  CAST(sum(cbs) AS BIGINT) AS cb_sum,
-       |  CAST(sum(crs) AS BIGINT) AS cr_sum,
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |    flatten(list(vals ORDER BY f))),
-       |    (a, b) -> (a * 31 + b) % 1000000007) AS pix_fp
-       |FROM per GROUP BY doc_id""".stripMargin
+    sqlPGop(qpelDxSql, Some(offCol))
   }
 
   // ---- m44: multi-MB CABAC with chroma residuals ----------------------

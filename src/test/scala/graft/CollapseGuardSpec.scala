@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.functions.{col, xxhash64}
 
 /** Guards for code collapses: a query rewired onto shared helpers
-  * must return the rows it returned before, and no `src/main`
-  * definition may be left that only tests call.
+  * must return the rows it returned before, its oracle SQL must
+  * still restate those rows, and no `src/main` definition may be
+  * left that only tests call.
   *
   * The digests below are (row count, wrapping sum of `xxhash64` over
   * every column) at sf0.001, taken from the hand-written per-query
@@ -60,6 +61,25 @@ class CollapseGuardSpec extends SparkTestBase {
         s"""("$name", ${d._1}L, ${d._2}L)"""
     }
     assert(wrong.isEmpty, wrong.mkString("digest changed:\n", ",\n", ""))
+  }
+
+  test("the oracle SQL of the queries on the shared H.264 fixtures " +
+    "matches their dump under tools/check_oracle.py") {
+    import scala.sys.process._
+    val names = Seq("m35_cavlc_full_decode", "m40_cabac_decode",
+      "m41_inter_decode", "m42_qpel_decode", "m43_inter_residual")
+    val base = new java.io.File(sys.props("user.dir"))
+    val out = java.nio.file.Files.createTempDirectory("graft-oracle-").toFile
+    try {
+      Verify.dump(spark, sf, out.getPath, Some(names.toSet))
+      val log = new StringBuilder
+      val code = Process(Seq("python3", "tools/check_oracle.py", sf,
+        out.getPath), base).!(ProcessLogger(l => log ++= l + "\n",
+        l => log ++= l + "\n"))
+      val passed = log.toString.linesIterator.count(_.startsWith("PASS "))
+      assert(code == 0 && passed == names.size,
+        s"tools/check_oracle.py exited $code with $passed PASS:\n$log")
+    } finally TmpPaths.deleteRecursively(out)
   }
 
   test("tools/orphans.py finds no src/main definition outside its " +

@@ -457,39 +457,42 @@ class GraftNetSpec extends SparkTestBase {
     graft.streaming.InMemoryStore.reset()
     val framesDir = java.nio.file.Files.createTempDirectory("graft-real-").toString
     val labelFile = java.nio.file.Files.createTempFile("labels-", ".label")
-    java.nio.file.Files.writeString(labelFile,
-      (0 until 25).map(i => s"$i:label_$i").mkString("\n"))
-    val frames = (1L to 8L).map { id =>
-      frame(id, 16, 12, rgbPattern(16, 12, id.toInt))
-    }
-    frames.toDS().write.mode("overwrite").parquet(framesDir)
-    val yaml =
-      s"""device: CPU
-         |preproc_fw: np
-         |face_threshold: 0.1
-         |model_path: ${graft.operators.GraftNet.BundledModel}
-         |model_input: 32
-         |video_path: $framesDir
-         |label_file: $labelFile
-         |""".stripMargin
-    val cfg = graft.streaming.PipelineConfig.fromMap(
-      graft.streaming.PipelineConfig.fromYaml(yaml))
-    assert(cfg.modelPath.contains(graft.operators.GraftNet.BundledModel))
-    assert(cfg.modelInput === 32)
-    val store = new graft.streaming.InMemoryStore
-    val q = graft.streaming.VideoPipeline.run(spark, cfg, store)
-    q.awaitTermination(60000)
-    // real weights scored real pixels and records reached the sink
-    assert(graft.streaming.InMemoryStore.size > 0)
-    // parity with the batch path under the same real factory
-    val expected = graft.streaming.DetectionStream.pipeline(
-        frames.toDS(),
-        graft.sources.Labels.fromIdNameFile(spark, labelFile.toString),
-        Detectors.forConfig(DetectorConfig(preprocFw = "np", modelInput = 32,
-          modelPath = Some(graft.operators.GraftNet.BundledModel))),
-        0.1)
-      .collect().map(_.getString(0)).toSet
-    assert(graft.streaming.InMemoryStore.all.toSet === expected)
+    try {
+      java.nio.file.Files.writeString(labelFile,
+        (0 until 25).map(i => s"$i:label_$i").mkString("\n"))
+      val frames = (1L to 8L).map { id =>
+        frame(id, 16, 12, rgbPattern(16, 12, id.toInt))
+      }
+      frames.toDS().write.mode("overwrite").parquet(framesDir)
+      val yaml =
+        s"""device: CPU
+           |preproc_fw: np
+           |face_threshold: 0.1
+           |model_path: ${graft.operators.GraftNet.BundledModel}
+           |model_input: 32
+           |video_path: $framesDir
+           |label_file: $labelFile
+           |""".stripMargin
+      val cfg = graft.streaming.PipelineConfig.fromMap(
+        graft.streaming.PipelineConfig.fromYaml(yaml))
+      assert(cfg.modelPath.contains(graft.operators.GraftNet.BundledModel))
+      assert(cfg.modelInput === 32)
+      val store = new graft.streaming.InMemoryStore
+      val q = graft.streaming.VideoPipeline.run(spark, cfg, store)
+      q.awaitTermination(60000)
+      // real weights scored real pixels and records reached the sink
+      assert(graft.streaming.InMemoryStore.size > 0)
+      // parity with the batch path under the same real factory
+      val expected = graft.streaming.DetectionStream.pipeline(
+          frames.toDS(),
+          graft.sources.Labels.fromIdNameFile(spark, labelFile.toString),
+          Detectors.forConfig(DetectorConfig(preprocFw = "np", modelInput = 32,
+            modelPath = Some(graft.operators.GraftNet.BundledModel))),
+          0.1)
+        .collect().map(_.getString(0)).toSet
+      assert(graft.streaming.InMemoryStore.all.toSet === expected)
+    } finally Seq(new java.io.File(framesDir), labelFile.toFile)
+      .foreach(TmpPaths.deleteRecursively)
   }
 
   test("grid pooling: cell means over a known tensor") {

@@ -43,20 +43,24 @@ class MultimodalSpec extends SparkTestBase {
 
   test("plan dump sink writes a formatted physical plan (S9)") {
     val path = Files.createTempFile("graft-plan-", ".txt").toString
-    Engine.dumpPlan(spark.range(10).toDF().filter(col("id") > 3), path)
-    val txt = Files.readString(java.nio.file.Paths.get(path))
-    assert(txt.contains("Physical Plan"))
-    assert(txt.contains("Range"))
+    try {
+      Engine.dumpPlan(spark.range(10).toDF().filter(col("id") > 3), path)
+      val txt = Files.readString(java.nio.file.Paths.get(path))
+      assert(txt.contains("Physical Plan"))
+      assert(txt.contains("Range"))
+    } finally TmpPaths.deleteRecursively(new java.io.File(path))
   }
 
   test("label file: name truncated at the second colon, like the reference") {
     val f = Files.createTempFile("labels-", ".label")
-    Files.writeString(f, "1:person\n2:traffic light: small\n")
-    val rows = graft.sources.Labels.fromIdNameFile(spark, f.toString)
-      .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-    assert(rows(1) === "person")
-    // gst-detection-tf.py load_labels keeps line.split(":")[:2] — the
-    // text after a second ':' is dropped, not kept
-    assert(rows(2) === "traffic light")
+    try {
+      Files.writeString(f, "1:person\n2:traffic light: small\n")
+      val rows = graft.sources.Labels.fromIdNameFile(spark, f.toString)
+        .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+      assert(rows(1) === "person")
+      // gst-detection-tf.py load_labels keeps line.split(":")[:2] — the
+      // text after a second ':' is dropped, not kept
+      assert(rows(2) === "traffic light")
+    } finally TmpPaths.deleteRecursively(f.toFile)
   }
 }

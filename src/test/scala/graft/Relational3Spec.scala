@@ -215,15 +215,17 @@ class Relational3Spec extends SparkTestBase {
       (5L, "y y", "bb", "s", 7L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val tmp = java.nio.file.Files.createTempDirectory("x31t").toString
-    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val res = graft.queries.CorpusQueries.x31CorrProfile(spark, tmp)
-      .as[(String, Long, Double, Double)].collect().sortBy(_._1)
-    assert(res.length === 2)
-    val aa = res(0); val bb = res(1)
-    assert(aa._1 === "aa" && aa._2 === 3L)
-    assert(aa._3 === 1.0)   // tokens grow perfectly linearly with chars
-    assert(aa._4 === 0.2)   // 2 tokens per 10 chars
-    assert(bb._3 === 0.0 && bb._4 === 0.0) // degenerate guard
+    try {
+      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val res = graft.queries.CorpusQueries.x31CorrProfile(spark, tmp)
+        .as[(String, Long, Double, Double)].collect().sortBy(_._1)
+      assert(res.length === 2)
+      val aa = res(0); val bb = res(1)
+      assert(aa._1 === "aa" && aa._2 === 3L)
+      assert(aa._3 === 1.0)   // tokens grow perfectly linearly with chars
+      assert(aa._4 === 0.2)   // 2 tokens per 10 chars
+      assert(bb._3 === 0.0 && bb._4 === 0.0) // degenerate guard
+    } finally TmpPaths.deleteRecursively(new java.io.File(tmp))
   }
 
   test("r36 bucketed join: no Exchange feeds the join; result matches " +
@@ -311,13 +313,15 @@ class Relational3Spec extends SparkTestBase {
       (i.toLong, "t", "aa", "s", if (i <= 30) 100L else 100L + i))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val tmp = java.nio.file.Files.createTempDirectory("x32t").toString
-    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = graft.queries.CorpusQueries.x32EquiDepth(spark, tmp)
-      .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
-    // value 100: cum_before=0 -> bucket 0 holds all 30 ties
-    assert(got.head === ((0L, 100L, 100L, 30L)))
-    assert(got.map(_._4).sum === 40L)
-    // buckets 1..6 are empty (skipped), tail values fill 7,8,9
-    assert(!got.map(_._1).toSet.exists(b => b >= 1 && b <= 6))
+    try {
+      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val got = graft.queries.CorpusQueries.x32EquiDepth(spark, tmp)
+        .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
+      // value 100: cum_before=0 -> bucket 0 holds all 30 ties
+      assert(got.head === ((0L, 100L, 100L, 30L)))
+      assert(got.map(_._4).sum === 40L)
+      // buckets 1..6 are empty (skipped), tail values fill 7,8,9
+      assert(!got.map(_._1).toSet.exists(b => b >= 1 && b <= 6))
+    } finally TmpPaths.deleteRecursively(new java.io.File(tmp))
   }
 }

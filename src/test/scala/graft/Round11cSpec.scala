@@ -86,46 +86,48 @@ class Round11cSpec extends SparkTestBase {
     import graft.streaming.{DetectionStream, InMemoryStore}
     val dir = java.nio.file.Files.createTempDirectory("graft-mp4-in-")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-mp4-ck-")
-    def mkMp4(seed: Long, n: Int): Array[Byte] = {
-      val frames = (0 until n).map(f => lcgPlanes(32, 16, seed + f))
-      val nals = frames.zipWithIndex.map { case (fr, f) =>
-        Seq(Codecs.Mp4.buildIdrPcmSlice(fr, frameNum = 0,
-          frameNumBits = 4, idrPicId = f)) }
-      Codecs.Mp4.mux(nals, keyframes = (1 to n),
-        timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
-    }
-    java.nio.file.Files.write(dir.resolve("a.mp4"), mkMp4(0x11L, 2))
-    java.nio.file.Files.write(dir.resolve("b.mp4"), mkMp4(0x77L, 3))
-    val labels = {
-      import testImplicits._
-      (0 until 25).map(i => (i, s"label_$i")).toDF("label_id", "label")
-    }
-    InMemoryStore.reset()
-    val store = new InMemoryStore
-    val frames = FrameSource.videoFileStream(spark, dir.toString,
-      maxFilesPerTrigger = 1)
-    val q = DetectionStream.runAvailableNow(frames, labels,
-      () => StubDetector, store, ckpt.toString)
-    q.awaitTermination(120000)
-    // batch reference: decode the same files directly and run the
-    // identical batch pipeline — stream ≡ batch on real video bytes
-    import testImplicits._
-    val direct = Seq("a.mp4", "b.mp4").flatMap { name =>
-      val bytes = java.nio.file.Files.readAllBytes(dir.resolve(name))
-      val mt = new Timestamp(java.nio.file.Files
-        .getLastModifiedTime(dir.resolve(name)).toMillis)
-      Inter.decodeGopFrames(bytes).zipWithIndex.map { case (f, i) =>
-        val planes = f.y ++ f.cb ++ f.cr
-        Frame(name, i.toLong, mt, f.height, f.width,
-          Codecs.Y4mCodec.yuv420ToRgb(planes, 0, f.width, f.height))
+    try {
+      def mkMp4(seed: Long, n: Int): Array[Byte] = {
+        val frames = (0 until n).map(f => lcgPlanes(32, 16, seed + f))
+        val nals = frames.zipWithIndex.map { case (fr, f) =>
+          Seq(Codecs.Mp4.buildIdrPcmSlice(fr, frameNum = 0,
+            frameNumBits = 4, idrPicId = f)) }
+        Codecs.Mp4.mux(nals, keyframes = (1 to n),
+          timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
       }
-    }
-    assert(direct.size === 5)
-    val batchOut = DetectionStream.pipeline(
-      direct.toDS(), labels, () => StubDetector, 0.7)
-      .collect().map(_.getString(0)).sorted.toSeq
-    assert(batchOut.nonEmpty)
-    assert(InMemoryStore.all.sorted.toSeq === batchOut)
+      java.nio.file.Files.write(dir.resolve("a.mp4"), mkMp4(0x11L, 2))
+      java.nio.file.Files.write(dir.resolve("b.mp4"), mkMp4(0x77L, 3))
+      val labels = {
+        import testImplicits._
+        (0 until 25).map(i => (i, s"label_$i")).toDF("label_id", "label")
+      }
+      InMemoryStore.reset()
+      val store = new InMemoryStore
+      val frames = FrameSource.videoFileStream(spark, dir.toString,
+        maxFilesPerTrigger = 1)
+      val q = DetectionStream.runAvailableNow(frames, labels,
+        () => StubDetector, store, ckpt.toString)
+      q.awaitTermination(120000)
+      // batch reference: decode the same files directly and run the
+      // identical batch pipeline — stream ≡ batch on real video bytes
+      import testImplicits._
+      val direct = Seq("a.mp4", "b.mp4").flatMap { name =>
+        val bytes = java.nio.file.Files.readAllBytes(dir.resolve(name))
+        val mt = new Timestamp(java.nio.file.Files
+          .getLastModifiedTime(dir.resolve(name)).toMillis)
+        Inter.decodeGopFrames(bytes).zipWithIndex.map { case (f, i) =>
+          val planes = f.y ++ f.cb ++ f.cr
+          Frame(name, i.toLong, mt, f.height, f.width,
+            Codecs.Y4mCodec.yuv420ToRgb(planes, 0, f.width, f.height))
+        }
+      }
+      assert(direct.size === 5)
+      val batchOut = DetectionStream.pipeline(
+        direct.toDS(), labels, () => StubDetector, 0.7)
+        .collect().map(_.getString(0)).sorted.toSeq
+      assert(batchOut.nonEmpty)
+      assert(InMemoryStore.all.sorted.toSeq === batchOut)
+    } finally Seq(dir, ckpt).foreach(p => TmpPaths.deleteRecursively(p.toFile))
   }
 
   test("e2e: MP4 bytes -> I_PCM pixel decode -> YUV->RGB -> real inference") {

@@ -244,43 +244,45 @@ class Round14bSpec extends SparkTestBase {
     import graft.streaming.{DetectionStream, InMemoryStore}
     val dir = java.nio.file.Files.createTempDirectory("graft-gop-in-")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-gop-ck-")
-    val f0 = refFrame(21)
-    val nals = Seq(
-      Mp4.buildIdrPcmSlice(f0, frameNum = 0, frameNumBits = 4),
-      Inter.buildPSlice(Seq(Inter.PMove(5, -6), Inter.PMove(5, -6)),
-        2, 1, frameNum = 1, frameNumBits = 4),
-      Inter.buildPSlice(Seq(Inter.PSkip, Inter.PSkip), 2, 1,
-        frameNum = 2, frameNumBits = 4))
-    val mp4 = Mp4.mux(nals.map(Seq(_)), keyframes = Seq(1),
-      timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
-    java.nio.file.Files.write(dir.resolve("gop.mp4"), mp4)
-    val labels = {
+    try {
+      val f0 = refFrame(21)
+      val nals = Seq(
+        Mp4.buildIdrPcmSlice(f0, frameNum = 0, frameNumBits = 4),
+        Inter.buildPSlice(Seq(Inter.PMove(5, -6), Inter.PMove(5, -6)),
+          2, 1, frameNum = 1, frameNumBits = 4),
+        Inter.buildPSlice(Seq(Inter.PSkip, Inter.PSkip), 2, 1,
+          frameNum = 2, frameNumBits = 4))
+      val mp4 = Mp4.mux(nals.map(Seq(_)), keyframes = Seq(1),
+        timescale = 90000, sampleDelta = 3000, width = 32, height = 16)
+      java.nio.file.Files.write(dir.resolve("gop.mp4"), mp4)
+      val labels = {
+        import testImplicits._
+        (0 until 25).map(i => (i, s"label_$i")).toDF("label_id", "label")
+      }
+      InMemoryStore.reset()
+      val store = new InMemoryStore
+      val frames = FrameSource.videoFileStream(spark, dir.toString,
+        maxFilesPerTrigger = 1)
+      val q = DetectionStream.runAvailableNow(frames, labels,
+        () => StubDetector, store, ckpt.toString)
+      q.awaitTermination(120000)
       import testImplicits._
-      (0 until 25).map(i => (i, s"label_$i")).toDF("label_id", "label")
-    }
-    InMemoryStore.reset()
-    val store = new InMemoryStore
-    val frames = FrameSource.videoFileStream(spark, dir.toString,
-      maxFilesPerTrigger = 1)
-    val q = DetectionStream.runAvailableNow(frames, labels,
-      () => StubDetector, store, ckpt.toString)
-    q.awaitTermination(120000)
-    import testImplicits._
-    val mt = new java.sql.Timestamp(java.nio.file.Files
-      .getLastModifiedTime(dir.resolve("gop.mp4")).toMillis)
-    val direct = Inter.decodeGopFrames(mp4).zipWithIndex.map {
-      case (f, i) =>
-        val planes = f.y ++ f.cb ++ f.cr
-        Frame("gop.mp4", i.toLong, mt, f.height, f.width,
-          graft.operators.Codecs.Y4mCodec
-            .yuv420ToRgb(planes, 0, f.width, f.height))
-    }.toSeq
-    assert(direct.size === 3)
-    val batchOut = DetectionStream.pipeline(
-      direct.toDS(), labels, () => StubDetector, 0.7)
-      .collect().map(_.getString(0)).sorted.toSeq
-    assert(batchOut.nonEmpty)
-    assert(InMemoryStore.all.sorted.toSeq === batchOut)
+      val mt = new java.sql.Timestamp(java.nio.file.Files
+        .getLastModifiedTime(dir.resolve("gop.mp4")).toMillis)
+      val direct = Inter.decodeGopFrames(mp4).zipWithIndex.map {
+        case (f, i) =>
+          val planes = f.y ++ f.cb ++ f.cr
+          Frame("gop.mp4", i.toLong, mt, f.height, f.width,
+            graft.operators.Codecs.Y4mCodec
+              .yuv420ToRgb(planes, 0, f.width, f.height))
+      }.toSeq
+      assert(direct.size === 3)
+      val batchOut = DetectionStream.pipeline(
+        direct.toDS(), labels, () => StubDetector, 0.7)
+        .collect().map(_.getString(0)).sorted.toSeq
+      assert(batchOut.nonEmpty)
+      assert(InMemoryStore.all.sorted.toSeq === batchOut)
+    } finally Seq(dir, ckpt).foreach(p => TmpPaths.deleteRecursively(p.toFile))
   }
 
   test("the GOP decoder is lazy and order-true: intra frames " +

@@ -535,11 +535,13 @@ class Round7Spec extends SparkTestBase {
       // 66 docs sharing a block -> over the 64 cap, no pairs emitted
       (10L to 75L).map(i => (i, s"zzzzzzzz padding $i", "en", "s", 20L))
     val tmp = java.nio.file.Files.createTempDirectory("d11t").toString
-    planted.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = graft.queries.LlmQueries.d11EditDistanceDedup(spark, tmp)
-      .as[(Long, Long, Int)].collect().sortBy(r => (r._1, r._2))
-    assert(got.toSeq === Seq((1L, 2L, 1), (1L, 3L, 2), (2L, 3L, 2)))
+    try {
+      planted.toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val got = graft.queries.LlmQueries.d11EditDistanceDedup(spark, tmp)
+        .as[(Long, Long, Int)].collect().sortBy(r => (r._1, r._2))
+      assert(got.toSeq === Seq((1L, 2L, 1), (1L, 3L, 2), (2L, 3L, 2)))
+    } finally TmpPaths.deleteRecursively(new java.io.File(tmp))
   }
 
   test("d12 minhash accuracy: identical docs estimate 1.0 with zero " +
@@ -670,23 +672,25 @@ class Round7Spec extends SparkTestBase {
       (4L, "unique text here", "en", "books", 16L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val tmp = java.nio.file.Files.createTempDirectory("x35t").toString
-    planted.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = graft.queries.CorpusQueries.x35DatasetCard(spark, tmp)
-      .select("source", "n_docs", "total_chars", "total_tokens",
-        "n_distinct_texts", "n_exact_dup_docs", "n_langs")
-      .as[(String, Long, Long, Long, Long, Long, Long)]
-      .collect().sortBy(_._1).toList
-    assert(got === List(
-      ("books", 1L, 16L, 3L, 1L, 0L, 1L),
-      ("web", 3L, 37L, 8L, 2L, 1L, 2L)))
-    // identity on the real corpus: dups = docs - distinct, per source
-    val real = graft.queries.CorpusQueries
-      .x35DatasetCard(spark, "/root/testdata/sf0.001")
-      .select("n_docs", "n_distinct_texts", "n_exact_dup_docs")
-      .as[(Long, Long, Long)].collect()
-    real.foreach { case (n, d, e) => assert(e === n - d) }
-    assert(real.map(_._1).sum ===
-      graft.sources.Tables.documents(spark, "/root/testdata/sf0.001").count())
+    try {
+      planted.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val got = graft.queries.CorpusQueries.x35DatasetCard(spark, tmp)
+        .select("source", "n_docs", "total_chars", "total_tokens",
+          "n_distinct_texts", "n_exact_dup_docs", "n_langs")
+        .as[(String, Long, Long, Long, Long, Long, Long)]
+        .collect().sortBy(_._1).toList
+      assert(got === List(
+        ("books", 1L, 16L, 3L, 1L, 0L, 1L),
+        ("web", 3L, 37L, 8L, 2L, 1L, 2L)))
+      // identity on the real corpus: dups = docs - distinct, per source
+      val real = graft.queries.CorpusQueries
+        .x35DatasetCard(spark, sf)
+        .select("n_docs", "n_distinct_texts", "n_exact_dup_docs")
+        .as[(Long, Long, Long)].collect()
+      real.foreach { case (n, d, e) => assert(e === n - d) }
+      assert(real.map(_._1).sum ===
+        graft.sources.Tables.documents(spark, sf).count())
+    } finally TmpPaths.deleteRecursively(new java.io.File(tmp))
   }
 
   test("m11 thumbnail: query output equals a direct kernel run on " +
@@ -733,20 +737,22 @@ class Round7Spec extends SparkTestBase {
       .toDF("doc_id", "text")
     val path = java.nio.file.Files
       .createTempDirectory("d13t").toString + "/idx"
-    graft.operators.Dedup.nearDupIndexBuild(corpus, path)
-    val got = graft.operators.Dedup
-      .nearDupIndexProbe(spark, path, batch, threshold = 0.8)
-      .as[(Long, Long, Double)].collect()
-    assert(got.length === 1)
-    assert(got.head._1 === 10L && got.head._2 === 97L)
-    assert(got.head._3 >= 0.8)
-    // real corpus: probe output sides respect the corpus/batch split
-    val real = graft.queries.LlmQueries
-      .d13NearDupIndex(spark, "/root/testdata/sf0.001")
-      .as[(Long, Long, Double)].collect()
-    real.foreach { case (c, b, _) =>
-      assert(c % 10 != 7 && b % 10 == 7)
-    }
+    try {
+      graft.operators.Dedup.nearDupIndexBuild(corpus, path)
+      val got = graft.operators.Dedup
+        .nearDupIndexProbe(spark, path, batch, threshold = 0.8)
+        .as[(Long, Long, Double)].collect()
+      assert(got.length === 1)
+      assert(got.head._1 === 10L && got.head._2 === 97L)
+      assert(got.head._3 >= 0.8)
+      // real corpus: probe output sides respect the corpus/batch split
+      val real = graft.queries.LlmQueries
+        .d13NearDupIndex(spark, sf)
+        .as[(Long, Long, Double)].collect()
+      real.foreach { case (c, b, _) =>
+        assert(c % 10 != 7 && b % 10 == 7)
+      }
+    } finally TmpPaths.deleteRecursively(new java.io.File(path).getParentFile)
   }
 
   test("m10 silence segments: runs match a direct formula fold, " +

@@ -456,11 +456,13 @@ class Round9Spec extends SparkTestBase {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val dir = java.nio.file.Files
       .createTempDirectory("graft-g6-").toString
-    rows.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val got = GraphQueries.g6CoEngagement(spark, dir)
-      .as[(String, String, Long, Long, Long, Double)].collect().toSet
-    // click:2 users, view:3, error:1; click∩view = {1,2} -> 2/(2+3-2)
-    assert(got === Set(("click", "view", 2L, 3L, 2L, 0.666667)))
+    try {
+      rows.write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val got = GraphQueries.g6CoEngagement(spark, dir)
+        .as[(String, String, Long, Long, Long, Double)].collect().toSet
+      // click:2 users, view:3, error:1; click∩view = {1,2} -> 2/(2+3-2)
+      assert(got === Set(("click", "view", 2L, 3L, 2L, 0.666667)))
+    } finally TmpPaths.deleteRecursively(new java.io.File(dir))
   }
 
   test("x52 prefixBoilerplate: shared 8-token prefixes surface, " +

@@ -10,16 +10,18 @@ class ScaleTechniquesSpec extends SparkTestBase {
 
   test("partitioned write: directory layout prunes key-scoped reads") {
     val out = java.nio.file.Files.createTempDirectory("graft-out-").toString
-    val df = (1 to 100).map(i => (s"vid${i % 4}", i.toLong, i * 2))
-      .toDF("video_id", "frame_id", "x")
-    graft.sources.Writers.writePartitioned(df, out, Seq("video_id"))
-    assert(new java.io.File(s"$out/video_id=vid1").isDirectory)
-    val read = spark.read.parquet(out).filter(col("video_id") === "vid1")
-    assert(read.count() === 25L)
-    // partition pruning: the scan's partition filters carry video_id
-    val scan = read.queryExecution.executedPlan.toString()
-    assert(scan.contains("PartitionFilters") &&
-      scan.contains("video_id"), scan)
+    try {
+      val df = (1 to 100).map(i => (s"vid${i % 4}", i.toLong, i * 2))
+        .toDF("video_id", "frame_id", "x")
+      graft.sources.Writers.writePartitioned(df, out, Seq("video_id"))
+      assert(new java.io.File(s"$out/video_id=vid1").isDirectory)
+      val read = spark.read.parquet(out).filter(col("video_id") === "vid1")
+      assert(read.count() === 25L)
+      // partition pruning: the scan's partition filters carry video_id
+      val scan = read.queryExecution.executedPlan.toString()
+      assert(scan.contains("PartitionFilters") &&
+        scan.contains("video_id"), scan)
+    } finally TmpPaths.deleteRecursively(new java.io.File(out))
   }
 
   test("bucketed tables co-locate the join: no shuffle exchange in plan") {

@@ -7,9 +7,10 @@ import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.functions._
 import graft.model.Frame
 import graft.operators.StubDetector
+import org.scalatest.BeforeAndAfterAll
 import graft.streaming.{DetectionStream, InMemoryStore, ObservedMetricsListener, PipelineConfig, VideoPipeline}
 
-class StreamingSpec extends SparkTestBase {
+class StreamingSpec extends SparkTestBase with BeforeAndAfterAll {
 
   private def mkFrames(ids: Range): Seq[Frame] = ids.map { i =>
     Frame("vid", i.toLong, new Timestamp(1700000000000L + i * 1000L),
@@ -21,8 +22,24 @@ class StreamingSpec extends SparkTestBase {
     (0 until 25).map(i => (i, s"label_$i")).toDF("label_id", "label")
   }
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-stream-").toString
+  /** Every temp dir and label file the tests make; all deleted once
+    * the suite ends. */
+  private val made = scala.collection.mutable.ListBuffer.empty[java.io.File]
+
+  private def tmpDir(): String = {
+    val d = Files.createTempDirectory("graft-stream-").toFile
+    made += d
+    d.toString
+  }
+
+  private def tmpLabelFile(): java.nio.file.Path = {
+    val f = Files.createTempFile("labels-", ".label")
+    made += f.toFile
+    f
+  }
+
+  override def afterAll(): Unit =
+    try made.foreach(TmpPaths.deleteRecursively) finally super.afterAll()
 
   test("availableNow: streaming pipeline matches batch pipeline output") {
     import testImplicits._
@@ -119,7 +136,7 @@ class StreamingSpec extends SparkTestBase {
     import testImplicits._
     InMemoryStore.reset()
     val framesDir = tmpDir(); val labelFile =
-      Files.createTempFile("labels-", ".label")
+      tmpLabelFile()
     val frames = mkFrames(1 to 15)
     frames.toDS().write.mode("overwrite").parquet(framesDir)
     Files.writeString(labelFile,
@@ -148,7 +165,7 @@ class StreamingSpec extends SparkTestBase {
   test("a run without checkpoint_dir deletes its own checkpoint; a named one stays") {
     import testImplicits._
     val framesDir = tmpDir()
-    val labelFile = Files.createTempFile("labels-", ".label")
+    val labelFile = tmpLabelFile()
     mkFrames(1 to 5).toDS().write.mode("overwrite").parquet(framesDir)
     Files.writeString(labelFile, (0 until 25).map(i => s"$i:label_$i").mkString("\n"))
     def checkpointOf(q: org.apache.spark.sql.streaming.StreamingQuery): java.io.File =
