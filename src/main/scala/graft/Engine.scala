@@ -34,6 +34,13 @@ object Engine {
       // the cluster-side knob (cores here, data/200MB-ish on a real
       // cluster), with AQE coalescing the small ones
       .config("spark.sql.files.maxPartitionBytes", "134217728")
+      // janino's class cache (static, JVM-wide): d16, d18 and v13
+      // compile ~160 generated classes at sf0.01 (d18 alone 45), so
+      // at Spark's 100 d18 recompiled ~120 on every execution.
+      // Without the codegen stage id in the class name, one plan
+      // shape hits the cache under whatever id AQE gave it this time.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.session.timeZone", "UTC")
       // events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
       // default; read as long and convert at the loader (Tables.events)

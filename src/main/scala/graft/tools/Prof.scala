@@ -2,6 +2,7 @@ package graft.tools
 
 import java.util.Locale
 import scala.collection.mutable
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
@@ -25,13 +26,19 @@ import graft.{Engine, SparkEntry}
   * [[StageCap]] slowest stages. Stage walls are the scheduler's own
   * `submissionTime`/`completionTime`, not the listener thread's
   * clock, and the bus is drained before a run's counters are read.
+  * `compiles` (per run) and `preheat_compiles` count the classes
+  * janino compiled during that execution: `CodeGenerator` times one
+  * compile per codegen-cache miss. The preheat compiles the query's
+  * working set; a timed run's count near it means the cache evicted
+  * that set (AQE alone adds a few, 0–4 at sf0.01).
   *
   * Output: one JSON line per query on stdout, numbers formatted
   * under Locale.ROOT:
   * {{{
   * {"query":…,"sf":…,"total_s":{"min","median","max"},"construct_s":…,
   *  "plan_s":…,"execute_s":…,"runs":[{"total_s","construct_s","plan_s",
-  *  "execute_s","jobs","stages","tasks"}…],"median_run":i,
+  *  "execute_s","jobs","stages","tasks","compiles"}…],"median_run":i,
+  *  "preheat_compiles":n,
   *  "stage_table":[{"stage","name","wall_s","cpu_s","gc_s","tasks",
   *  "input_bytes","shuffle_read_bytes","shuffle_write_bytes","records"}…]}
   * }}}
@@ -45,7 +52,8 @@ object Prof {
       shuffleWrite: Long, records: Long)
 
   final case class Run(construct: Double, plan: Double, execute: Double,
-      jobs: Int, stages: Int, tasks: Int, stageTable: Seq[Stage]) {
+      jobs: Int, stages: Int, tasks: Int, compiles: Long,
+      stageTable: Seq[Stage]) {
     def total: Double = construct + plan + execute
   }
 
@@ -79,12 +87,16 @@ object Prof {
   def profile(spark: SparkSession, sfDir: String, name: String): String = {
     val fn = SparkEntry.queries(name)
     val sc = spark.sparkContext
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val c0 = compiles
     fn(spark, sfDir).write.format("noop").mode("overwrite").save() // preheat
+    val preheatCompiles = compiles - c0
     val counter = new Counter
     sc.addSparkListener(counter)
     val runs = try (1 to Runs).map { _ =>
       GraftSqlBridge.drainListenerBus(sc) // earlier runs' events out
       counter.reset()
+      val c = compiles
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val t1 = System.nanoTime()
@@ -95,9 +107,9 @@ object Prof {
       GraftSqlBridge.drainListenerBus(sc)
       val (jobs, stages, tasks, table) = counter.snapshot()
       Run((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9,
-        jobs, stages, tasks, table.sortBy(-_.wallMs).take(StageCap))
+        jobs, stages, tasks, compiles - c, table.sortBy(-_.wallMs).take(StageCap))
     } finally sc.removeSparkListener(counter)
-    json(name, sfDir, runs)
+    json(name, sfDir, runs, preheatCompiles)
   }
 
   private def num(v: Double): String =
@@ -115,12 +127,14 @@ object Prof {
     s"""{"min":${num(s.head)},"median":${num(s(s.size / 2))},"max":${num(s.last)}}"""
   }
 
-  private def json(name: String, sfDir: String, runs: Seq[Run]): String = {
+  private def json(name: String, sfDir: String, runs: Seq[Run],
+      preheatCompiles: Long): String = {
     val medianRun = runs.indices.sortBy(runs(_).total).apply(runs.size / 2)
     val runRecs = runs.map { r =>
       s"""{"total_s":${num(r.total)},"construct_s":${num(r.construct)},""" +
       s""""plan_s":${num(r.plan)},"execute_s":${num(r.execute)},""" +
-      s""""jobs":${r.jobs},"stages":${r.stages},"tasks":${r.tasks}}"""
+      s""""jobs":${r.jobs},"stages":${r.stages},"tasks":${r.tasks},""" +
+      s""""compiles":${r.compiles}}"""
     }
     val stageRecs = runs(medianRun).stageTable.map { s =>
       s"""{"stage":${s.id},"name":${str(s.name.take(90))},""" +
@@ -135,6 +149,7 @@ object Prof {
     s""""plan_s":${spread(runs.map(_.plan))},""" +
     s""""execute_s":${spread(runs.map(_.execute))},""" +
     s""""runs":${runRecs.mkString("[", ",", "]")},"median_run":$medianRun,""" +
+    s""""preheat_compiles":$preheatCompiles,""" +
     s""""stage_table":${stageRecs.mkString("[", ",", "]")}}"""
   }
 

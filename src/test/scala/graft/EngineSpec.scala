@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** `Engine.iterate`, the one round loop: when it stops, what it pins,
-  * what it frees, and that both snapshot modes give the same rows. */
+  * what it frees, and that both snapshot modes give the same rows;
+  * and that `Engine.session` keeps a fixpoint's generated classes. */
 class EngineSpec extends SparkTestBase {
   import testImplicits._
 
@@ -76,5 +78,21 @@ class EngineSpec extends SparkTestBase {
       spark.conf.unset("spark.graft.snapshotDir")
     }
     assert(local === ((Seq.fill(6)(3L), true)))
+  }
+
+  test("session: the codegen cache holds d18_incremental_cc's working " +
+    "set, so a second execution compiles at most 5 classes") {
+    // CodeGenerator sizes its cache once per JVM, at first use; the
+    // compile counter, not a conf read-back, shows the size took
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def run(): Long = {
+      val c = compiles
+      SparkEntry.queries("d18_incremental_cc")(spark, sf)
+        .write.format("noop").mode("overwrite").save()
+      compiles - c
+    }
+    val first = run()
+    val second = run()
+    assert(second <= 5L, s"first execution compiled $first, second $second")
   }
 }

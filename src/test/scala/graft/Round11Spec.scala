@@ -207,29 +207,31 @@ class Round11Spec extends SparkTestBase {
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().toSeq
     val root = java.nio.file.Files.createTempDirectory("ixlex").toString
-    val idx = s"$root/index"; val ckp = s"$root/ckp"
-    // three micro-batches via MemoryStream + AvailableNow restarts
-    val chunks = docs.grouped(math.max(1, docs.length / 3 + 1)).toSeq
-    val mem = MemoryStream[(Long, String)](spark)
-    chunks.foreach { c =>
-      mem.addData(c)
-      val q = IndexedLex.start(
-        mem.toDF().toDF("doc_id", "text"), idx, ckp)
-      q.awaitTermination(120000)
-    }
-    val terms = Seq("hash", "merge", "spark", "window")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getInt(4))).sortBy(_._1)
-    val served = canon(IndexedLex.serve(spark, idx, terms))
-    val scratch = canon(RetrievalQueries.bm25(
-      graft.sources.Tables.documents(spark, sf), terms, topK = 20))
-    assert(served.nonEmpty && served.toSeq === scratch.toSeq)
-    // replaying a completed batch id is a no-op (marker + partition
-    // overwrite idempotence)
-    IndexedLex.ingestBatch(spark, idx,
-      chunks.head.toDF("doc_id", "text"), batchId = 0L)
-    assert(canon(IndexedLex.serve(spark, idx, terms)).toSeq === served.toSeq)
+    try {
+      val idx = s"$root/index"; val ckp = s"$root/ckp"
+      // three micro-batches via MemoryStream + AvailableNow restarts
+      val chunks = docs.grouped(math.max(1, docs.length / 3 + 1)).toSeq
+      val mem = MemoryStream[(Long, String)](spark)
+      chunks.foreach { c =>
+        mem.addData(c)
+        val q = IndexedLex.start(
+          mem.toDF().toDF("doc_id", "text"), idx, ckp)
+        q.awaitTermination(120000)
+      }
+      val terms = Seq("hash", "merge", "spark", "window")
+      def canon(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getDouble(3), r.getInt(4))).sortBy(_._1)
+      val served = canon(IndexedLex.serve(spark, idx, terms))
+      val scratch = canon(RetrievalQueries.bm25(
+        graft.sources.Tables.documents(spark, sf), terms, topK = 20))
+      assert(served.nonEmpty && served.toSeq === scratch.toSeq)
+      // replaying a completed batch id is a no-op (marker + partition
+      // overwrite idempotence)
+      IndexedLex.ingestBatch(spark, idx,
+        chunks.head.toDF("doc_id", "text"), batchId = 0L)
+      assert(canon(IndexedLex.serve(spark, idx, terms)).toSeq === served.toSeq)
+    } finally TmpPaths.deleteRecursively(new java.io.File(root))
   }
 
   test("slice-header build/parse round-trips; frame_num width matters") {

@@ -64,22 +64,24 @@ class Round12Spec extends SparkTestBase {
     val docs = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
     val root = java.nio.file.Files.createTempDirectory("ixbf").toString
-    val seqIdx = s"$root/seq"; val pipIdx = s"$root/pip"
-    val slices = (0L until 3L).map(b =>
-      (docs.filter(col("doc_id") % 3 === b), b))
-    slices.foreach { case (df, b) =>
-      IndexedLex.ingestBatch(spark, seqIdx, df, b)
-    }
-    IndexedLex.backfill(spark, pipIdx, slices)
-    val terms = Seq("hash", "merge", "spark", "window")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    val seqServe = canon(IndexedLex.serve(spark, seqIdx, terms))
-    val pipServe = canon(IndexedLex.serve(spark, pipIdx, terms))
-    assert(seqServe.nonEmpty && pipServe === seqServe)
-    // replay: all markers present -> the whole backfill is a no-op
-    IndexedLex.backfill(spark, pipIdx, slices)
-    assert(canon(IndexedLex.serve(spark, pipIdx, terms)) === seqServe)
+    try {
+      val seqIdx = s"$root/seq"; val pipIdx = s"$root/pip"
+      val slices = (0L until 3L).map(b =>
+        (docs.filter(col("doc_id") % 3 === b), b))
+      slices.foreach { case (df, b) =>
+        IndexedLex.ingestBatch(spark, seqIdx, df, b)
+      }
+      IndexedLex.backfill(spark, pipIdx, slices)
+      val terms = Seq("hash", "merge", "spark", "window")
+      def canon(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      val seqServe = canon(IndexedLex.serve(spark, seqIdx, terms))
+      val pipServe = canon(IndexedLex.serve(spark, pipIdx, terms))
+      assert(seqServe.nonEmpty && pipServe === seqServe)
+      // replay: all markers present -> the whole backfill is a no-op
+      IndexedLex.backfill(spark, pipIdx, slices)
+      assert(canon(IndexedLex.serve(spark, pipIdx, terms)) === seqServe)
+    } finally TmpPaths.deleteRecursively(new java.io.File(root))
   }
 
   test("IndexedLex releases its token pins: ingestBatch, then a backfill " +
@@ -90,14 +92,16 @@ class Round12Spec extends SparkTestBase {
     val docs = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
     val idx = java.nio.file.Files.createTempDirectory("ixrel").toString
-    val before = sc.getPersistentRDDs.keySet
-    IndexedLex.ingestBatch(spark, idx, docs.filter(col("doc_id") % 3 === 0), 0L)
-    IndexedLex.backfill(spark, idx,
-      Seq(1L, 2L).map(b => (docs.filter(col("doc_id") % 3 === b), b)))
-    val added = sc.getPersistentRDDs.keySet -- before
-    assert(added.isEmpty, s"left ${added.size} RDDs persisted")
-    assert(IndexedLex.serve(spark, idx,
-      Seq("hash", "merge", "spark", "window")).count() > 0L)
+    try {
+      val before = sc.getPersistentRDDs.keySet
+      IndexedLex.ingestBatch(spark, idx, docs.filter(col("doc_id") % 3 === 0), 0L)
+      IndexedLex.backfill(spark, idx,
+        Seq(1L, 2L).map(b => (docs.filter(col("doc_id") % 3 === b), b)))
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.isEmpty, s"left ${added.size} RDDs persisted")
+      assert(IndexedLex.serve(spark, idx,
+        Seq("hash", "merge", "spark", "window")).count() > 0L)
+    } finally TmpPaths.deleteRecursively(new java.io.File(idx))
   }
 
   // H matrix rows of the 4x4 Hadamard — the closed form the tests
@@ -192,21 +196,24 @@ class Round12Spec extends SparkTestBase {
     import graft.streaming.IndexedLex
     val docs = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
-    val idx = java.nio.file.Files.createTempDirectory("ixlc").toString + "/ix"
-    IndexedLex.backfill(spark, idx,
-      (0L until 3L).map(b => (docs.filter(col("doc_id") % 3 === b), b)))
-    val terms = Seq("hash", "merge", "spark", "window")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    val before = canon(IndexedLex.serve(spark, idx, terms))
-    assert(before.nonEmpty)
-    IndexedLex.compact(spark, idx)
-    assert(canon(IndexedLex.serve(spark, idx, terms)) === before)
-    // the per-batch stats partials collapsed to one row
-    assert(spark.read.parquet(s"$idx/stats").count() === 1L)
-    // idempotent
-    IndexedLex.compact(spark, idx)
-    assert(canon(IndexedLex.serve(spark, idx, terms)) === before)
+    val root = java.nio.file.Files.createTempDirectory("ixlc").toString
+    val idx = s"$root/ix"
+    try {
+      IndexedLex.backfill(spark, idx,
+        (0L until 3L).map(b => (docs.filter(col("doc_id") % 3 === b), b)))
+      val terms = Seq("hash", "merge", "spark", "window")
+      def canon(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      val before = canon(IndexedLex.serve(spark, idx, terms))
+      assert(before.nonEmpty)
+      IndexedLex.compact(spark, idx)
+      assert(canon(IndexedLex.serve(spark, idx, terms)) === before)
+      // the per-batch stats partials collapsed to one row
+      assert(spark.read.parquet(s"$idx/stats").count() === 1L)
+      // idempotent
+      IndexedLex.compact(spark, idx)
+      assert(canon(IndexedLex.serve(spark, idx, terms)) === before)
+    } finally TmpPaths.deleteRecursively(new java.io.File(root))
   }
 
   test("compaction mid-stream: ingest -> compact -> MORE ingests -> " +
@@ -215,23 +222,26 @@ class Round12Spec extends SparkTestBase {
     import graft.streaming.IndexedLex
     val docs = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
-    val idx = java.nio.file.Files.createTempDirectory("ixmid").toString + "/ix"
-    IndexedLex.ingestBatch(spark, idx, docs.filter(col("doc_id") % 3 === 0), 0L)
-    IndexedLex.ingestBatch(spark, idx, docs.filter(col("doc_id") % 3 === 1), 1L)
-    IndexedLex.compact(spark, idx)
-    // a post-compaction batch lands in the collapsed layout
-    IndexedLex.ingestBatch(spark, idx, docs.filter(col("doc_id") % 3 === 2), 2L)
-    val terms = Seq("hash", "merge", "spark", "window")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    val got = canon(IndexedLex.serve(spark, idx, terms))
-    val scratch = canon(graft.queries.RetrievalQueries.bm25(
-      graft.sources.Tables.documents(spark, sf), terms, topK = 20))
-    assert(got.nonEmpty && got === scratch)
-    // replaying a pre-compaction batch id is STILL a no-op: the
-    // markers live at the index root and survive the swap
-    IndexedLex.ingestBatch(spark, idx, docs.filter(col("doc_id") % 3 === 0), 0L)
-    assert(canon(IndexedLex.serve(spark, idx, terms)) === scratch)
+    val root = java.nio.file.Files.createTempDirectory("ixmid").toString
+    val idx = s"$root/ix"
+    try {
+      IndexedLex.ingestBatch(spark, idx, docs.filter(col("doc_id") % 3 === 0), 0L)
+      IndexedLex.ingestBatch(spark, idx, docs.filter(col("doc_id") % 3 === 1), 1L)
+      IndexedLex.compact(spark, idx)
+      // a post-compaction batch lands in the collapsed layout
+      IndexedLex.ingestBatch(spark, idx, docs.filter(col("doc_id") % 3 === 2), 2L)
+      val terms = Seq("hash", "merge", "spark", "window")
+      def canon(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      val got = canon(IndexedLex.serve(spark, idx, terms))
+      val scratch = canon(graft.queries.RetrievalQueries.bm25(
+        graft.sources.Tables.documents(spark, sf), terms, topK = 20))
+      assert(got.nonEmpty && got === scratch)
+      // replaying a pre-compaction batch id is STILL a no-op: the
+      // markers live at the index root and survive the swap
+      IndexedLex.ingestBatch(spark, idx, docs.filter(col("doc_id") % 3 === 0), 0L)
+      assert(canon(IndexedLex.serve(spark, idx, terms)) === scratch)
+    } finally TmpPaths.deleteRecursively(new java.io.File(root))
   }
 
   test("v18 zone transitions: every tracklet of k boxes contributes " +

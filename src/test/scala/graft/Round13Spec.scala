@@ -85,35 +85,38 @@ class Round13Spec extends SparkTestBase {
     "replay re-ingests it and serve equals a fresh build") {
     val docs = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
-    val idx = java.nio.file.Files.createTempDirectory("ixcr").toString + "/ix"
-    val b0 = docs.filter(col("doc_id") % 2 === 0)
-    val b1 = docs.filter(col("doc_id") % 2 === 1)
-    IndexedLex.ingestBatch(spark, idx, b0, 0L)
-    IndexedLex.ingestBatch(spark, idx, b1, 1L)
-    // simulate a crash AFTER batch 1's sink writes, BEFORE its
-    // marker: the data is on disk, the certificate is not
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.delete(new org.apache.hadoop.fs.Path(idx, "_ingested_1"), false))
-    IndexedLex.compact(spark, idx)
-    // the uncertified partial is gone from every table (a fold into
-    // the rebuild would double-count it against the replay below)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$idx/doclen/ingest_id=1")))
-    assert(spark.read.parquet(s"$idx/stats")
-      .agg(sum("n_docs")).head().getLong(0) === b0.count())
-    // the at-least-once replay re-ingests batch 1 whole
-    IndexedLex.ingestBatch(spark, idx, b1, 1L)
-    val terms = Seq("hash", "merge", "spark", "window")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    val got = canon(IndexedLex.serve(spark, idx, terms))
-    val scratch = canon(graft.queries.RetrievalQueries.bm25(
-      graft.sources.Tables.documents(spark, sf), terms, topK = 20))
-    assert(got.nonEmpty && got === scratch)
-    // stats did NOT double-count: compacted row + batch-1 partial
-    assert(spark.read.parquet(s"$idx/stats")
-      .agg(sum("n_docs")).head().getLong(0) === docs.count())
+    val root = java.nio.file.Files.createTempDirectory("ixcr").toString
+    val idx = s"$root/ix"
+    try {
+      val b0 = docs.filter(col("doc_id") % 2 === 0)
+      val b1 = docs.filter(col("doc_id") % 2 === 1)
+      IndexedLex.ingestBatch(spark, idx, b0, 0L)
+      IndexedLex.ingestBatch(spark, idx, b1, 1L)
+      // simulate a crash AFTER batch 1's sink writes, BEFORE its
+      // marker: the data is on disk, the certificate is not
+      val fs = new org.apache.hadoop.fs.Path(idx)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      assert(fs.delete(new org.apache.hadoop.fs.Path(idx, "_ingested_1"), false))
+      IndexedLex.compact(spark, idx)
+      // the uncertified partial is gone from every table (a fold into
+      // the rebuild would double-count it against the replay below)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(
+        s"$idx/doclen/ingest_id=1")))
+      assert(spark.read.parquet(s"$idx/stats")
+        .agg(sum("n_docs")).head().getLong(0) === b0.count())
+      // the at-least-once replay re-ingests batch 1 whole
+      IndexedLex.ingestBatch(spark, idx, b1, 1L)
+      val terms = Seq("hash", "merge", "spark", "window")
+      def canon(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      val got = canon(IndexedLex.serve(spark, idx, terms))
+      val scratch = canon(graft.queries.RetrievalQueries.bm25(
+        graft.sources.Tables.documents(spark, sf), terms, topK = 20))
+      assert(got.nonEmpty && got === scratch)
+      // stats did NOT double-count: compacted row + batch-1 partial
+      assert(spark.read.parquet(s"$idx/stats")
+        .agg(sum("n_docs")).head().getLong(0) === docs.count())
+    } finally TmpPaths.deleteRecursively(new java.io.File(root))
   }
 
   // ---- g8: kCorePeel assembly fusion ---------------------------------

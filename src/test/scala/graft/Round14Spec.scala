@@ -286,40 +286,43 @@ class Round14Spec extends SparkTestBase {
     "fresh build (base id 0 used to collide with batch 0)") {
     val docs = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
-    val idx = java.nio.file.Files.createTempDirectory("ixc0").toString + "/ix"
-    val b0 = docs.filter(col("doc_id") % 2 === 0)
-    val b1 = docs.filter(col("doc_id") % 2 === 1)
-    IndexedLex.ingestBatch(spark, idx, b0, 7L)
-    IndexedLex.compact(spark, idx)
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // the merged base is under ingest_id=-1, NOT a batch id
-    assert(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$idx/stats/ingest_id=-1")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$idx/stats/ingest_id=0")))
-    // a NEW foreachBatch query starts at id 0 against the compacted
-    // index and crashes after its sink writes, before its marker
-    IndexedLex.ingestBatch(spark, idx, b1, 0L)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(idx, "_ingested_0"),
-      false))
-    IndexedLex.compact(spark, idx)
-    // batch 0's partial is dropped; the merged base survives
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$idx/doclen/ingest_id=0")))
-    assert(spark.read.parquet(s"$idx/stats")
-      .agg(sum("n_docs")).head().getLong(0) === b0.count())
-    // the at-least-once replay re-ingests batch 0 whole
-    IndexedLex.ingestBatch(spark, idx, b1, 0L)
-    val terms = Seq("hash", "merge", "spark", "window")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    val got = canon(IndexedLex.serve(spark, idx, terms))
-    val scratch = canon(graft.queries.RetrievalQueries.bm25(
-      graft.sources.Tables.documents(spark, sf), terms, topK = 20))
-    assert(got.nonEmpty && got === scratch)
-    assert(spark.read.parquet(s"$idx/stats")
-      .agg(sum("n_docs")).head().getLong(0) === docs.count())
+    val root = java.nio.file.Files.createTempDirectory("ixc0").toString
+    val idx = s"$root/ix"
+    try {
+      val b0 = docs.filter(col("doc_id") % 2 === 0)
+      val b1 = docs.filter(col("doc_id") % 2 === 1)
+      IndexedLex.ingestBatch(spark, idx, b0, 7L)
+      IndexedLex.compact(spark, idx)
+      val fs = new org.apache.hadoop.fs.Path(idx)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      // the merged base is under ingest_id=-1, NOT a batch id
+      assert(fs.exists(new org.apache.hadoop.fs.Path(
+        s"$idx/stats/ingest_id=-1")))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(
+        s"$idx/stats/ingest_id=0")))
+      // a NEW foreachBatch query starts at id 0 against the compacted
+      // index and crashes after its sink writes, before its marker
+      IndexedLex.ingestBatch(spark, idx, b1, 0L)
+      assert(fs.delete(new org.apache.hadoop.fs.Path(idx, "_ingested_0"),
+        false))
+      IndexedLex.compact(spark, idx)
+      // batch 0's partial is dropped; the merged base survives
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(
+        s"$idx/doclen/ingest_id=0")))
+      assert(spark.read.parquet(s"$idx/stats")
+        .agg(sum("n_docs")).head().getLong(0) === b0.count())
+      // the at-least-once replay re-ingests batch 0 whole
+      IndexedLex.ingestBatch(spark, idx, b1, 0L)
+      val terms = Seq("hash", "merge", "spark", "window")
+      def canon(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      val got = canon(IndexedLex.serve(spark, idx, terms))
+      val scratch = canon(graft.queries.RetrievalQueries.bm25(
+        graft.sources.Tables.documents(spark, sf), terms, topK = 20))
+      assert(got.nonEmpty && got === scratch)
+      assert(spark.read.parquet(s"$idx/stats")
+        .agg(sum("n_docs")).head().getLong(0) === docs.count())
+    } finally TmpPaths.deleteRecursively(new java.io.File(root))
   }
 
   test("IndexedLex refuses an index built with a different term-hash " +
@@ -327,31 +330,34 @@ class Round14Spec extends SparkTestBase {
     "SPARK_GRAFT_LEX_BUCKETS") {
     val docs = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
-    val idx = java.nio.file.Files.createTempDirectory("ixb").toString + "/ix"
-    IndexedLex.ingestBatch(spark, idx, docs.filter(col("doc_id") % 2 === 0), 0L)
-    val terms = Seq("hash", "merge", "spark", "window")
-    assert(IndexedLex.serve(spark, idx, terms).count() > 0)
-    // the same postings, now claimed to be laid out over twice the
-    // buckets: serving would prune to the wrong tbkt directories
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val rec = new org.apache.hadoop.fs.Path(idx, "_lex_buckets")
-    assert(fs.exists(rec), "the index records its bucket count")
-    val out = fs.create(rec, true)
-    try out.write((2 * graft.queries.RetrievalQueries.lexBuckets).toString
-      .getBytes("UTF-8")) finally out.close()
-    def refused(body: => Unit): Unit = {
-      val e = intercept[IllegalArgumentException](body)
-      assert(e.getMessage.contains("SPARK_GRAFT_LEX_BUCKETS"), e.getMessage)
-    }
-    refused(IndexedLex.serve(spark, idx, terms))
-    refused(IndexedLex.ingestBatch(spark, idx,
-      docs.filter(col("doc_id") % 2 === 1), 1L))
-    refused(IndexedLex.backfill(spark, idx,
-      Seq((docs.filter(col("doc_id") % 2 === 1), 1L))))
-    refused(IndexedLex.compact(spark, idx))
-    // nothing was written under the refused batch id
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(idx, "_ingested_1")))
+    val root = java.nio.file.Files.createTempDirectory("ixb").toString
+    val idx = s"$root/ix"
+    try {
+      IndexedLex.ingestBatch(spark, idx, docs.filter(col("doc_id") % 2 === 0), 0L)
+      val terms = Seq("hash", "merge", "spark", "window")
+      assert(IndexedLex.serve(spark, idx, terms).count() > 0)
+      // the same postings, now claimed to be laid out over twice the
+      // buckets: serving would prune to the wrong tbkt directories
+      val fs = new org.apache.hadoop.fs.Path(idx)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      val rec = new org.apache.hadoop.fs.Path(idx, "_lex_buckets")
+      assert(fs.exists(rec), "the index records its bucket count")
+      val out = fs.create(rec, true)
+      try out.write((2 * graft.queries.RetrievalQueries.lexBuckets).toString
+        .getBytes("UTF-8")) finally out.close()
+      def refused(body: => Unit): Unit = {
+        val e = intercept[IllegalArgumentException](body)
+        assert(e.getMessage.contains("SPARK_GRAFT_LEX_BUCKETS"), e.getMessage)
+      }
+      refused(IndexedLex.serve(spark, idx, terms))
+      refused(IndexedLex.ingestBatch(spark, idx,
+        docs.filter(col("doc_id") % 2 === 1), 1L))
+      refused(IndexedLex.backfill(spark, idx,
+        Seq((docs.filter(col("doc_id") % 2 === 1), 1L))))
+      refused(IndexedLex.compact(spark, idx))
+      // nothing was written under the refused batch id
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(idx, "_ingested_1")))
+    } finally TmpPaths.deleteRecursively(new java.io.File(root))
   }
 
   test("SPARK_GRAFT_LEX_BUCKETS: unset means 64; anything but a " +

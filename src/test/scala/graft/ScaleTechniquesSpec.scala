@@ -104,6 +104,8 @@ class ScaleTechniquesSpec extends SparkTestBase {
     assert(runs.count() === 3L)
     assert(runs.filter(col("jobs") > 0 && col("stages") > 0 &&
       col("tasks") > 0).count() === 3L, line)
+    assert(runs.filter(col("compiles") >= 0).count() === 3L, line)
+    assert(rec.select(col("preheat_compiles")).head().getLong(0) >= 0L, line)
     for (part <- Seq("total_s", "construct_s", "plan_s", "execute_s")) {
       val s = rec.select(s"$part.*").head()
       val (lo, mid, hi) = (s.getAs[Double]("min"),

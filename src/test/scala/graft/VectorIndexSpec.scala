@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import graft.operators.{Similarity, VectorIndex}
 import graft.sources.Tables
 
@@ -8,17 +9,22 @@ import graft.sources.Tables
   * answer-identical to the in-memory s8 path, and serving must prune
   * the cell-partitioned scan to the probed cells.
   */
-class VectorIndexSpec extends SparkTestBase {
+class VectorIndexSpec extends SparkTestBase with BeforeAndAfterAll {
 
   private def emb = Tables.embeddings(spark, sf)
   private def centroids = emb.filter(col("vec_id") < 8)
   private def codebook = emb.filter(col("vec_id") < 16)
 
+  private val made = scala.collection.mutable.ListBuffer.empty[java.io.File]
+
   private def tmpIndex(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_vidx_$tag")
-    d.toFile.deleteOnExit()
+    made += d.toFile
     d.resolve("index").toString
   }
+
+  override def afterAll(): Unit =
+    try made.foreach(TmpPaths.deleteRecursively) finally super.afterAll()
 
   test("serve from the saved index == in-memory IVF-PQ, bit for bit") {
     val queries = emb.filter(col("vec_id") < 5)
