@@ -42,6 +42,10 @@ object Engine {
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      // streaming checkpoint logs on local paths without Hadoop's
+      // per-file readlink/chmod forks; other schemes keep Spark's manager
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.ForkFreeCheckpointFileManager].getName)
       // events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
       // default; read as long and convert at the loader (Tables.events)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

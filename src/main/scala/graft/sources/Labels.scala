@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** S8: label dimension loader. The reference reads `id:name` lines
   * into an in-process dict (`gst-detection-tf.py:114-121`,
-  * `coco.label`); here it is a tiny DataFrame meant to be broadcast
-  * at the join site. */
+  * `coco.label`); here it is a tiny DataFrame. The batch video
+  * queries, which output label names, broadcast-join it
+  * (`DetectionPipeline.joinLabels`); the detection stream reads its
+  * ids once per query and filters on them. */
 object Labels {
   /** Load an `id:name` file (the reference's label format) into
     * (label_id INT, label STRING). The reference keeps only the

@@ -9,8 +9,8 @@ import graft.operators.{Detect, DetectionPipeline, Detector}
 /** §2.7: the reference's streaming execution model under Structured
   * Streaming. The gst-launch pipeline (`/root/reference/run.sh:53`)
   * becomes: frame stream → DetectExec inference → threshold →
-  * explode → scale → broadcast label join → VDMS-shaped foreachBatch
-  * sink, with the semantics the reference implements imperatively:
+  * explode → scale → label filter → VDMS-shaped foreachBatch sink,
+  * with the semantics the reference implements imperatively:
   *
   *  - EOS flush (`gst-detection-tf.py:421-423`) → Trigger.AvailableNow
   *    (process everything available, then stop);
@@ -21,20 +21,44 @@ import graft.operators.{Detect, DetectionPipeline, Detector}
   *
   * The whole transform chain is stateless + narrow, so micro-batches
   * scale exactly like the batch plan: no shuffle before the sink.
+  *
+  * The label dimension is read once, when the query is built, like
+  * the reference's dict (`gst-detection-tf.py:114-121`): the wire
+  * record carries only `label_id`, so per batch the dimension is a
+  * membership test on its ids, and a trigger runs one job, not a label
+  * job plus the main one. An edited label file takes effect when the
+  * query is restarted.
   */
 object DetectionStream {
 
   /** The per-batch transform: identical operators to the batch path
-    * (same code, streaming DataFrame in). The observe() metric is the
-    * A1/A3 analog — record counts surface in every progress event
-    * via ObservedMetricsListener, no timers in the data path. */
+    * (same code, streaming DataFrame in), over the label ids read here,
+    * once. The observe() metric is the A1/A3 analog — record counts
+    * surface in every progress event via ObservedMetricsListener, no
+    * timers in the data path. */
   def pipeline(frames: Dataset[Frame], labels: DataFrame,
+      detectorFactory: () => Detector, threshold: Double): DataFrame =
+    records(frames, labelIds(labels), detectorFactory, threshold)
+
+  /** The ids of the label dimension, read once per query. Null ids
+    * match no box (as in an inner join) and are dropped; a duplicate
+    * id, which a join would have turned into duplicate records, is
+    * refused. */
+  private def labelIds(labels: DataFrame): Seq[Any] = {
+    val ids = labels.select("label_id").where(col("label_id").isNotNull)
+      .collect().map(_.get(0)).toSeq
+    val dup = ids.diff(ids.distinct).headOption
+    require(dup.isEmpty, s"duplicate label_id ${dup.get} in the label dimension")
+    ids
+  }
+
+  private def records(frames: Dataset[Frame], ids: Seq[Any],
       detectorFactory: () => Detector, threshold: Double): DataFrame = {
     val dets = Detect.detect(frames, detectorFactory).toDF()
     val boxes = DetectionPipeline.boxes(dets, threshold)
-    val joined = DetectionPipeline.joinLabels(boxes, labels)
-    joined.select(
-        to_json(DetectionPipeline.vdmsRecord(joined)).as("record"))
+      .where(col("label_id").isin(ids: _*))
+    boxes.select(
+        to_json(DetectionPipeline.vdmsRecord(boxes)).as("record"))
       .observe("graft_pipeline", count(lit(1)).as("n_records"))
   }
 
@@ -61,6 +85,7 @@ object DetectionStream {
       labels: DataFrame, detectorFactory: () => Detector,
       store: MetadataStore, checkpointDir: String, frameLimit: Long,
       threshold: Double = 0.7): StreamingQuery = {
+    val ids = labelIds(labels)
     val seen = new java.util.concurrent.atomic.AtomicLong(0L)
     val frameEnc = org.apache.spark.sql.Encoders.product[Frame]
     val query = frames.toDF().writeStream
@@ -83,7 +108,7 @@ object DetectionStream {
               // unordered source is otherwise free to pick a
               // different subset per execution), and the source +
               // detector run once per batch, not twice
-              val out = pipeline(take.as[Frame](frameEnc), labels,
+              val out = records(take.as[Frame](frameEnc), ids,
                 detectorFactory, threshold)
               VdmsSink.writeBatch(store)(out, batchId)
               seen.addAndGet(take.count())

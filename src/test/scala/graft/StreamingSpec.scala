@@ -2,13 +2,18 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamExecution, StreamingQueryWrapper}
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.model.Frame
-import graft.operators.StubDetector
+import graft.operators.{Detect, DetectionPipeline, StubDetector}
 import org.scalatest.BeforeAndAfterAll
-import graft.streaming.{DetectionStream, InMemoryStore, ObservedMetricsListener, PipelineConfig, VideoPipeline}
+import graft.streaming.{DetectionStream, ForkFreeCheckpointFileManager, InMemoryStore, ObservedMetricsListener, PipelineConfig, VideoPipeline}
 
 class StreamingSpec extends SparkTestBase with BeforeAndAfterAll {
 
@@ -40,6 +45,39 @@ class StreamingSpec extends SparkTestBase with BeforeAndAfterAll {
 
   override def afterAll(): Unit =
     try made.foreach(TmpPaths.deleteRecursively) finally super.afterAll()
+
+  /** The local properties of every Spark job started while `body` runs. */
+  private def jobsDuring(body: => Unit): Seq[java.util.Properties] = {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties).getOrElse(new java.util.Properties))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      GraftSqlBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    started.asScala.toSeq
+  }
+
+  /** Jobs that ran inside `q`'s triggers: StreamExecution tags them
+    * with the query id. */
+  private def jobsOf(q: StreamingQuery, jobs: Seq[java.util.Properties]): Int =
+    jobs.count(_.getProperty(StreamExecution.QUERY_ID_KEY) == q.id.toString)
+
+  private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Runs `body` with Spark's default checkpoint file manager. */
+  private def withSparkManager[T](body: => T): T = {
+    val engine = spark.conf.get(ManagerKey)
+    spark.conf.unset(ManagerKey)
+    try body finally spark.conf.set(ManagerKey, engine)
+  }
+
+  private def filesUnder(dir: String): Seq[java.io.File] =
+    scala.util.Using.resource(Files.walk(java.nio.file.Paths.get(dir)))(
+      _.iterator().asScala.map(_.toFile).filter(_.isFile).toList)
 
   test("availableNow: streaming pipeline matches batch pipeline output") {
     import testImplicits._
@@ -430,5 +468,189 @@ class StreamingSpec extends SparkTestBase with BeforeAndAfterAll {
         .exists(_.asInstanceOf[Long] === InMemoryStore.size.toLong))
       assert(listener.totalInputRows === 25L)
     } finally spark.streams.removeListener(listener)
+  }
+
+  test("availableNow runs one Spark job per trigger: the label dim is not re-read") {
+    import testImplicits._
+    InMemoryStore.reset()
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Frame]
+    val ckpt = tmpDir()
+    var queries = Seq.empty[StreamingQuery]
+    val jobs = jobsDuring {
+      for (ids <- Seq(1 to 20, 21 to 40)) {
+        mem.addData(mkFrames(ids))
+        val q = DetectionStream.runAvailableNow(mem.toDS(), labelsDf,
+          () => StubDetector, new InMemoryStore, ckpt)
+        q.awaitTermination(60000)
+        assert(q.exception.isEmpty)
+        queries :+= q
+      }
+    }
+    assert(InMemoryStore.committedCount === 2)
+    // both runs share the checkpoint, so they are one query (one id)
+    assert(queries.map(_.id).distinct.size === 1)
+    assert(jobsOf(queries.head, jobs) === 2,
+      "one decode+detect+sink job per trigger, and no label job")
+  }
+
+  test("the label dim is a filter on its ids: records equal the broadcast-join formulation") {
+    import testImplicits._
+    InMemoryStore.reset()
+    implicit val sqlCtx = spark.sqlContext
+    // even ids only, plus a null id, which matches no box
+    val partial = (0 until 25 by 2).map(i => (Option(i), s"label_$i"))
+      .:+((Option.empty[Int], "no id")).toDF("label_id", "label")
+    val frames = mkFrames(1 to 40)
+    val mem = MemoryStream[Frame]
+    mem.addData(frames)
+    val q = DetectionStream.runAvailableNow(mem.toDS(), partial,
+      () => StubDetector, new InMemoryStore, tmpDir())
+    q.awaitTermination(60000)
+    assert(q.exception.isEmpty)
+    val boxes = DetectionPipeline.boxes(
+      Detect.detect(frames.toDS(), () => StubDetector).toDF(), 0.7)
+    val joined = DetectionPipeline.joinLabels(boxes, partial)
+    val expected = joined.select(to_json(DetectionPipeline.vdmsRecord(joined)))
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(expected.nonEmpty && expected.size < boxes.count())
+    assert(InMemoryStore.all.sorted === expected)
+  }
+
+  test("a duplicate label_id fails when the query is built, naming the id") {
+    import testImplicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dup = Seq((1, "a"), (7, "b"), (7, "c")).toDF("label_id", "label")
+    val mem = MemoryStream[Frame]
+    mem.addData(mkFrames(1 to 5))
+    val active = spark.streams.active.length
+    for (run <- Seq(
+        () => DetectionStream.runAvailableNow(mem.toDS(), dup,
+          () => StubDetector, new InMemoryStore, tmpDir()),
+        () => DetectionStream.runWithFrameLimit(spark, mem.toDS(), dup,
+          () => StubDetector, new InMemoryStore, tmpDir(), frameLimit = 3))) {
+      val err = intercept[IllegalArgumentException](run())
+      assert(err.getMessage.contains("duplicate label_id 7"), err.getMessage)
+    }
+    assert(spark.streams.active.length === active)
+  }
+
+  test("frame limit reads the label dim once per query, not once per batch") {
+    import testImplicits._
+    InMemoryStore.reset()
+    implicit val sqlCtx = spark.sqlContext
+    // a file-backed dim, so reading it is a Spark job of its own
+    val labelFile = tmpLabelFile()
+    Files.writeString(labelFile, (0 until 25).map(i => s"$i:label_$i").mkString("\n"))
+    val labels = graft.sources.Labels.fromIdNameFile(spark, labelFile.toString)
+    val mem = MemoryStream[Frame]
+    var q: StreamingQuery = null
+    val jobs = jobsDuring {
+      q = DetectionStream.runWithFrameLimit(spark, mem.toDS(), labels,
+        () => StubDetector, new InMemoryStore, tmpDir(), frameLimit = 1000)
+      for (ids <- Seq(1 to 10, 11 to 20, 21 to 30)) {
+        mem.addData(mkFrames(ids))
+        q.processAllAvailable()
+      }
+      q.stop()
+    }
+    assert(InMemoryStore.committedCount === 3)
+    val inBatches = jobsOf(q, jobs)
+    assert(jobs.size - inBatches === 1, "one label read, when the query is built")
+    // each batch runs the sink's job and the frame count on its pinned
+    // rows; none reads the labels
+    assert(inBatches === 2 * 3, s"$inBatches jobs over 3 batches")
+    val expected = DetectionStream.pipeline(mkFrames(1 to 30).toDS(), labels,
+      () => StubDetector, 0.7).collect().map(_.getString(0)).sorted.toSeq
+    assert(InMemoryStore.all.sorted === expected)
+  }
+
+  test("local checkpoints use the engine's file manager: no overwrite unless asked, Spark's checksums kept valid") {
+    val dir = tmpDir()
+    val hconf = spark.sessionState.newHadoopConf()
+    val fm = CheckpointFileManager.create(new Path(new java.io.File(dir).toURI), hconf)
+    assert(fm.isInstanceOf[ForkFreeCheckpointFileManager], fm.getClass)
+    assert(fm.isLocal)
+    val file = new Path(new java.io.File(dir, "0").toURI)
+    def write(p: Path, text: String, overwrite: Boolean): Unit = {
+      val out = fm.createAtomic(p, overwrite)
+      out.write(text.getBytes("UTF-8"))
+      out.close()
+    }
+    def read(p: Path): String = {
+      val in = fm.open(p)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    write(file, "first", overwrite = false)
+    intercept[FileAlreadyExistsException](write(file, "second", overwrite = false))
+    assert(read(file) === "first")
+    write(file, "third", overwrite = true)
+    assert(read(file) === "third")
+    assert(fm.list(new Path(new java.io.File(dir).toURI)).map(_.getPath.getName).toSeq === Seq("0"))
+    // no temp file left by the refused write, and no checksum side file
+    assert(filesUnder(dir).map(_.getName) === Seq("0"))
+    // a file Spark's default manager wrote, with its checksum side
+    // file, stays readable after this one overwrites it, also through
+    // Hadoop's checksummed LocalFileSystem (Spark's FileSystem-based
+    // manager), which verifies the side file on read
+    val root = new Path(new java.io.File(dir).toURI)
+    val other = new Path(new java.io.File(dir, "1").toURI)
+    val viaSpark = new FileContextBasedCheckpointFileManager(root, hconf)
+      .createAtomic(other, false)
+    viaSpark.write("spark".getBytes("UTF-8"))
+    viaSpark.close()
+    assert(filesUnder(dir).map(_.getName).contains(".1.crc"))
+    write(other, "engine", overwrite = true)
+    val in = new FileSystemBasedCheckpointFileManager(root, hconf).open(other)
+    try assert(new String(in.readAllBytes(), "UTF-8") === "engine") finally in.close()
+    fm.delete(other)
+    assert(filesUnder(dir).map(_.getName) === Seq("0"))
+  }
+
+  test("a checkpoint resumes across Spark's and the engine's file managers, both ways") {
+    import testImplicits._
+    implicit val sqlCtx = spark.sqlContext
+    for (sparkFirst <- Seq(true, false)) {
+      InMemoryStore.reset()
+      val mem = MemoryStream[Frame]
+      val ckpt = tmpDir()
+      def run(): Unit = {
+        val q = DetectionStream.runAvailableNow(mem.toDS(), labelsDf,
+          () => StubDetector, new InMemoryStore, ckpt)
+        q.awaitTermination(60000)
+        assert(q.exception.isEmpty)
+      }
+      def runUnder(sparks: Boolean): Unit = if (sparks) withSparkManager(run()) else run()
+      mem.addData(mkFrames(1 to 20))
+      runUnder(sparkFirst)
+      // Spark's manager writes Hadoop checksum files, the engine's none
+      assert(filesUnder(ckpt).exists(_.getName.endsWith(".crc")) === sparkFirst)
+      assert(InMemoryStore.committedCount === 1)
+      mem.addData(mkFrames(21 to 30))
+      runUnder(!sparkFirst)
+      // batch 0 was not replayed, and batch 1 holds only the new frames
+      assert(InMemoryStore.committedCount === 2)
+      val expected = DetectionStream.pipeline(mkFrames(1 to 30).toDS(), labelsDf,
+        () => StubDetector, 0.7).collect().map(_.getString(0)).sorted.toSeq
+      assert(InMemoryStore.all.sorted === expected, s"sparkFirst = $sparkFirst")
+      assert(!filesUnder(ckpt).exists(_.getName.endsWith(".tmp")))
+    }
+  }
+
+  test("a finished query leaves no temp file in its checkpoint") {
+    import testImplicits._
+    InMemoryStore.reset()
+    val dir = tmpDir()
+    mkFrames(1 to 32).toDS().repartition(4).write.mode("overwrite").parquet(dir)
+    val ckpt = tmpDir()
+    val q = DetectionStream.runAvailableNow(
+      graft.sources.FrameSource.frameStream(spark, dir, maxFilesPerTrigger = 2),
+      labelsDf, () => StubDetector, new InMemoryStore, ckpt)
+    q.awaitTermination(60000)
+    assert(q.exception.isEmpty)
+    assert(InMemoryStore.committedCount >= 2)
+    val names = filesUnder(ckpt).map(_.getName)
+    assert(names.contains("metadata") && names.contains("0"), names)
+    assert(!names.exists(n => n.endsWith(".tmp") || n.endsWith(".crc")), names)
   }
 }
