@@ -568,7 +568,8 @@ class StreamingSpec extends SparkTestBase with BeforeAndAfterAll {
   test("local checkpoints use the engine's file manager: no overwrite unless asked, Spark's checksums kept valid") {
     val dir = tmpDir()
     val hconf = spark.sessionState.newHadoopConf()
-    val fm = CheckpointFileManager.create(new Path(new java.io.File(dir).toURI), hconf)
+    val root = new Path(new java.io.File(dir).toURI)
+    val fm = CheckpointFileManager.create(root, hconf)
     assert(fm.isInstanceOf[ForkFreeCheckpointFileManager], fm.getClass)
     assert(fm.isLocal)
     val file = new Path(new java.io.File(dir, "0").toURI)
@@ -586,14 +587,13 @@ class StreamingSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(read(file) === "first")
     write(file, "third", overwrite = true)
     assert(read(file) === "third")
-    assert(fm.list(new Path(new java.io.File(dir).toURI)).map(_.getPath.getName).toSeq === Seq("0"))
+    assert(fm.list(root).map(_.getPath.getName).toSeq === Seq("0"))
     // no temp file left by the refused write, and no checksum side file
     assert(filesUnder(dir).map(_.getName) === Seq("0"))
     // a file Spark's default manager wrote, with its checksum side
     // file, stays readable after this one overwrites it, also through
     // Hadoop's checksummed LocalFileSystem (Spark's FileSystem-based
     // manager), which verifies the side file on read
-    val root = new Path(new java.io.File(dir).toURI)
     val other = new Path(new java.io.File(dir, "1").toURI)
     val viaSpark = new FileContextBasedCheckpointFileManager(root, hconf)
       .createAtomic(other, false)
